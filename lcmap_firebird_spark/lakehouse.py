@@ -324,12 +324,11 @@ def _stats_intersect(rec: dict, ranges: dict, mapping: dict) -> bool:
     """True when the add record's per-file stats can intersect every
     [lo, hi] range (logical column names; stats are stored under
     physical names). Missing stats are conservatively in scope, as
-    are open bounds (lo/hi None — the DataSource pushdown pushes
-    one-sided predicates) and incomparable literal/stat type pairs.
-    The ONE pruning predicate shared by pruned_paths/scan, MERGE
-    candidate selection, range-scoped compaction, and the
-    DataSource's filter pushdown (sources/lake.LakePushdownReader) —
-    a stats-handling fix lands everywhere or nowhere."""
+    are open bounds (lo/hi None — a one-sided range) and
+    incomparable literal/stat type pairs. The ONE pruning predicate
+    shared by pruned_paths/scan, MERGE candidate selection and
+    range-scoped compaction — a stats-handling fix lands everywhere
+    or nowhere."""
     for c, (lo, hi) in ranges.items():
         st = (rec.get("stats") or {}).get(mapping.get(c, c))
         if st is None:
@@ -357,8 +356,8 @@ class LakeTable:
     @classmethod
     def attach(cls, root: str) -> "LakeTable":
         """Session-less handle for metadata-only use (log replay is
-        pure filesystem) — the DataSource's planning/commit workers
-        run without a SparkSession. Anything that builds a DataFrame
+        pure filesystem) — the streaming source (sources/lake.py)
+        plans without a SparkSession. Anything that builds a DataFrame
         (snapshot, merge, ...) still needs the real constructor."""
         t = cls.__new__(cls)
         t.spark = None
@@ -601,8 +600,8 @@ class LakeTable:
         if (not cons and not gen) or not recs:
             return
         spark = self.spark or SparkSession.getActiveSession()
-        if spark is None:  # spark-less handle (DataSource writer
-            raise RuntimeError(  # off-driver) with no session around
+        if spark is None:  # attach() handle with no session around
+            raise RuntimeError(
                 "no SparkSession available to validate CHECK "
                 "constraints on a constrained table"
             )
@@ -783,7 +782,7 @@ class LakeTable:
 
         `stats_cols` lists extra (non-key) columns whose per-file
         min/max land in every commit's stats records from birth —
-        `scan()`/pushdown pruning then bites on them without a
+        `scan()`/MERGE pruning then bites on them without a
         retroactive cluster() pass.
 
         `identity` (a column name, or {"col", "start", "step"})
@@ -3242,8 +3241,8 @@ class LakeTable:
         )
 
 
-# functions of this module ride inside worker-shipped DataSource
-# writer closures (sources/lake.py) — keep the foreign-cwd pickling
+# functions of this module ride inside the worker-shipped streaming
+# source's readers (sources/lake.py) — keep the foreign-cwd pickling
 # contract uniform (CLAUDE.md invariant 2)
 import sys as _sys  # noqa: E402
 

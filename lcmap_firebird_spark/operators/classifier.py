@@ -66,7 +66,11 @@ def _labeled_buckets(
     The label RIDES THROUGH the explode (the dsir/perplexity flag
     discipline, r13): the previous join-back of `_y` on doc_id paid a
     whole extra join of the exploded frame for a column that was
-    already on the row before the explode. Row-identical output."""
+    already on the row before the explode. Row-identical output for
+    the inputs this operator assumes: `id_col` values are non-null
+    and unique, as the registry corpus guarantees. Outside that, a
+    NULL id stays in the training counts and a duplicated id keeps
+    one row per occurrence."""
     from .dedup import spread
 
     lab = spread(

@@ -442,8 +442,8 @@ def lsh_candidates(
     split (byte-level plan parity with the uncapped form).
 
     The cap rides a broadcast of the OVER-CAP buckets only (r7 —
-    supersedes r6's driver-side probe action, which tools/
-    exp_d3_variants.py measured at +0.55 s/run over the checkpoint
+    supersedes r6's driver-side probe action, which a retired
+    harness (git history) measured at +0.55 s/run over the checkpoint
     floor at sf0.1: a blocking two-stage aggregate job per run,
     where this shape is measurement-indistinguishable from no cap
     machinery at all). `hot` = buckets with _n > max_bucket is

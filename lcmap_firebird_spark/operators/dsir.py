@@ -138,10 +138,12 @@ def importance_weights(
         # — the previous two independent groupBys each ran a full
         # aggregation pass over the corpus-sized explode (twice at
         # build for the totals job, twice again at exec for the ratio
-        # join). Both checkpoints are LAZY: the totals .first() below
+        # join). Both checkpoints are LAZY: the totals action below
         # reads fused_counts which reads flagged, so one job
-        # materializes both (each appears once in that DAG — no
-        # rule-15 concurrent-first-reader hazard).
+        # materializes both. flagged appears once in that DAG, but
+        # fused_counts appears TWICE (both union branches of the
+        # totals aggregate), so its partitions may be computed twice
+        # concurrently — duplicate work, never wrong results.
         flagged = _doc_buckets(
             df, id_col, text_col, n_buckets, flag=target_pred
         ).localCheckpoint(eager=False)

@@ -39,7 +39,6 @@ replicating its delivered-DESC order. Pinned by tests/test_pyccd.py.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from datetime import date, timedelta
 
 import numpy as np
 import pandas as pd
@@ -47,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import segment_schema
+from .segmentation import _iso
 
 # band-array column → reference 2-letter prefix (ccdc/pyccd.py:39-81)
 BAND_MAP = {
@@ -62,13 +62,6 @@ BAND_MAP = {
 # clear-observation PIXELQA codes (reference fixtures use 66/322 as
 # clear, 1 as fill — ccdc/timeseries.py:104-115, FIXTURES.md §2)
 CLEAR_QA = frozenset({0, 66, 68, 322, 324})
-
-_EPOCH = date(1, 1, 1)
-
-
-def _iso(ordinal: int) -> str:
-    return (_EPOCH + timedelta(days=int(ordinal) - 1)).isoformat()
-
 
 ANNUAL_DAYS = 365.25
 

@@ -77,42 +77,6 @@ def segment_table(segments: DataFrame) -> DataFrame:
     )
 
 
-def changedetection_ard(
-    ard: DataFrame,
-    ids: DataFrame | None = None,
-    output_base: str | None = None,
-    min_obs: int = 6,
-    chi: float = 3.0,
-) -> dict[str, DataFrame]:
-    """Reference-exact variant over dense-wide ARD: the full
-    core.py:53-75 dataflow with pyccd's 40-field schema —
-    selective read (J1) → mapInPandas multi-band detection (U3,
-    zero shuffles) → cached → the reference's three conforming
-    tables (chip/pixel/segment) → partitioned sinks."""
-    from ..operators import pyccd
-
-    src = ard
-    if ids is not None:
-        src = selective_read(src, ids, ["cx", "cy"])
-    seg = pyccd.detect(src, min_obs=min_obs, chi=chi).persist()
-    tables = {
-        "chip": pyccd.chip_table(seg),
-        "pixel": pyccd.pixel_table(seg),
-        "segment": pyccd.segment_table(seg),
-    }
-    if output_base:
-        for name, df in tables.items():
-            # overwrite: a re-run (operator retry, partial failure) must
-            # be idempotent like the Cassandra upsert this mirrors —
-            # the default parquet append would silently double rows
-            write_partitioned(
-                df, f"{output_base}/{name}", ("cx", "cy"),
-                mode="overwrite",
-            )
-        seg.unpersist()
-    return tables
-
-
 def changedetection(
     observations: DataFrame,
     ids: DataFrame | None = None,

@@ -47,10 +47,6 @@ def config(overrides: dict | None = None) -> dict:
         # Parquet scans: vectorized reader + pushdown are defaults,
         # stated here as a contract the tests assert on.
         "spark.sql.parquet.filterPushdown": "true",
-        # Python DataSource filter pushdown (PySpark 4.1) — lets the
-        # lake reader's opt-in pushFilters prune files from commit-log
-        # stats (sources/lake.py; option("pushdown", "true")).
-        "spark.sql.python.filterPushdown.enabled": "true",
         # testdata events.parquet carries TIMESTAMP(NANOS) which the
         # vectorized reader rejects; read as long and convert in
         # catalog.read_table (ns → µs truncation, matching DuckDB).

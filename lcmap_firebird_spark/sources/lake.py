@@ -1,37 +1,33 @@
-"""Python DataSource for the native lakehouse — `format("lake")`.
+"""Structured Streaming source for the native lakehouse —
+`readStream.format("lake")`.
 
-Gives the commit-log tables (lakehouse.py) a first-class reader
-surface::
+Tails a commit-log table (lakehouse.py) as a stream::
 
     spark.dataSource.register(LakeDataSource)
-    df = (spark.read.format("lake")
-          .option("path", root).option("version", 3).load())
+    q = (spark.readStream.format("lake").option("path", root).load()
+         .writeStream...start())
 
-Why a DataSource when `LakeTable.snapshot()` exists: the snapshot
-path resolves file lists on the caller's thread; the DataSource
-form composes with everything that speaks reader options
-(`spark.read`, other sessions) and demonstrates the PySpark 4
-Python DataSource surface end to end (driver-side planning +
-Arrow-batch worker reads, same API as sources/ardgen.py).
+Offsets are log versions, so exactly-once delivery follows from the
+log's ordering plus Spark's offset checkpointing. This is the one
+capability `LakeTable` has no method for; every batch surface lives
+there instead: snapshot/time travel is `LakeTable.snapshot(version=)`,
+stats-pruned reads are `LakeTable.scan`, change-feed ranges are
+`LakeTable.read_cdf`, writes are `LakeTable.create`/`append`.
 
-SQL access: register the load as a temp view
-(`spark.read.format("lake").option("path", root).load()
-.createOrReplaceTempView(...)`). Persisted catalog tables
-(`CREATE TABLE ... USING lake`) are NOT supported: PySpark 4.1
-re-instantiates Python data sources with EMPTY options at query
-planning time for catalog tables (verified: options carry
-path/location during DDL, {} during SELECT), so the root cannot be
-recovered — an upstream limitation, not a log-format one. Reader
-options arriving as file: URIs (how SQL surfaces normalize paths)
-are stripped to local paths.
+Options (3):
+- path: table root (required)
+- readChangeFeed: 'true' streams the change data feed
+  (`_change_type`, `_commit_version` appended to the table columns)
+  instead of the added rows
+- startingVersion: offset to start from (default 0 = the whole
+  history); EXCLUSIVE — version N already consumed
 
-Shape:
-- `partitions()` replays the commit log ON THE DRIVER (checkpoint-
-  aware) — one InputPartition per live data file, so Spark schedules
-  only live files and pruning/locality machinery sees real splits;
-- `read(part)` streams the file as pyarrow RecordBatches (never
-  row-at-a-time Python), null-filling columns added by schema
-  evolution after the file was written.
+Shape: `partitions()` plans one InputPartition per data or change
+file of the commits in the offset range, ON THE DRIVER; `read(part)`
+streams that file as pyarrow RecordBatches (never row-at-a-time
+Python) under the PLANNED schema, null-filling columns added by
+schema evolution, translating column mapping, materializing identity
+values and masking deletion-vector positions.
 """
 
 from __future__ import annotations
@@ -40,28 +36,19 @@ from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
+    DataSourceStreamReader,
     InputPartition,
 )
 from pyspark.sql.types import StructType
 
-# lakehouse symbols used by reader/writer/stream methods that execute
-# in Spark's Python data source workers are imported at MODULE level
-# so cloudpickle's by-value registration (end of this file, end of
+# lakehouse symbols used by stream-reader methods that execute in
+# Spark's Python data source workers are imported at MODULE level so
+# cloudpickle's by-value registration (end of this file, end of
 # lakehouse.py) captures them inside the pickled classes. A
 # function-local `from ..lakehouse import X` is a REAL import executed
 # in the worker process and dies with ModuleNotFoundError wherever the
-# package is not installed / on sys.path — which defeated the
-# registration's whole purpose (r10 fix; CLAUDE.md invariant 2).
-from ..lakehouse import (  # noqa: E402
-    _DATA,
-    _TXN,
-    LakeTable,
-    _dv_key,
-    _entry_path,
-    _file_stats,
-    _stats_intersect,
-)
+# package is not installed / on sys.path (CLAUDE.md invariant 2).
+from ..lakehouse import LakeTable, _dv_key
 
 
 @dataclass
@@ -89,62 +76,19 @@ class LakeFilePartition(InputPartition):
     ident: tuple = ()
 
 
-def _local_path(p: str) -> str:
-    """SQL DDL (CREATE TABLE ... USING lake OPTIONS (path '...'))
-    normalizes the path option to a file: URI; the log replay is
-    plain-filesystem, so strip the scheme."""
-    if p.startswith("file://"):
-        return p[7:]
-    if p.startswith("file:"):
-        return p[5:]
-    return p
-
-
 class LakeDataSource(DataSource):
-    """format name: lake. Options:
-    - path: table root (required)
-    - version: time-travel version (optional, default latest)
-    - readChangeFeed: 'true' for CDF reads (batch needs
-      startingVersion[/endingVersion]; streaming tails commits)
-    """
+    """format name: lake — a streaming-only source; see the module
+    docstring for its three options."""
 
     @classmethod
     def name(cls) -> str:
         return "lake"
 
     def _root(self) -> str:
-        # SQL catalog tables (CREATE TABLE ... USING lake) surface
-        # the root as 'location' when the planner re-instantiates the
-        # source at query time; direct reader options use 'path'
-        root = self.options.get("path") or self.options.get("location")
+        root = self.options.get("path")
         if not root:
             raise ValueError("option 'path' is required for format 'lake'")
-        return _local_path(root)
-
-    def _resolved(self):
-        import json as _json
-        import os as _os
-
-        # memoized: schema() and reader() both need the resolution —
-        # resolving twice would replay the log twice AND open a
-        # schema/data race if a commit landed between the two calls
-        # (partitions under a newer schema than Spark planned)
-        if getattr(self, "_res", None) is not None:
-            return self._res
-        root = self._root()
-        version = self.options.get("version")
-        version = int(version) if version is not None else None
-        # session-less attach: log replay is pure filesystem
-        t = LakeTable.attach(root)
-        live, head = t._live(version)
-        self._res = (
-            root,
-            live,
-            _json.loads(head["schema"]),
-            head.get("column_mapping") or {},
-            t._identity(),
-        )
-        return self._res
+        return root
 
     def _cdf_requested(self) -> bool:
         return str(
@@ -152,10 +96,11 @@ class LakeDataSource(DataSource):
         ).lower() in ("true", "1")
 
     def schema(self) -> StructType:
+        import json as _json
+
         from pyspark.sql.types import LongType, StringType, StructField
 
-        _, _, schema_json, _cmap, _id = self._resolved()
-        base = StructType.fromJson(schema_json)
+        base = StructType.fromJson(_json.loads(_head(self._root())["schema"]))
         if self._cdf_requested():
             return StructType(
                 base.fields
@@ -165,29 +110,6 @@ class LakeDataSource(DataSource):
                 ]
             )
         return base
-
-    def reader(self, schema) -> "DataSourceReader":
-        if self._cdf_requested():
-            root = self._root()
-            start = self.options.get("startingVersion")
-            if start is None:
-                raise ValueError(
-                    "readChangeFeed batch reads require "
-                    "option('startingVersion', N)"
-                )
-            end = self.options.get("endingVersion")
-            return LakeCDFReader(
-                root,
-                int(start),
-                int(end) if end is not None else None,
-                schema,
-            )
-        if str(self.options.get("pushdown", "false")).lower() in (
-            "true",
-            "1",
-        ):
-            return LakePushdownReader(self._resolved())
-        return LakeReader(self._resolved())
 
     def streamReader(self, schema) -> "DataSourceStreamReader":
         # the PLANNED schema rides into every partition: deriving it
@@ -201,96 +123,17 @@ class LakeDataSource(DataSource):
             return LakeCDFStreamReader(root, schema, start)
         return LakeStreamReader(root, schema, start)
 
-    def writer(self, schema, overwrite: bool) -> "LakeWriter":
-        import json as _json
-        import os as _os
 
-        root = self._root()
-        txn = _os.path.join(root, _TXN)
-        fresh = not _os.path.isdir(txn) or not any(
-            f.endswith(".json") for f in _os.listdir(txn)
-        )
-        bootstrap = None
-        if fresh:
-            keys = [
-                k.strip()
-                for k in self.options.get(
-                    "keys", schema.fields[0].name
-                ).split(",")
-            ]
-            names = {f.name for f in schema.fields}
-            missing = [k for k in keys if k not in names]
-            if missing:
-                # fail fast: entry 0 pins key_cols forever; a typo'd
-                # key would silently disable stats pruning on every
-                # later commit and break MERGE far from the cause
-                raise ValueError(
-                    f"option('keys', ...) names column(s) {missing!r} "
-                    "absent from the written DataFrame schema"
-                )
-            # entry 0 is NOT written here: plan-time bootstrap would
-            # leave a committed empty table pinned to a failed job's
-            # schema (abort() only reclaims staged data files), so a
-            # typo'd first write could never be retried cleanly. The
-            # driver-side commit() writes it instead — create and
-            # first append land only if the job succeeds.
-            bootstrap = (schema.json(), keys)
-        cmap: dict = {}
-        stats_cols: list = []
-        if not fresh:
-            _, head = LakeTable.attach(root)._live()
-            # fail BEFORE the job stages anything (r11 matrix read):
-            # commit() re-checks against the then-current head (the
-            # authoritative, race-proof refusal — a constraint added
-            # mid-job is still caught there), but a table already
-            # constrained at plan time would only fail after every
-            # task wrote its files — a full wasted write pass at scale
-            if head.get("constraints") or head.get("generated"):
-                raise ValueError(
-                    "table has CHECK constraints or generated "
-                    "columns; the format('lake') writer commits "
-                    "without a SparkSession and cannot validate/"
-                    "compute them — use LakeTable.append/merge "
-                    "instead"
-                )
-            keys = head["key_cols"]
-            cmap = head.get("column_mapping") or {}
-            stats_cols = list(head.get("stats_cols") or [])
-            # plan-time schema compatibility: the writer stages task
-            # batches verbatim (no engine to cast with), so reject a
-            # frame whose columns the table doesn't have or whose
-            # types differ — a mistyped file would brick every later
-            # scan, a misspelled column would be silently null-filled
-            # away at read time. Absent table columns are fine
-            # (evolution null-fill, the pre-add_column writer shape).
-            table_schema = StructType.fromJson(
-                _json.loads(head["schema"])
-            )
-            table_fields = {f.name: f.dataType for f in table_schema.fields}
-            problems = []
-            for f in schema.fields:
-                if f.name not in table_fields:
-                    problems.append(f"unknown column {f.name!r}")
-                elif f.dataType != table_fields[f.name]:
-                    problems.append(
-                        f"{f.name!r} is {f.dataType.simpleString()}, "
-                        f"table has "
-                        f"{table_fields[f.name].simpleString()}"
-                    )
-            if problems:
-                raise ValueError(
-                    "DataFrame schema incompatible with lake table "
-                    f"{root}: {'; '.join(problems)} (cast/rename "
-                    "before writing)"
-                )
-        return LakeWriter(
-            root, keys, overwrite, cmap, stats_cols, bootstrap=bootstrap
-        )
+def _head(root: str) -> dict:
+    """The log's head entry: every entry carries the table's logical
+    schema and column mapping in force after its commit."""
+    t = LakeTable.attach(root)
+    return t._entries(since=t.latest_version() - 1)[-1]
 
 
 def _read_file_partition(part: LakeFilePartition):
-    """Worker-side Arrow read of one data file under the declared
-    schema (shared by the batch and streaming readers): stream the
+    """Worker-side Arrow read of one data or change file under the
+    planned schema (shared by both stream readers): stream the
     parquet RecordBatches, null-filling columns added by schema
     evolution after this file was written, and masking out rows whose
     positions appear in a covering deletion vector."""
@@ -379,321 +222,6 @@ def _read_file_partition(part: LakeFilePartition):
         yield pa.RecordBatch.from_arrays(cols, schema=target)
 
 
-class LakeReader(DataSourceReader):
-    def __init__(self, resolved):
-        (
-            self._root,
-            self._live,
-            self._schema_json,
-            self._cmap,
-            self._ident,
-        ) = resolved
-        self._bounds: dict[str, list] = {}  # col -> [lo, hi]
-
-    def _survives(self, rec: dict) -> bool:
-        # delegate to THE pruning predicate (lakehouse._stats_intersect
-        # handles open bounds + incomparable types) — two hand-rolled
-        # copies would silently diverge on the next stats change
-
-        return _stats_intersect(rec, self._bounds, self._cmap)
-
-    def partitions(self):
-        import json as _json
-        import os as _os
-
-        sj = _json.dumps(self._schema_json)
-        data = [
-            r
-            for r in self._live
-            if r.get("kind") != "dv" and self._survives(r)
-        ]
-        # CONSUME the pushed bounds: one reader instance can serve
-        # several queries derived from the same load() DataFrame, and
-        # a later unfiltered query must not inherit an earlier
-        # query's pruning (each filtered query re-pushes its own
-        # filters before partitions())
-        self._bounds = {}
-        dvs = [r for r in self._live if r.get("kind") == "dv"]
-        # each covered file gets ONLY the DV datasets whose `covers`
-        # list names it — attaching every live DV file to every
-        # covered partition would make each worker re-read all DV
-        # parquet (F x D reads instead of O(total coverage))
-        dv_for: dict[str, list] = {}
-        for r in dvs:
-            p = _os.path.join(self._root, r["path"])
-            for c in r.get("covers", []):
-                dv_for.setdefault(c, []).append(p)
-
-        cm = tuple(sorted(self._cmap.items()))
-        return [
-            LakeFilePartition(
-                _os.path.join(self._root, rec["path"]),
-                sj,
-                rel=_dv_key(rec["path"]),
-                dv_paths=tuple(dv_for.get(_dv_key(rec["path"]), ())),
-                col_map=cm,
-                ident=_ident_tuple(self._ident, rec),
-            )
-            for rec in data
-        ]
-
-    def read(self, part: LakeFilePartition):
-        yield from _read_file_partition(part)
-
-
-class LakePushdownReader(LakeReader):
-    """LakeReader + Catalyst filter pushdown (PySpark 4.1). OPT-IN
-    via option("pushdown", "true") for two reasons:
-
-    1. merely IMPLEMENTING pushFilters makes Spark refuse the read
-       when spark.sql.python.filterPushdown.enabled is false (the
-       default on vanilla sessions) — session.py enables the conf
-       for this engine's sessions;
-    2. upstream sharing hazard (verified on PySpark 4.1, applies to
-       ANY pushFilters implementation, not this one): when several
-       queries derive from ONE load() DataFrame, the JVM reuses the
-       first-planned scan — partitions AND pushed pruning — for the
-       later queries, silently under-reading an unfiltered sibling.
-       With pushdown enabled, derive each query from its own
-       load(); every per-load query (filtered or not) is correct and
-       the reader itself resets its bounds per planning."""
-
-    def pushFilters(self, filters):
-        """Fold comparison filters on top-level columns into
-        per-column [lo, hi] bounds and prune files whose commit-log
-        stats cannot intersect — the SAME data skipping
-        `LakeTable.scan()` offers manually, now automatic for any
-        `df.filter(...)`. Every filter is yielded back: file stats
-        only BOUND, Spark still evaluates rows (safe residual
-        semantics)."""
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        self._bounds = {}  # fresh per planning: no cross-query leaks
-
-        def narrow(col: str, lo, hi):
-            b = self._bounds.setdefault(col, [None, None])
-            if lo is not None and (b[0] is None or lo > b[0]):
-                b[0] = lo
-            if hi is not None and (b[1] is None or hi < b[1]):
-                b[1] = hi
-
-        for f in filters:
-            attr = getattr(f, "attribute", None)
-            if attr is not None and len(attr) == 1:
-                col = attr[0]
-                if isinstance(f, EqualTo):
-                    narrow(col, f.value, f.value)
-                elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                    narrow(col, f.value, None)
-                elif isinstance(f, (LessThan, LessThanOrEqual)):
-                    narrow(col, None, f.value)
-                elif isinstance(f, In) and f.value:
-                    try:
-                        narrow(col, min(f.value), max(f.value))
-                    except TypeError:
-                        pass
-            yield f  # rows still filtered by Spark (stats only bound)
-
-
-# --------------------------------------------------------------------------
-# write side: df.write.format("lake") — Spark's two-phase commit
-# protocol mapped onto the commit log. Tasks stage immutable files and
-# report them in commit messages; the DRIVER's commit() lands ONE log
-# entry referencing them all (append retries the version race,
-# overwrite is read-dependent). abort() deletes the staged files, and
-# a crashed driver leaves only unreferenced orphans for vacuum() —
-# the same guarantees the lakehouse gives its own writers, now behind
-# the standard writer surface:
-#
-#     df.write.format("lake").mode("append")
-#       .option("path", root).save()
-#
-# Fresh paths bootstrap a table; pass option("keys", "id,other") to
-# set the MERGE key columns (default: first column).
-
-from pyspark.sql.datasource import (  # noqa: E402
-    DataSourceArrowWriter,
-    WriterCommitMessage,
-)
-
-
-@dataclass
-class LakeCommitMessage(WriterCommitMessage):
-    recs: list
-
-
-class LakeWriter(DataSourceArrowWriter):
-    def __init__(
-        self,
-        root: str,
-        key_cols: list[str],
-        overwrite: bool,
-        col_map: dict | None = None,
-        stats_cols: list[str] | None = None,
-        bootstrap: tuple | None = None,
-    ):
-        self._root = root
-        self._keys = key_cols
-        self._overwrite = overwrite
-        self._cmap = col_map or {}
-        self._stats_cols = list(stats_cols or [])
-        # (schema_json, key_cols) when the target path had no table at
-        # plan time: commit() creates entry 0 — never the planner, so
-        # a failed job leaves the path fresh and retryable
-        self._bootstrap = bootstrap
-
-    def _ensure_created(self):
-        """Driver-side, commit-time bootstrap. Loses the create race
-        gracefully: if someone else committed entry 0 between plan and
-        commit, re-run the plan-time schema-compatibility check
-        against THEIR head (pure JSON — no session needed) and refuse
-        on mismatch so Spark aborts and reclaims our staged files."""
-        import json as _json
-        import os as _os
-        import time as _time
-
-        schema_json, keys = self._bootstrap
-        entry0 = {
-            "version": 0,
-            "operation": "create",
-            "ts": _time.time(),
-            "add": [],
-            "remove": [],
-            "schema": schema_json,
-            "key_cols": keys,
-            "cdf_enabled": False,
-            "constraints": {},
-        }
-        try:
-            # same entry-0 fields LakeTable.create writes, so tables
-            # born through either surface are indistinguishable
-            _os.makedirs(
-                _os.path.dirname(_entry_path(self._root, 0)), exist_ok=True
-            )
-            with open(_entry_path(self._root, 0), "x") as f:
-                _json.dump(entry0, f, indent=1)
-        except FileExistsError:
-            _, head = LakeTable.attach(self._root)._live()
-            theirs = {
-                f["name"]: f["type"]
-                for f in _json.loads(head["schema"])["fields"]
-            }
-            mine = _json.loads(schema_json)["fields"]
-            bad = [
-                f["name"]
-                for f in mine
-                if theirs.get(f["name"]) != f["type"]
-            ]
-            if bad or (head.get("column_mapping") or {}):
-                raise ValueError(
-                    "lost the table-create race to an incompatible "
-                    f"table at {self._root} (columns {bad!r} differ "
-                    "or it already carries column mapping); staged "
-                    "files were written under this job's schema — "
-                    "rerun the write against the existing table"
-                )
-            self._keys = head["key_cols"]
-
-    def write(self, iterator):
-        """Executor side: stage this task's batches as ONE immutable
-        parquet file (invisible until the driver commits). Committed
-        bytes carry PHYSICAL column names (stats too) — same contract
-        as LakeTable._stage_files."""
-        import os
-        import uuid as _uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        name = f"{_DATA}/{_uuid.uuid4().hex}.parquet"
-        dst = os.path.join(self._root, name)
-        # the planner no longer pre-creates data/ for fresh tables
-        # (bootstrap moved to commit time) — each task ensures it
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        # stream batch-at-a-time: materializing the whole partition
-        # (Table.from_batches) held every Arrow batch in worker
-        # memory simultaneously — O(partition) peak where this loop
-        # is O(one batch)
-        writer = None
-        try:
-            for batch in iterator:
-                if not batch.num_rows:
-                    continue
-                if self._cmap:
-                    batch = pa.RecordBatch.from_arrays(
-                        batch.columns,
-                        names=[
-                            self._cmap.get(c, c) for c in batch.schema.names
-                        ],
-                    )
-                if writer is None:
-                    writer = pq.ParquetWriter(dst, batch.schema)
-                writer.write_batch(batch)
-        finally:
-            if writer is not None:
-                writer.close()
-        if writer is None:
-            return LakeCommitMessage(recs=[])
-        stat_names = list(self._keys) + [
-            c for c in self._stats_cols if c not in self._keys
-        ]
-        phys_keys = [self._cmap.get(k, k) for k in stat_names]
-        return LakeCommitMessage(
-            recs=[{"path": name} | _file_stats(dst, phys_keys)]
-        )
-
-    def commit(self, messages):
-        """Driver side: one atomic log entry for every task's files."""
-        if self._bootstrap is not None:
-            self._ensure_created()
-        t = LakeTable.attach(self._root)
-        # PySpark runs this commit in a session-less Python worker,
-        # so CHECK constraints CANNOT be validated here — refuse
-        # rather than let violating rows slip past enforcement
-        # (Spark then calls abort(), reclaiming the staged task
-        # files). Constrained tables write via LakeTable.append/
-        # merge, which validate under the real session.
-        head = t._live()[1]
-        if head.get("constraints") or head.get("generated"):
-            raise RuntimeError(
-                "table has CHECK constraints or generated columns; "
-                "the format('lake') writer commits without a "
-                "SparkSession and cannot validate/compute them — "
-                "use LakeTable.append/merge instead"
-            )
-        add = [r for m in messages if m for r in m.recs]
-        if self._overwrite:
-            head = t.latest_version()
-            live, _ = t._live(head)
-            t._commit(
-                "overwrite",
-                add,
-                [r["path"] for r in live],
-                expected_head=head,
-            )
-        else:
-            t._commit("append", add, [], expected_head=None)
-
-    def abort(self, messages):
-        import os
-
-        for m in messages:
-            if not m:
-                continue
-            for r in m.recs:
-                try:
-                    os.remove(os.path.join(self._root, r["path"]))
-                except FileNotFoundError:
-                    pass
-
-
 # --------------------------------------------------------------------------
 # streaming read: spark.readStream.format("lake") — tail the commit
 # log. Offsets ARE log versions ({"version": N} = entries <= N
@@ -705,8 +233,6 @@ class LakeWriter(DataSourceArrowWriter):
 # rows in new files and are therefore RE-EMITTED, exactly like the
 # Delta source without CDF; downstream either tolerates re-emission
 # (idempotent sinks) or reads CDC batches written via mode="cdc".
-
-from pyspark.sql.datasource import DataSourceStreamReader  # noqa: E402
 
 
 def _planned_col_map(root: str, schema) -> tuple:
@@ -722,7 +248,7 @@ def _planned_col_map(root: str, schema) -> tuple:
 
     from pyspark.sql.types import StructType as _St
 
-    _, head = LakeTable.attach(root)._live()
+    head = _head(root)
     names = {
         f.name
         for f in _St.fromJson(_json.loads(head["schema"])).fields
@@ -746,21 +272,17 @@ def _planned_col_map(root: str, schema) -> tuple:
     return tuple(sorted(out))
 
 
-class LakeStreamReader(DataSourceStreamReader):
+class _LogTail(DataSourceStreamReader):
+    """Offsets shared by both stream readers: {"version": N} = log
+    entries <= N consumed."""
+
     def __init__(self, root: str, schema, start: int = 0):
         import json as _json
 
         self._root = root
-        self._sj = _json.dumps(schema.jsonValue())
+        self._sj = _json.dumps(schema.jsonValue())  # the PLANNED schema
         self._start = start
         self._cmap = _planned_col_map(root, schema)
-        # identity metadata is immutable (declared at create only) —
-        # safe to pin for the stream's lifetime
-        self._ident = LakeTable.attach(root)._identity()
-
-    def _table(self):
-
-        return LakeTable.attach(self._root)
 
     def initialOffset(self) -> dict:
         # default 0 = start of history (the whole current table
@@ -770,13 +292,26 @@ class LakeStreamReader(DataSourceStreamReader):
         return {"version": self._start}
 
     def latestOffset(self) -> dict:
-        return {"version": self._table().latest_version()}
+        return {"version": LakeTable.attach(self._root).latest_version()}
+
+    def read(self, partition):
+        yield from _read_file_partition(partition)
+
+    def commit(self, end: dict) -> None:
+        pass  # the log is the durable source; nothing to clean up
+
+
+class LakeStreamReader(_LogTail):
+    def __init__(self, root: str, schema, start: int = 0):
+        super().__init__(root, schema, start)
+        # identity metadata is immutable (declared at create only) —
+        # safe to pin for the stream's lifetime
+        self._ident = LakeTable.attach(root)._identity()
 
     def partitions(self, start: dict, end: dict):
-        import json as _json
         import os as _os
 
-        t = self._table()
+        t = LakeTable.attach(self._root)
         # tail read only: opening every entry since version 0 per
         # micro-batch would be O(history) per batch (PLANS.md rule 25)
         entries = t._entries(
@@ -784,7 +319,6 @@ class LakeStreamReader(DataSourceStreamReader):
         )
         if not entries:
             return []
-        sj = self._sj  # the PLANNED schema, never the log head's
         # kind='dv' adds are deletion-vector datasets, not row data:
         # the append-only stream skips them (deletes don't stream —
         # the Delta source's ignoreDeletes posture; CDC consumers
@@ -801,7 +335,7 @@ class LakeStreamReader(DataSourceStreamReader):
         return [
             LakeFilePartition(
                 _os.path.join(self._root, rec["path"]),
-                sj,
+                self._sj,
                 col_map=self._cmap,
                 ident=_ident_tuple(self._ident, rec),
             )
@@ -811,24 +345,18 @@ class LakeStreamReader(DataSourceStreamReader):
             if rec.get("rows") and rec.get("kind") != "dv"
         ]
 
-    def read(self, partition):
-        # identical worker path as the batch reader
-        yield from _read_file_partition(partition)
 
-    def commit(self, end: dict) -> None:
-        pass  # the log is the durable source; nothing to clean up
-
-
-class LakeCDFStreamReader(DataSourceStreamReader):
+class LakeCDFStreamReader(_LogTail):
     """spark.readStream.format("lake").option("readChangeFeed",
     "true") — tail the change data feed. Offsets are commit versions
     (exactly-once, like the plain source); each micro-batch delivers
     the CHANGE rows of the commits in (start, end]: cdf files where
     the commit staged them, derived inserts for append/create
     commits. A restore/overwrite commit has no streamable change file
-    — the stream fails fast and points at the batch surfaces
-    (read_cdf computes their snapshot diff), which is Delta's posture
-    for non-additive changes without CDF data.
+    — the stream fails fast and points at `LakeTable.read_cdf`
+    (which computes their snapshot diff) and option startingVersion
+    (which resumes past them), Delta's posture for non-additive
+    changes without CDF data.
 
     Identity tables stream exact values on every change row (pinned
     in test_identity): merge/apply_changes are never-retried commits,
@@ -839,27 +367,6 @@ class LakeCDFStreamReader(DataSourceStreamReader):
     batch read_cdf additionally keeps a read-time fill covering
     change files committed before the write-time fill existed)."""
 
-    def __init__(self, root: str, schema, start: int = 0):
-        import json as _json
-
-        self._root = root
-        self._sj = _json.dumps(schema.jsonValue())
-        self._start = start
-        self._cmap = _planned_col_map(root, schema)
-
-    def _table(self):
-
-        return LakeTable.attach(self._root)
-
-    def initialOffset(self) -> dict:
-        # option startingVersion makes a restore/overwrite commit
-        # recoverable: start a fresh checkpoint just past it (the
-        # batch surfaces read its snapshot diff)
-        return {"version": self._start}
-
-    def latestOffset(self) -> dict:
-        return {"version": self._table().latest_version()}
-
     def partitions(self, start: dict, end: dict):
         return _cdf_partitions(
             self._root,
@@ -869,16 +376,10 @@ class LakeCDFStreamReader(DataSourceStreamReader):
             self._cmap,
         )
 
-    def read(self, partition):
-        yield from _read_file_partition(partition)
-
-    def commit(self, end: dict) -> None:
-        pass
-
 
 def _ident_tuple(ident: dict | None, rec: dict) -> tuple:
     """(col, base, step) for a data add record's reserved identity
-    range, or () — shared by every per-file planner so derived-insert
+    range, or () — shared by both stream planners so derived-insert
     CDF rows and streamed appends carry the same materialized values
     a LakeTable scan computes."""
     if ident and rec.get("identity_base") is not None:
@@ -893,9 +394,8 @@ def _ident_tuple(ident: dict | None, rec: dict) -> tuple:
 def _cdf_partitions(
     root: str, start_v: int, end_v: int, sj: str, cmap: tuple = ()
 ):
-    """Change-feed file partitions for commits in (start_v, end_v] —
-    shared by the streaming tail and the batch
-    startingVersion/endingVersion reader. `sj` is the PLANNED output
+    """Change-feed file partitions for commits in (start_v, end_v],
+    planned by the change-feed stream. `sj` is the PLANNED output
     schema (table schema + change columns) — never derived from the
     log head here, which would desynchronize replayed offset ranges
     from the schema Spark planned. cdf files carry their own
@@ -918,7 +418,7 @@ def _cdf_partitions(
     if not t._cdf_enabled():
         raise ValueError(
             "table was not created with enable_cdf=True; the "
-            "plain lake read/stream serves current rows instead"
+            "plain lake stream serves added rows instead"
         )
     # tail read only (PLANS.md rule 25)
     entries = t._entries(upto=end_v, since=start_v)
@@ -1010,41 +510,6 @@ def _cdf_partitions(
             )
         # metadata-only commits contribute nothing
     return parts
-
-
-class LakeCDFReader(DataSourceReader):
-    """Batch change-feed read:
-    spark.read.format("lake").option("readChangeFeed", "true")
-    .option("startingVersion", N)[.option("endingVersion", M)] —
-    the DataSource twin of LakeTable.read_cdf (same per-commit
-    attribution, usable from plain reader options / SQL).
-
-    BOUNDARY: delivers commits in (N, M] — startingVersion is
-    EXCLUSIVE, matching this engine's uniform convention
-    (read_cdf/table_changes/stream offsets all mean 'version N
-    already consumed'). Delta Lake's identically-named option is
-    INCLUSIVE; a consumer porting Delta code must pass N-1 to get
-    commit N's changes."""
-
-    def __init__(self, root: str, start_v: int, end_v: int | None, schema):
-        import json as _json
-
-        self._root = root
-        self._start = start_v
-        self._end = end_v
-        self._sj = _json.dumps(schema.jsonValue())
-        self._cmap = _planned_col_map(root, schema)
-
-    def partitions(self):
-
-        t = LakeTable.attach(self._root)
-        end = self._end if self._end is not None else t.latest_version()
-        return _cdf_partitions(
-            self._root, self._start, end, self._sj, self._cmap
-        )
-
-    def read(self, part: LakeFilePartition):
-        yield from _read_file_partition(part)
 
 
 # shipped to Python workers by class reference — LAST statement so

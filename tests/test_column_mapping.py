@@ -3,8 +3,8 @@ metadata-only renames and drops with stable physical names — Delta's
 columnMapping design on the commit log. Verifies: no data file moves,
 time travel keeps per-version names, dropped bytes never resurrect,
 stats/bloom pruning track the physical identity, CDF and table_changes
-line up across renames, and the DataSource read/write/pushdown paths
-translate.
+line up across renames, and the streaming source and an independent
+DuckDB read translate.
 """
 
 from __future__ import annotations
@@ -16,6 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from lcmap_firebird_spark.lakehouse import ConstraintViolation, LakeTable
+
+from .lake_helpers import duckdb_snapshot, stream_cdf
 
 
 def _rows(df):
@@ -238,7 +240,7 @@ def cdf_table(spark, tmp_path):
     )
 
 
-def test_read_cdf_across_rename(spark, cdf_table):
+def test_read_cdf_across_rename(spark, cdf_table, tmp_path):
     t = cdf_table
     v_create = t.latest_version()
     t.merge(spark.createDataFrame([(1, -1.0)], "id long, val double"))
@@ -261,45 +263,31 @@ def test_read_cdf_across_rename(spark, cdf_table):
         for r in ch.filter("id = 2").collect()
     }
     assert post == {"update_preimage": 2.0, "update_postimage": -2.0}
-    # DataSource batch CDF read agrees
-    spark.dataSource.register(__import__(
-        "lcmap_firebird_spark.sources.lake", fromlist=["LakeDataSource"]
-    ).LakeDataSource)
-    ds = (
-        spark.read.format("lake")
-        .option("path", t.root)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", v_create)
-        .load()
-    )
+    # the change-feed stream agrees
+    ds = stream_cdf(spark, t.root, str(tmp_path / "cdf"), start=v_create)
     assert _rows(ds.select(*ch.columns)) == _rows(ch)
 
 
 def test_datasource_read_write_after_rename(spark, table):
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    spark.dataSource.register(LakeDataSource)
     table.rename_column("val", "value")
-    df = (
-        spark.read.format("lake").option("path", table.root).load()
-    )
-    assert df.columns == ["id", "name", "value"]
-    assert df.filter(F.col("value").isNotNull()).count() == 100
-    # pushdown: stats are physical, filter is logical — still prunes
+    assert table.snapshot().columns == ["id", "name", "value"]
+    # an independent reader resolves the logical name to the physical
+    # column the files still carry
+    rows = duckdb_snapshot(table)
+    assert len(rows) == 100 and all(r[2] is not None for r in rows)
+    assert rows == sorted(_rows(table.snapshot()), key=repr)
+    # scan pruning: stats are physical, ranges are logical
     table.cluster(["id"])
-    pd_df = (
-        spark.read.format("lake")
-        .option("path", table.root)
-        .option("pushdown", "true")
-        .load()
+    paths, total = table.pruned_paths({"id": (0, 5)})
+    assert len(paths) < total
+    assert table.scan({"id": (0, 5)}).count() == 6
+    # append stages PHYSICAL names so every reader sees the rows
+    table.append(
+        spark.createDataFrame(
+            [(700, "n700", 7.0)], "id long, name string, value double"
+        )
     )
-    assert pd_df.filter(F.col("id") <= 5).count() == 6
-    # writer stages PHYSICAL names so LakeTable readers see the rows
-    spark.createDataFrame(
-        [(700, "n700", 7.0)], "id long, name string, value double"
-    ).write.format("lake").mode("append").option(
-        "path", table.root
-    ).save()
+    assert (700, "n700", 7.0) in duckdb_snapshot(table)
     assert _rows(
         table.snapshot().filter("id = 700").select("id", "value")
     ) == [(700, 7.0)]

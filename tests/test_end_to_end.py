@@ -61,22 +61,18 @@ def test_full_pipeline_composes(spark, sf_dir, tmp_path):
     for dom, got in toks.items():
         assert got <= budgets[dom]
 
-    # transactional landing zone through the writer surface
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    try:
-        spark.dataSource.register(LakeDataSource)
-    except Exception:
-        pass
+    # transactional landing zone
     root = str(tmp_path / "corpus_lake")
-    prepared.drop("epoch").write.format("lake").mode("append").option(
-        "path", root
-    ).option("keys", "doc_id").save()
-    t = LakeTable(spark, root)
+    t = LakeTable.create(
+        spark, root, prepared.drop("epoch"), key_cols=["doc_id"]
+    )
     assert t.snapshot().count() == n
-    assert t.latest_version() == 1  # ONE atomic commit
+    assert t.latest_version() == 1  # ONE atomic data commit
 
     # stream the table out and feed the packing stage
+    from lcmap_firebird_spark.sources.lake import LakeDataSource
+
+    spark.dataSource.register(LakeDataSource)
     stream = (
         spark.readStream.format("lake").option("path", root).load()
     )

@@ -2,12 +2,10 @@
 columns: writers may omit generated columns (the engine computes
 them), provided values are validated against the expression at commit
 time, and declared stats columns land in every commit's per-file
-stats so scan()/pushdown pruning bites on non-key columns from birth
+stats so scan() pruning bites on non-key columns from birth
 — the generated-day-column partition-pruning story."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -128,57 +126,6 @@ def test_generated_column_ddl_guards(spark, gen_table):
         )
 
 
-def test_datasource_writer_refuses_generated_tables(spark, gen_table):
-    """The refusal fires at PLAN time (r11): a table already
-    constrained/generated when the write is planned must fail before
-    any task stages a file — at scale the old commit-time-only check
-    wasted a full write pass (commit() still re-checks for the
-    constraint-added-mid-job race). Plan-time failure = zero orphan
-    parquet files left for vacuum."""
-    import os
-
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    spark.dataSource.register(LakeDataSource)
-    data_dir = os.path.join(gen_table.root, "data")
-    before = set(os.listdir(data_dir))
-    with pytest.raises(Exception, match="generated"):
-        spark.createDataFrame(
-            [(600, 1.0, 60)], "id long, val double, bucket int"
-        ).write.format("lake").mode("append").option(
-            "path", gen_table.root
-        ).save()
-    assert gen_table.snapshot().filter("id = 600").count() == 0
-    assert set(os.listdir(data_dir)) == before  # nothing staged
-
-
-def test_datasource_writer_refuses_constrained_tables(spark, tmp_path):
-    """Constrained twin of the generated refusal, same plan-time
-    contract (the writer commits session-less and cannot validate
-    CHECK constraints)."""
-    import os
-
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    root = str(tmp_path / "ct")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, 1.0)], "id long, val double"),
-        key_cols=["id"],
-        constraints={"pos": "val > 0"},
-    )
-    spark.dataSource.register(LakeDataSource)
-    data_dir = os.path.join(root, "data")
-    before = set(os.listdir(data_dir))
-    with pytest.raises(Exception, match="constraint"):
-        spark.createDataFrame(
-            [(2, -5.0)], "id long, val double"
-        ).write.format("lake").mode("append").option("path", root).save()
-    assert t.snapshot().count() == 1
-    assert set(os.listdir(data_dir)) == before
-
-
 def test_clone_carries_generated_and_stats(spark, gen_table, tmp_path):
     c = gen_table.clone(str(tmp_path / "gclone"))
     c.append(spark.createDataFrame([(700, 1.0)], "id long, val double"))
@@ -194,9 +141,8 @@ def test_clone_carries_generated_and_stats(spark, gen_table, tmp_path):
 
 
 def test_stats_cols_survive_checkpoint_and_writer(spark, tmp_path):
-    """Table-level stats columns flow through checkpoints and the
-    format('lake') Arrow writer (no generated/constraints, so the
-    session-less writer is allowed)."""
+    """Table-level stats columns flow through checkpoints and into
+    the per-file stats of a later append."""
     base = spark.createDataFrame(
         [(i, float(i % 7)) for i in range(50)], "id long, score double"
     )
@@ -208,61 +154,9 @@ def test_stats_cols_survive_checkpoint_and_writer(spark, tmp_path):
         stats_cols=["score"],
     )
     t.checkpoint_log()
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    spark.dataSource.register(LakeDataSource)
-    spark.createDataFrame(
-        [(100, 99.0)], "id long, score double"
-    ).write.format("lake").mode("append").option("path", t.root).save()
-    newest = max(
-        t._live()[0], key=lambda r: r["path"]
-    )
+    t.append(spark.createDataFrame([(100, 99.0)], "id long, score double"))
     live = [r for r in t._live()[0] if r.get("kind") != "dv"]
     assert all("score" in (r.get("stats") or {}) for r in live)
     paths, total = t.pruned_paths({"score": (99.0, 99.0)})
     assert len(paths) < total
     assert t.scan({"score": (99.0, 99.0)}).count() == 1
-
-
-def test_writer_commit_refuses_constraint_added_mid_job(spark, tmp_path):
-    """The commit-time refusal is the RACE-proof layer behind the
-    plan-time check (r11): a constraint added between write planning
-    and the driver-side commit must still abort the job loudly and
-    leave no log entry. Exercised by driving LakeWriter directly —
-    plan against an unconstrained head, land add_constraint, then
-    commit the staged message."""
-    import pyarrow as pa
-
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    root = str(tmp_path / "race")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, 1.0)], "id long, val double"),
-        key_cols=["id"],
-    )
-    ds = LakeDataSource(options={"path": root})
-    w = ds.writer(t.snapshot().schema, overwrite=False)  # plan: OK
-    v = t.add_constraint("pos", "val > 0")  # lands mid-job
-    msg = w.write(
-        iter(
-            [
-                pa.RecordBatch.from_pydict(
-                    {"id": pa.array([2], "int64"),
-                     "val": pa.array([-9.0], "float64")}
-                )
-            ]
-        )
-    )
-    with pytest.raises(RuntimeError, match="constraint"):
-        w.commit([msg])
-    # no entry landed; the head is still the add_constraint commit
-    assert t.latest_version() == v
-    assert t.snapshot().count() == 1
-    # Spark would call abort() on the failure — it reclaims the
-    # staged task file, leaving nothing for vacuum
-    staged = [r["path"] for r in msg.recs]
-    w.abort([msg])
-    for p in staged:
-        assert not os.path.exists(os.path.join(root, p))

@@ -1,14 +1,10 @@
-"""Regressions from the round-7 review of sources/lake.py:
-
-1. CDF reads spanning a drop_column + add_column of the SAME logical
-   name must null-fill the reborn column for old change rows (match
-   LakeTable.read_cdf's physical-identity matching) — never resurrect
-   the dead column's bytes.
-2. A failed FIRST write through format('lake') must leave the path
-   fresh (no committed empty table pinned to the failed job's
-   schema) so a corrected write can retry cleanly.
-3. A typo'd option('keys', ...) naming an absent column must fail at
-   plan time instead of freezing broken key_cols into entry 0.
+"""Regressions for the `readStream.format("lake")` source
+(sources/lake.py): CDF reads spanning a drop_column + add_column of
+the SAME logical name null-fill the reborn column for old change rows
+(matching LakeTable.read_cdf's physical-identity matching) and never
+resurrect the dead column's bytes; streams planned before an additive
+schema change keep their planned columns; and the source works from a
+foreign cwd with the package importable only in the driver.
 """
 
 from __future__ import annotations
@@ -18,6 +14,8 @@ import os
 import pytest
 
 from lcmap_firebird_spark.lakehouse import LakeTable
+
+from .lake_helpers import stream_cdf
 
 SCHEMA = "id long, name string, val double"
 
@@ -56,13 +54,7 @@ def test_cdf_read_null_fills_reborn_column(registered, tmp_path):
         )
     )
 
-    got = (
-        spark.read.format("lake")
-        .option("path", root)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", 0)
-        .load()
-    )
+    got = stream_cdf(spark, root, str(tmp_path / "cdf"))
     old_rows = got.filter(f"_commit_version = {v_old}").collect()
     assert old_rows, "the old cdf commit must still stream its rows"
     # the reborn 'val' never existed when v_old committed: NULL — the
@@ -79,51 +71,6 @@ def test_cdf_read_null_fills_reborn_column(registered, tmp_path):
     # new rows still carry the live string column
     new = got.filter("id = 100").collect()
     assert new and all(r["val"] == "live-string" for r in new)
-
-
-def test_failed_first_write_leaves_path_retryable(registered, tmp_path):
-    spark = registered
-    root = str(tmp_path / "poison")
-
-    from pyspark.sql import functions as F
-
-    @F.udf("long")
-    def boom(x):
-        raise RuntimeError("task failure")
-
-    bad = spark.range(5).select(boom("id").alias("id"), F.lit("x").alias("name"))
-    with pytest.raises(Exception):
-        bad.write.format("lake").mode("append").save(root)
-    # the failed job must NOT have committed a table at the path
-    txn = os.path.join(root, "_txn")
-    assert not os.path.isdir(txn) or not any(
-        f.endswith(".json") for f in os.listdir(txn)
-    ), "failed first write left a committed (empty) table behind"
-
-    # retry with a CORRECTED (different) schema — must succeed, which
-    # the old plan-time bootstrap made impossible
-    good = spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], SCHEMA)
-    good.write.format("lake").option("keys", "id").mode("append").save(root)
-    t = LakeTable(spark, root)
-    assert sorted(tuple(r) for r in t.snapshot().collect()) == [
-        (1, "a", 1.0),
-        (2, "b", 2.0),
-    ]
-    assert t._live()[1]["key_cols"] == ["id"]
-
-
-def test_keys_option_validated_at_plan_time(registered, tmp_path):
-    spark = registered
-    root = str(tmp_path / "badkeys")
-    df = spark.createDataFrame([(1, "a", 1.0)], SCHEMA)
-    with pytest.raises(Exception, match="keys"):
-        df.write.format("lake").option("keys", "idd").mode("append").save(root)
-    # nothing committed — the path stays fresh for a corrected write
-    assert not os.path.isdir(os.path.join(root, "_txn")) or not any(
-        f.endswith(".json") for f in os.listdir(os.path.join(root, "_txn"))
-    )
-    df.write.format("lake").option("keys", "id").mode("append").save(root)
-    assert LakeTable(spark, root).snapshot().count() == 1
 
 
 def test_stream_planned_before_add_column_projects_new_files(
@@ -145,7 +92,7 @@ def test_stream_planned_before_add_column_projects_new_files(
         spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], SCHEMA),
         key_cols=["id"],
     )
-    # plan the stream NOW: schema() resolves (and memoizes) the
+    # plan the stream NOW: load() resolves the head entry's
     # 3-column schema before the evolution below
     planned = (
         spark.readStream.format("lake").option("path", root).load()
@@ -262,18 +209,17 @@ def test_cdf_stream_planned_before_add_column_projects_changes(
 
 
 def test_datasource_foreign_cwd_pickles_lakehouse_by_value(tmp_path):
-    """r10 fix: every format('lake') surface must work when the
+    """r10 fix: both format('lake') streams must work when the
     package is importable ONLY in the driver process (sys.path.insert;
     PYTHONPATH stripped; cwd foreign) — the registered-by-value
     DataSource classes must carry their lakehouse dependencies in the
     pickle instead of re-importing the package inside Spark's Python
     workers. Before the fix the function-local
-    `from ..lakehouse import X` statements made every read, write and
+    `from ..lakehouse import X` statements made every read and
     stream die with ModuleNotFoundError in exactly this setup, which
     is the scenario CLAUDE.md invariant 2's registration exists for.
-    Covers: Arrow writer append on an IDENTITY table (engine-assigned
-    values, watermark advancing), batch read, CDF batch read, and the
-    streaming source."""
+    Covers, on an IDENTITY table (engine-assigned values): the CDF
+    stream's derived inserts and the plain stream."""
     import subprocess
     import sys
 
@@ -297,18 +243,18 @@ root = {root!r}
 t = LakeTable.create(spark, root,
     spark.createDataFrame([(1, "a")], "id long, name string"),
     key_cols=["id"], identity="rid", enable_cdf=True)
-(spark.createDataFrame([(2, "b")], "id long, name string")
-    .write.format("lake").mode("append").option("path", root).save())
-got = sorted(r["id"] for r in
-    spark.read.format("lake").option("path", root).load().collect())
-assert got == [1, 2], got
+t.append(spark.createDataFrame([(2, "b")], "id long, name string"))
 rids = sorted(r["rid"] for r in t.snapshot().collect())
 assert rids == [1, 2], rids
-cdf = (spark.read.format("lake").option("path", root)
-       .option("readChangeFeed", "true").option("startingVersion", 0)
-       .load().collect())
-# startingVersion is EXCLUSIVE: (0, head] covers the create commit's
-# derived inserts AND the Arrow append's, identity values included
+q = (spark.readStream.format("lake").option("path", root)
+     .option("readChangeFeed", "true").load()
+     .writeStream.format("memory").queryName("c")
+     .trigger(availableNow=True)
+     .option("checkpointLocation", {ck!r} + "_cdf").start())
+q.awaitTermination(180)
+cdf = spark.sql("select * from c").collect()
+# startingVersion defaults to 0 and is EXCLUSIVE: (0, head] covers the
+# create commit's derived inserts AND the append's, identity included
 assert sorted((r["id"], r["rid"]) for r in cdf) == [(1, 1), (2, 2)], cdf
 assert all(r["_change_type"] == "insert" for r in cdf), cdf
 q = (spark.readStream.format("lake").option("path", root).load()
@@ -316,8 +262,8 @@ q = (spark.readStream.format("lake").option("path", root).load()
      .trigger(availableNow=True)
      .option("checkpointLocation", {ck!r}).start())
 q.awaitTermination(180)
-n = spark.sql("select count(*) c from m").collect()[0]["c"]
-assert n == 2, n
+got = sorted((r["id"], r["rid"]) for r in spark.sql("select * from m").collect())
+assert got == [(1, 1), (2, 2)], got
 print("FOREIGN_CWD_OK")
 """
     )

@@ -16,6 +16,8 @@ from lcmap_firebird_spark.lakehouse import (
     LakeTable,
 )
 
+from .lake_helpers import duckdb_snapshot, stream_cdf
+
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
@@ -688,15 +690,12 @@ def test_delete_mor_cow_delete_interplay(spark, table):
 
 
 def test_delete_mor_datasource_and_lookup_and_scan(spark, table):
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
     table.delete_mor("id % 5 = 0")
-    spark.dataSource.register(LakeDataSource)
-    ds = (
-        spark.read.format("lake").option("path", table.root).load()
-    )
-    assert ds.count() == 80
-    assert ds.filter("id % 5 = 0").count() == 0
+    # an independent reader applies the same deletion vectors
+    ds = duckdb_snapshot(table)
+    assert len(ds) == 80
+    assert not [r for r in ds if r[0] % 5 == 0]
+    assert ds == sorted(map(tuple, table.snapshot().collect()), key=repr)
     # point lookup of a deleted key finds nothing
     assert table.lookup(10).count() == 0
     assert table.lookup(11).count() == 1
@@ -893,60 +892,7 @@ def test_cdf_files_survive_vacuum_and_restore_diff(spark, cdf_table):
     assert restored.filter("id < 10").count() == 10
 
 
-def test_datasource_filter_pushdown_prunes_files(spark, tmp_path):
-    """df.filter on a format('lake') read prunes FILES from the
-    commit-log stats before Spark schedules anything — automatic
-    data skipping via the PySpark 4.1 pushFilters hook."""
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    spark.dataSource.register(LakeDataSource)
-    df0 = spark.createDataFrame(
-        [(i, float(i)) for i in range(10_000)], "id long, val double"
-    ).repartition(8)
-    root = str(tmp_path / "ptbl")
-    t = LakeTable.create(
-        spark, root, spark.createDataFrame([], "id long, val double"),
-        key_cols=["id"],
-    )
-    t.append_clustered(df0)  # disjoint per-file id ranges
-    n_files = len([r for r in t._live()[0] if r.get("rows")])
-    assert n_files > 2
-    # one load() per query: PySpark 4.1 reuses the first-planned scan
-    # across queries sharing a load() DataFrame when pushdown is on
-    # (upstream hazard — see LakePushdownReader's docstring)
-    def load():
-        return (
-            spark.read.format("lake")
-            .option("path", root)
-            .option("pushdown", "true")
-            .load()
-        )
-
-    narrow = load().filter("id >= 100 AND id < 200")
-    # correctness: identical rows to the snapshot-side filter
-    assert narrow.count() == 100
-    got = {r["id"] for r in narrow.collect()}
-    assert got == set(range(100, 200))
-    # pruning: the narrow read schedules fewer input partitions than
-    # the table has live files (clustered ranges are disjoint, so a
-    # 100-id window hits at most a couple of files + the empty-create
-    # stub)
-    assert narrow.rdd.getNumPartitions() <= 3 < n_files
-    # an unfiltered read sees every file and every row
-    base = load()
-    assert base.count() == 10_000
-    assert base.rdd.getNumPartitions() >= n_files
-    # equality also prunes; unprunable predicates stay correct
-    assert (
-        load().filter("id = 5000").rdd.getNumPartitions() <= 2
-    )
-    assert load().filter("val < 50.0").count() == 50  # no id stats
-
-
-def test_cdf_batch_datasource_versioned_read(spark, cdf_table):
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    spark.dataSource.register(LakeDataSource)
+def test_cdf_batch_datasource_versioned_read(spark, cdf_table, tmp_path):
     t = cdf_table
     v0 = t.latest_version()
     t.merge(
@@ -954,13 +900,7 @@ def test_cdf_batch_datasource_versioned_read(spark, cdf_table):
             [(5, "FIVE", 55.0)], "id long, name string, val double"
         )
     )
-    df = (
-        spark.read.format("lake")
-        .option("path", t.root)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", v0)
-        .load()
-    )
+    df = stream_cdf(spark, t.root, str(tmp_path / "cdf"), start=v0)
     got = {(r["_change_type"], r["id"]) for r in df.collect()}
     assert got == {("update_preimage", 5), ("update_postimage", 5)}
     # equals the API surface
@@ -968,14 +908,6 @@ def test_cdf_batch_datasource_versioned_read(spark, cdf_table):
         (r["_change_type"], r["id"]) for r in t.read_cdf(v0).collect()
     }
     assert got == api
-    with pytest.raises(Exception, match="startingVersion"):
-        (
-            spark.read.format("lake")
-            .option("path", t.root)
-            .option("readChangeFeed", "true")
-            .load()
-            .collect()
-        )
 
 
 def test_cdf_streaming_source_tails_changes(spark, cdf_table, tmp_path):
@@ -1156,81 +1088,25 @@ def test_append_retry_carries_concurrent_schema_evolution(spark, table):
 
 
 def test_lake_datasource_reads_snapshot_and_versions(spark, table):
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    try:
-        spark.dataSource.register(LakeDataSource)
-    except Exception:
-        pass  # already registered by an earlier test in the session
-    df = spark.read.format("lake").option("path", table.root).load()
-    assert _rows(df) == _rows(table.snapshot())
-    # time travel through the reader option
-    v0_count = table.snapshot(version=1).count()
+    assert duckdb_snapshot(table) == sorted(_rows(table.snapshot()), key=repr)
+    # time travel: the log replay at an old version agrees too
+    v1 = sorted(_rows(table.snapshot(version=1)), key=repr)
     table.append(
         spark.createDataFrame(
             [(7000, "x", 0.0)], "id long, name string, val double"
         )
     )
-    old = (
-        spark.read.format("lake")
-        .option("path", table.root)
-        .option("version", 1)
-        .load()
-    )
-    assert old.count() == v0_count
+    assert duckdb_snapshot(table, version=1) == v1
+    assert len(duckdb_snapshot(table)) == len(v1) + 1
 
 
 def test_lake_datasource_null_fills_evolved_column(spark, table):
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    try:
-        spark.dataSource.register(LakeDataSource)
-    except Exception:
-        pass
     table.add_column("extra", "double")
-    df = spark.read.format("lake").option("path", table.root).load()
-    assert "extra" in df.columns
+    assert table.snapshot().columns[-1] == "extra"
+    rows = duckdb_snapshot(table)
     # files written before the evolution read as NULL
-    assert df.filter("extra IS NOT NULL").count() == 0
-    assert df.count() == 100
-
-
-def test_lake_datasource_write_roundtrip(spark, tmp_path):
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    try:
-        spark.dataSource.register(LakeDataSource)
-    except Exception:
-        pass
-    root = str(tmp_path / "wtbl")
-    df = spark.createDataFrame(
-        [(i, float(i)) for i in range(500)], "id long, val double"
-    ).repartition(4)
-    # fresh path bootstraps the table (keys option sets merge keys)
-    df.write.format("lake").mode("append").option("path", root).option(
-        "keys", "id"
-    ).save()
-    t = LakeTable(spark, root)
-    assert t.snapshot().count() == 500
-    assert t._live(1)[1]["key_cols"] == ["id"]
-    # one staged file per non-empty task, all in ONE commit
-    assert t.history()[-1]["operation"] == "append"
-    assert t.latest_version() == 1
-    # second append through the writer surface
-    spark.createDataFrame([(900, 9.0)], "id long, val double").write.format(
-        "lake"
-    ).mode("append").option("path", root).save()
-    assert t.snapshot().count() == 501
-    # overwrite replaces the live set atomically
-    spark.createDataFrame([(1, -1.0)], "id long, val double").write.format(
-        "lake"
-    ).mode("overwrite").option("path", root).save()
-    assert _rows(t.snapshot()) == [(1, -1.0)]
-    # and the pre-overwrite state is still time-travelable
-    assert t.snapshot(version=t.latest_version() - 1).count() == 501
-    # the table's own transactional ops work on writer-created tables
-    t.merge(spark.createDataFrame([(2, 2.0)], "id long, val double"))
-    assert _rows(t.snapshot()) == [(1, -1.0), (2, 2.0)]
+    assert len(rows) == 100
+    assert all(r[-1] is None for r in rows)
 
 
 def test_timestamp_time_travel(spark, table):
@@ -1575,45 +1451,6 @@ def test_append_retry_revalidates_new_constraint(spark, tmp_path):
     assert not any(
         os.path.exists(os.path.join(root, r["path"])) for r in add
     )
-
-
-def test_constraints_with_datasource_writer_and_overwrite(spark, tmp_path):
-    """PySpark runs the DataSource commit in a session-less worker
-    where CHECK constraints cannot be validated: writes to a
-    constrained table through format('lake') refuse cleanly (staged
-    task files reclaimed by abort) instead of bypassing enforcement;
-    unconstrained tables keep the writer. LakeTable.append validates
-    'overwrite'-introduced rows through its own path."""
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    try:
-        spark.dataSource.register(LakeDataSource)
-    except Exception:
-        pass
-    root = str(tmp_path / "dstbl")
-    LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, 5.0)], "id long, val double"),
-        key_cols=["id"],
-        constraints={"val_pos": "val > 0"},
-    )
-    t = LakeTable(spark, root)
-    ok = spark.createDataFrame([(2, 2.0)], "id long, val double")
-    for mode in ("append", "overwrite"):
-        with pytest.raises(Exception) as e:
-            ok.write.format("lake").mode(mode).option("path", root).save()
-        assert "CHECK constraints" in str(e.value)
-    assert t.latest_version() == 1 and t.snapshot().count() == 1
-    # no orphaned task files: everything on disk is referenced
-    live = {r["path"] for r in t._live()[0]}
-    on_disk = {
-        "data/" + f for f in os.listdir(os.path.join(root, "data"))
-    }
-    assert on_disk == live
-    # the sanctioned constrained-table write path still validates
-    t.append(ok)
-    assert t.snapshot().count() == 2
 
 
 def test_constraint_on_added_column_nullfills(spark, tmp_path):
@@ -2348,43 +2185,6 @@ def test_restore_detects_concurrent_vacuum_sweep(spark, table, monkeypatch):
     assert table.history()[-1]["operation"] == "restore"
 
 
-def test_datasource_writer_schema_compat_and_bootstrap_fields(spark, tmp_path):
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    try:
-        spark.dataSource.register(LakeDataSource)
-    except Exception:
-        pass
-    root = str(tmp_path / "wtbl2")
-    spark.createDataFrame([(1, 1.0)], "id long, val double").write.format(
-        "lake"
-    ).mode("append").option("path", root).option("keys", "id").save()
-    # writer bootstrap writes the same entry-0 fields create() does
-    with open(os.path.join(root, "_txn", f"{0:020d}.json")) as f:
-        e0 = json.load(f)
-    assert e0["cdf_enabled"] is False and e0["constraints"] == {}
-    assert isinstance(e0["ts"], float)
-    t = LakeTable(spark, root)
-    # unknown column and mistyped column are rejected at PLAN time
-    # with a clear message (the writer stages batches verbatim — a
-    # bad file would brick or silently null away)
-    with pytest.raises(Exception, match="unknown column"):
-        spark.createDataFrame(
-            [(2, 2.0, "x")], "id long, val double, extra string"
-        ).write.format("lake").mode("append").option("path", root).save()
-    with pytest.raises(Exception, match="cast/rename"):
-        spark.createDataFrame(
-            [(2, "oops")], "id long, val string"
-        ).write.format("lake").mode("append").option("path", root).save()
-    # a pre-evolution shape (missing nullable column) still lands
-    t.add_column("score", "double")
-    spark.createDataFrame([(3, 3.0)], "id long, val double").write.format(
-        "lake"
-    ).mode("append").option("path", root).save()
-    got = {r["id"]: r["score"] for r in t.snapshot().collect()}
-    assert got == {1: None, 3: None}
-
-
 def test_cdf_stream_startingversion_resumes_past_restore(spark, tmp_path):
     from lcmap_firebird_spark.sources.lake import LakeDataSource
 
@@ -2521,17 +2321,11 @@ def test_clone_inherits_cdf_and_streams_changes(spark, tmp_path):
     never transfers — the clone's feed starts at ITS create). The
     clone-commit's referenced files derive as inserts on every feed
     with the transferred deletion vectors APPLIED, so a MOR-deleted
-    source row never appears as a clone insert: batch read_cdf,
-    batch DataSource CDF read, and the STREAMING CDF source all
-    agree, and per-window replay closure holds from version 0."""
+    source row never appears as a clone insert: batch read_cdf and
+    the STREAMING CDF source agree, and per-window replay closure
+    holds from version 0."""
     from pyspark.sql import functions as F
 
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    try:
-        spark.dataSource.register(LakeDataSource)
-    except Exception:
-        pass
     src_root = str(tmp_path / "cdfsrc")
     t = LakeTable.create(
         spark,
@@ -2555,32 +2349,7 @@ def test_clone_inherits_cdf_and_streams_changes(spark, tmp_path):
 
     want = [(3, "v3", 1), (4, "v4", 1), (5, "v5", 1), (6, "v6", 1), (99, "new", 2)]
     assert _inserts(c.read_cdf(0)) == want
-
-    batch = (
-        spark.read.format("lake")
-        .option("path", c.root)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", "0")
-        .load()
-    )
-    assert _inserts(batch) == want
-
-    out = str(tmp_path / "cdfout")
-    ck = str(tmp_path / "cdfck")
-    (
-        spark.readStream.format("lake")
-        .option("path", c.root)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", "0")
-        .load()
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(120)
-    )
-    assert _inserts(spark.read.parquet(out)) == want
+    assert _inserts(stream_cdf(spark, c.root, str(tmp_path / "cdf"))) == want
 
     # replay closure from the clone's empty v0 through both commits
     snap = sorted((r["id"], r["val"]) for r in c.snapshot().collect())

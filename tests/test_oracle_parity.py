@@ -26,6 +26,8 @@ _REPRESENTATIVES = [
     "d7_clusters_pagerank",
     "d6_semdedup",
     "s3_knn_lsh",
+    "t1_token_stats",
+    "t2_lang_id_nb",
     "t3_quality_fingerprint",
     "x4_dsir_stratified",
     "x5_upsert",
