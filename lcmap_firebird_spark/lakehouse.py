@@ -343,6 +343,63 @@ def _stats_intersect(rec: dict, ranges: dict, mapping: dict) -> bool:
     return True
 
 
+def _preflight(
+    df: DataFrame, key_cols: list[str], op_col: str | None = None
+) -> dict:
+    """Validate a keyed writer's source with ONE aggregation and
+    return its key ranges ({col: (min, max)}, or {} for an empty
+    source) for `_affected_files`. Group by key with a per-group row
+    count — plus, for a change batch (`op_col` = the caller's name
+    for its `_op` column), a bad-op count — then fold max(count),
+    the bad total and the key min/max in a 1-row global agg (r12:
+    one source pass instead of three). min/max over distinct keys
+    equals min/max over all rows, and max(count) > 1 iff a key
+    repeats. Duplicate keys raise first; then NULL or unknown ops
+    raise (every change key lands in the anti-join, so a bad op
+    would SILENTLY DELETE its matched target row). A merge source
+    (`op_col` None) adds no op term to the plan. Aliases carry a
+    collision-proof __pf_ prefix (r12 ADVICE)."""
+    bad = F.col("_op").isNull() | ~F.col("_op").isin("upsert", "delete")
+    per_key = [F.count(F.lit(1)).alias("__pf_c")]
+    folds = [F.max("__pf_c").alias("__pf_maxc")]
+    if op_col is not None:
+        per_key.append(F.sum(bad.cast("int")).alias("__pf_b"))
+        folds.append(F.sum("__pf_b").alias("__pf_nbad"))
+    row = (
+        df.groupBy(*key_cols)
+        .agg(*per_key)
+        .agg(
+            *folds,
+            *[F.min(c).alias(f"__pf_mn_{c}") for c in key_cols],
+            *[F.max(c).alias(f"__pf_mx_{c}") for c in key_cols],
+        )
+        .first()
+    )
+    if (row["__pf_maxc"] or 0) > 1:
+        raise ValueError(
+            "duplicate keys in merge source; pass dedupe_source=True "
+            "to keep an arbitrary one"
+            if op_col is None
+            else "duplicate keys in change batch"
+        )
+    if op_col is not None and (row["__pf_nbad"] or 0) > 0:
+        # the error path re-queries for detail; the happy path pays
+        # nothing for it
+        found = [
+            r["_op"]
+            for r in df.filter(bad).select("_op").distinct().limit(5).collect()
+        ]
+        raise ValueError(
+            f"invalid {op_col} values {found!r}: expected 'upsert' or "
+            "'delete'"
+        )
+    if any(row[f"__pf_mn_{c}"] is None for c in key_cols):
+        return {}
+    return {
+        c: (row[f"__pf_mn_{c}"], row[f"__pf_mx_{c}"]) for c in key_cols
+    }
+
+
 class LakeTable:
     """Handle to a committed table. `create` once, then attach with
     `LakeTable(spark, root)`."""
@@ -528,6 +585,43 @@ class LakeTable:
 
     # -- write -------------------------------------------------------------
 
+    def _stage(
+        self, df: DataFrame, suffix: str, keep_empty: bool
+    ) -> list[tuple[str, int]]:
+        """Write df into a private `.stage-<uuid>` directory, rename
+        its part files into data/ as `<uuid><suffix>` and return
+        [(root-relative path, footer row count)]. Zero-row parts are
+        dropped unless `keep_empty`. The one staging path for data,
+        change and deletion-vector files: every file is complete
+        before it is visible in data/, and invisible to readers until
+        a commit references it (vacuum's retention window protects it
+        meanwhile)."""
+        import shutil
+
+        import pyarrow.parquet as pq
+
+        tmp = os.path.join(self.root, f".stage-{uuid.uuid4().hex}")
+        os.makedirs(os.path.join(self.root, _DATA), exist_ok=True)
+        staged = []
+        try:
+            df.write.mode("overwrite").parquet(tmp)
+            for f in sorted(os.listdir(tmp)):
+                if not f.endswith(".parquet"):
+                    continue
+                n = pq.ParquetFile(os.path.join(tmp, f)).metadata.num_rows
+                if not n and not keep_empty:
+                    continue
+                name = f"{_DATA}/{uuid.uuid4().hex}{suffix}"
+                os.rename(
+                    os.path.join(tmp, f), os.path.join(self.root, name)
+                )
+                staged.append((name, n))
+        finally:
+            # a failed write leaves no staging directory behind
+            # (vacuum only sweeps data/)
+            shutil.rmtree(tmp, ignore_errors=True)
+        return staged
+
     def _stage_files(
         self, df: DataFrame, stat_cols: list[str] | None = None
     ) -> list[dict]:
@@ -556,24 +650,14 @@ class LakeTable:
                     for c in df.columns
                 ]
             )
-        tmp = os.path.join(self.root, f".stage-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(tmp)
-        recs = []
-        os.makedirs(os.path.join(self.root, _DATA), exist_ok=True)
-        for f in sorted(os.listdir(tmp)):
-            if not f.endswith(".parquet"):
-                continue
-            name = f"{_DATA}/{uuid.uuid4().hex}.parquet"
-            dst = os.path.join(self.root, name)
-            os.rename(os.path.join(tmp, f), dst)
-            recs.append({"path": name} | _file_stats(dst, key_cols))
-        for leftover in os.listdir(tmp):
-            os.remove(os.path.join(tmp, leftover))
-        os.rmdir(tmp)
         # CHECK constraints are enforced by _commit (against the
         # constraint set in force at COMMIT time, not staging time —
         # the head may move between the two)
-        return recs
+        return [
+            {"path": name}
+            | _file_stats(os.path.join(self.root, name), key_cols)
+            for name, _ in self._stage(df, ".parquet", keep_empty=True)
+        ]
 
     def _validate_staged(
         self,
@@ -806,11 +890,14 @@ class LakeTable:
         only; the column refuses rename/drop; CHECK constraints and
         generated expressions may not reference it (values are
         assigned after staging-time validation, which would see
-        NULL). CDF change rows carry the ASSIGNED values: merge/
-        apply_changes never retry, so their reserved ranges are
-        deterministic at staging and the change file records the
-        materialized ids (_fill_identity_in_changes, r8); append
-        inserts derive from add files, which readers materialize."""
+        NULL). CDF change rows carry the ASSIGNED values, written
+        into every change file at staging: merge/apply_changes never
+        retry, so their reserved ranges are deterministic at staging
+        and the change file records the materialized ids
+        (_fill_identity_in_changes, r8); delete/delete_mor stage
+        scanned pre-images; append inserts derive from add files,
+        which readers materialize. No reader fills identity into a
+        change file."""
         # stored expression text must be comment-free: it is later
         # re-embedded in composed SQL where a `--` line comment would
         # swallow the wrapper's tail (see _strip_sql_comments)
@@ -1252,28 +1339,13 @@ class LakeTable:
         `_change_type`); returns the entry record or None if the
         batch changed nothing. Files are invisible until the commit
         that references them (same discipline as data staging)."""
-        import pyarrow.parquet as pq
-
-        tmp = os.path.join(self.root, f".stage-{uuid.uuid4().hex}")
-        cdf_df.write.mode("overwrite").parquet(tmp)
-        paths, rows = [], 0
-        for f in sorted(os.listdir(tmp)):
-            if not f.endswith(".parquet"):
-                continue
-            n = pq.ParquetFile(os.path.join(tmp, f)).metadata.num_rows
-            if not n:
-                os.remove(os.path.join(tmp, f))
-                continue
-            name = f"{_DATA}/{uuid.uuid4().hex}.cdf.parquet"
-            os.rename(os.path.join(tmp, f), os.path.join(self.root, name))
-            paths.append(name)
-            rows += n
-        for leftover in os.listdir(tmp):
-            os.remove(os.path.join(tmp, leftover))
-        os.rmdir(tmp)
-        if not paths:
+        staged = self._stage(cdf_df, ".cdf.parquet", keep_empty=False)
+        if not staged:
             return None
-        return {"paths": paths, "rows": rows}
+        return {
+            "paths": [p for p, _ in staged],
+            "rows": sum(n for _, n in staged),
+        }
 
     def read_cdf(
         self, from_version: int, to_version: int | None = None
@@ -1287,7 +1359,10 @@ class LakeTable:
         DERIVED from their add files (no change file is ever written
         for pure inserts — Delta's rule, appends stay write-once);
         merge/delete/delete_mor/apply_changes read the change file
-        their commit staged; restore/overwrite commits fall back to
+        their commit staged, verbatim — its identity values were
+        materialized when it was staged (scanned pre-images, or
+        `_fill_identity_in_changes` for post-images and inserts), so
+        no read-time fill runs; restore/overwrite commits fall back to
         a snapshot diff of their two versions; metadata-only commits
         contribute nothing. Unlike `table_changes` (a two-snapshot
         diff), this is exact PER-COMMIT attribution at file-read
@@ -1320,60 +1395,6 @@ class LakeTable:
                         for p in e["cdf"]["paths"]
                     ]
                 )
-                # Identity values are a SCAN-time attribute (assigned
-                # from the commit's reserved range), so change rows
-                # staged DURING merge/apply_changes carry NULL for
-                # engine-assigned ids — but a CDF consumer must see
-                # the same values a snapshot reader sees (r8 combined
-                # -mix fuzz: read_cdf replay diverged on the identity
-                # column). Fill insert/update_postimage NULLs by key
-                # from the commit's own rewritten files, where the
-                # scan materializes them. Duplicate keys inside one
-                # commit's adds collapse to min() — unreachable for
-                # merge/apply_changes sources (unique keys enforced);
-                # only a duplicate-keyed TABLE could hit it, where
-                # per-row attribution is ambiguous anyway.
-                # Entries whose change file was staged through the
-                # write-time fill (or from scanned pre-images) carry
-                # 'identity_filled' and skip this — the extra
-                # per-entry file scan + join was pure overhead on
-                # post-r8 tables (r8 ADVICE); the read-time fill
-                # stays for change files committed before the flag
-                # existed.
-                ident = (
-                    None
-                    if e["cdf"].get("identity_filled")
-                    else self._identity()
-                )
-                if ident:
-                    icol = ident["col"]
-                    keys_e = e["key_cols"]
-                    adds = [
-                        r for r in e.get("add", [])
-                        if r.get("kind") not in ("dv",) and r.get("rows")
-                    ]
-                    if adds and icol not in keys_e:
-                        fills = (
-                            self._scan_live(
-                                adds, [], schema, mapping=_entry_mapping(e)
-                            )
-                            .groupBy(*keys_e)
-                            .agg(F.min(icol).alias("__rid_fill__"))
-                        )
-                        fillable = F.col("_change_type").isin(
-                            "insert", "update_postimage"
-                        )
-                        df = (
-                            df.join(fills, list(keys_e), "left")
-                            .withColumn(
-                                icol,
-                                F.when(
-                                    F.col(icol).isNull() & fillable,
-                                    F.col("__rid_fill__"),
-                                ).otherwise(F.col(icol)),
-                            )
-                            .drop("__rid_fill__")
-                        )
             elif e["operation"] in ("append", "create", "clone"):
                 # 'clone' (r9): the clone's v1 references the source
                 # snapshot's files — its CDF feed starts at its
@@ -1439,32 +1460,6 @@ class LakeTable:
             "_commit_version",
         )
 
-    def _merge_cdf(
-        self,
-        scan: DataFrame,
-        source: DataFrame,
-        key_cols: list[str],
-        cols: list[str],
-    ) -> DataFrame:
-        """Change rows for a merge: matched target rows are update
-        pre-images, their source twins post-images, unmatched source
-        rows inserts."""
-        tkeys = scan.select(*key_cols).distinct()
-        pre = scan.join(F.broadcast(source.select(*key_cols)), key_cols, "left_semi")
-        post = source.join(tkeys, key_cols, "left_semi")
-        ins = source.join(tkeys, key_cols, "left_anti")
-        return (
-            pre.select(*cols, F.lit("update_preimage").alias("_change_type"))
-            .unionByName(
-                post.select(
-                    *cols, F.lit("update_postimage").alias("_change_type")
-                )
-            )
-            .unionByName(
-                ins.select(*cols, F.lit("insert").alias("_change_type"))
-            )
-        )
-
     def delete_mor(self, predicate: str, extra: dict | None = None) -> int:
         """Merge-on-read delete: record matching row POSITIONS in a
         deletion-vector dataset instead of rewriting data files —
@@ -1511,10 +1506,8 @@ class LakeTable:
                 )
             )
             if rec:
-                # delete pre-images are SCANNED rows — identity is
-                # already materialized; flag so read_cdf skips its
-                # read-time fill (r8 ADVICE: pure overhead here)
-                rec["identity_filled"] = True
+                # delete pre-images are SCANNED rows: identity is
+                # already materialized
                 cdf_extra["cdf"] = rec
         extra = (extra or {}) | cdf_extra or None
         new_dv = matches
@@ -1528,45 +1521,18 @@ class LakeTable:
                 F.broadcast(live_files), "file", "left_semi"
             )
             new_dv = old.unionByName(matches)
-        # stage the DV dataset like data files (invisible pre-commit)
-        tmp = os.path.join(self.root, f".stage-{uuid.uuid4().hex}")
-        new_dv.write.mode("overwrite").parquet(tmp)
-        dv_stat = self.spark.read.schema(_DV_SCHEMA).parquet(tmp).agg(
-            F.count("*").alias("n"),
-            F.collect_set("file").alias("files"),
-        ).first()
-        if not dv_stat["n"]:
-            for f in os.listdir(tmp):
-                os.remove(os.path.join(tmp, f))
-            os.rmdir(tmp)
-            return self._commit(
-                "delete_mor", [], [], expected_head=head, extra=extra
-            )
-        import pyarrow.parquet as pq
-
-        covers = sorted(dv_stat["files"])
-        add = []
-        for f in sorted(os.listdir(tmp)):
-            if not f.endswith(".parquet"):
-                continue
-            name = f"{_DATA}/{uuid.uuid4().hex}.dv.parquet"
-            dst = os.path.join(self.root, name)
-            os.rename(os.path.join(tmp, f), dst)
-            n_rows = pq.ParquetFile(dst).metadata.num_rows
-            if not n_rows:
-                os.remove(dst)
-                continue
-            add.append(
-                {
-                    "path": name,
-                    "kind": "dv",
-                    "covers": covers,
-                    "rows": int(n_rows),
-                }
-            )
-        for leftover in os.listdir(tmp):
-            os.remove(os.path.join(tmp, leftover))
-        os.rmdir(tmp)
+        # stage the DV dataset like data files (invisible pre-commit);
+        # it holds at least the new matches, so it is never empty
+        staged = self._stage(new_dv, ".dv.parquet", keep_empty=False)
+        covers = sorted(
+            self._dv_df([{"path": p} for p, _ in staged])
+            .agg(F.collect_set("file").alias("files"))
+            .first()["files"]
+        )
+        add = [
+            {"path": p, "kind": "dv", "covers": covers, "rows": n}
+            for p, n in staged
+        ]
         return self._commit(
             "delete_mor",
             add,
@@ -1591,11 +1557,8 @@ class LakeTable:
         scan those files (where the identity projection
         materializes), and fill NULL identity on
         insert/update_postimage rows by key. The staged change file
-        then carries the same values a snapshot reader sees — which
-        is what makes the STREAMING CDF source exact too (r8; batch
-        read_cdf keeps a read-time fill as well, a no-op on files
-        staged through this path but covering change files committed
-        before it existed)."""
+        then carries the same values a snapshot reader sees, so both
+        read_cdf and the STREAMING CDF source read it verbatim (r8)."""
         ident = head_entry.get("identity")
         if not ident:
             return changes
@@ -1636,6 +1599,100 @@ class LakeTable:
             )
         )
 
+    def _keyed_rewrite(
+        self,
+        src: DataFrame,
+        head: int,
+        live: list[dict],
+        head_entry: dict,
+        operation: str,
+        extra: dict | None,
+        op_col: str | None = None,
+        preflight: bool = True,
+    ) -> int:
+        """The one keyed copy-on-write rewrite behind merge and
+        apply_changes. `src` is conformed to the pinned head's schema;
+        with `op_col` (the caller's name for it, used in error text)
+        it also carries `_op` ('upsert' or 'delete' per row) — a merge
+        source is the all-upsert case and carries no op column. Every
+        source key lands in the survivor anti-join, so matched target
+        rows are replaced or removed, unmatched upserts insert and
+        unmatched deletes no-op. Only files that can hold a source
+        key are read and rewritten; the scan applies live deletion
+        vectors, so merge-on-read deletes never resurrect. One
+        read-dependent commit named `operation`.
+
+        `preflight=False` (merge's dedupe_source) skips the
+        `_preflight` aggregation: `_affected_files` then computes the
+        key ranges itself."""
+        data, dvs = self._split_live(live)
+        key_cols = head_entry["key_cols"]
+        schema = StructType.fromJson(json.loads(head_entry["schema"]))
+        mapping = _entry_mapping(head_entry)
+        cols = [f.name for f in schema.fields]
+        keys = src.select(*key_cols)
+        ranges = _preflight(src, key_cols, op_col) if preflight else None
+        affected = self._affected_files(
+            data, keys, key_cols, schema, mapping=mapping, key_ranges=ranges
+        )
+        upserts = src
+        if op_col is not None:
+            upserts = src.filter(F.col("_op") != "delete").drop("_op")
+        cdf = self._cdf_enabled()
+        if cdf:
+            # feeds both the rewrite and the change rows
+            upserts = upserts.localCheckpoint(eager=True)
+        rewritten = upserts
+        change_rows: DataFrame | None = None
+        if affected:
+            recs = [r for r in data if r["path"] in set(affected)]
+            scan = self._scan_live(recs, dvs, schema, mapping=mapping)
+            if cdf:
+                scan = scan.localCheckpoint(eager=True)
+                # matched target rows are pre-images labelled by their
+                # op (upsert → update_preimage, delete → delete);
+                # source upserts split into post-images and inserts
+                # by target match
+                if op_col is None:
+                    matched = src.select(*key_cols)
+                    label = F.lit("update_preimage")
+                else:
+                    matched = src.select(*key_cols, "_op")
+                    label = F.when(
+                        F.col("_op") == "delete", "delete"
+                    ).otherwise("update_preimage")
+                pre = scan.join(F.broadcast(matched), key_cols).select(
+                    *cols, label.alias("_change_type")
+                )
+                tkeys = scan.select(*key_cols).distinct()
+                post = upserts.join(tkeys, key_cols, "left_semi").select(
+                    *cols, F.lit("update_postimage").alias("_change_type")
+                )
+                ins = upserts.join(tkeys, key_cols, "left_anti").select(
+                    *cols, F.lit("insert").alias("_change_type")
+                )
+                change_rows = pre.unionByName(post).unionByName(ins)
+            survivors = scan.join(F.broadcast(keys), key_cols, "left_anti")
+            rewritten = survivors.unionByName(upserts)
+        elif cdf:
+            change_rows = upserts.select(
+                *cols, F.lit("insert").alias("_change_type")
+            )
+        add = self._stage_files(rewritten)
+        if change_rows is not None:
+            # staged AFTER the data files so engine-assigned identity
+            # values can be filled in from them
+            rec = self._stage_cdf(
+                self._fill_identity_in_changes(
+                    change_rows, add, head_entry, schema
+                )
+            )
+            if rec:
+                extra = (extra or {}) | {"cdf": rec}
+        return self._commit(
+            operation, add, affected, expected_head=head, extra=extra
+        )
+
     def merge(
         self,
         source: DataFrame,
@@ -1653,20 +1710,14 @@ class LakeTable:
         advances between snapshot and commit."""
         head = self.latest_version()
         live, head_entry = self._live(head)
-        data, dvs = self._split_live(live)
         key_cols = head_entry["key_cols"]
-        schema = StructType.fromJson(json.loads(head_entry["schema"]))
         # the SAME writer contract as append (_conform): absent
         # generated columns compute, absent evolution-added columns
         # (identity included — NULLs materialize from the commit's
         # reserved range at scan, the BY DEFAULT rule) null-fill, and
-        # unknown columns raise. The hand-rolled projection this
-        # replaces crashed on a source omitting an evolution-added
-        # column (r8 combined-mix fuzz — the same gap apply_changes
-        # had). Key columns are required EXPLICITLY: _conform would
-        # null-fill an absent key, silently merging by NULL.
-        # strict_original (r9): null-fill is confined to
-        # evolution-added columns — an absent ORIGINAL column raises
+        # unknown columns raise. Key columns are required EXPLICITLY:
+        # _conform would null-fill an absent key, silently merging by
+        # NULL. strict_original (r9): an absent ORIGINAL column raises
         # rather than NULL-overwriting existing values on update.
         missing_keys = [k for k in key_cols if k not in source.columns]
         if missing_keys:
@@ -1674,96 +1725,11 @@ class LakeTable:
                 f"merge source lacks key column(s) {missing_keys}"
             )
         source = self._conform(source, head_entry, strict_original=True)
-        keys = source.select(*key_cols)
-        key_ranges = None
         if dedupe_source:
             source = source.dropDuplicates(key_cols)
-            keys = source.select(*key_cols)
-        else:
-            # ONE source aggregation answers both pre-flight
-            # questions (r12 — the separate dup-guard + stats-range
-            # scans were two full source passes): group by key, then
-            # fold max(multiplicity) and the key min/max bounds in a
-            # 1-row global agg. min/max over distinct keys equals
-            # min/max over all rows, and max(count) > 1 iff a
-            # duplicate exists — byte-identical semantics, one scan.
-            # internal aliases use a collision-proof __pf_ prefix
-            # (r12 ADVICE: a key column literally named _c/_maxc made
-            # the old aliases ambiguous at plan time)
-            row = (
-                keys.groupBy(*key_cols)
-                .agg(F.count(F.lit(1)).alias("__pf_c"))
-                .agg(
-                    F.max("__pf_c").alias("__pf_maxc"),
-                    *[F.min(c).alias(f"__pf_mn_{c}") for c in key_cols],
-                    *[F.max(c).alias(f"__pf_mx_{c}") for c in key_cols],
-                )
-                .first()
-            )
-            if (row["__pf_maxc"] or 0) > 1:
-                raise ValueError(
-                    "duplicate keys in merge source; pass "
-                    "dedupe_source=True to keep an arbitrary one"
-                )
-            key_ranges = (
-                {}  # empty source: nothing can match
-                if any(row[f"__pf_mn_{c}"] is None for c in key_cols)
-                else {
-                    c: (row[f"__pf_mn_{c}"], row[f"__pf_mx_{c}"])
-                    for c in key_cols
-                }
-            )
-        affected = self._affected_files(
-            data, keys, key_cols, schema,
-            mapping=_entry_mapping(head_entry),
-            key_ranges=key_ranges,
-        )
-        cols = [f.name for f in schema.fields]
-        cdf_extra: dict = {}
-        change_rows: DataFrame | None = None
-        if affected:
-            # DV-applied scan: rows already deleted merge-on-read
-            # must not resurrect in the rewritten files
-            recs = [r for r in data if r["path"] in set(affected)]
-            scan = self._scan_live(
-                recs, dvs, schema, mapping=_entry_mapping(head_entry)
-            )
-            if self._cdf_enabled():
-                # scan feeds both survivors and the change rows
-                scan = scan.localCheckpoint(eager=True)
-                source = source.localCheckpoint(eager=True)
-                change_rows = self._merge_cdf(scan, source, key_cols, cols)
-            survivors = scan.join(
-                F.broadcast(keys), key_cols, "left_anti"
-            )
-            rewritten = survivors.unionByName(source)
-        else:
-            rewritten = source
-            if self._cdf_enabled():
-                source = source.localCheckpoint(eager=True)
-                rewritten = source
-                change_rows = source.select(
-                    *cols, F.lit("insert").alias("_change_type")
-                )
-        add = self._stage_files(rewritten)
-        if change_rows is not None:
-            # staged AFTER the data files so engine-assigned identity
-            # values can be filled in from them (write-time fill —
-            # see _fill_identity_in_changes)
-            rec = self._stage_cdf(
-                self._fill_identity_in_changes(
-                    change_rows, add, head_entry, schema
-                )
-            )
-            if rec:
-                # write-time filled (or nothing to fill — the fill's
-                # early-exits mirror read_cdf's own skip conditions):
-                # read_cdf can skip its read-time fill (r8 ADVICE)
-                rec["identity_filled"] = True
-                cdf_extra["cdf"] = rec
-        return self._commit(
-            "merge", add, affected, expected_head=head,
-            extra=(extra or {}) | cdf_extra,
+        return self._keyed_rewrite(
+            source, head, live, head_entry, "merge", extra,
+            preflight=not dedupe_source,
         )
 
     def delete(self, predicate: str) -> int:
@@ -1812,7 +1778,6 @@ class LakeTable:
             )
             if rec:
                 # scanned pre-images: identity already materialized
-                rec["identity_filled"] = True
                 cdf_extra["cdf"] = rec
         # SQL DELETE semantics: a row is deleted only when the
         # predicate is TRUE — rows where it evaluates to NULL must
@@ -2026,31 +1991,10 @@ class LakeTable:
                 r["file"]
                 for r in rest.select("file").distinct().collect()
             )
-            tmp = os.path.join(self.root, f".stage-{uuid.uuid4().hex}")
-            rest.write.mode("overwrite").parquet(tmp)
-            import pyarrow.parquet as pq
-
-            for f in sorted(os.listdir(tmp)):
-                if not f.endswith(".parquet"):
-                    continue
-                name = f"{_DATA}/{uuid.uuid4().hex}.dv.parquet"
-                dst = os.path.join(self.root, name)
-                os.rename(os.path.join(tmp, f), dst)
-                n_rows = pq.ParquetFile(dst).metadata.num_rows
-                if not n_rows:
-                    os.remove(dst)
-                    continue
-                add.append(
-                    {
-                        "path": name,
-                        "kind": "dv",
-                        "covers": covers,
-                        "rows": int(n_rows),
-                    }
-                )
-            for leftover in os.listdir(tmp):
-                os.remove(os.path.join(tmp, leftover))
-            os.rmdir(tmp)
+            add += [
+                {"path": p, "kind": "dv", "covers": covers, "rows": n}
+                for p, n in self._stage(rest, ".dv.parquet", keep_empty=False)
+            ]
         return self._commit(
             "compact_deletes", add, remove, expected_head=head
         )
@@ -3080,17 +3024,10 @@ class LakeTable:
         ambiguous — rejected."""
         head = self.latest_version()
         live, head_entry = self._live(head)
-        data, dvs = self._split_live(live)
         key_cols = head_entry["key_cols"]
-        schema = StructType.fromJson(json.loads(head_entry["schema"]))
-        # the SAME writer contract as append/merge (_conform): absent
-        # evolution-added columns null-fill (a pre-evolution CDC
-        # source stays valid after add_column — r8 combined-mix fuzz
-        # found the hand-rolled projection here crashed on it),
-        # absent generated columns compute, misspelled columns raise
-        # instead of silently dropping their data, and the op column
-        # rides through verbatim. Key columns are required
-        # explicitly (_conform would null-fill an absent key).
+        # the SAME writer contract as merge (_conform, strict_original)
+        # with the op column riding through verbatim; key columns are
+        # required explicitly
         missing_keys = [k for k in key_cols if k not in changes.columns]
         if missing_keys:
             raise ValueError(
@@ -3101,7 +3038,12 @@ class LakeTable:
         # reference would die with AMBIGUOUS_REFERENCE (r8 ADVICE);
         # same for a table column named '_op', the pipeline's
         # internal label the op column is renamed to.
-        field_names = {f.name for f in schema.fields}
+        field_names = {
+            f.name
+            for f in StructType.fromJson(
+                json.loads(head_entry["schema"])
+            ).fields
+        }
         if op_col in field_names:
             raise ValueError(
                 f"op_col {op_col!r} is a table column: the change "
@@ -3114,130 +3056,14 @@ class LakeTable:
                 "uses internally for the operation label; this table "
                 "cannot take CDC batches through apply_changes"
             )
-        # strict_original (r9): same contract as merge — absent
-        # ORIGINAL columns raise; only evolution-added null-fill.
         ops = self._conform(
             changes, head_entry, keep=(op_col,), strict_original=True
         )
         if op_col != "_op":
             ops = ops.withColumnRenamed(op_col, "_op")
-        # ONE batch aggregation answers all three pre-flight
-        # questions (r12 — dup-guard, op-validity, and the stats
-        # min/max ranges were three separate full passes): group by
-        # key with a per-group bad-op count, then fold
-        # max(multiplicity), total bad count, and the key bounds in a
-        # 1-row global agg. Error paths re-query for detail — an
-        # extra job on the raise path costs nothing on the happy one.
-        # Op validity stays checked up front: every change key lands
-        # in the anti-join, so a NULL or misspelled _op would
-        # SILENTLY DELETE its matched target row instead of erroring.
-        _bad_pred = F.col("_op").isNull() | ~F.col("_op").isin(
-            "upsert", "delete"
-        )
-        # __pf_ prefix: collision-proof vs user key-column names
-        # (r12 ADVICE — same rationale as merge's pre-flight agg)
-        row = (
-            ops.groupBy(*key_cols)
-            .agg(
-                F.count(F.lit(1)).alias("__pf_c"),
-                F.sum(_bad_pred.cast("int")).alias("__pf_b"),
-            )
-            .agg(
-                F.max("__pf_c").alias("__pf_maxc"),
-                F.sum("__pf_b").alias("__pf_nbad"),
-                *[F.min(c).alias(f"__pf_mn_{c}") for c in key_cols],
-                *[F.max(c).alias(f"__pf_mx_{c}") for c in key_cols],
-            )
-            .first()
-        )
-        if (row["__pf_maxc"] or 0) > 1:
-            raise ValueError("duplicate keys in change batch")
-        if (row["__pf_nbad"] or 0) > 0:
-            bad = [
-                r["_op"]
-                for r in ops.filter(_bad_pred)
-                .select("_op")
-                .distinct()
-                .limit(5)
-                .collect()
-            ]
-            raise ValueError(
-                f"invalid {op_col} values {bad!r}: expected 'upsert' or 'delete'"
-            )
-        keys = ops.select(*key_cols)
-        key_ranges = (
-            {}  # empty batch: nothing can match
-            if any(row[f"__pf_mn_{c}"] is None for c in key_cols)
-            else {
-                c: (row[f"__pf_mn_{c}"], row[f"__pf_mx_{c}"])
-                for c in key_cols
-            }
-        )
-        affected = self._affected_files(
-            data, keys, key_cols, schema,
-            mapping=_entry_mapping(head_entry),
-            key_ranges=key_ranges,
-        )
-        upserts = ops.filter(F.col("_op") != "delete").drop("_op")
-        cols = [f.name for f in schema.fields]
-        cdf_extra: dict = {}
-        change_rows: DataFrame | None = None
-        if affected:
-            recs = [r for r in data if r["path"] in set(affected)]
-            scan = self._scan_live(
-                recs, dvs, schema, mapping=_entry_mapping(head_entry)
-            )
-            if self._cdf_enabled():
-                scan = scan.localCheckpoint(eager=True)
-                upserts = upserts.localCheckpoint(eager=True)
-                # matched target rows labelled by their op (upsert →
-                # update_preimage, delete → delete); source upserts
-                # split into post-images and inserts by target match
-                tgt = scan.join(
-                    F.broadcast(ops.select(*key_cols, "_op")), key_cols
-                )
-                pre = tgt.select(
-                    *cols,
-                    F.when(
-                        F.col("_op") == "delete", "delete"
-                    ).otherwise("update_preimage").alias("_change_type"),
-                )
-                tkeys = scan.select(*key_cols).distinct()
-                post = upserts.join(tkeys, key_cols, "left_semi").select(
-                    *cols,
-                    F.lit("update_postimage").alias("_change_type"),
-                )
-                ins = upserts.join(tkeys, key_cols, "left_anti").select(
-                    *cols, F.lit("insert").alias("_change_type")
-                )
-                change_rows = pre.unionByName(post).unionByName(ins)
-            survivors = scan.join(F.broadcast(keys), key_cols, "left_anti")
-            rewritten = survivors.unionByName(upserts)
-        else:
-            rewritten = upserts
-            if self._cdf_enabled():
-                upserts = upserts.localCheckpoint(eager=True)
-                rewritten = upserts
-                change_rows = upserts.select(
-                    *cols, F.lit("insert").alias("_change_type")
-                )
-        add = self._stage_files(rewritten)
-        if change_rows is not None:
-            # staged AFTER the data files: write-time identity fill
-            # (see _fill_identity_in_changes)
-            rec = self._stage_cdf(
-                self._fill_identity_in_changes(
-                    change_rows, add, head_entry, schema
-                )
-            )
-            if rec:
-                # write-time filled — read_cdf skips its read-time
-                # fill for this entry (r8 ADVICE)
-                rec["identity_filled"] = True
-                cdf_extra["cdf"] = rec
-        return self._commit(
-            "apply_changes", add, affected, expected_head=head,
-            extra=(extra or {}) | cdf_extra or None,
+        return self._keyed_rewrite(
+            ops, head, live, head_entry, "apply_changes", extra,
+            op_col=op_col,
         )
 
 

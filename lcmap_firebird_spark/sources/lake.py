@@ -363,9 +363,8 @@ class LakeCDFStreamReader(_LogTail):
     so the reserved identity range is deterministic at staging time
     and `LakeTable._fill_identity_in_changes` materializes
     engine-assigned values INTO the staged change file — the
-    single-file partition readers here need no cross-file fill (r8;
-    batch read_cdf additionally keeps a read-time fill covering
-    change files committed before the write-time fill existed)."""
+    single-file partition readers here need no cross-file fill, and
+    neither does `LakeTable.read_cdf` (r8)."""
 
     def partitions(self, start: dict, end: dict):
         return _cdf_partitions(

@@ -30,7 +30,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-from ..lakehouse import LakeTable
+from ..lakehouse import LakeTable, _preflight
 
 
 def committed_batch_ids(table: LakeTable) -> set[int]:
@@ -91,8 +91,6 @@ def make_batch_sink(
         raise ValueError(f"mode must be append|merge|cdc, got {mode!r}")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         spark = batch_df.sparkSession
         stamp = {"batch_id": batch_id}
         if app_id is not None:
@@ -111,31 +109,12 @@ def make_batch_sink(
             if mode == "merge":
                 first = batch_df.dropDuplicates(key_cols)
             elif mode == "cdc":
-                bad = batch_df.filter(
-                    F.col("_op").isNull()
-                    | ~F.col("_op").isin("upsert", "delete")
-                )
-                if bad.limit(1).count():
-                    raise ValueError(
-                        "invalid _op values in bootstrap batch: "
-                        "expected 'upsert' or 'delete'"
-                    )
-                # duplicate-key check over the WHOLE batch (before
-                # the delete filter) — apply_changes rejects a key
-                # appearing twice regardless of ops, and bootstrap
-                # must be exactly as strict: an upsert+delete of one
-                # key in batch 0 is the same ambiguity it is in
-                # batch 1, not a silent upsert-wins
-                dups = (
-                    batch_df.groupBy(*key_cols)
-                    .count()
-                    .filter(F.col("count") > 1)
-                )
-                if dups.limit(1).count():
-                    raise ValueError(
-                        "duplicate keys in bootstrap change batch "
-                        "(ambiguous, like apply_changes)"
-                    )
+                # apply_changes' own pre-flight over the WHOLE batch
+                # (before the delete filter): a key appearing twice is
+                # ambiguous regardless of ops — an upsert+delete of one
+                # key in batch 0 must raise as it would in batch 1, not
+                # resolve as upsert-wins
+                _preflight(batch_df, key_cols, op_col="_op")
                 first = batch_df.filter("_op != 'delete'").drop("_op")
             LakeTable.create(
                 spark, root, first, key_cols=key_cols, extra=stamp

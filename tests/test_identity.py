@@ -356,9 +356,8 @@ def test_cdf_identity_values_batch_and_stream(spark, tmp_path):
     assigned from the commit's reserved range — deterministic at
     staging time for never-retried commits — so merge/apply_changes
     materialize the values INTO the staged change file
-    (_fill_identity_in_changes); read_cdf keeps a read-time fill for
-    change files committed before the write-time fill existed. Both
-    the batch feed and the STREAMING CDF source deliver exact
+    (_fill_identity_in_changes), and both the batch feed and the
+    STREAMING CDF source read that file verbatim and deliver exact
     values."""
     from pyspark.sql import functions as F
 
@@ -420,41 +419,23 @@ def test_cdf_identity_values_batch_and_stream(spark, tmp_path):
 
 
 def test_cdf_identity_filled_flag_skips_read_time_fill(spark):
-    """r8 ADVICE: change files staged through the write-time fill
-    carry 'identity_filled' in the cdf record, and read_cdf skips its
-    per-entry file-scan fill for them — while a LEGACY entry (flag
-    stripped, simulating a pre-r9 table) still gets the read-time
-    fill and identical values."""
+    """Change files carry their identity values from staging: the
+    merge commit's change rows read back through read_cdf, which
+    does no read-time fill, with the same rid values the snapshot
+    materializes."""
     import json
-    import os
-
-    from pyspark.sql import functions as F
 
     from lcmap_firebird_spark.lakehouse import _entry_path
 
     t = _mk(spark, identity="rid", enable_cdf=True)
     v = t.merge(spark.createDataFrame([(1, 111), (9, 900)], "k long, v long"))
     with open(_entry_path(t.root, v)) as f:
-        e = json.load(f)
-    assert e["cdf"]["identity_filled"] is True
+        assert set(json.load(f)["cdf"]) == {"paths", "rows"}
     snap_ids = {r["k"]: r["rid"] for r in t.snapshot().collect()}
-    want = {1: snap_ids[1], 9: snap_ids[9]}
-
-    def _post(tt):
-        return {
-            r["k"]: r["rid"]
-            for r in tt.read_cdf(v - 1, v)
-            .filter(F.col("_change_type").isin("insert", "update_postimage"))
-            .collect()
-        }
-
-    assert _post(t) == want
-    # strip the flag (legacy entry shape): the read-time fill path
-    # must produce the same values
-    e["cdf"].pop("identity_filled")
-    path = _entry_path(t.root, v)
-    os.remove(path)
-    with open(path, "w") as f:
-        json.dump(e, f, indent=1)
-    t2 = type(t)(spark, t.root)
-    assert _post(t2) == want
+    post = {
+        r["k"]: r["rid"]
+        for r in t.read_cdf(v - 1, v)
+        .filter(F.col("_change_type").isin("insert", "update_postimage"))
+        .collect()
+    }
+    assert post == {1: snap_ids[1], 9: snap_ids[9]}

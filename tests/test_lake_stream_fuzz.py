@@ -42,10 +42,12 @@ def test_cdf_stream_exactly_once_under_random_restarts(
     """The identity='rid' leg additionally crosses exactly-once
     restarts with engine-assigned identity values: every writer frame
     omits rid, and streamed change rows must STILL equal the
-    per-commit table_changes diffs with rid included — merge/apply
+    per-commit table_changes diffs with rid included — merge and
+    apply_changes share one rewrite (LakeTable._keyed_rewrite) whose
     change files carry write-time-filled values
-    (lakehouse._fill_identity_in_changes), append inserts materialize
-    from their add files' reserved ranges (r8)."""
+    (_fill_identity_in_changes), delete change files carry scanned
+    values, and append inserts materialize from their add files'
+    reserved ranges; no reader fills identity (r8)."""
     from lcmap_firebird_spark.sources.lake import LakeDataSource
 
     try:

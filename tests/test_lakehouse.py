@@ -879,6 +879,68 @@ def test_cdf_apply_changes_and_disabled_table(spark, cdf_table, table):
         table.read_cdf(0)
 
 
+def test_merge_equals_all_upsert_apply_changes(spark, tmp_path):
+    """merge(src) and apply_changes(src tagged _op='upsert') are one
+    rewrite: on twin CDF + identity tables they leave equal snapshots,
+    equal change feeds (batch and stream) and equal add/remove counts
+    per commit. The source mixes matched keys, new keys and a key a
+    delete_mor removed earlier (it inserts; its old row and the other
+    MOR-deleted row in the rewritten file stay gone)."""
+    schema = "id long, name string, val double"
+    src = spark.createDataFrame(
+        [(3, "THREE", -3.0), (5, "FIVE", -5.0), (7, "SEVEN", -7.0),
+         (100, "new", 1.0), (101, "new", 2.0)],
+        schema,
+    )
+    tables = []
+    for name in ("m", "a"):
+        t = LakeTable.create(
+            spark, str(tmp_path / name),
+            spark.createDataFrame(
+                [(i, f"name{i}", float(i)) for i in range(10)], schema
+            ).repartition(1),
+            key_cols=["id"], enable_cdf=True, identity="rid",
+        )
+        t.append(spark.createDataFrame(
+            [(i, f"name{i}", float(i)) for i in range(10, 20)], schema
+        ).repartition(1))
+        t.delete_mor("id IN (3, 4)")
+        tables.append(t)
+    m, a = tables
+    vm = m.merge(src)
+    va = a.apply_changes(src.withColumn("_op", F.lit("upsert")))
+    assert vm == va
+    assert [e["operation"] for e in m._entries()][-1] == "merge"
+    assert [e["operation"] for e in a._entries()][-1] == "apply_changes"
+
+    snap = _rows(m.snapshot())
+    assert snap == _rows(a.snapshot())
+    by_id = {r[0]: r for r in snap}
+    assert 4 not in by_id and by_id[3][1] == "THREE"
+    assert len(by_id) == 21
+
+    assert _rows(m.read_cdf(0).drop("_commit_version")) == _rows(
+        a.read_cdf(0).drop("_commit_version")
+    )
+    last = {
+        (r["_change_type"], r["id"])
+        for r in m.read_cdf(vm - 1).collect()
+    }
+    assert last == {
+        ("insert", 3), ("insert", 100), ("insert", 101),
+        ("update_preimage", 5), ("update_postimage", 5),
+        ("update_preimage", 7), ("update_postimage", 7),
+    }
+    assert _rows(stream_cdf(spark, m.root, str(tmp_path / "sm"))) == _rows(
+        stream_cdf(spark, a.root, str(tmp_path / "sa"))
+    )
+
+    def counts(t):
+        return [(len(e["add"]), len(e["remove"])) for e in t._entries()]
+
+    assert counts(m) == counts(a)
+
+
 def test_cdf_files_survive_vacuum_and_restore_diff(spark, cdf_table):
     t = cdf_table
     v0 = t.latest_version()
