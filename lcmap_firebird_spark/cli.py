@@ -154,7 +154,9 @@ def _cmd_lake(args: argparse.Namespace) -> int:
     """Lakehouse administration over a table root. Metadata actions
     (describe/history/vacuum/checkpoint/ddl) run without Spark where
     possible; data actions (show/merge/delete/compact/cluster/
-    restore/clone) build a session."""
+    restore/clone) build a session. `delete` records deletion
+    vectors (LakeTable.delete_mor); `compact` rewrites the files
+    they mark and reclaims them."""
     from .lakehouse import LakeTable
 
     root = args.root
@@ -220,8 +222,7 @@ def _cmd_lake(args: argparse.Namespace) -> int:
         if not args.predicate:
             print("--predicate is required for delete", file=sys.stderr)
             return 2
-        fn = t.delete_mor if args.mor else t.delete
-        v = fn(args.predicate)
+        v = t.delete_mor(args.predicate)
         print(json.dumps({"version": v}))
         return 0
     if action == "compact":
@@ -335,9 +336,9 @@ def main(argv: list[str] | None = None) -> int:
     lk.add_argument("--root", required=True)
     lk.add_argument("--source", default=None,
                     help="parquet path (append/merge)")
-    lk.add_argument("--predicate", default=None, help="SQL (delete)")
-    lk.add_argument("--mor", action="store_true",
-                    help="delete merge-on-read (deletion vectors)")
+    lk.add_argument("--predicate", default=None,
+                    help="SQL (delete: marks matching rows deleted; "
+                    "compact reclaims them)")
     lk.add_argument("--version", type=int, default=None)
     lk.add_argument("--as-of", type=float, default=None,
                     help="unix-seconds timestamp time travel (show)")

@@ -24,7 +24,7 @@ files are fully written before the commit that references them.
 Concurrency is optimistic: a writer stages data files, then tries to
 create version N+1; if another writer got there first the exclusive
 create fails — `append` (order-independent) retries against the new
-head, `merge`/`delete` (read-dependent) raise ConcurrentWriteError
+head, `merge`/`delete_mor` (read-dependent) raise ConcurrentWriteError
 for the caller to re-run against the new snapshot. This is the same
 protocol Delta implements over object-store put-if-absent.
 
@@ -51,6 +51,7 @@ avoid, for a guarantee no mainstream lakehouse format offers.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -60,6 +61,9 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    DoubleType,
+    FloatType,
+    IntegralType,
     LongType,
     StringType,
     StructField,
@@ -70,10 +74,18 @@ _TXN = "_txn"
 _DATA = "data"
 _WIDTH = 20
 _DV_SCHEMA = "file string, row_index bigint"
+# operations whose data files hold NEW rows: only they validate CHECK
+# constraints and reserve identity ranges at commit
+_ROW_INTRODUCING = frozenset(
+    {"create", "append", "overwrite", "merge", "apply_changes"}
+)
+# `compact` rewrites a data file whose deletion-vector share reaches
+# this fraction whatever its size (Delta's DV-threshold purge)
+_DV_REWRITE_FRACTION = 0.1
 
 
 class ConcurrentWriteError(RuntimeError):
-    """The log advanced under a read-dependent commit (merge/delete);
+    """The log advanced under a read-dependent commit (merge/delete_mor);
     re-run against the new snapshot."""
 
 
@@ -398,6 +410,31 @@ def _preflight(
     return {
         c: (row[f"__pf_mn_{c}"], row[f"__pf_mx_{c}"]) for c in key_cols
     }
+
+
+def _reserve_identity(ident: dict, add: list[dict]) -> tuple[list[dict], int]:
+    """Reserve a per-file identity range for each data record of
+    `add`, in order: (`add` with `identity_base` stamped on copies
+    of its data records, the advanced watermark). `_commit` applies
+    it; `_fill_identity_in_changes` replays it before the commit."""
+    wm, step = int(ident["watermark"]), int(ident["step"])
+    out = []
+    for r in add:
+        if r.get("kind") is None:
+            r = r | {"identity_base": wm + step}
+            wm += step * int(r.get("rows") or 0)
+        out.append(r)
+    return out, wm
+
+
+def _bloom_positions(value, m: int, k: int) -> list[int]:
+    """The k bit positions of `value` in an m-bit bloom filter:
+    md5-derived double hashing (deterministic, engine-portable —
+    the same spirit as operators/bloom's semi-join bitmaps)."""
+    d = hashlib.md5(str(value).encode()).digest()
+    h1 = int.from_bytes(d[:8], "big")
+    h2 = int.from_bytes(d[8:], "big") | 1
+    return [(h1 + i * h2) % m for i in range(k)]
 
 
 class LakeTable:
@@ -752,17 +789,14 @@ class LakeTable:
             # O_EXCL race to a concurrent add_constraint re-validates
             # under the new set before its entry can land. Only
             # row-INTRODUCING operations validate: rewrites (compact,
-            # cluster, delete, restore) recombine rows every live
-            # version already satisfies — add_constraint's full-
-            # snapshot check is the induction base — and scanning
-            # them again would turn maintenance into full-table
-            # validation passes.
+            # cluster, restore) and delete_mor's DV datasets recombine
+            # rows every live version already satisfies —
+            # add_constraint's full-snapshot check is the induction
+            # base — and scanning them again would turn maintenance
+            # into full-table validation passes.
             cons = head_entry.get("constraints") or {}
             gen = head_entry.get("generated") or {}
-            if cons != staged_cons and operation in (
-                "create", "append", "overwrite", "merge",
-                "apply_changes",
-            ):
+            if cons != staged_cons and operation in _ROW_INTRODUCING:
                 try:
                     self._validate_staged(
                         [r for r in add if r.get("kind") is None],
@@ -809,20 +843,15 @@ class LakeTable:
             # every row-introducing data file, INSIDE the retry loop
             # (a lost O_EXCL race re-reserves from the new head, so
             # two racing appends never hand out overlapping ranges).
-            # Rewrite commits (compact/cluster/delete/restore) carry
-            # the watermark unchanged — their files hold scanned,
-            # already-materialized values.
+            # Rewrite commits (compact/cluster/restore) carry the
+            # watermark unchanged — their files hold scanned,
+            # already-materialized values — and delete_mor adds no
+            # data file.
             ident = head_entry.get("identity")
             if ident:
-                wm, step = int(ident["watermark"]), int(ident["step"])
-                if operation in (
-                    "create", "append", "overwrite", "merge",
-                    "apply_changes",
-                ):
-                    for r in add:
-                        if r.get("kind") is None:
-                            r["identity_base"] = wm + step
-                            wm += step * int(r.get("rows") or 0)
+                wm = int(ident["watermark"])
+                if operation in _ROW_INTRODUCING:
+                    entry["add"], wm = _reserve_identity(ident, add)
                 entry["identity"] = ident | {"watermark": wm}
             try:
                 with open(_entry_path(self.root, head + 1), "x") as f:
@@ -894,8 +923,8 @@ class LakeTable:
         into every change file at staging: merge/apply_changes never
         retry, so their reserved ranges are deterministic at staging
         and the change file records the materialized ids
-        (_fill_identity_in_changes, r8); delete/delete_mor stage
-        scanned pre-images; append inserts derive from add files,
+        (_fill_identity_in_changes, r8); delete_mor stages scanned
+        pre-images; append inserts derive from add files,
         which readers materialize. No reader fills identity into a
         change file."""
         # stored expression text must be comment-free: it is later
@@ -1179,7 +1208,7 @@ class LakeTable:
     def _dv_counts(self, dvs: list[dict]) -> dict[str, int]:
         """{covered file: deleted-position count} — one aggregate
         over the DV dataset, file-count rows back to the driver
-        (metadata scale). Shared by both maintenance sizers and
+        (metadata scale). Shared by compact's sizing and
         describe_detail. Session-less handles (LakeTable.attach)
         fall back to a pyarrow read — DV datasets are metadata
         scale, and describe_detail promises to work from metadata
@@ -1208,6 +1237,41 @@ class LakeTable:
             .agg(F.count("*").alias("n"))
             .collect()
         }
+
+    def _retire_dvs(
+        self, dvs: list[dict], keep: list[dict]
+    ) -> DataFrame | None:
+        """The rows of the DV records `dvs` that still apply when only
+        the data records `keep` stay live, or None. Rows for removed
+        files are dropped (every rewrite scans through the DVs, so
+        its output materializes them); metadata-only when no DV
+        record's `covers` names a kept file."""
+        keys = {_dv_key(r["path"]) for r in keep}
+        if not any(keys.intersection(r.get("covers", ())) for r in dvs):
+            return None
+        kept = self.spark.createDataFrame(
+            [(k,) for k in sorted(keys)], "file string"
+        )
+        return self._dv_df(dvs).join(F.broadcast(kept), "file", "left_semi")
+
+    def _stage_dvs(self, rows: DataFrame | None) -> list[dict]:
+        """Stage (file, row_index) `rows` as a DV dataset (invisible
+        pre-commit, like data files) and return its kind='dv' add
+        records ([] for None); `covers` lists exactly the files the
+        rows name, so rows handed over by `_retire_dvs` or a
+        delete's matches are never empty."""
+        if rows is None:
+            return []
+        staged = self._stage(rows, ".dv.parquet", keep_empty=False)
+        covers = sorted(
+            self._dv_df([{"path": p} for p, _ in staged])
+            .agg(F.collect_set("file").alias("files"))
+            .first()["files"]
+        )
+        return [
+            {"path": p, "kind": "dv", "covers": covers, "rows": n}
+            for p, n in staged
+        ]
 
     def _scan_live(
         self,
@@ -1358,7 +1422,7 @@ class LakeTable:
         `enable_cdf=True`. Inserts from append/create commits are
         DERIVED from their add files (no change file is ever written
         for pure inserts — Delta's rule, appends stay write-once);
-        merge/delete/delete_mor/apply_changes read the change file
+        merge/delete_mor/apply_changes read the change file
         their commit staged, verbatim — its identity values were
         materialized when it was staged (scanned pre-images, or
         `_fill_identity_in_changes` for post-images and inserts), so
@@ -1461,16 +1525,19 @@ class LakeTable:
         )
 
     def delete_mor(self, predicate: str, extra: dict | None = None) -> int:
-        """Merge-on-read delete: record matching row POSITIONS in a
-        deletion-vector dataset instead of rewriting data files —
-        O(matches) written regardless of file sizes, the Delta
-        deletion-vector design on Spark's `_metadata.row_index`.
-        Readers apply DVs via a position anti-join scoped to covered
-        files; copy-on-write operations (merge/compact/delete) read
-        through the same DV-applied scan, so rewritten files
-        materialize the deletes and the DV rows for them become
-        inert. Each delete_mor commit REPLACES the live DV dataset
-        with (old live rows ∪ new matches) — exactly one DV dataset
+        """The table's delete: record the positions of rows where the
+        SQL `predicate` is TRUE in a deletion-vector dataset instead
+        of rewriting data files — O(matches) written regardless of
+        file sizes, the Delta deletion-vector design on Spark's
+        `_metadata.row_index`. Rows where the predicate is NULL
+        survive (SQL DELETE semantics). Readers apply DVs via a
+        position anti-join scoped to covered files; copy-on-write
+        rewrites (merge/apply_changes/compact/cluster) read through
+        the same DV-applied scan, so rewritten files materialize the
+        deletes. `compact` reclaims the space: it rewrites every
+        file whose deleted share reaches `_DV_REWRITE_FRACTION`.
+        Each delete_mor commit REPLACES the live DV dataset with (old
+        rows still applying ∪ new matches) — exactly one DV dataset
         is live at a time.
 
         Read-dependent commit (like merge): raises
@@ -1479,10 +1546,6 @@ class LakeTable:
         live, head_entry = self._live(head)
         data, dvs = self._split_live(live)
         schema = StructType.fromJson(json.loads(head_entry["schema"]))
-        if not data:
-            return self._commit(
-                "delete_mor", [], [], expected_head=head, extra=extra
-            )
         scan = self._scan_live(
             data, dvs, schema, keep_pos=True,
             mapping=_entry_mapping(head_entry),
@@ -1510,32 +1573,12 @@ class LakeTable:
                 # already materialized
                 cdf_extra["cdf"] = rec
         extra = (extra or {}) | cdf_extra or None
-        new_dv = matches
-        if dvs:
-            # carry forward old DV rows for files still live (rows
-            # for since-rewritten files are dropped — inert anyway)
-            live_files = self.spark.createDataFrame(
-                [(_dv_key(r["path"]),) for r in data], "file string"
-            )
-            old = self._dv_df(dvs).join(
-                F.broadcast(live_files), "file", "left_semi"
-            )
-            new_dv = old.unionByName(matches)
-        # stage the DV dataset like data files (invisible pre-commit);
-        # it holds at least the new matches, so it is never empty
-        staged = self._stage(new_dv, ".dv.parquet", keep_empty=False)
-        covers = sorted(
-            self._dv_df([{"path": p} for p, _ in staged])
-            .agg(F.collect_set("file").alias("files"))
-            .first()["files"]
-        )
-        add = [
-            {"path": p, "kind": "dv", "covers": covers, "rows": n}
-            for p, n in staged
-        ]
+        old = self._retire_dvs(dvs, data)
         return self._commit(
             "delete_mor",
-            add,
+            self._stage_dvs(
+                matches if old is None else old.unionByName(matches)
+            ),
             [r["path"] for r in dvs],
             expected_head=head,
             extra=extra,
@@ -1552,8 +1595,8 @@ class LakeTable:
         at WRITE time. merge/apply_changes are never-retried commits
         (expected_head pins the head, so a lost race raises instead
         of re-reserving), which makes the per-file identity bases
-        `_commit` will assign fully deterministic HERE — replicate
-        its exact assignment loop over the just-staged add records,
+        `_commit` will assign fully deterministic HERE — apply the
+        same `_reserve_identity` to the just-staged add records,
         scan those files (where the identity projection
         materializes), and fill NULL identity on
         insert/update_postimage rows by key. The staged change file
@@ -1566,16 +1609,10 @@ class LakeTable:
         key_cols = head_entry["key_cols"]
         if icol in key_cols:
             return changes
-        # EXACTLY _commit's reservation loop (same order, same
-        # condition, same zero-row handling)
-        wm, step = int(ident["watermark"]), int(ident["step"])
-        recs = []
-        for r in add:
-            if r.get("kind") is None:
-                rr = dict(r)
-                rr["identity_base"] = wm + step
-                wm += step * int(r.get("rows") or 0)
-                recs.append(rr)
+        recs = [
+            r for r in _reserve_identity(ident, add)[0]
+            if r.get("kind") is None
+        ]
         if not recs:
             return changes
         fills = (
@@ -1732,64 +1769,6 @@ class LakeTable:
             preflight=not dedupe_source,
         )
 
-    def delete(self, predicate: str) -> int:
-        """Delete rows matching the SQL predicate (copy-on-write on
-        files containing matches; read-dependent commit). For
-        O(matches) deletes that never rewrite data files, see
-        `delete_mor`."""
-        # the keep-side composes `NOT coalesce((predicate), false)` —
-        # a `--` line comment would swallow the wrapper tail (r12)
-        predicate = _strip_sql_comments(predicate)
-        head = self.latest_version()
-        live, head_entry = self._live(head)
-        data, dvs = self._split_live(live)
-        schema = StructType.fromJson(json.loads(head_entry["schema"]))
-        if not data:
-            return self._commit("delete", [], [], expected_head=head)
-        scan = self._scan_live(
-            data, dvs, schema, keep_pos=True,
-            mapping=_entry_mapping(head_entry),
-        )
-        hits = (
-            scan.filter(predicate).select("_file").distinct().collect()
-        )
-        # hits carry data/<basename> keys (_rel_file); match records
-        # through _dv_key so shallow-clone records (absolute paths)
-        # resolve too — a bare r["path"] compare would silently turn
-        # a clone's COW delete into a no-op commit
-        hit_paths = {r["_file"] for r in hits}
-        affected = [
-            r["path"] for r in data if _dv_key(r["path"]) in hit_paths
-        ]
-        if not affected:
-            return self._commit("delete", [], [], expected_head=head)
-        recs = [r for r in data if r["path"] in set(affected)]
-        sub = self._scan_live(
-            recs, dvs, schema, mapping=_entry_mapping(head_entry)
-        )
-        cdf_extra: dict = {}
-        if self._cdf_enabled():
-            sub = sub.localCheckpoint(eager=True)
-            cols = [f.name for f in schema.fields]
-            rec = self._stage_cdf(
-                sub.filter(predicate).select(
-                    *cols, F.lit("delete").alias("_change_type")
-                )
-            )
-            if rec:
-                # scanned pre-images: identity already materialized
-                cdf_extra["cdf"] = rec
-        # SQL DELETE semantics: a row is deleted only when the
-        # predicate is TRUE — rows where it evaluates to NULL must
-        # SURVIVE (bare NOT(pred) is NULL for them, silently dropping
-        # the row and recording no change anywhere)
-        keep = sub.filter(f"NOT coalesce(({predicate}), false)")
-        add = self._stage_files(keep)
-        return self._commit(
-            "delete", add, affected, expected_head=head,
-            extra=cdf_extra or None,
-        )
-
     def vacuum(
         self,
         keep_last: int = 1,
@@ -1880,13 +1859,18 @@ class LakeTable:
         target_rows: int = 1_000_000,
         ranges: dict | None = None,
     ) -> int:
-        """Transactional small-file compaction: rewrite files smaller
-        than target_rows into ~target_rows files, as ONE commit
-        (readers never see a half-compacted table — the non-
-        transactional sibling in operators/maintenance.py needs an
-        atomic directory swap for the same guarantee). Data content
-        is unchanged; only file boundaries move. No-op (and no
-        commit) when nothing qualifies.
+        """Transactional compaction, the table's one reclaim step:
+        rewrite, as ONE commit, the files smaller than target_rows
+        (when two or more are, else they are left alone) plus every
+        file whose deletion-vector share reaches
+        `_DV_REWRITE_FRACTION`, into ~target_rows files. Readers
+        never see a half-compacted table (the non-transactional
+        sibling in operators/maintenance.py needs an atomic
+        directory swap for the same guarantee). The rewrite scans
+        through the DVs, so it materializes `delete_mor`'s deletes;
+        DV rows for rewritten files retire and the rest carry
+        forward. Snapshot content is unchanged; only file boundaries
+        move. No-op (and no commit) when nothing qualifies.
 
         Read-dependent: concurrent commits win, compaction retries
         belong to the caller (it is maintenance — always safe to
@@ -1908,153 +1892,72 @@ class LakeTable:
         head = self.latest_version()
         live, head_entry = self._live(head)
         data, dvs = self._split_live(live)
+        mapping = _entry_mapping(head_entry)
         deleted = self._dv_counts(dvs)
 
+        def _dead(rec: dict) -> int:
+            return deleted.get(_dv_key(rec["path"]), 0)
+
         def _live_rows(rec: dict) -> int:
-            return max(
-                rec.get("rows", 0) - deleted.get(_dv_key(rec["path"]), 0), 0
-            )
+            return max(rec.get("rows", 0) - _dead(rec), 0)
 
-        small = [r for r in data if _live_rows(r) < target_rows]
-        if ranges:
-            mapping = _entry_mapping(head_entry)
-            small = [
-                r for r in small if _stats_intersect(r, ranges, mapping)
-            ]
-        if len(small) < 2:
-            return head
-        schema = StructType.fromJson(json.loads(head_entry["schema"]))
-        total = sum(_live_rows(r) for r in small)
-        n_out = max(1, -(-total // target_rows))
-        # DV-applied scan: compacting a covered file MATERIALIZES its
-        # merge-on-read deletes (the DV rows for it become inert)
-        scan = self._scan_live(
-            small, dvs, schema, mapping=_entry_mapping(head_entry)
-        )
-        add = self._stage_files(scan.repartition(n_out))
-        return self._commit(
-            "compact", add, [r["path"] for r in small], expected_head=head
-        )
-
-    def compact_deletes(
-        self, min_deleted_fraction: float = 0.1
-    ) -> int:
-        """Materialize merge-on-read deletes: rewrite (only) the data
-        files whose DV-deleted fraction reaches the threshold, and
-        rewrite the live DV dataset without their now-inert rows —
-        ONE commit. The read-amplification valve for delete_mor: DVs
-        keep deletes O(matches) at write time; this reclaims the scan
-        cost once enough of a file is dead (Delta calls the same knob
-        a purge / DV-threshold rewrite).
-
-        No-op (no commit) when no file qualifies. Read-dependent."""
-        head = self.latest_version()
-        live, head_entry = self._live(head)
-        data, dvs = self._split_live(live)
-        if not dvs:
-            return head
-        schema = StructType.fromJson(json.loads(head_entry["schema"]))
-        counts = self._dv_counts(dvs)
-        targets = [
-            r
-            for r in data
-            if r.get("rows")
-            and counts.get(_dv_key(r["path"]), 0) / r["rows"]
-            >= float(min_deleted_fraction)
+        scope = [
+            r for r in data
+            if not ranges or _stats_intersect(r, ranges, mapping)
         ]
-        if not targets:
+        small = {r["path"] for r in scope if _live_rows(r) < target_rows}
+        if len(small) < 2:
+            small = set()  # one small file alone is not worth a rewrite
+        rewrite = [
+            r for r in scope
+            if r["path"] in small
+            or (r.get("rows") and _dead(r) / r["rows"] >= _DV_REWRITE_FRACTION)
+        ]
+        if not rewrite:
             return head
-        target_paths = {r["path"] for r in targets}
+        gone = {r["path"] for r in rewrite}
+        schema = StructType.fromJson(json.loads(head_entry["schema"]))
+        n_out = max(1, -(-sum(map(_live_rows, rewrite)) // target_rows))
+        # DV-applied scan: the rewrite MATERIALIZES merge-on-read deletes
         add = self._stage_files(
-            self._scan_live(
-                targets, dvs, schema,
-                mapping=_entry_mapping(head_entry),
-            )
+            self._scan_live(rewrite, dvs, schema, mapping=mapping)
+            .repartition(n_out)
         )
-        # DV rows for untouched covered files carry forward; rows for
-        # the rewritten files are dropped (they'd be inert anyway)
-        keep_files = self.spark.createDataFrame(
-            [
-                (_dv_key(r["path"]),)
-                for r in data
-                if r["path"] not in target_paths
-            ]
-            or [("",)],
-            "file string",
+        add += self._stage_dvs(
+            self._retire_dvs(dvs, [r for r in data if r["path"] not in gone])
         )
-        rest = self._dv_df(dvs).join(
-            F.broadcast(keep_files), "file", "left_semi"
-        ).localCheckpoint(eager=True)
-        remove = sorted(target_paths) + [r["path"] for r in dvs]
-        if rest.limit(1).count():
-            covers = sorted(
-                r["file"]
-                for r in rest.select("file").distinct().collect()
-            )
-            add += [
-                {"path": p, "kind": "dv", "covers": covers, "rows": n}
-                for p, n in self._stage(rest, ".dv.parquet", keep_empty=False)
-            ]
         return self._commit(
-            "compact_deletes", add, remove, expected_head=head
+            "compact",
+            add,
+            [r["path"] for r in rewrite + dvs],
+            expected_head=head,
         )
 
     # -- clustering + pruned reads -----------------------------------------
 
     def _clustered(self, df: DataFrame, cluster_by: list[str], bits: int = 12):
-        """Range-partition + sort by the (normalized) z-order of
-        `cluster_by` so each staged file covers a tight key
-        hyper-rectangle — the same recipe as operators/zorder.
-        write_zordered, feeding the commit's per-file stats instead
+        """Range-partition + sort by the normalized z-order of
+        `cluster_by` (operators/zorder.zordered, the recipe of
+        write_zordered) so each staged file covers a tight key
+        hyper-rectangle, feeding the commit's per-file stats instead
         of bare parquet footers."""
-        from .operators.zorder import zvalue
+        from .operators.zorder import zordered
 
-        if len(cluster_by) == 1:
-            key = [F.col(cluster_by[0])]
-            n = df.sparkSession.sparkContext.defaultParallelism
-            return (
-                df.repartitionByRange(n, *key)
-                .sortWithinPartitions(*key)
-            )
-        stats = df.agg(
-            *[F.min(c).alias(f"mn_{c}") for c in cluster_by],
-            *[F.max(c).alias(f"mx_{c}") for c in cluster_by],
-        ).first()
-        if any(stats[f"mn_{c}"] is None for c in cluster_by):
-            return df  # empty (or all-NULL keys): nothing to order
-        vals = [stats[f"mn_{c}"] for c in cluster_by] + [
-            stats[f"mx_{c}"] for c in cluster_by
-        ]
-        if not all(
-            isinstance(v, (int, float)) and not isinstance(v, bool)
-            for v in vals
+        n = df.sparkSession.sparkContext.defaultParallelism
+        if len(cluster_by) == 1 or not all(
+            isinstance(df.schema[c].dataType, (IntegralType, FloatType, DoubleType))
+            for c in cluster_by
         ):
-            # non-numeric cluster columns (strings, dates) have no
-            # span to scale onto the Morton grid — fall back to
-            # lexicographic range clustering: files still cover
-            # disjoint ranges of the leading column
+            # one column needs no interleave; non-numeric columns
+            # (strings, dates, decimals) have no span to scale onto
+            # the Morton grid — plain range clustering: files still
+            # cover disjoint ranges of the leading column
             keys = [F.col(c) for c in cluster_by]
-            n = df.sparkSession.sparkContext.defaultParallelism
             return df.repartitionByRange(n, *keys).sortWithinPartitions(
                 *keys
             )
-        top = (1 << bits) - 1
-        scaled = []
-        for c in cluster_by:
-            mn = stats[f"mn_{c}"]
-            raw = stats[f"mx_{c}"] - mn
-            span = raw if raw > 0 else 1  # true span; guard constants only
-            scaled.append(
-                ((F.col(c) - F.lit(mn)).cast("double") * top / span)
-                .cast("bigint")
-            )
-        n = df.sparkSession.sparkContext.defaultParallelism
-        return (
-            df.withColumn("_z", zvalue(scaled, bits))
-            .repartitionByRange(n, "_z")
-            .sortWithinPartitions("_z")
-            .drop("_z")
-        )
+        out = zordered(df, cluster_by, n, bits)
+        return df if out is None else out  # None: nothing to order
 
     def append_clustered(
         self, df: DataFrame, cluster_by: list[str] | None = None, **kw
@@ -2085,7 +1988,8 @@ class LakeTable:
         stats tighten and `scan()` pruning bites on historically
         appended data — the retroactive sibling of append_clustered
         (which only clusters what it writes). Merge-on-read deletes
-        on rewritten files are materialized. Stats are recorded
+        on rewritten files are materialized; DV rows for untouched
+        files carry forward (`_retire_dvs`). Stats are recorded
         for the clustering columns as well as the key columns, so
         clustering on a non-key column makes it prunable. Every
         output record is stamped `clustered_by`. No-op (no commit)
@@ -2106,8 +2010,9 @@ class LakeTable:
         advances mid-rewrite; maintenance is always safe to re-run."""
         head = self.latest_version()
         live, head_entry = self._live(head)
-        data, dvs = self._split_live(live)
+        live_data, dvs = self._split_live(live)
         cluster_by = cluster_by or head_entry["key_cols"]
+        data = live_data
         if incremental:
             stamp = sorted(cluster_by)
             data = [r for r in data if r.get("clustered_by") != stamp]
@@ -2123,15 +2028,17 @@ class LakeTable:
         for r in add:
             r["clustered_by"] = sorted(cluster_by)
         remove = [r["path"] for r in data]
-        if not incremental:
-            # full pass rewrites every covered file: all DV rows are
-            # inert afterwards and the dataset is dropped. The
-            # incremental pass leaves the DV dataset in place — rows
-            # for its rewritten files are inert (merge's posture),
-            # rows for untouched files stay live.
-            remove += [r["path"] for r in dvs]
+        gone = set(remove)
+        add += self._stage_dvs(
+            self._retire_dvs(
+                dvs, [r for r in live_data if r["path"] not in gone]
+            )
+        )
         return self._commit(
-            "cluster", add, remove, expected_head=head
+            "cluster",
+            add,
+            remove + [r["path"] for r in dvs],
+            expected_head=head,
         )
 
     def pruned_paths(
@@ -2879,14 +2786,10 @@ class LakeTable:
         stats cannot discriminate: interleaved key domains overlap
         every range but still miss most blooms.
 
-        Hashing is md5-derived double hashing (deterministic,
-        engine-portable — same spirit as operators/bloom's semi-join
-        bitmaps). Sidecars are built driver-side from each file's key
-        column (files are row-group sized); on a cluster you would
-        emit them from the write job itself."""
-        import base64
-        import hashlib
-
+        Bit positions come from `_bloom_positions`. Sidecars are
+        built driver-side from each file's key column (files are
+        row-group sized); on a cluster you would emit them from the
+        write job itself."""
         import pyarrow.parquet as pq
 
         head = self.latest_version()
@@ -2913,11 +2816,7 @@ class LakeTable:
             m += (-m) % 8
             bits = bytearray(m // 8)
             for v in col.to_pylist():
-                d = hashlib.md5(str(v).encode()).digest()
-                h1 = int.from_bytes(d[:8], "big")
-                h2 = int.from_bytes(d[8:], "big") | 1
-                for i in range(n_hashes):
-                    pos = (h1 + i * h2) % m
+                for pos in _bloom_positions(v, m, n_hashes):
                     bits[pos // 8] |= 1 << (pos % 8)
             # sidecars always land in THIS table's data dir (never
             # derived from rec["path"], which is absolute into the
@@ -2946,16 +2845,11 @@ class LakeTable:
     def lookup(self, value) -> DataFrame:
         """Point lookup `key == value` reading only files whose
         stats AND bloom admit the key."""
-        import hashlib
-
         live, head_entry = self._live()
         data, dvs = self._split_live(live)
         key = head_entry["key_cols"][0]
         phys_key = _phys(head_entry, key)
         schema = StructType.fromJson(json.loads(head_entry["schema"]))
-        d = hashlib.md5(str(value).encode()).digest()
-        h1 = int.from_bytes(d[:8], "big")
-        h2 = int.from_bytes(d[8:], "big") | 1
         paths = []
         for rec in data:
             st = (rec.get("stats") or {}).get(phys_key)
@@ -2992,14 +2886,11 @@ class LakeTable:
                     # violating the same degrade-to-scan contract the
                     # FileNotFoundError branch honors (r11 ADVICE).
                     bits = None
-                if bits is not None:
-                    m, k = bl["m"], bl["k"]
-                    if not all(
-                        bits[((h1 + i * h2) % m) // 8]
-                        & (1 << (((h1 + i * h2) % m) % 8))
-                        for i in range(k)
-                    ):
-                        continue
+                if bits is not None and not all(
+                    bits[pos // 8] & (1 << (pos % 8))
+                    for pos in _bloom_positions(value, bl["m"], bl["k"])
+                ):
+                    continue
             paths.append(rec["path"])
         recs = [r for r in data if r["path"] in set(paths)]
         df = self._scan_live(

@@ -60,40 +60,24 @@ def sql_zvalue(cols: Sequence[str], bits: int = 16) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def write_zordered(
-    df: DataFrame,
-    cols: Sequence[str],
-    path: str,
-    bits: int = 12,
-    num_files: int | None = None,
-) -> None:
-    """Write `df` as parquet clustered by the z-order of `cols`:
-    range-partition on the z-value (one exchange — the same cost as
-    any global sort) then sort within partitions, so each output
-    file/row-group covers a tight hyper-rectangle of the key space
-    and min/max stats prune multi-dimensional range scans.
-
-    Columns are min-max scaled to `bits` bits BEFORE interleaving
-    (one tiny agg job for the bounds) — without normalization a
-    narrow-domain column contributes only zero high bits and the
-    interleave degenerates to a single-column sort, which is why
-    production Z-order (Delta/Iceberg) always normalizes to
-    per-column rank or range ids first."""
-    if num_files is not None and num_files < 1:
-        # same trap class as chip_ids(num_partitions=0) (r8 glue
-        # review): an explicit 0 silently becoming default
-        # parallelism hides the caller's bug
-        raise ValueError(f"num_files must be >= 1, got {num_files}")
-    n = num_files or df.sparkSession.sparkContext.defaultParallelism
+def zordered(
+    df: DataFrame, cols: Sequence[str], n: int, bits: int = 12
+) -> DataFrame | None:
+    """`df` range-partitioned into `n` partitions on the z-order of
+    numeric `cols` (one exchange — the same cost as any global sort)
+    and sorted within them, or None when `df` is empty or a column is
+    all-NULL (nothing to order). Columns are min-max scaled to `bits`
+    bits BEFORE interleaving (one tiny agg job for the bounds) —
+    without normalization a narrow-domain column contributes only
+    zero high bits and the interleave degenerates to a single-column
+    sort, which is why production Z-order (Delta/Iceberg) always
+    normalizes to per-column rank or range ids first."""
     stats = df.agg(
         *[F.min(c).alias(f"mn_{c}") for c in cols],
         *[F.max(c).alias(f"mx_{c}") for c in cols],
     ).first()
     if any(stats[f"mn_{c}"] is None for c in cols):
-        # empty frame or all-NULL cluster column: nothing to order —
-        # write as-is instead of raising TypeError on None arithmetic
-        df.write.mode("overwrite").parquet(path)
-        return
+        return None
     top = (1 << bits) - 1
     scaled = []
     for c in cols:
@@ -108,11 +92,32 @@ def write_zordered(
         scaled.append(
             ((F.col(c) - F.lit(mn)).cast("double") * top / span).cast("bigint")
         )
-    (
+    return (
         df.withColumn("_z", zvalue(scaled, bits))
         .repartitionByRange(n, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
     )
+
+
+def write_zordered(
+    df: DataFrame,
+    cols: Sequence[str],
+    path: str,
+    bits: int = 12,
+    num_files: int | None = None,
+) -> None:
+    """Write `df` as parquet clustered by the z-order of `cols`
+    (`zordered`), so each output file/row-group covers a tight
+    hyper-rectangle of the key space and min/max stats prune
+    multi-dimensional range scans."""
+    if num_files is not None and num_files < 1:
+        # same trap class as chip_ids(num_partitions=0) (r8 glue
+        # review): an explicit 0 silently becoming default
+        # parallelism hides the caller's bug
+        raise ValueError(f"num_files must be >= 1, got {num_files}")
+    n = num_files or df.sparkSession.sparkContext.defaultParallelism
+    out = zordered(df, cols, n, bits)
+    # empty frame or all-NULL cluster column: nothing to order — write
+    # as-is instead of raising TypeError on None arithmetic
+    (df if out is None else out).write.mode("overwrite").parquet(path)

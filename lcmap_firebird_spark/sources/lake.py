@@ -229,7 +229,7 @@ def _read_file_partition(part: LakeFilePartition):
 # Spark's offset checkpointing; no listing, no file-modification-time
 # heuristics. Each micro-batch delivers the rows of files ADDED by
 # the entries in (start, end] — an append-only change stream.
-# Copy-on-write rewrites (merge/delete/compact) re-add surviving
+# Copy-on-write rewrites (merge/compact/cluster) re-add surviving
 # rows in new files and are therefore RE-EMITTED, exactly like the
 # Delta source without CDF; downstream either tolerates re-emission
 # (idempotent sinks) or reads CDC batches written via mode="cdc".
@@ -325,8 +325,9 @@ class LakeStreamReader(_LogTail):
         # read batches written via mode="cdc" instead). bloom_index
         # commits RE-ADD every live record purely to attach sidecar
         # pointers — zero new rows, so emitting their adds would
-        # replay the whole table into the stream. COW rewrite
-        # commits (merge/delete/compact/compact_deletes/cluster) DO
+        # replay the whole table into the stream. delete_mor adds
+        # only a DV dataset, so a delete re-emits nothing; COW
+        # rewrite commits (merge/apply_changes/compact/cluster) DO
         # re-emit their rewritten files — Delta's ignoreChanges
         # posture, documented: a maintenance rewrite mid-stream
         # re-delivers rewritten rows, so run table maintenance

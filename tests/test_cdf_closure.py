@@ -1,6 +1,6 @@
 """CDF replay closure, fuzzed: for ANY two versions v1 < v2 of a
-table driven by a random mixed-op sequence (append / merge / COW
-delete / MOR delete / apply_changes / compact / cluster / rename),
+table driven by a random mixed-op sequence (append / merge / delete
+then compact / delete / apply_changes / compact / cluster / rename),
 applying `table_changes(v1, v2)` to `snapshot(v1)` must reproduce
 `snapshot(v2)` as a multiset — i.e. the change feed is a complete,
 non-redundant row-level diff under every commit mix, including
@@ -87,7 +87,8 @@ def test_table_changes_replay_closure(spark, tmp_path, seed):
             )
         elif op == "delete":
             lo = rng.randrange(0, 1200)
-            t.delete(f"id >= {lo} AND id < {lo + 40}")
+            t.delete_mor(f"id >= {lo} AND id < {lo + 40}")
+            t.compact(target_rows=1_000)
         elif op == "delete_mor":
             lo = rng.randrange(0, 1200)
             t.delete_mor(f"id >= {lo} AND id < {lo + 40}")

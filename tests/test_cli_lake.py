@@ -46,11 +46,17 @@ def test_lake_cli_lifecycle(spark, roots, capsys):
     rc, out = run("count", "--root", root)
     assert json.loads(out)["rows"] == 51
 
-    rc, out = run("delete", "--root", root, "--predicate", "id >= 40",
-                  "--mor")
+    rc, out = run("delete", "--root", root, "--predicate", "id >= 40")
     assert rc == 0
     rc, out = run("count", "--root", root)
     assert json.loads(out)["rows"] == 40
+    # compact reclaims what delete marked: no deletion vector is left
+    rc, out = run("compact", "--root", root)
+    assert rc == 0
+    rc, out = run("describe", "--root", root)
+    d = json.loads(out)
+    assert d["num_dv_files"] == 0 and d["deleted_rows"] == 0
+    assert d["live_rows"] == 40
 
     rc, out = run("rename-column", "--root", root, "--column",
                   "val:value")

@@ -110,12 +110,13 @@ def test_clone_reuses_bloom_sidecars(spark, source, tmp_path):
 
 
 def test_cow_delete_on_clone(spark, source, tmp_path):
-    """COW delete must resolve cloned (absolute-path) records against
-    the scan's data/<basename> hit keys — a path-equality compare
-    silently no-ops."""
+    """A delete then compact on a clone must resolve cloned
+    (absolute-path) records against the scan's data/<basename> keys
+    — a path-equality compare silently no-ops."""
     c = source.clone(str(tmp_path / "c9"))
     src_files = _own_files(source)
-    v = c.delete("id < 10")
+    c.delete_mor("id < 10")
+    v = c.compact()
     assert c.snapshot().count() == 90
     assert c.snapshot().filter("id < 10").count() == 0
     assert v == c.latest_version()
@@ -215,7 +216,8 @@ def test_chained_clone_of_mutated_cdf_clone(spark, tmp_path):
     c2.merge(
         spark.createDataFrame([(0, "c2", -1.0)], "id long, name string, val double")
     )
-    c2.delete("id = 7")
+    c2.delete_mor("id = 7")
+    c2.compact()
     v_after = c2.latest_version()
     assert _rows(src.snapshot()) == before_src
     assert _rows(c1.snapshot()) == before_c1
@@ -242,9 +244,9 @@ def test_chained_clone_of_mutated_cdf_clone(spark, tmp_path):
 
 
 def test_compact_deletes_on_dv_transferred_clone(spark, tmp_path):
-    """r11 matrix read (DV transfer x compact_deletes): a clone
+    """r11 matrix read (DV transfer x DV-pressure compact): a clone
     inherits the source's live deletion vectors over ABSOLUTE file
-    paths; compact_deletes must key them through _dv_key (basename
+    paths; compact must key them through _dv_key (basename
     scoping), rewrite only the over-threshold shared files INTO THE
     CLONE's data dir, drop exactly their now-inert DV rows, and leave
     the source untouched."""
@@ -261,7 +263,9 @@ def test_compact_deletes_on_dv_transferred_clone(spark, tmp_path):
     src.delete_mor("id < 12")
     c = src.clone(str(tmp_path / "dvclone"))
     src_v = src.latest_version()
-    c.compact_deletes(min_deleted_fraction=0.3)
+    # 5-row files: the three with deletes are over the DV threshold
+    # (and small), the clean one is not small at target_rows=5
+    c.compact(target_rows=5)
     assert sorted(r["id"] for r in c.snapshot().collect()) == list(
         range(12, 20)
     )
@@ -285,14 +289,14 @@ def test_compact_deletes_on_dv_transferred_clone(spark, tmp_path):
     # rewrites materialized every transferred delete for the targets:
     # a fresh pass at the same threshold finds nothing to do
     v1 = c.latest_version()
-    assert c.compact_deletes(min_deleted_fraction=0.3) == v1
+    assert c.compact(target_rows=5) == v1
 
 
 def test_clone_materializing_all_dvs_survives_source_vacuum(
     spark, tmp_path
 ):
-    """r12 matrix read (r11 VERDICT #2: DV transfer x compact_deletes
-    x CLONE x source vacuum). A clone whose compact_deletes rewrote
+    """r12 matrix read (r11 VERDICT #2: DV transfer x DV-pressure
+    compact x CLONE x source vacuum). A clone whose compact rewrote
     EVERY covered shared file holds no absolute reference left — it
     has escaped the documented 'clones pin the source's retention'
     caveat. The source's history may then move on and vacuum its old
@@ -311,7 +315,7 @@ def test_clone_materializing_all_dvs_survives_source_vacuum(
     # so every data file is covered and over any sane threshold
     src.delete_mor("id % 2 = 0")
     c = src.clone(str(tmp_path / "vclone"))
-    c.compact_deletes(min_deleted_fraction=0.01)
+    c.compact()
     live, _ = c._live()
     assert not any(os.path.isabs(r["path"]) for r in live), (
         "clone still references the source after materializing all DVs"
@@ -322,8 +326,8 @@ def test_clone_materializing_all_dvs_survives_source_vacuum(
     # references (controlled-maintenance retention=0 sweep)
     src_data = _own_files(src)
     assert src_data  # the shared files existed
-    src.delete("true")
-    src.compact_deletes(min_deleted_fraction=0.0)  # retire DV rows too
+    src.delete_mor("true")
+    src.compact()  # rewrites every file and retires the DV rows
     swept = src.vacuum(keep_last=1, retention_seconds=0)
     assert swept, "source vacuum swept nothing — setup is wrong"
     # the clone is unaffected: same rows, clone-local files only

@@ -340,7 +340,7 @@ def test_mor_deletes_and_compaction_across_rename(spark, table):
 def test_restore_keeps_current_names(spark, table):
     v0 = table.latest_version()
     table.rename_column("val", "value")
-    table.delete("value >= 50")
+    table.delete_mor("value >= 50")
     table.restore(v0)
     # documented posture: restore keeps the NEWER schema (and thus
     # the newer logical names); the resurrected rows read under it

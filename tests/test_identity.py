@@ -74,7 +74,8 @@ def test_rewrites_preserve_ids(spark):
     assert _ids(t) == before
     t.cluster(["v"])
     assert _ids(t) == before
-    t.delete("k = 3")
+    t.delete_mor("k = 3")
+    t.compact()
     after = _ids(t)
     assert 3 not in after
     assert {k: v for k, v in before.items() if k != 3} == after
@@ -334,7 +335,7 @@ def test_delete_mor_keeps_survivor_ids(spark):
     assert set(after) == {0, 2, 3, 5}
     assert all(after[k] == before[k] for k in after)
     # and the physical rewrite of remaining DVs keeps them too
-    t.compact_deletes(min_deleted_fraction=0.0)
+    t.compact()
     assert _ids(t) == after
 
 

