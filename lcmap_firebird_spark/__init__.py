@@ -12,10 +12,11 @@ multimodal columns) that a 100 TB Spark deployment needs.
 Design stance (SURVEY.md §7.1): everything is a DataFrame plan. The
 reference's RDD legs (parallelize ids, HTTP-explode, per-pixel
 flatMap — ccdc/ids.py:23-40, ccdc/timeseries.py:92-126,
-ccdc/pyccd.py:151-183) become `createDataFrame`, source+explode
-stages, and `groupBy(...).applyInPandas(...)` so Catalyst sees the
-whole query. No import-time side effects (the reference notes its own
-footgun at ccdc/__init__.py:11-12).
+ccdc/pyccd.py:151-183) become a JVM-local `createDataFrame` over an
+Arrow table (not a Python RDD), source+explode stages, and
+`groupBy(...).applyInPandas(...)` so Catalyst sees the whole query.
+No import-time side effects (the reference notes its own footgun at
+ccdc/__init__.py:11-12).
 """
 
 __version__ = "0.1.0"

@@ -20,10 +20,17 @@ wraps sklearn `linear_model.Lasso` fitted on the same
 intercept/trend/annual-harmonic design) — implemented here as plain
 numpy coordinate descent with soft-thresholding (unpenalized,
 centered intercept), so no sklearn dependency reaches the executors.
-A Tmask-style robust iteration screens outliers before the final
-fit: observations whose residual exceeds `ROBUST_T`·rmse are dropped
-once and the model refit on the inliers (pyccd's Tmask screens with
-robust thresholds before fitting, same intent). Break when the
+All 7 bands are fitted at once over the (window × 7) band matrix:
+each coordinate update is one 7-band vector operation in the same
+sweep order, and each band stops on its own at `LASSO_TOL` — the
+per-band result of seven one-band fits, for one call's overhead
+(batched fused operators over per-column loops; Odyssey, VLDB 2023;
+FuseME, SIGMOD 2022). A Tmask-style robust iteration screens
+outliers before the final fit: observations whose residual exceeds
+`ROBUST_T`·rmse are dropped once and the model refit on the inliers
+(pyccd's Tmask screens with robust thresholds before fitting, same
+intent) — a 0/1 inlier-weight matrix, so each band keeps its own
+inlier set. Break when the
 cross-band mean normalized residual of `peek` consecutive clear
 observations exceeds `chi` (pyccd's consecutive-observation test,
 aggregated across bands). Schema, masking, and the sentinel/date
@@ -90,41 +97,62 @@ ROBUST_T = 4.0
 
 def _lasso_cd(
     X: np.ndarray,
-    y: np.ndarray,
+    Y: np.ndarray,
+    W: np.ndarray,
     alpha: float,
     max_iter: int = LASSO_MAX_ITER,
     tol: float = LASSO_TOL,
 ) -> np.ndarray:
-    """Coordinate-descent Lasso, sklearn objective
-    (1/2n)·||y − Xβ||² + α·||β₁..||₁ with the intercept (column 0)
-    unpenalized via centering. Deterministic: fixed sweep order,
-    fixed tolerance, no RNG."""
-    n, p = X.shape
+    """Coordinate-descent Lasso over a band matrix, sklearn objective
+    (1/2n)·||y − Xβ||² + α·||β₁..||₁ per band with the intercept
+    (column 0) unpenalized via centering. `Y` is (n × m), one column
+    per band; `W` is its (n × m) 0/1 inlier weights, so each band
+    centres and fits over its own rows. Every coordinate update is one
+    m-band vector operation; each band stops on its own at `tol` (a
+    converged band's coefficients freeze while the rest sweep on).
+    Deterministic: fixed sweep order, fixed tolerance, no RNG.
+    Returns beta (p × m)."""
+    n_w = W.sum(axis=0)
     Xc = X[:, 1:]
-    xm = Xc.mean(axis=0)
-    ym = y.mean()
-    Xz = Xc - xm
-    yz = y - ym
-    z = (Xz * Xz).sum(axis=0) / n  # per-feature curvature
-    b = np.zeros(p - 1)
-    r = yz.copy()
+    xm = (Xc.T @ W) / n_w  # (p−1) × m per-band feature means
+    ym = (W * Y).sum(axis=0) / n_w
+    Xz = (Xc.T[:, :, None] - xm[:, None, :]) * W  # (p−1) × n × m
+    r = (Y - ym) * W
+    z = (Xz * Xz).sum(axis=1) / n_w  # per-feature, per-band curvature
+    z_div = np.where(z > 0.0, z, np.inf)  # a flat feature stays at 0
+    b = np.zeros_like(z)
+    live = np.ones(Y.shape[1], dtype=bool)
     for _ in range(max_iter):
-        delta = 0.0
-        for j in range(p - 1):
-            if z[j] <= 0.0:
-                continue
-            rho = (Xz[:, j] @ r) / n + z[j] * b[j]
-            bj = np.sign(rho) * max(abs(rho) - alpha, 0.0) / z[j]
-            if bj != b[j]:
-                r += Xz[:, j] * (b[j] - bj)
-                delta = max(delta, abs(bj - b[j]))
-                b[j] = bj
-        if delta < tol:
+        delta = np.zeros(Y.shape[1])
+        for j in range(len(b)):
+            rho = (Xz[j] * r).sum(axis=0) / n_w + z[j] * b[j]
+            bj = np.sign(rho) * np.maximum(np.abs(rho) - alpha, 0.0) / z_div[j]
+            bj = np.where(live & (bj != b[j]), bj, b[j])
+            step = b[j] - bj
+            r += Xz[j] * step
+            delta = np.maximum(delta, np.abs(step))
+            b[j] = bj
+        live &= delta >= tol
+        if not live.any():
             break
-    beta = np.empty(p)
-    beta[0] = ym - xm @ b
-    beta[1:] = b
-    return beta
+    return np.vstack([ym - (xm * b).sum(axis=0), b])
+
+
+def _solve(X: np.ndarray, Y: np.ndarray, W: np.ndarray, alpha: float) -> np.ndarray:
+    """Per-band fit of `Y` on `X` over the rows `W` weights in;
+    `alpha=0` is exact OLS (one pseudo-inverse per band, outlier rows
+    zeroed) — the round-1 behavior, kept for comparison."""
+    if alpha > 0.0:
+        return _lasso_cd(X, Y, W, alpha)
+    Xw = W.T[:, :, None] * X  # m × n × p
+    return (np.linalg.pinv(Xw) @ (W * Y).T[:, :, None])[:, :, 0].T
+
+
+def _rmse(X, Y, W, beta) -> np.ndarray:
+    """Per-band rmse over the weighted rows, n−p dof."""
+    resid = (Y - X @ beta) * W
+    dof = np.maximum(W.sum(axis=0) - X.shape[1], 1.0)
+    return np.sqrt((resid * resid).sum(axis=0) / dof)
 
 
 def _fit(
@@ -133,42 +161,41 @@ def _fit(
     harmonics: int = 0,
     alpha: float = LASSO_ALPHA,
     robust: bool = True,
-) -> tuple[np.ndarray, float]:
-    """Lasso fit over the harmonic basis → (beta, rmse) with one
-    Tmask-style robust pass. beta[0]=intercept, beta[1]=trend slope,
-    beta[2:]=harmonic terms. rmse uses n−p dof (p = 2+2k params).
-    `alpha=0` short-circuits to exact OLS (lstsq) — the round-1
-    behavior, kept for comparison and degenerate bases."""
-    n = len(ts)
+) -> tuple[np.ndarray, np.ndarray | float]:
+    """Lasso fit of every band over the harmonic basis at once, with
+    one Tmask-style robust pass → (beta, rmse). `vs` is the
+    (window × bands) matrix → beta (p × bands), rmse (bands,); a 1-D
+    `vs` is the one-band case → beta (p,), rmse float.
+    beta[0]=intercept, beta[1]=trend slope, beta[2:]=harmonic terms;
+    rmse uses n−p dof (p = 2+2k params). The robust pass refits each
+    band whose screen dropped something on its own inliers (a 0/1
+    weight column), so the bands keep separate inlier sets. A window
+    too short or too flat for the basis gets its mean (n−1 dof)."""
+    Y = vs[:, None] if vs.ndim == 1 else vs
+    n, m = Y.shape
     p = 2 + 2 * harmonics
-    if n == 0:
-        return np.zeros(p), 0.0
-    if n < p or (n >= 2 and np.ptp(ts) == 0.0) or n < 2:
-        beta = np.zeros(p)
-        beta[0] = float(vs.mean())
-        resid = vs - beta[0]
-        return beta, float(np.sqrt((resid * resid).sum() / max(n - 1, 1)))
-    X = _design(ts, harmonics)
-
-    def solve(Xw: np.ndarray, yw: np.ndarray) -> np.ndarray:
-        if alpha <= 0.0:
-            beta, *_ = np.linalg.lstsq(Xw, yw, rcond=None)
-            return beta
-        return _lasso_cd(Xw, yw, alpha)
-
-    def score(Xw, yw, beta) -> tuple[np.ndarray, float]:
-        resid = yw - Xw @ beta
-        rmse = float(np.sqrt((resid * resid).sum() / max(len(yw) - p, 1)))
-        return resid, rmse
-
-    beta = solve(X, vs)
-    resid, rmse = score(X, vs, beta)
-    if robust and rmse > 0.0:
-        inlier = np.abs(resid) <= ROBUST_T * rmse
-        n_in = int(inlier.sum())
-        if p + 1 <= n_in < n:  # something to drop, enough to refit
-            beta = solve(X[inlier], vs[inlier])
-            _, rmse = score(X[inlier], vs[inlier], beta)
+    beta = np.zeros((p, m))
+    rmse = np.zeros(m)
+    if n < p or np.ptp(ts) == 0.0:
+        if n:
+            beta[0] = Y.mean(axis=0)
+            resid = Y - beta[0]
+            rmse = np.sqrt((resid * resid).sum(axis=0) / max(n - 1, 1))
+    else:
+        X = _design(ts, harmonics)
+        W = np.ones_like(Y)
+        beta = _solve(X, Y, W, alpha)
+        rmse = _rmse(X, Y, W, beta)
+        if robust:
+            W = (np.abs(Y - X @ beta) <= ROBUST_T * rmse).astype("float64")
+            n_in = W.sum(axis=0)
+            # something to drop, enough to refit
+            redo = (rmse > 0.0) & (n_in >= p + 1) & (n_in < n)
+            if redo.any():
+                beta[:, redo] = _solve(X, Y[:, redo], W[:, redo], alpha)
+                rmse[redo] = _rmse(X, Y[:, redo], W[:, redo], beta[:, redo])
+    if vs.ndim == 1:
+        return beta[:, 0], float(rmse[0])
     return beta, rmse
 
 
@@ -179,7 +206,7 @@ def _predict(ts: np.ndarray, beta: np.ndarray, harmonics: int) -> np.ndarray:
 def _segment_row(
     keys: dict,
     ts: np.ndarray,
-    band_vals: dict[str, np.ndarray],
+    bands: np.ndarray,
     start: int,
     end: int,
     bday: int | None,
@@ -188,38 +215,39 @@ def _segment_row(
     all_dates: np.ndarray,
     mask: np.ndarray,
     harmonics: int = 0,
-    fits: dict | None = None,
+    fits: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> dict:
     """One 40-field segment dict (pyccd.format, ccdc/pyccd.py:106-148).
 
     coef = [trend, sin1, cos1, ...] with the intercept in {b}int —
     the reference's split between coefficient array and intercept
-    (ccdc/pyccd.py:64-77). `fits` reuses the caller's per-band
+    (ccdc/pyccd.py:64-77). `bands` is the (obs × 7) band matrix in
+    BAND_MAP order. `fits` reuses the caller's band-matrix
     (beta, rmse) for EXACTLY this [start:end) window (the break
     branch already computed them — refitting would double the
-    hottest solves); None recomputes (the tail segment)."""
+    hottest solve); None recomputes (the tail segment)."""
     row = dict(keys)
     row["sday"] = _iso(ts[start])
     row["eday"] = _iso(ts[end - 1])
     row["bday"] = _iso(bday) if bday is not None else None
     row["chprob"] = float(chprob)
     row["curqa"] = int(end - start)
-    for col, pre in BAND_MAP.items():
-        vs = band_vals[col]
-        beta, rmse = (
-            fits[col]
-            if fits is not None
-            else _fit(ts[start:end], vs[start:end], harmonics)
-        )
-        if peek_slice is not None:
-            pred = _predict(ts[peek_slice], beta, harmonics)
-            mag = float(np.abs(vs[peek_slice] - pred).mean())
-        else:
-            mag = None
+    beta, rmse = (
+        fits if fits is not None
+        else _fit(ts[start:end], bands[start:end], harmonics)
+    )
+    if peek_slice is not None:
+        pred = _predict(ts[peek_slice], beta, harmonics)
+        mags = np.abs(bands[peek_slice] - pred).mean(axis=0).tolist()
+    else:
+        mags = [None] * len(BAND_MAP)
+    for pre, mag, e, b in zip(
+        BAND_MAP.values(), mags, rmse.tolist(), beta.T.tolist()
+    ):
         row[f"{pre}mag"] = mag
-        row[f"{pre}rmse"] = float(rmse)
-        row[f"{pre}coef"] = [float(b) for b in beta[1:]]
-        row[f"{pre}int"] = float(beta[0])
+        row[f"{pre}rmse"] = e
+        row[f"{pre}coef"] = b[1:]
+        row[f"{pre}int"] = b[0]
     row["rfrawp"] = None
     row["dates"] = [_iso(d) for d in all_dates]
     row["mask"] = [int(m) for m in mask]
@@ -264,10 +292,9 @@ def detect(
         mask = np.isin(qas, list(CLEAR_QA)).astype("int64")
         clear = mask.astype(bool)
         ts = dates_sorted[clear].astype("float64")
-        bands = {
-            c: np.asarray(rec[c], dtype="float64")[order][clear]
-            for c in band_cols
-        }
+        bands = np.column_stack(
+            [np.asarray(rec[c], dtype="float64") for c in band_cols]
+        )[order][clear]
         if len(ts) < min_obs:  # sentinel (pyccd.py:99-103)
             row = dict(keys)
             row.update(
@@ -303,23 +330,19 @@ def detect(
                 ts[i - 1] - ts[start] >= ANNUAL_DAYS
             )
             if i - start >= min_obs and i + peek <= n and span_ok:
-                # the 7 lasso fits are only needed when the break
-                # test can actually run — fitting unconditionally
-                # wasted ~a year of spin-up iterations per segment
-                fits = {
-                    c: _fit(ts[start:i], bands[c][start:i], harmonics)
-                    for c in band_cols
-                }
+                # the band-matrix lasso fit is only needed when the
+                # break test can actually run — fitting
+                # unconditionally wasted ~a year of spin-up
+                # iterations per segment
+                fits = _fit(ts[start:i], bands[start:i], harmonics)
+                beta, rmse = fits
                 # cross-band mean normalized residual over the peek
                 # window (pyccd's consecutive-obs test, aggregated)
-                scores = np.zeros(peek)
-                for c in band_cols:
-                    beta, rmse = fits[c]
-                    pred = _predict(ts[i : i + peek], beta, harmonics)
-                    scores += np.abs(bands[c][i : i + peek] - pred) / max(
-                        rmse, 1e-6
-                    )
-                scores /= len(band_cols)
+                pred = _predict(ts[i : i + peek], beta, harmonics)
+                scores = (
+                    np.abs(bands[i : i + peek] - pred)
+                    / np.maximum(rmse, 1e-6)
+                ).sum(axis=1) / len(band_cols)
                 broke = bool((scores > chi).all())
             else:
                 broke = False

@@ -167,47 +167,39 @@ _TYPE_MAP = {
 
 
 def _ssum(xs) -> float:
-    """Sequential left-fold sum in index order.
+    """Sequential left-fold sum in index order, from +0.0.
 
-    numpy's pairwise summation is faster but ORDER-DEPENDENT in its
-    grouping, so its last-ulp result differs from any other engine's
-    sequential fold. Every windowed sum in this kernel folds
-    sequentially in time order instead — the identical operation
-    sequence DuckDB's `list_reduce` performs over a time-ordered
-    list — which makes the whole CCD output BIT-IDENTICAL across
-    engines (same IEEE-754 double ops in the same order) and lets
-    the u5 oracle compare exact values with no quantization. Windows
-    are tiny (tens of points), so the speed difference is noise.
+    numpy's `sum` is pairwise, so its grouping — and its last-ulp
+    result — differs from any other engine's sequential fold.
+    `np.add.accumulate` is a strict left fold (each partial sum feeds
+    the next), so its last element is the identical IEEE-754 op
+    sequence DuckDB's `list_reduce` performs over a time-ordered list.
+    Every windowed sum in this kernel folds this way, which makes the
+    whole CCD output BIT-IDENTICAL across engines and lets the u5
+    oracle compare exact values with no quantization. The fold starts
+    at +0.0 like a scalar `acc = 0.0` loop, so an all-(−0.0) input
+    still sums to +0.0.
     """
-    acc = 0.0
-    for x in xs:
-        acc += float(x)
-    return acc
+    return float(np.add.accumulate(np.concatenate(([0.0], xs)))[-1])
 
 
 def _fit(ts: np.ndarray, vs: np.ndarray) -> tuple[float, float, float]:
     """OLS slope/intercept/rmse via closed form (deterministic,
-    engine-portable: all sums are sequential time-order folds —
-    see `_ssum`)."""
+    engine-portable: element-wise terms are vectorized, every sum is
+    a sequential time-order fold — see `_ssum`)."""
     n = len(ts)
     if n < 2:
         inter = float(vs[0]) if n else 0.0
         return 0.0, inter, 0.0
     tm, vm = _ssum(ts) / n, _ssum(vs) / n
-    denom = _ssum((t - tm) * (t - tm) for t in ts)
-    slope = (
-        _ssum((t - tm) * (v - vm) for t, v in zip(ts, vs)) / denom
-        if denom > 0
-        else 0.0
-    )
+    dt = ts - tm
+    denom = _ssum(dt * dt)
+    slope = _ssum(dt * (vs - vm)) / denom if denom > 0 else 0.0
     inter = vm - slope * tm
     # unbiased: 2 params estimated → n-2 dof (avoids the small-window
     # rmse underestimate that makes single outliers look like breaks)
-    sse = _ssum(
-        (v - (slope * t + inter)) * (v - (slope * t + inter))
-        for t, v in zip(ts, vs)
-    )
-    return slope, inter, math.sqrt(sse / max(n - 2, 1))
+    resid = vs - (slope * ts + inter)
+    return slope, inter, math.sqrt(_ssum(resid * resid) / max(n - 2, 1))
 
 
 def _detect(
@@ -250,7 +242,7 @@ def _detect(
                     slope,
                     inter,
                     rmse,
-                    _ssum(abs(r) for r in window) / len(window),
+                    _ssum(np.abs(window)) / len(window),
                     i - start,
                 )
             )

@@ -149,24 +149,6 @@ def classify(
     )
 
 
-def tile_metadata(
-    spark,
-    tx: int,
-    ty: int,
-    name: str,
-    model_blob: str,
-    updated: str,
-) -> DataFrame:
-    """1-row tile/model metadata DF (S9; ccdc/tile.py:28-43 — the
-    reference notes doing this driver-side is fine, 'metadata is
-    only 1 small record per tile')."""
-    from ..schemas import tile_schema
-
-    return spark.createDataFrame(
-        [(int(tx), int(ty), name, model_blob, updated)], tile_schema()
-    )
-
-
 def attach_predictions(segments: DataFrame, predictions: DataFrame) -> DataFrame:
     """Re-attach classifier output to segments: 6-key equi join then
     drop the duplicate column (J3/P4; ccdc/segment.py:103-116)."""

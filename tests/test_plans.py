@@ -5,6 +5,8 @@ adapted from live-Cassandra round-trips to tmp parquet)."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -65,6 +67,41 @@ def test_changedetection_sinks_roundtrip(observations, spark, tmp_path):
     # partition layout preserves chip locality (cx/cy directories)
     chips = {(r.cx, r.cy) for r in seg.select("cx", "cy").distinct().collect()}
     assert chips == {(0, 0), (3000, 0)}
+
+
+def _fold(xs) -> float:
+    acc = 0.0
+    for x in xs:
+        acc += float(x)
+    return acc
+
+
+def _loop_fit(ts, vs):
+    """Scalar-loop reference for segmentation._fit: every term computed
+    element by element, every sum a left fold from 0.0."""
+    n = len(ts)
+    tm, vm = _fold(ts) / n, _fold(vs) / n
+    denom = _fold((t - tm) * (t - tm) for t in ts)
+    slope = _fold((t - tm) * (v - vm) for t, v in zip(ts, vs)) / denom
+    inter = vm - slope * tm
+    resid = [v - (slope * t + inter) for t, v in zip(ts, vs)]
+    return slope, inter, math.sqrt(_fold(r * r for r in resid) / max(n - 2, 1))
+
+
+def test_long_path_fit_is_bit_identical_to_loop_folds():
+    """The vectorized long-path fit folds left in time order exactly
+    like a scalar loop (and DuckDB's list_reduce), so its doubles are
+    bit-identical — magnitudes mixed so pairwise summation would
+    round differently — and an all-(−0.0) fold still gives +0.0."""
+    from lcmap_firebird_spark.operators.segmentation import _fit, _ssum
+
+    rng = np.random.default_rng(5)
+    for n in (2, 3, 17, 64, 129):
+        ts = np.sort(rng.integers(730_000, 735_000, n)).astype("float64")
+        vs = rng.normal(0, 1, n) * 10.0 ** rng.integers(-6, 7, n)
+        assert repr(_fit(ts, vs)) == repr(_loop_fit(ts, vs)), n
+        assert repr(_ssum(vs)) == repr(_fold(vs)), n
+    assert repr(_ssum(np.array([-0.0, -0.0]))) == "0.0"
 
 
 def test_assemble_explode_roundtrip(observations):

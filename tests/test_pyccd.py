@@ -268,3 +268,74 @@ def test_detect_multiband_coefficients_match_closed_form(spark):
         resid = y - (intercept + slope * t)
         rmse = float(np.sqrt((resid**2).sum() / (n - 2)))
         assert seg[f"{pre}rmse"] == pytest.approx(rmse, rel=1e-6), c
+
+
+def _scalar_fit(ts, vs, harmonics, alpha):
+    """Independent one-band reference: per-coordinate scalar Lasso
+    (or lstsq OLS at alpha=0) and a Tmask refit on the inlier SUBSET —
+    the per-band loop the band-matrix kernel replaces."""
+    X = pyccd._design(ts, harmonics)
+    p = X.shape[1]
+
+    def solve(Xw, y):
+        if alpha <= 0.0:
+            return np.linalg.lstsq(Xw, y, rcond=None)[0]
+        n = len(y)
+        xm, ym = Xw[:, 1:].mean(axis=0), y.mean()
+        Xz, r = Xw[:, 1:] - xm, y - ym
+        z = (Xz * Xz).sum(axis=0) / n
+        b = np.zeros(p - 1)
+        for _ in range(pyccd.LASSO_MAX_ITER):
+            delta = 0.0
+            for j in range(p - 1):
+                rho = (Xz[:, j] @ r) / n + z[j] * b[j]
+                bj = np.sign(rho) * max(abs(rho) - alpha, 0.0) / z[j]
+                r += Xz[:, j] * (b[j] - bj)
+                delta, b[j] = max(delta, abs(bj - b[j])), bj
+            if delta < pyccd.LASSO_TOL:
+                break
+        return np.concatenate([[ym - xm @ b], b])
+
+    def rmse(Xw, y, beta):
+        resid = y - Xw @ beta
+        return float(np.sqrt((resid * resid).sum() / (len(y) - p)))
+
+    beta = solve(X, vs)
+    e = rmse(X, vs, beta)
+    inlier = np.abs(vs - X @ beta) <= pyccd.ROBUST_T * e
+    if p + 1 <= inlier.sum() < len(vs):
+        beta = solve(X[inlier], vs[inlier])
+        e = rmse(X[inlier], vs[inlier], beta)
+    return beta, e
+
+
+@pytest.mark.parametrize("harmonics", [0, 1, 2])
+@pytest.mark.parametrize("alpha", [pyccd.LASSO_ALPHA, 0.0])
+def test_band_matrix_fit_equals_per_band_fits(harmonics, alpha):
+    """One fit over the (window × 7) band matrix equals seven
+    one-band fits, band by band, within 1e-9 relative — with outliers
+    planted in different rows per band, so each band's Tmask refit
+    runs on its own inlier set (and one clean band refits nothing)."""
+    rng = np.random.default_rng(20 + harmonics)
+    ts = 730_000.0 + 16.0 * np.arange(70)
+    w = 2 * np.pi * ts / pyccd.ANNUAL_DAYS
+    V = np.column_stack([
+        lv + 0.05 * j * (ts - ts[0]) + 80.0 * np.sin(w + j)
+        + rng.normal(0.0, 6.0, len(ts))
+        for j, lv in enumerate(np.linspace(500.0, 3000.0, 7))
+    ])
+    for j in range(6):  # band 6 stays clean
+        V[rng.choice(len(ts), 1 + j % 3, replace=False), j] += 4000.0
+    beta, rmse = pyccd._fit(ts, V, harmonics, alpha=alpha)
+    assert beta.shape == (2 + 2 * harmonics, 7) and rmse.shape == (7,)
+    for j in range(7):
+        b1, e1 = pyccd._fit(ts, V[:, j], harmonics, alpha=alpha)
+        ref_b, ref_e = _scalar_fit(ts, V[:, j], harmonics, alpha)
+        for got in (beta[:, j], b1):
+            assert got == pytest.approx(ref_b, rel=1e-9, abs=1e-9), (j, got, ref_b)
+        for got in (rmse[j], e1):
+            assert got == pytest.approx(ref_e, rel=1e-9), j
+    # the screen really did split the bands: outlier bands sit far
+    # below their unscreened rmse, the clean band does not move
+    _, raw = pyccd._fit(ts, V, harmonics, alpha=alpha, robust=False)
+    assert (rmse[:6] < raw[:6] / 3).all() and rmse[6] == pytest.approx(raw[6])

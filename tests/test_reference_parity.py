@@ -102,6 +102,24 @@ def test_chip_ids_roundtrip(spark):
     assert sorted((r.cx, r.cy) for r in df.collect()) == sorted(xys)
 
 
+@pytest.mark.parametrize("xys", [[], [(-1815585, 1064805), (-1812585, 1064805)]])
+@pytest.mark.parametrize(
+    "make,schema",
+    [(ids.chip_ids, "struct<cx:int,cy:int>"), (ids.tile_ids, "struct<tx:int,ty:int>")],
+)
+def test_ids_plan_is_jvm_local(spark, make, schema, xys):
+    """No num_partitions: the work list — empty or not — optimizes to
+    a LocalRelation under the declared non-null schema, not a Python
+    RDD scan that would start Python workers at every evaluation
+    (PLANS.md rule 5)."""
+    df = make(spark, xys)
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert df.schema.simpleString() == schema
+    assert not any(f.nullable for f in df.schema.fields)
+    assert df.count() == len(xys)
+
+
 def test_ids_drive_selective_read(spark):
     # reference read pattern end to end: grid → ids → restrict
     from lcmap_firebird_spark.operators.relational import selective_read
