@@ -51,10 +51,8 @@ avoid, for a guarantee no mainstream lakehouse format offers.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-import re
 import time
 import uuid
 
@@ -74,8 +72,8 @@ _TXN = "_txn"
 _DATA = "data"
 _WIDTH = 20
 _DV_SCHEMA = "file string, row_index bigint"
-# operations whose data files hold NEW rows: only they validate CHECK
-# constraints and reserve identity ranges at commit
+# operations whose data files hold NEW rows: only they reserve
+# identity ranges at commit
 _ROW_INTRODUCING = frozenset(
     {"create", "append", "overwrite", "merge", "apply_changes"}
 )
@@ -87,11 +85,6 @@ _DV_REWRITE_FRACTION = 0.1
 class ConcurrentWriteError(RuntimeError):
     """The log advanced under a read-dependent commit (merge/delete_mor);
     re-run against the new snapshot."""
-
-
-class ConstraintViolation(ValueError):
-    """Staged rows violate a table CHECK constraint — nothing was
-    committed and the staged files were reclaimed."""
 
 
 def _entry_path(root: str, version: int) -> str:
@@ -127,10 +120,6 @@ def _entry_mapping(entry: dict) -> dict:
     return entry.get("column_mapping") or {}
 
 
-def _phys(entry: dict, logical: str) -> str:
-    return _entry_mapping(entry).get(logical, logical)
-
-
 def _physical_schema(schema: StructType, mapping: dict) -> StructType:
     """The schema as stored in data files: logical field names
     replaced by their physical names (types/nullability unchanged)."""
@@ -144,155 +133,6 @@ def _physical_schema(schema: StructType, mapping: dict) -> StructType:
             for f in schema.fields
         ]
     )
-
-
-def _sql_segments(expr: str) -> list[tuple[str, str]]:
-    """Split SQL expression TEXT into (kind, text) segments where
-    kind is 'code' (bare expression text), 'str' (a quoted string
-    literal, quotes included — Spark treats both ' and " as string
-    delimiters, with backslash and doubled-quote escapes), or
-    'ident' (a backtick-quoted identifier, backticks included, ``
-    escaping a literal backtick), or 'comment' (a `--` line comment
-    through its newline, or a `/* */` bracketed comment — NESTED,
-    matching Spark's lexer — an unterminated one swallowing to
-    end-of-string). Column-reference scanning and rewriting must
-    only look at 'code' and 'ident' segments — matching inside a
-    string literal either rewrites the literal's VALUE or falsely
-    refuses an operation on a name that is only data (r11 hardening
-    of the r10 _rebind_constraints fix); matching inside a comment
-    would rebind/refuse on prose (r12, r11 VERDICT watch item #2)."""
-    segs: list[tuple[str, str]] = []
-    i, start, n = 0, 0, len(expr)
-    while i < n:
-        c = expr[i]
-        if c == "-" and expr.startswith("--", i):
-            if start < i:
-                segs.append(("code", expr[start:i]))
-            j = expr.find("\n", i)
-            j = n if j < 0 else j + 1  # newline belongs to the comment
-            segs.append(("comment", expr[i:j]))
-            i = start = j
-            continue
-        if c == "/" and expr.startswith("/*", i):
-            if start < i:
-                segs.append(("code", expr[start:i]))
-            j, depth = i + 2, 1
-            while j < n and depth:
-                if expr.startswith("/*", j):
-                    depth, j = depth + 1, j + 2
-                elif expr.startswith("*/", j):
-                    depth, j = depth - 1, j + 2
-                else:
-                    j += 1
-            segs.append(("comment", expr[i:j]))
-            i = start = j
-            continue
-        if c not in ("'", '"', "`"):
-            i += 1
-            continue
-        if start < i:
-            segs.append(("code", expr[start:i]))
-        j = i + 1
-        while j < n:
-            if c != "`" and expr[j] == "\\" and j + 1 < n:
-                j += 2  # backslash escape inside a string literal
-                continue
-            if expr[j] == c:
-                if j + 1 < n and expr[j + 1] == c:
-                    j += 2  # doubled-quote escape ('' / "" / ``)
-                    continue
-                j += 1
-                break
-            j += 1
-        segs.append(("ident" if c == "`" else "str", expr[i:j]))
-        i = start = j
-    if start < n:
-        segs.append(("code", expr[start:]))
-    return segs
-
-
-def _strip_sql_comments(expr: str) -> str:
-    """Normalize stored SQL expression text to be COMMENT-FREE:
-    each comment segment becomes one space (a separator, so
-    'a--c\\n>0' stays two tokens), code/literals/identifiers pass
-    verbatim. Applied at every boundary that ACCEPTS expression text
-    for storage (add_constraint, create's constraints/generated) —
-    Spark's parser takes comments standalone, but stored text is
-    re-embedded in composed SQL (`NOT coalesce((expr), true)`,
-    lakehouse.py:603,2748) where a `--` line comment would swallow
-    the wrapper's tail and flip the check's meaning (r12, r11
-    VERDICT watch item #2)."""
-    segs = _sql_segments(expr)
-    if all(kind != "comment" for kind, _ in segs):
-        return expr
-    return "".join(
-        " " if kind == "comment" else text for kind, text in segs
-    ).strip()
-
-
-def _ref_pattern(names) -> "re.Pattern":
-    """Word-boundary pattern over one or more column names,
-    case-insensitive to match Spark's default identifier resolution
-    (spark.sql.caseSensitive=false): constraint text written as
-    'VAL > 0' binds to column val, so metadata guards must see the
-    reference too."""
-    alts = "|".join(re.escape(k) for k in sorted(names))
-    return re.compile(
-        rf"(?<![A-Za-z0-9_])({alts})(?![A-Za-z0-9_])", re.IGNORECASE
-    )
-
-
-def _expr_references(expr: str, name: str) -> bool:
-    """True when SQL expression text references column `name` —
-    case-insensitive, counting backtick-quoted identifiers, and
-    NEVER matching inside string literals."""
-    pat = _ref_pattern([name])
-    for kind, text in _sql_segments(expr):
-        if kind == "code" and pat.search(text):
-            return True
-        if kind == "ident" and (
-            text[1:-1].replace("``", "`").lower() == name.lower()
-        ):
-            return True
-    return False
-
-
-def _expr_rewrite_refs(expr: str, repl: dict) -> str:
-    """Simultaneously rewrite column references old->new in SQL
-    expression text (so swap-renames resolve correctly), skipping
-    string literals, matching case-insensitively, and rewriting
-    backtick-quoted identifiers with the backticks preserved.
-
-    A bare-word match immediately followed by '(' (optionally after
-    whitespace) is a FUNCTION CALL SITE, never a column reference —
-    a column named 'abs' renamed while another stored expression
-    says 'abs(val) > 0' must not have the function call rewritten
-    (r11 ADVICE). The refusal-only guards (_expr_references) keep
-    the conservative over-match: a false refusal is loud and safe,
-    a silent expression corruption is not."""
-    if not repl:
-        return expr
-    lrepl = {k.lower(): v for k, v in repl.items()}
-    pat = _ref_pattern(repl)
-    out = []
-    for kind, text in _sql_segments(expr):
-        if kind == "code":
-
-            def _sub(m, _t=text):
-                if _t[m.end():].lstrip()[:1] == "(":
-                    return m.group(0)
-                return lrepl[m.group(1).lower()]
-
-            out.append(pat.sub(_sub, text))
-        elif kind == "ident":
-            inner = text[1:-1].replace("``", "`")
-            new = lrepl.get(inner.lower())
-            out.append(
-                "`" + new.replace("`", "``") + "`" if new else text
-            )
-        else:
-            out.append(text)
-    return "".join(out)
 
 
 def _file_stats(path: str, key_cols: list[str]) -> dict:
@@ -425,16 +265,6 @@ def _reserve_identity(ident: dict, add: list[dict]) -> tuple[list[dict], int]:
             wm += step * int(r.get("rows") or 0)
         out.append(r)
     return out, wm
-
-
-def _bloom_positions(value, m: int, k: int) -> list[int]:
-    """The k bit positions of `value` in an m-bit bloom filter:
-    md5-derived double hashing (deterministic, engine-portable —
-    the same spirit as operators/bloom's semi-join bitmaps)."""
-    d = hashlib.md5(str(value).encode()).digest()
-    h1 = int.from_bytes(d[:8], "big")
-    h2 = int.from_bytes(d[8:], "big") | 1
-    return [(h1 + i * h2) % m for i in range(k)]
 
 
 class LakeTable:
@@ -687,74 +517,11 @@ class LakeTable:
                     for c in df.columns
                 ]
             )
-        # CHECK constraints are enforced by _commit (against the
-        # constraint set in force at COMMIT time, not staging time —
-        # the head may move between the two)
         return [
             {"path": name}
             | _file_stats(os.path.join(self.root, name), key_cols)
             for name, _ in self._stage(df, ".parquet", keep_empty=True)
         ]
-
-    def _validate_staged(
-        self,
-        recs: list[dict],
-        cons: dict[str, str],
-        schema_json: str,
-        mapping: dict | None = None,
-        gen: dict[str, str] | None = None,
-    ) -> None:
-        """Enforce CHECK constraints over staged files; on violation
-        the staged files are reclaimed and nothing can reference
-        them. SQL CHECK semantics: a row violates only when the
-        expression evaluates FALSE — NULL passes. The scan runs
-        under the TABLE schema (null-filling columns a pre-evolution
-        writer's files lack) so a constraint on an added column
-        passes as NULL instead of failing to resolve.
-
-        `gen` additionally enforces GENERATED column fidelity: every
-        staged value must null-safe-equal its declared expression
-        (writer-provided values cannot silently disagree with what
-        the engine would have computed — the property that makes a
-        generated bucket/day column trustworthy for pruning)."""
-        gen = gen or {}
-        if (not cons and not gen) or not recs:
-            return
-        spark = self.spark or SparkSession.getActiveSession()
-        if spark is None:  # attach() handle with no session around
-            raise RuntimeError(
-                "no SparkSession available to validate CHECK "
-                "constraints on a constrained table"
-            )
-        schema = StructType.fromJson(json.loads(schema_json))
-        mapping = mapping or {}
-        staged = spark.read.schema(
-            _physical_schema(schema, mapping)
-        ).parquet(
-            *[os.path.join(self.root, r["path"]) for r in recs]
-        ).select(
-            *[
-                F.col(mapping.get(f.name, f.name)).alias(f.name)
-                for f in schema.fields
-            ]
-        )
-        checks = [
-            (f"CHECK constraint {c!r} ({e})", f"NOT coalesce(({e}), true)")
-            for c, e in sorted(cons.items())
-        ] + [
-            (
-                f"generated column {c!r} (ALWAYS AS {e})",
-                f"NOT ({c} <=> ({e}))",
-            )
-            for c, e in sorted(gen.items())
-        ]
-        for label, pred in checks:
-            if staged.filter(pred).limit(1).count():
-                for r in recs:
-                    os.remove(os.path.join(self.root, r["path"]))
-                raise ConstraintViolation(
-                    f"{label} violated by staged rows; commit aborted"
-                )
 
     def _commit(
         self,
@@ -768,7 +535,6 @@ class LakeTable:
         non-None = read-dependent commit: raise ConcurrentWriteError
         if the head moved; None = order-independent (append): retry
         against whatever head exists."""
-        staged_cons: dict | None = None
         while True:
             # re-read the head entry on EVERY attempt: an append that
             # loses the O_EXCL race to a concurrent add_column must
@@ -782,40 +548,6 @@ class LakeTable:
                 raise ConcurrentWriteError(
                     f"log advanced to v{head} (expected v{expected_head})"
                 )
-            # CHECK constraints: validate the staged data files (one
-            # scan of the just-written parquet, no lineage recompute)
-            # against the constraint set in force at COMMIT time —
-            # once per distinct set, so an append that loses the
-            # O_EXCL race to a concurrent add_constraint re-validates
-            # under the new set before its entry can land. Only
-            # row-INTRODUCING operations validate: rewrites (compact,
-            # cluster, restore) and delete_mor's DV datasets recombine
-            # rows every live version already satisfies —
-            # add_constraint's full-snapshot check is the induction
-            # base — and scanning them again would turn maintenance
-            # into full-table validation passes.
-            cons = head_entry.get("constraints") or {}
-            gen = head_entry.get("generated") or {}
-            if cons != staged_cons and operation in _ROW_INTRODUCING:
-                try:
-                    self._validate_staged(
-                        [r for r in add if r.get("kind") is None],
-                        cons,
-                        head_entry["schema"],
-                        mapping=_entry_mapping(head_entry),
-                        gen=gen,
-                    )
-                except ConstraintViolation:
-                    # reclaim staged CDF change files too — they ride
-                    # in extra['cdf'], not in `add`
-                    cdf_rec = (extra or {}).get("cdf")
-                    for p in (cdf_rec or {}).get("paths", []):
-                        try:
-                            os.remove(os.path.join(self.root, p))
-                        except FileNotFoundError:
-                            pass
-                    raise
-            staged_cons = cons
             entry = {
                 "version": head + 1,
                 "operation": operation,
@@ -831,10 +563,8 @@ class LakeTable:
                 "remove": remove,
                 "schema": head_entry["schema"],
                 "key_cols": head_entry["key_cols"],
-                "constraints": head_entry.get("constraints") or {},
                 "column_mapping": _entry_mapping(head_entry),
                 "retired_cols": head_entry.get("retired_cols") or [],
-                "generated": head_entry.get("generated") or {},
                 "stats_cols": head_entry.get("stats_cols") or [],
             }
             if extra:
@@ -872,8 +602,6 @@ class LakeTable:
         key_cols: list[str],
         extra: dict | None = None,
         enable_cdf: bool = False,
-        constraints: dict[str, str] | None = None,
-        generated: dict[str, str] | None = None,
         stats_cols: list[str] | None = None,
         identity: str | dict | None = None,
     ) -> "LakeTable":
@@ -881,17 +609,6 @@ class LakeTable:
         drive per-file stats pruning. `enable_cdf=True` makes every
         row-changing commit also record its change rows (Delta's
         enableChangeDataFeed), read back with `read_cdf`.
-        `constraints` ({name: SQL boolean expr}) are CHECK
-        constraints enforced on every subsequent commit's staged
-        rows — including this create's initial data.
-
-        `generated` ({col: DETERMINISTIC SQL expr over the other
-        columns}) declares generated columns (Delta's GENERATED
-        ALWAYS AS): writers may omit them (the engine computes the
-        expression at write) and any value a writer DOES provide is
-        validated against the expression at commit time — so a
-        generated day/bucket column is trustworthy for stats pruning.
-        Expressions must not reference other generated columns.
 
         `stats_cols` lists extra (non-key) columns whose per-file
         min/max land in every commit's stats records from birth —
@@ -916,10 +633,8 @@ class LakeTable:
         (aborts, rewrite over-reservation) — Delta's documented
         semantics. Restrictions (all of which keep the metadata
         immutable and the ranges trustworthy): declared at create
-        only; the column refuses rename/drop; CHECK constraints and
-        generated expressions may not reference it (values are
-        assigned after staging-time validation, which would see
-        NULL). CDF change rows carry the ASSIGNED values, written
+        only; it may not be a key column; the column refuses
+        rename/drop. CDF change rows carry the ASSIGNED values, written
         into every change file at staging: merge/apply_changes never
         retry, so their reserved ranges are deterministic at staging
         and the change file records the materialized ids
@@ -927,21 +642,6 @@ class LakeTable:
         pre-images; append inserts derive from add files,
         which readers materialize. No reader fills identity into a
         change file."""
-        # stored expression text must be comment-free: it is later
-        # re-embedded in composed SQL where a `--` line comment would
-        # swallow the wrapper's tail (see _strip_sql_comments)
-        constraints = {
-            k: _strip_sql_comments(v) for k, v in (constraints or {}).items()
-        }
-        generated = {
-            k: _strip_sql_comments(v) for k, v in (generated or {}).items()
-        }
-        # exist_ok: a crashed create may have left the empty dirs
-        # behind; the O_EXCL entry-0 create below is the real guard
-        # against two concurrent creates
-        for c, expr in (generated or {}).items():
-            if c not in df.columns:
-                df = df.withColumn(c, F.expr(expr))
         ident = None
         if identity is not None:
             if isinstance(identity, str):
@@ -953,11 +653,6 @@ class LakeTable:
             }
             if ident["step"] == 0:
                 raise ValueError("identity step must be non-zero")
-            if ident["col"] in (generated or {}):
-                raise ValueError(
-                    f"{ident['col']!r} cannot be both identity and "
-                    "generated"
-                )
             if ident["col"] in key_cols:
                 raise ValueError(
                     f"identity column {ident['col']!r} cannot be a "
@@ -968,17 +663,6 @@ class LakeTable:
                     "re-insert as duplicates. Key on a natural "
                     "column and carry the identity alongside."
                 )
-            for what, exprs in (
-                ("CHECK constraint", constraints or {}),
-                ("generated column", generated or {}),
-            ):
-                for nm, ex in exprs.items():
-                    if _expr_references(ex, ident["col"]):
-                        raise ValueError(
-                            f"{what} {nm!r} references identity "
-                            f"column {ident['col']!r} (values are "
-                            "assigned at commit, after validation)"
-                        )
             if ident["col"] not in df.columns:
                 df = df.withColumn(
                     ident["col"], F.lit(None).cast("bigint")
@@ -987,6 +671,9 @@ class LakeTable:
                 df = df.withColumn(
                     ident["col"], F.col(ident["col"]).cast("bigint")
                 )
+        # exist_ok: a crashed create may have left the empty dirs
+        # behind; the O_EXCL entry-0 create below is the real guard
+        # against two concurrent creates
         os.makedirs(os.path.join(root, _TXN), exist_ok=True)
         os.makedirs(os.path.join(root, _DATA), exist_ok=True)
         entry0 = {
@@ -998,8 +685,6 @@ class LakeTable:
             "schema": df.schema.json(),
             "key_cols": key_cols,
             "cdf_enabled": bool(enable_cdf),
-            "constraints": constraints or {},
-            "generated": generated or {},
             "stats_cols": list(stats_cols or []),
         }
         if ident:
@@ -1009,15 +694,8 @@ class LakeTable:
         with open(_entry_path(root, 0), "x") as f:
             json.dump(entry0, f, indent=1)
         t = LakeTable(spark, root)
-        try:
-            add = t._stage_files(df)
-            t._commit("create", add, [], expected_head=0, extra=extra)
-        except ConstraintViolation:
-            # don't poison the root: reclaim entry 0 so a corrected
-            # create can retry cleanly (staged files were already
-            # reclaimed by the validator)
-            os.remove(_entry_path(root, 0))
-            raise
+        add = t._stage_files(df)
+        t._commit("create", add, [], expected_head=0, extra=extra)
         return t
 
     def _original_physical(self) -> frozenset:
@@ -1051,10 +729,9 @@ class LakeTable:
     ) -> DataFrame:
         """Project df onto the table schema: reject columns the table
         doesn't have (misspellings must not silently land as a file
-        readers null-fill away), COMPUTE absent generated columns
-        from their declared expressions, null-fill absent
-        evolution-added columns (pre-evolution writer shapes stay
-        valid), and cast the rest — an unconverted type would commit
+        readers null-fill away), null-fill absent evolution-added
+        columns (pre-evolution writer shapes stay valid), and cast
+        the rest — an unconverted type would commit
         a file every subsequent scan chokes on.
 
         `strict_original=True` (merge/apply_changes) confines the
@@ -1070,7 +747,6 @@ class LakeTable:
         the schema fields (apply_changes' op column) — they must be
         present in df."""
         schema = StructType.fromJson(json.loads(head["schema"]))
-        gen = head.get("generated") or {}
         known = {f.name for f in schema.fields} | set(keep)
         extra_cols = [c for c in df.columns if c not in known]
         if extra_cols:
@@ -1085,8 +761,6 @@ class LakeTable:
         def _col(f):
             if f.name in df.columns:
                 return F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in gen:
-                return F.expr(gen[f.name]).cast(f.dataType).alias(f.name)
             if (
                 strict_original
                 and f.name != ident_col
@@ -1489,8 +1163,8 @@ class LakeTable:
                 # table_changes emits v's logical names already
                 df = self.table_changes(v - 1, v)
             else:
-                # compact/bloom_index/add_column/rename_column/
-                # drop_column/checkpoint/no-op commits change no rows
+                # compact/cluster/add_column/rename_column/
+                # drop_column/no-op commits change no rows
                 continue
             # project each part into to_v's logical space by physical
             # identity (renames carry over, additions null-fill,
@@ -1749,10 +1423,9 @@ class LakeTable:
         live, head_entry = self._live(head)
         key_cols = head_entry["key_cols"]
         # the SAME writer contract as append (_conform): absent
-        # generated columns compute, absent evolution-added columns
-        # (identity included — NULLs materialize from the commit's
-        # reserved range at scan, the BY DEFAULT rule) null-fill, and
-        # unknown columns raise. Key columns are required EXPLICITLY:
+        # evolution-added columns (identity included — NULLs
+        # materialize from the commit's reserved range at scan, the BY
+        # DEFAULT rule) null-fill, and unknown columns raise. Key columns are required EXPLICITLY:
         # _conform would null-fill an absent key, silently merging by
         # NULL. strict_original (r9): an absent ORIGINAL column raises
         # rather than NULL-overwriting existing values on update.
@@ -1830,8 +1503,6 @@ class LakeTable:
             for v in sorted(protect):
                 for rec in self._live(v)[0]:
                     referenced.add(rec["path"])
-                    if rec.get("bloom"):
-                        referenced.add(rec["bloom"]["path"])
                 # change-data-feed files belong to exactly one commit
                 # and stay readable while that commit is protected
                 with open(_entry_path(self.root, v)) as f:
@@ -1959,24 +1630,6 @@ class LakeTable:
         out = zordered(df, cluster_by, n, bits)
         return df if out is None else out  # None: nothing to order
 
-    def append_clustered(
-        self, df: DataFrame, cluster_by: list[str] | None = None, **kw
-    ) -> int:
-        """Append with the rows clustered on `cluster_by` (default:
-        the table's key columns) so the committed per-file stats are
-        tight and `scan()` pruning actually bites. The add records
-        are stamped `clustered_by`, so an incremental `cluster()`
-        pass knows to skip them."""
-        head = self._live()[1]
-        cluster_by = cluster_by or head["key_cols"]
-        add = self._stage_files(
-            self._clustered(self._conform(df, head), cluster_by),
-            stat_cols=cluster_by,
-        )
-        for r in add:
-            r["clustered_by"] = sorted(cluster_by)
-        return self._commit("append", add, [], expected_head=None, **kw)
-
     def cluster(
         self,
         cluster_by: list[str] | None = None,
@@ -1986,8 +1639,7 @@ class LakeTable:
         live data files with rows clustered on `cluster_by`
         (default: the table's key columns) in ONE commit, so per-file
         stats tighten and `scan()` pruning bites on historically
-        appended data — the retroactive sibling of append_clustered
-        (which only clusters what it writes). Merge-on-read deletes
+        appended data. Merge-on-read deletes
         on rewritten files are materialized; DV rows for untouched
         files carry forward (`_retire_dvs`). Stats are recorded
         for the clustering columns as well as the key columns, so
@@ -2244,22 +1896,11 @@ class LakeTable:
         corruption is the one unacceptable outcome; vacuum's own
         recompute loop catches the opposite ordering).
 
-        The restore also restores the CHECK-constraint set in force
-        at the target version: the resurrected rows were validated
-        against THAT set, not against constraints added since (which
-        they may violate — carrying the newer set forward would
-        leave the table inconsistent with its own live constraints).
         The schema deliberately stays the NEWER one: evolution is
-        additive-nullable, so old rows read correctly under it.
-        Restored constraint text is re-bound by PHYSICAL identity
-        into the current logical space (_rebind_constraints) — a
-        column renamed since the constraint was dropped is rewritten
-        to its current name, and a restore whose constraint
-        references a since-dropped column refuses loudly instead of
-        poisoning later commits."""
+        additive-nullable, so old rows read correctly under it."""
         head = self.latest_version()
-        old_live, old_entry = self._live(version)
-        cur_live, cur_entry = self._live(head)
+        old_live = self._live(version)[0]
+        cur_live = self._live(head)[0]
         for rec in old_live:
             if not os.path.exists(os.path.join(self.root, rec["path"])):
                 raise FileNotFoundError(
@@ -2267,32 +1908,11 @@ class LakeTable:
                 )
         cur_paths = {r["path"] for r in cur_live}
         old_paths = {r["path"] for r in old_live}
-        # r11 (bloom sidecar x vacuum x restore matrix): a resurrected
-        # rec may carry a bloom POINTER whose sidecar was legitimately
-        # vacuumed — the data file stayed referenced through a
-        # pre-bloom version while no protected version referenced the
-        # sidecar. Unlike a missing DATA file (loud refusal above), a
-        # bloom is a rebuildable INDEX: strip the dead pointer so the
-        # new head never references a swept artifact (lookup() would
-        # crash, and build_bloom_index couldn't repair — it skips recs
-        # that already carry a pointer).
-        add = [
-            self._strip_dead_bloom(r)
-            for r in old_live
-            if r["path"] not in cur_paths
-        ]
+        add = [r for r in old_live if r["path"] not in cur_paths]
         remove = sorted(cur_paths - old_paths)
         v_new = self._commit(
             "restore", add, remove, expected_head=head,
-            extra={
-                "restored_version": version,
-                # re-bound by physical identity into the CURRENT
-                # logical space (the schema stays the newer one);
-                # refuses loudly if a referenced column is gone
-                "constraints": self._rebind_constraints(
-                    old_entry, cur_entry, version
-                ),
-            },
+            extra={"restored_version": version},
         )
         missing = [
             r["path"]
@@ -2308,17 +1928,10 @@ class LakeTable:
             # so its rows survive the roll-forward.
             self._commit(
                 "restore",
-                [
-                    self._strip_dead_bloom(r)
-                    for r in cur_live
-                    if r["path"] in set(remove)
-                ],
+                [r for r in cur_live if r["path"] in set(remove)],
                 sorted(old_paths - cur_paths),
                 expected_head=None,
-                extra={
-                    "restored_version": head,
-                    "constraints": cur_entry.get("constraints") or {},
-                },
+                extra={"restored_version": head},
             )
             raise FileNotFoundError(
                 f"concurrent vacuum swept {missing[:3]}... during "
@@ -2327,30 +1940,18 @@ class LakeTable:
             )
         return v_new
 
-    def _strip_dead_bloom(self, rec: dict) -> dict:
-        """Drop a rec's bloom pointer when its sidecar file no longer
-        exists (vacuumed). Blooms are rebuildable indexes — a rec
-        without a pointer scans correctly and build_bloom_index can
-        re-index it; a rec pointing at a swept sidecar crashes
-        lookup() and blocks the rebuild."""
-        bl = rec.get("bloom")
-        if bl and not os.path.exists(os.path.join(self.root, bl["path"])):
-            rec = dict(rec)
-            rec.pop("bloom")
-        return rec
-
     def clone(self, dest_root: str) -> "LakeTable":
         """SHALLOW CLONE (Delta's CLONE): a new, independent table
         whose create commit references the source snapshot's live
         files BY ABSOLUTE PATH — zero data copied, O(metadata) cost.
-        The clone gets the source's schema, key columns, constraints,
-        column mapping and live deletion vectors as of now; from then
-        on the two logs evolve independently (writes to the clone
-        stage into ITS OWN data/ directory; COW rewrites drop the
-        absolute references file by file). CDF HISTORY does not
-        transfer (the clone's feed starts at its create — Delta's
-        rule), but the cdf_enabled PROPERTY inherits like every other
-        table property (r9; Delta clones inherit
+        The clone gets the source's schema, key columns, stats
+        columns, identity, column mapping and live deletion vectors
+        as of now; from then on the two logs evolve independently
+        (writes to the clone stage into ITS OWN data/ directory; COW
+        rewrites drop the absolute references file by file). CDF
+        HISTORY does not transfer (the clone's feed starts at its
+        create — Delta's rule), but the cdf_enabled PROPERTY inherits
+        like every other table property (r9; Delta clones inherit
         delta.enableChangeDataFeed too): a clone of a CDF table
         records change rows for its OWN commits from version 1 on.
 
@@ -2361,19 +1962,10 @@ class LakeTable:
         """
         head = self.latest_version()
         live, head_entry = self._live(head)
-        add = []
-        for r in live:
-            rec = dict(r)
-            rec["path"] = os.path.abspath(
-                os.path.join(self.root, rec["path"])
-            )
-            if rec.get("bloom"):
-                rec["bloom"] = dict(rec["bloom"]) | {
-                    "path": os.path.abspath(
-                        os.path.join(self.root, rec["bloom"]["path"])
-                    )
-                }
-            add.append(rec)
+        add = [
+            r | {"path": os.path.abspath(os.path.join(self.root, r["path"]))}
+            for r in live
+        ]
         os.makedirs(os.path.join(dest_root, _TXN), exist_ok=True)
         os.makedirs(os.path.join(dest_root, _DATA), exist_ok=True)
         entry0 = {
@@ -2387,10 +1979,8 @@ class LakeTable:
             # the property lives in entry 0 only (never in later
             # commit entries) — inherit from the source's entry 0
             "cdf_enabled": self._cdf_enabled(),
-            "constraints": head_entry.get("constraints") or {},
             "column_mapping": _entry_mapping(head_entry),
             "retired_cols": head_entry.get("retired_cols") or [],
-            "generated": head_entry.get("generated") or {},
             "stats_cols": head_entry.get("stats_cols") or [],
             "identity": head_entry.get("identity"),
             "cloned_from": {"root": os.path.abspath(self.root),
@@ -2401,8 +1991,6 @@ class LakeTable:
         t = LakeTable(self.spark, dest_root) if self.spark else (
             LakeTable.attach(dest_root)
         )
-        # constraint re-validation is unnecessary: the referenced
-        # rows already satisfy the copied set at the source
         t._commit("clone", add, [], expected_head=0)
         return t
 
@@ -2447,93 +2035,6 @@ class LakeTable:
             | extra,
         )
 
-    def _rebind_constraints(
-        self, old_entry: dict, cur_entry: dict, version: int
-    ) -> dict:
-        """Re-bind a restored CHECK-constraint set into the CURRENT
-        logical column space BY PHYSICAL IDENTITY (r10 fix).
-
-        Restore keeps the NEWER schema but resurrects the TARGET
-        version's constraints — stored as SQL text over the target
-        version's LOGICAL names. If a referenced column was renamed
-        after the constraint was dropped, carrying the text verbatim
-        either stops binding (every later row-introducing commit dies
-        with UNRESOLVED_COLUMN — the table is poisoned until a manual
-        drop_constraint) or, worse, silently binds to an UNRELATED
-        column that has since taken the name (a shadowing rename let a
-        violating append land). The fix is the engine's standing
-        _relabel rule applied to metadata: each referenced old logical
-        name maps via its physical identity to the current logical
-        name (simultaneous substitution via _expr_rewrite_refs, so
-        swap-renames rewrite correctly); a referenced physical column
-        that no longer exists refuses the restore LOUDLY — enforcement
-        that cannot bind must not be carried forward silently.
-
-        r11 hardening: reference detection and substitution are
-        case-insensitive (Spark resolves identifiers that way, so
-        'VAL > 0' binds to val and must follow its rename) and skip
-        string literals / handle backtick quoting (_sql_segments) —
-        a rename crossing `tag != 'val'` must not rewrite the
-        LITERAL, and a dropped column mentioned only inside a
-        literal must not refuse the restore."""
-        cons = old_entry.get("constraints") or {}
-        if not cons:
-            return {}
-        old_schema = StructType.fromJson(json.loads(old_entry["schema"]))
-        cur_schema = StructType.fromJson(json.loads(cur_entry["schema"]))
-        cur_by_phys = {
-            _phys(cur_entry, f.name): f.name for f in cur_schema.fields
-        }
-        out = {}
-        for cname, expr in sorted(cons.items()):
-            repl: dict[str, str] = {}
-            for f in old_schema.fields:
-                if not _expr_references(expr, f.name):
-                    continue
-                phys = _phys(old_entry, f.name)
-                if phys not in cur_by_phys:
-                    raise ValueError(
-                        f"cannot restore to v{version}: its CHECK "
-                        f"constraint {cname!r} ({expr}) references "
-                        f"column {f.name!r}, whose physical column has "
-                        "since been dropped — drop the constraint in a "
-                        "later version of the target history or re-add "
-                        "the column before restoring"
-                    )
-                if cur_by_phys[phys] != f.name:
-                    repl[f.name] = cur_by_phys[phys]
-            out[cname] = _expr_rewrite_refs(expr, repl)
-        return out
-
-    def _check_constraint_refs(self, head_entry: dict, name: str) -> None:
-        """Refuse to rename/drop a column a CHECK constraint or a
-        GENERATED column expression mentions (the stored SQL text
-        would silently stop binding — Delta blocks the same way), or
-        a generated column itself. Detection via _expr_references:
-        case-insensitive (matching Spark's resolver — 'VAL > 0'
-        references val) and literal-safe (a name appearing only
-        inside a quoted string is DATA, not a reference, and must
-        not block the rename/drop)."""
-        for cname, expr in (head_entry.get("constraints") or {}).items():
-            if _expr_references(expr, name):
-                raise ValueError(
-                    f"column {name!r} is referenced by CHECK "
-                    f"constraint {cname!r} ({expr}); drop the "
-                    "constraint first"
-                )
-        for gcol, expr in (head_entry.get("generated") or {}).items():
-            if gcol == name:
-                raise ValueError(
-                    f"{name!r} is a generated column (ALWAYS AS "
-                    f"{expr}); generated columns cannot be renamed "
-                    "or dropped"
-                )
-            if _expr_references(expr, name):
-                raise ValueError(
-                    f"column {name!r} is referenced by generated "
-                    f"column {gcol!r} (ALWAYS AS {expr})"
-                )
-
     def rename_column(self, old: str, new: str) -> int:
         """ALTER TABLE RENAME COLUMN as a METADATA-ONLY commit —
         Delta's column-mapping design: the column's physical name
@@ -2541,8 +2042,7 @@ class LakeTable:
         only the logical schema and the entry's column_mapping move.
         No data file is read or written. Time travel keeps old names
         at old versions (every entry carries the mapping in force).
-        Renaming a key column updates key_cols; a column referenced
-        by a CHECK constraint must be un-constrained first. Streams
+        Renaming a key column updates key_cols. Streams
         planned under the old name fail on restart (non-additive
         change — Delta's posture)."""
         head = self.latest_version()
@@ -2560,7 +2060,6 @@ class LakeTable:
                 "cannot be renamed (their metadata is pinned at "
                 "create so every reader can resolve value ranges)"
             )
-        self._check_constraint_refs(head_entry, old)
         mapping = dict(_entry_mapping(head_entry))
         phys = mapping.pop(old, old)
         if new != phys:
@@ -2596,8 +2095,8 @@ class LakeTable:
         read again, and its physical name is RETIRED so a future
         add_column of the same logical name maps to a fresh physical
         name instead of resurrecting the dead bytes (Delta's
-        column-mapping drop). Key columns and constraint-referenced
-        columns refuse; time travel still reads the column at old
+        column-mapping drop). Key columns and the identity column
+        refuse; time travel still reads the column at old
         versions."""
         head = self.latest_version()
         _, head_entry = self._live(head)
@@ -2618,7 +2117,6 @@ class LakeTable:
                 f"{name!r} is the identity column; identity columns "
                 "cannot be dropped"
             )
-        self._check_constraint_refs(head_entry, name)
         mapping = dict(_entry_mapping(head_entry))
         phys = mapping.pop(name, name)
         retired = list(head_entry.get("retired_cols") or [])
@@ -2642,60 +2140,6 @@ class LakeTable:
             },
         )
 
-    def add_constraint(self, name: str, expr: str) -> int:
-        """ALTER TABLE ADD CONSTRAINT CHECK: validates the CURRENT
-        snapshot first (existing rows must already satisfy the
-        constraint — Delta's rule), then a metadata-only commit
-        carries it forward; every later commit's staged rows are
-        validated before the entry can land. SQL CHECK semantics: a
-        row violates only when `expr` evaluates FALSE (NULL passes).
-        Read-dependent commit. SQL comments in `expr` are accepted
-        (Spark's parser takes them) but normalized away before
-        storage — stored text is re-embedded in composed SQL where a
-        line comment would swallow the wrapper's tail (r12)."""
-        expr = _strip_sql_comments(expr)
-        head = self.latest_version()
-        cons = dict(self._live(head)[1].get("constraints") or {})
-        if name in cons:
-            raise ValueError(f"constraint {name!r} already exists")
-        ident = self._identity()
-        if ident:
-            if _expr_references(expr, ident["col"]):
-                raise ValueError(
-                    f"CHECK constraint {name!r} references identity "
-                    f"column {ident['col']!r}: staged rows are "
-                    "validated BEFORE identity assignment (the column "
-                    "is NULL there), so the check could never bite"
-                )
-        if (
-            self.snapshot(head)
-            .filter(f"NOT coalesce(({expr}), true)")
-            .limit(1)
-            .count()
-        ):
-            raise ConstraintViolation(
-                f"existing rows violate CHECK {name!r} ({expr}); "
-                "constraint not added"
-            )
-        cons[name] = expr
-        return self._commit(
-            "add_constraint", [], [], expected_head=head,
-            extra={"constraints": cons},
-        )
-
-    def drop_constraint(self, name: str) -> int:
-        """Remove a CHECK constraint (metadata-only commit); time
-        travel to older versions still sees it in force there."""
-        head = self.latest_version()
-        cons = dict(self._live(head)[1].get("constraints") or {})
-        if name not in cons:
-            raise ValueError(f"no constraint {name!r}")
-        cons.pop(name)
-        return self._commit(
-            "drop_constraint", [], [], expected_head=head,
-            extra={"constraints": cons},
-        )
-
     # -- log checkpointing -------------------------------------------------
 
     def checkpoint_log(self) -> int:
@@ -2715,10 +2159,8 @@ class LakeTable:
             "live": live,
             "schema": head_entry["schema"],
             "key_cols": head_entry["key_cols"],
-            "constraints": head_entry.get("constraints") or {},
             "column_mapping": _entry_mapping(head_entry),
             "retired_cols": head_entry.get("retired_cols") or [],
-            "generated": head_entry.get("generated") or {},
             "stats_cols": head_entry.get("stats_cols") or [],
             "identity": head_entry.get("identity"),
         }
@@ -2758,10 +2200,8 @@ class LakeTable:
         schema_entry = {
             "schema": ck["schema"],
             "key_cols": ck["key_cols"],
-            "constraints": ck.get("constraints") or {},
             "column_mapping": ck.get("column_mapping") or {},
             "retired_cols": ck.get("retired_cols") or [],
-            "generated": ck.get("generated") or {},
             "stats_cols": ck.get("stats_cols") or [],
             "identity": ck.get("identity"),
         }
@@ -2772,131 +2212,6 @@ class LakeTable:
                 live.pop(p, None)
             schema_entry = e
         return list(live.values()), schema_entry
-
-    # -- bloom sidecar index -----------------------------------------------
-
-    def build_bloom_index(
-        self, bits_per_row: int = 10, n_hashes: int = 7
-    ) -> int:
-        """Per-file bloom filters over the FIRST key column, written
-        as sidecar files (data/<uuid>.bloom) and referenced from a
-        metadata-only commit — the log carries a pointer + params,
-        never the bitset (Delta keeps bloom indexes out of the log
-        the same way). Point lookups then prune files that min/max
-        stats cannot discriminate: interleaved key domains overlap
-        every range but still miss most blooms.
-
-        Bit positions come from `_bloom_positions`. Sidecars are
-        built driver-side from each file's key column (files are
-        row-group sized); on a cluster you would emit them from the
-        write job itself."""
-        import pyarrow.parquet as pq
-
-        head = self.latest_version()
-        live, head_entry = self._live(head)
-        # DV records are never bloom-indexed; blooms over data files
-        # ignore DVs (a deleted key in the bloom is only a false
-        # positive — the lookup's row filter still excludes it)
-        live, _dvs = self._split_live(live)
-        # physical name: that's what the files and stats carry (and
-        # what the bloom record's `key` field stores — lookup()
-        # translates the head's logical key the same way)
-        key = _phys(head_entry, head_entry["key_cols"][0])
-        add = []
-        for rec in live:
-            # a pointer whose sidecar was swept (source-table vacuum
-            # under a shallow clone) counts as UN-indexed — rebuild it
-            # locally instead of skipping the rec forever
-            rec = self._strip_dead_bloom(rec)
-            if rec.get("bloom") or not rec.get("rows"):
-                continue
-            path = os.path.join(self.root, rec["path"])
-            col = pq.read_table(path, columns=[key]).column(key)
-            m = max(64, rec["rows"] * bits_per_row)
-            m += (-m) % 8
-            bits = bytearray(m // 8)
-            for v in col.to_pylist():
-                for pos in _bloom_positions(v, m, n_hashes):
-                    bits[pos // 8] |= 1 << (pos % 8)
-            # sidecars always land in THIS table's data dir (never
-            # derived from rec["path"], which is absolute into the
-            # source table for shallow-clone records); basenames are
-            # uuid-hex so the local name cannot collide
-            side = f"{_DATA}/{os.path.basename(rec['path'])}.bloom"
-            with open(os.path.join(self.root, side), "wb") as f:
-                f.write(bytes(bits))
-            add.append(
-                rec
-                | {
-                    "bloom": {
-                        "path": side,
-                        "m": m,
-                        "k": n_hashes,
-                        "key": key,
-                    }
-                }
-            )
-        if not add:
-            return head
-        # re-adding a path overwrites its record (same file, now with
-        # a bloom pointer); nothing is removed
-        return self._commit("bloom_index", add, [], expected_head=head)
-
-    def lookup(self, value) -> DataFrame:
-        """Point lookup `key == value` reading only files whose
-        stats AND bloom admit the key."""
-        live, head_entry = self._live()
-        data, dvs = self._split_live(live)
-        key = head_entry["key_cols"][0]
-        phys_key = _phys(head_entry, key)
-        schema = StructType.fromJson(json.loads(head_entry["schema"]))
-        paths = []
-        for rec in data:
-            st = (rec.get("stats") or {}).get(phys_key)
-            if st is not None and (value < st[0] or value > st[1]):
-                continue
-            bl = rec.get("bloom")
-            if bl and bl.get("key") != phys_key:
-                # a bloom built over a DIFFERENT physical column can
-                # neither admit nor exclude this key — treat as
-                # absent. Unreachable today (key columns refuse drop,
-                # rename preserves physical names), but a future
-                # key-evolution feature silently skipping files here
-                # would be a wrong-answer bug, not a perf bug.
-                bl = None
-            if bl:
-                # A sidecar can vanish under a live pointer in two
-                # legitimate ways: a vacuum racing a restore's
-                # dead-pointer strip, and a SOURCE-table vacuum
-                # sweeping a sidecar a shallow clone references (the
-                # documented clone caveat). An index that cannot be
-                # read must degrade to a scan of the file, never fail
-                # the query — Delta's bloom indexes behave the same.
-                try:
-                    with open(
-                        os.path.join(self.root, bl["path"]), "rb"
-                    ) as f:
-                        bits = f.read()
-                except OSError:
-                    bits = None
-                if bits is not None and len(bits) * 8 < bl["m"]:
-                    # A truncated sidecar is as unreadable as a
-                    # missing one: probing bit (h % m) past the end
-                    # of a short bitset raises IndexError MID-QUERY,
-                    # violating the same degrade-to-scan contract the
-                    # FileNotFoundError branch honors (r11 ADVICE).
-                    bits = None
-                if bits is not None and not all(
-                    bits[pos // 8] & (1 << (pos % 8))
-                    for pos in _bloom_positions(value, bl["m"], bl["k"])
-                ):
-                    continue
-            paths.append(rec["path"])
-        recs = [r for r in data if r["path"] in set(paths)]
-        df = self._scan_live(
-            recs, dvs, schema, mapping=_entry_mapping(head_entry)
-        )
-        return df.filter(F.col(key) == F.lit(value))
 
     def apply_changes(
         self,

@@ -322,11 +322,8 @@ class LakeStreamReader(_LogTail):
         # kind='dv' adds are deletion-vector datasets, not row data:
         # the append-only stream skips them (deletes don't stream —
         # the Delta source's ignoreDeletes posture; CDC consumers
-        # read batches written via mode="cdc" instead). bloom_index
-        # commits RE-ADD every live record purely to attach sidecar
-        # pointers — zero new rows, so emitting their adds would
-        # replay the whole table into the stream. delete_mor adds
-        # only a DV dataset, so a delete re-emits nothing; COW
+        # read batches written via mode="cdc" instead). delete_mor
+        # adds only a DV dataset, so a delete re-emits nothing; COW
         # rewrite commits (merge/apply_changes/compact/cluster) DO
         # re-emit their rewritten files — Delta's ignoreChanges
         # posture, documented: a maintenance rewrite mid-stream
@@ -341,7 +338,6 @@ class LakeStreamReader(_LogTail):
                 ident=_ident_tuple(self._ident, rec),
             )
             for e in entries
-            if e.get("operation") != "bloom_index"
             for rec in e.get("add", [])
             if rec.get("rows") and rec.get("kind") != "dv"
         ]

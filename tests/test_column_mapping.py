@@ -2,7 +2,7 @@
 metadata-only renames and drops with stable physical names — Delta's
 columnMapping design on the commit log. Verifies: no data file moves,
 time travel keeps per-version names, dropped bytes never resurrect,
-stats/bloom pruning track the physical identity, CDF and table_changes
+stats pruning tracks the physical identity, CDF and table_changes
 line up across renames, and the streaming source and an independent
 DuckDB read translate.
 """
@@ -15,7 +15,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from lcmap_firebird_spark.lakehouse import ConstraintViolation, LakeTable
+from lcmap_firebird_spark.lakehouse import LakeTable
 
 from .lake_helpers import duckdb_snapshot, stream_cdf
 
@@ -150,21 +150,6 @@ def test_ddl_validation(spark, table):
         table.drop_column("id")
     with pytest.raises(ValueError, match="no column"):
         table.drop_column("nope")
-    table.add_constraint("val_pos", "val >= 0")
-    with pytest.raises(ValueError, match="val_pos"):
-        table.rename_column("val", "value")
-    with pytest.raises(ValueError, match="val_pos"):
-        table.drop_column("val")
-    # un-constrained columns still rename under an active constraint
-    table.rename_column("name", "label")
-    # and the constraint keeps enforcing after unrelated renames
-    with pytest.raises(ConstraintViolation):
-        table.append(
-            spark.createDataFrame(
-                [(900, "bad", -1.0)],
-                "id long, label string, val double",
-            )
-        )
 
 
 def test_scan_pruning_and_lookup_after_rename(spark, table):
@@ -176,28 +161,6 @@ def test_scan_pruning_and_lookup_after_rename(spark, table):
     got = table.scan({"pk": (0, 10)})
     assert got.columns == ["pk", "name", "val"]
     assert got.count() == 11
-    # bloom sidecars key on the physical name; lookup translates
-    table.build_bloom_index()
-    assert _rows(table.lookup(17).select("pk")) == [(17,)]
-
-
-def test_bloom_built_before_rename_serves_after(spark, table):
-    """Sidecars built under the ORIGINAL name must keep serving after
-    a metadata-only rename: the stored key is the physical name,
-    which the rename never touches (r5-verdict interaction probe)."""
-    table.build_bloom_index()
-    table.rename_column("id", "pk")
-    assert _rows(table.lookup(23).select("pk")) == [(23,)]
-    # and a bloom whose stored key does NOT match the current
-    # physical key must be ignored (fail open to a stats-only scan),
-    # never used to skip files — simulate the mismatch directly
-    live, head = table._live()
-    recs = [dict(r) for r in live if r.get("bloom")]
-    assert recs, "expected bloom-carrying records"
-    for r in recs:
-        r["bloom"] = dict(r["bloom"]) | {"key": "some_future_key"}
-    table._commit("bloom_index", recs, [], expected_head=None)
-    assert _rows(table.lookup(23).select("pk")) == [(23,)]
 
 
 def test_checkpoint_carries_mapping(spark, table):

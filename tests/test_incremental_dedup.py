@@ -148,3 +148,61 @@ def test_incremental_equals_batch_random_splits(spark, docs, seed):
         got |= _pairs_set(I.incremental_pairs(corpus, store, b, threshold=THRESH))
         store = I.merge_batch(store, I.signature_table(b)).cache()
     assert got == oneshot, f"seed {seed} ({n_batches} batches) diverged"
+
+
+# near-duplicate recall as an asserted bound. A document of 272
+# distinct tokens has 270 3-shingles; replacing 10 tokens spaced 27
+# apart removes 30 of them and adds 30 new ones, so every planted
+# pair has shingle Jaccard exactly 240 / 300 = 0.8.
+N_PAIRS = 200
+_N_TOKENS = 272
+_SWAPS = range(5, 5 + 27 * 10, 27)
+
+
+def _near_copy_corpus(spark):
+    def doc(d, swapped):
+        return " ".join(
+            f"r{d}x{i}" if swapped and i in _SWAPS else f"t{d}x{i}"
+            for i in range(_N_TOKENS)
+        )
+
+    base = spark.createDataFrame(
+        [(d, doc(d, False)) for d in range(N_PAIRS)],
+        "doc_id long, text string",
+    )
+    batch = spark.createDataFrame(
+        [(N_PAIRS + d, doc(d, True)) for d in range(N_PAIRS)],
+        "doc_id long, text string",
+    )
+    return base, batch
+
+
+def test_near_duplicate_recall_bound(spark):
+    """At the defaults (16 permutations, 4 bands × 4 rows) a pair at
+    Jaccard s becomes a candidate with probability
+    p(s) = 1 − (1 − s⁴)⁴, which is ≈ 0.8785 at s = 0.8. Over
+    N_PAIRS independent planted pairs the found count is
+    Binomial(N_PAIRS, p): recall must reach p minus three binomial
+    standard deviations (≈ 0.069 at N_PAIRS = 200, so the bound is
+    ≈ 0.81). Halving the band count drops p to ≈ 0.65 and fails the
+    bound."""
+    import math
+
+    base, batch = _near_copy_corpus(spark)
+    store = I.signature_table(base)
+    corpus = base.unionByName(batch)
+    pairs = I.incremental_pairs(corpus, store, batch, threshold=0.5)
+    planted = {(d, N_PAIRS + d) for d in range(N_PAIRS)}
+    found = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in pairs.collect()
+        if (r["doc_a"], r["doc_b"]) in planted
+    }
+    assert set(found.values()) <= {0.8}
+    p = 1 - (1 - 0.8**4) ** 4
+    margin = 3 * math.sqrt(p * (1 - p) / N_PAIRS)
+    recall = len(found) / N_PAIRS
+    assert recall >= p - margin, (
+        f"near-dup recall {recall:.3f} below S-curve bound "
+        f"{p:.3f} - {margin:.3f}"
+    )

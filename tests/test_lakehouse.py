@@ -293,7 +293,8 @@ def test_clustered_append_and_pruned_scan(spark, tmp_path):
         spark, root, spark.createDataFrame([], "id long, val double"),
         key_cols=["id"],
     )
-    t.append_clustered(df)
+    t.append(df)
+    t.cluster()
     live = t._live()[0]
     assert len(live) > 1
     # clustered files: id ranges are non-overlapping (tight stats)
@@ -303,8 +304,8 @@ def test_clustered_append_and_pruned_scan(spark, tmp_path):
     # the log prunes most files for a narrow range...
     paths, total = t.pruned_paths({"id": (100, 120)})
     # a narrow range hits at most one data file per straddled
-    # boundary plus the stats-less empty create file
-    assert len(paths) < total and len(paths) <= 3
+    # boundary
+    assert len(paths) < total and len(paths) <= 2
     # ...and the scan is exactly the filtered snapshot
     got = _rows(t.scan({"id": (100, 120)}))
     want = _rows(t.snapshot().filter("id between 100 and 120"))
@@ -492,71 +493,6 @@ def test_concurrent_appends_with_vacuum_no_lost_data(spark, table):
     assert table.snapshot().filter("id < 20000").count() == 100
 
 
-def test_bloom_index_prunes_interleaved_files(spark, tmp_path):
-    """Even keys in one file, odd in another: min/max stats overlap
-    completely, so only the bloom sidecar can discriminate."""
-    root = str(tmp_path / "btbl")
-    evens = spark.createDataFrame(
-        [(i, "e") for i in range(0, 2000, 2)], "id long, tag string"
-    ).coalesce(1)
-    odds = spark.createDataFrame(
-        [(i, "o") for i in range(1, 2000, 2)], "id long, tag string"
-    ).coalesce(1)
-    t = LakeTable.create(spark, root, evens, key_cols=["id"])
-    t.append(odds)
-    v = t.build_bloom_index()
-    assert t.history()[-1]["operation"] == "bloom_index"
-    # every data file now carries a bloom pointer
-    assert all(r.get("bloom") for r in t._live()[0] if r["rows"])
-    # lookup(42): stats cannot prune (both files span [~0, ~1999]),
-    # bloom must cut the odd file out
-    live = t._live()[0]
-
-    def admitted(val):
-        import hashlib
-
-        d = hashlib.md5(str(val).encode()).digest()
-        h1 = int.from_bytes(d[:8], "big")
-        h2 = int.from_bytes(d[8:], "big") | 1
-        n = 0
-        for rec in live:
-            bl = rec["bloom"]
-            bits = open(os.path.join(root, bl["path"]), "rb").read()
-            m, k = bl["m"], bl["k"]
-            if all(
-                bits[((h1 + i * h2) % m) // 8]
-                & (1 << (((h1 + i * h2) % m) % 8))
-                for i in range(k)
-            ):
-                n += 1
-        return n
-
-    assert admitted(42) == 1  # the even file only
-    got = t.lookup(42).collect()
-    assert [(r.id, r.tag) for r in got] == [(42, "e")]
-    assert t.lookup(43).first().tag == "o"
-    # absent key: no file admits it (w.h.p.), empty result
-    assert t.lookup(999_999).count() == 0
-    # idempotent: second build is a no-op commit-wise
-    assert t.build_bloom_index() == v
-
-
-def test_vacuum_keeps_live_bloom_sidecars(spark, tmp_path):
-    root = str(tmp_path / "vtbl")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, "a")], "id long, tag string").coalesce(1),
-        key_cols=["id"],
-    )
-    t.build_bloom_index()
-    # churn a version so vacuum has something to consider
-    t.append(spark.createDataFrame([(2, "b")], "id long, tag string"))
-    t.vacuum(keep_last=1, retention_seconds=0)
-    # the live file's sidecar survived and lookup still works
-    assert t.lookup(1).first().tag == "a"
-
-
 def _dv_recs(table):
     return [r for r in table._live()[0] if r.get("kind") == "dv"]
 
@@ -717,9 +653,6 @@ def test_delete_mor_datasource_and_lookup_and_scan(spark, table):
     assert len(ds) == 80
     assert not [r for r in ds if r[0] % 5 == 0]
     assert ds == sorted(map(tuple, table.snapshot().collect()), key=repr)
-    # point lookup of a deleted key finds nothing
-    assert table.lookup(10).count() == 0
-    assert table.lookup(11).count() == 1
     # stats-pruned scan applies the DV too
     got = table.scan({"id": (0, 20)})
     assert got.filter("id % 5 = 0").count() == 0
@@ -1356,6 +1289,11 @@ def test_delete_null_predicate_rows_survive(spark, tmp_path):
     )
     t.delete_mor("val > 5")
     assert _rows(t.snapshot()) == [(1, None), (3, 2.0)]
+    # a trailing `--` comment in the predicate is fine: it cannot
+    # swallow anything the delete composes around it
+    t.append(spark.createDataFrame([(4, 9.0)], "id long, val double"))
+    t.delete_mor("val > 5 -- drop the big one")
+    assert _rows(t.snapshot()) == [(1, None), (3, 2.0)]
 
 
 def test_cdf_and_table_changes_span_schema_evolution(spark, tmp_path):
@@ -1436,715 +1374,6 @@ def test_describe_detail_metadata_only(spark, table):
     assert all(e["ts"] is not None for e in h)
 
 
-def test_check_constraints_enforced_on_commits(spark, tmp_path):
-    from lcmap_firebird_spark.lakehouse import ConstraintViolation
-
-    root = str(tmp_path / "contbl")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame(
-            [(1, 5.0), (2, None)], "id long, val double"
-        ),
-        key_cols=["id"],
-        constraints={"val_pos": "val > 0"},  # NULL passes (SQL CHECK)
-    )
-    v = t.latest_version()
-    # violating append: rejected atomically, nothing committed,
-    # staged files reclaimed
-    with pytest.raises(ConstraintViolation):
-        t.append(spark.createDataFrame([(3, -1.0)], "id long, val double"))
-    assert t.latest_version() == v
-    assert t.snapshot().count() == 2
-    data_files = {r["path"] for r in t._live()[0]}
-    on_disk = {
-        "data/" + f for f in os.listdir(os.path.join(root, "data"))
-    }
-    assert on_disk == data_files
-    # valid append (incl. NULL) lands
-    t.append(
-        spark.createDataFrame([(3, 3.0), (4, None)], "id long, val double")
-    )
-    assert t.snapshot().count() == 4
-    # merge with a violating source is rejected too
-    with pytest.raises(ConstraintViolation):
-        t.merge(spark.createDataFrame([(1, -9.0)], "id long, val double"))
-    assert {r["id"]: r["val"] for r in t.snapshot().collect()}[1] == 5.0
-
-
-def test_add_drop_constraint_lifecycle(spark, tmp_path):
-    from lcmap_firebird_spark.lakehouse import ConstraintViolation
-
-    root = str(tmp_path / "contbl2")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, 5.0), (2, -2.0)], "id long, val double"),
-        key_cols=["id"],
-    )
-    # existing rows violate: constraint refused, no commit
-    v = t.latest_version()
-    with pytest.raises(ConstraintViolation):
-        t.add_constraint("val_pos", "val > 0")
-    assert t.latest_version() == v
-    t.delete_mor("val <= 0")
-    t.add_constraint("val_pos", "val > 0")
-    with pytest.raises(ValueError):
-        t.add_constraint("val_pos", "val > 1")  # duplicate name
-    with pytest.raises(ConstraintViolation):
-        t.append(spark.createDataFrame([(7, 0.0)], "id long, val double"))
-    # constraints survive a log checkpoint (compacted replay path)
-    t.checkpoint_log()
-    with pytest.raises(ConstraintViolation):
-        t.append(spark.createDataFrame([(8, -1.0)], "id long, val double"))
-    t.drop_constraint("val_pos")
-    t.append(spark.createDataFrame([(9, -3.0)], "id long, val double"))
-    assert t.snapshot().filter("val < 0").count() == 1
-    with pytest.raises(ValueError):
-        t.drop_constraint("nope")
-
-
-def test_append_retry_revalidates_new_constraint(spark, tmp_path):
-    """An append that stages (and validates) under the old head,
-    then loses the O_EXCL race to a concurrent add_constraint, must
-    re-validate against the NEW constraint set before landing."""
-    from lcmap_firebird_spark.lakehouse import (
-        ConstraintViolation,
-        _entry_path,
-    )
-
-    root = str(tmp_path / "racetbl")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, 5.0)], "id long, val double"),
-        key_cols=["id"],
-    )
-    # stage a batch that is valid now but violates the constraint a
-    # concurrent writer is about to add
-    add = t._stage_files(
-        spark.createDataFrame([(2, -7.0)], "id long, val double")
-    )
-    t.add_constraint("val_pos", "val > 0")  # lands first
-    with pytest.raises(ConstraintViolation):
-        t._commit("append", add, [], expected_head=None)
-    assert t.snapshot().count() == 1
-    # the losing append's staged files were reclaimed
-    live = {r["path"] for r in t._live()[0]}
-    assert all(r["path"] not in live for r in add)
-    assert not any(
-        os.path.exists(os.path.join(root, r["path"])) for r in add
-    )
-
-
-def test_constraint_on_added_column_nullfills(spark, tmp_path):
-    """A constraint on a column added by schema evolution passes as
-    NULL for writers still staging the pre-evolution shape (the
-    validator scans under the TABLE schema, not file inference)."""
-    root = str(tmp_path / "evtbl")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, 1.0)], "id long, val double"),
-        key_cols=["id"],
-    )
-    t.add_column("score", "double")
-    t.add_constraint("score_pos", "score > 0")
-    t.append(spark.createDataFrame([(2, 2.0)], "id long, val double"))
-    assert t.snapshot().count() == 2
-    from lcmap_firebird_spark.lakehouse import ConstraintViolation
-
-    with pytest.raises(ConstraintViolation):
-        t.append(
-            spark.createDataFrame(
-                [(3, 3.0, -1.0)], "id long, val double, score double"
-            )
-        )
-
-
-def test_constraint_violation_reclaims_cdf_and_create_root(spark, tmp_path):
-    from lcmap_firebird_spark.lakehouse import ConstraintViolation
-
-    # create-time violation leaves a reusable root
-    root = str(tmp_path / "ctbl")
-    with pytest.raises(ConstraintViolation):
-        LakeTable.create(
-            spark,
-            root,
-            spark.createDataFrame([(1, -1.0)], "id long, val double"),
-            key_cols=["id"],
-            constraints={"val_pos": "val > 0"},
-        )
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, 1.0)], "id long, val double"),
-        key_cols=["id"],
-        constraints={"val_pos": "val > 0"},
-        enable_cdf=True,
-    )
-    assert t.snapshot().count() == 1
-    # a violating merge on a CDF table orphans no change files
-    with pytest.raises(ConstraintViolation):
-        t.merge(spark.createDataFrame([(1, -5.0)], "id long, val double"))
-    leftovers = [
-        f
-        for f in os.listdir(os.path.join(root, "data"))
-        if f.endswith(".cdf.parquet")
-    ]
-    referenced = [
-        p
-        for e in t._entries()
-        if e.get("cdf")
-        for p in e["cdf"]["paths"]
-    ]
-    assert len(leftovers) == len(referenced)
-
-
-def test_restore_restores_constraint_set(spark, tmp_path):
-    """Restoring past an add_constraint resurrects rows validated
-    under the OLD set — the restore carries that set back so the
-    table never lives in violation of its own constraints."""
-    from lcmap_firebird_spark.lakehouse import ConstraintViolation
-
-    root = str(tmp_path / "rtbl")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, 5.0), (2, -2.0)], "id long, val double"),
-        key_cols=["id"],
-    )
-    v1 = t.latest_version()
-    t.delete_mor("val <= 0")
-    t.add_constraint("val_pos", "val > 0")
-    with pytest.raises(ConstraintViolation):
-        t.append(spark.createDataFrame([(3, -3.0)], "id long, val double"))
-    t.restore(v1)
-    # the resurrected negative row is back AND the constraint set is
-    # the one it was validated under (none) — appends are free again
-    assert t.snapshot().filter("val < 0").count() == 1
-    t.append(spark.createDataFrame([(4, -4.0)], "id long, val double"))
-    assert t.snapshot().count() == 3  # v1's two rows + the append
-
-
-def test_restore_rebinds_constraints_by_physical_identity(spark, tmp_path):
-    """r10 fix (found by reading the restore/rename/constraint seam):
-    restore keeps the NEWER schema but resurrects the TARGET
-    version's constraint TEXT — stored over the target's logical
-    names. Before the fix, a shadowing rename (another column taking
-    the constrained name after the constraint was dropped) made the
-    restored text silently bind to the WRONG column (a violating
-    append LANDED), and restoring past a drop of the referenced
-    column poisoned every later append with UNRESOLVED_COLUMN.
-    Now: referenced names re-bind by physical identity
-    (val -> its current name), and a gone column refuses the restore
-    loudly."""
-    from lcmap_firebird_spark.lakehouse import ConstraintViolation
-
-    root = str(tmp_path / "rebind")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame(
-            [(1, 5.0, 1.0)], "id long, other double, val double"
-        ),
-        key_cols=["id"],
-    )
-    t.add_constraint("val_floor", "val > -100")
-    v_cons = t.latest_version()
-    t.drop_constraint("val_floor")
-    t.rename_column("val", "v2")
-    t.rename_column("other", "val")  # shadow: logical 'val' is now OTHER
-    t.restore(v_cons)
-    cons = t._live()[1].get("constraints")
-    assert cons == {"val_floor": "v2 > -100"}, cons
-    # the truly constrained physical column (now v2) is enforced ...
-    with pytest.raises(ConstraintViolation):
-        t.append(
-            spark.createDataFrame(
-                [(3, 7.0, -500.0)], "id long, val double, v2 double"
-            )
-        )
-    # ... and the shadow column is NOT (it was never the constrained one)
-    t.append(
-        spark.createDataFrame(
-            [(4, -500.0, 4.0)], "id long, val double, v2 double"
-        )
-    )
-    assert t.snapshot().filter("id = 4").count() == 1
-
-
-def test_rebind_constraints_swap_rename_unit():
-    """_rebind_constraints is a pure metadata function — unit-test the
-    SIMULTANEOUS substitution on a swap-rename (val<->other via a temp
-    name): sequential replacement would corrupt 'val > other' into a
-    self-comparison; the single-pass alternation must produce the
-    swapped text, each name following its physical column."""
-    import json as _json
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    def entry(fields, mapping, cons):
-        return {
-            "schema": StructType(
-                [StructField(f, DoubleType()) for f in fields]
-            ).json(),
-            "column_mapping": mapping,
-            "constraints": cons,
-        }
-
-    # old: logical val=phys val, other=phys other; constraint text
-    # over old names. current: swapped — logical 'other' is phys val,
-    # logical 'val' is phys other.
-    old = entry(["val", "other"], {}, {"c": "val > other"})
-    cur = entry(["val", "other"], {"other": "val", "val": "other"}, {})
-    t = LakeTable.__new__(LakeTable)
-    got = t._rebind_constraints(old, cur, 1)
-    assert got == {"c": "other > val"}, got
-    # word-boundary: a name appearing as a substring stays untouched
-    old2 = entry(["val"], {}, {"c": "val2(val) AND val_x > val"})
-    cur2 = entry(["v9"], {"v9": "val"}, {})
-    got2 = t._rebind_constraints(old2, cur2, 1)
-    assert got2 == {"c": "val2(v9) AND val_x > v9"}, got2
-    # no constraints -> empty, no schema parse
-    assert t._rebind_constraints({"constraints": {}}, cur2, 1) == {}
-
-
-def test_restore_refuses_when_constrained_column_dropped(spark, tmp_path):
-    """The other half of the r10 rebind fix: a restore whose
-    resurrected constraint references a since-DROPPED physical column
-    refuses loudly (ValueError naming the constraint) instead of
-    committing text that can never bind — before the fix the table
-    was poisoned: every later row-introducing commit died with
-    UNRESOLVED_COLUMN until a manual drop_constraint."""
-    root = str(tmp_path / "rgone")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, "a", 1.0)], "id long, name string, val double"),
-        key_cols=["id"],
-    )
-    t.add_constraint("val_floor", "val > -100")
-    v_cons = t.latest_version()
-    t.drop_constraint("val_floor")
-    t.drop_column("val")
-    v_head = t.latest_version()
-    with pytest.raises(ValueError, match="val_floor"):
-        t.restore(v_cons)
-    # refusal consumed no version and the table stays writable
-    assert t.latest_version() == v_head
-    t.append(spark.createDataFrame([(3, "c")], "id long, name string"))
-    assert t.snapshot().count() == 2
-
-
-def test_rebind_constraints_literal_case_backtick_unit():
-    """r11 hardening of the r10 rebind fix (same stored-text class):
-    (a) a column name inside a QUOTED STRING LITERAL is data, not a
-    reference — a rename crossing `tag != 'val'` must not rewrite
-    the literal, and a dropped column mentioned only in a literal
-    must not refuse the restore; (b) Spark resolves identifiers
-    case-insensitively, so 'VAL > -100' references val and must
-    follow its rename (before: the mixed-case text escaped both the
-    rewrite and the dropped-column refusal); (c) backtick-quoted
-    identifiers are references and rewrite with backticks kept."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    def entry(fields, mapping, cons):
-        return {
-            "schema": StructType(
-                [StructField(f, DoubleType()) for f in fields]
-            ).json(),
-            "column_mapping": mapping,
-            "constraints": cons,
-        }
-
-    t = LakeTable.__new__(LakeTable)
-    ren = entry(["v2", "tag"], {"v2": "val"}, {})  # val renamed to v2
-
-    # (a) literals survive the rewrite — single, double, escaped quote
-    old = entry(
-        ["val", "tag"],
-        {},
-        {
-            "c1": "val > 0 AND tag != 'val'",
-            "c2": 'val > 0 AND tag != "val"',
-            "c3": "val > 0 AND tag != 'it''s val'",
-        },
-    )
-    got = t._rebind_constraints(old, ren, 1)
-    assert got == {
-        "c1": "v2 > 0 AND tag != 'val'",
-        "c2": 'v2 > 0 AND tag != "val"',
-        "c3": "v2 > 0 AND tag != 'it''s val'",
-    }, got
-
-    # (a') dropped column mentioned ONLY inside a literal: no refusal,
-    # text carried verbatim (before: false ValueError)
-    old_lit = entry(["gone", "tag"], {}, {"c": "tag != 'gone'"})
-    cur_dropped = entry(["tag"], {}, {})
-    assert t._rebind_constraints(old_lit, cur_dropped, 1) == {
-        "c": "tag != 'gone'"
-    }
-
-    # (b) mixed-case reference follows the rename ...
-    old_case = entry(["val", "tag"], {}, {"c": "VAL > -100"})
-    assert t._rebind_constraints(old_case, ren, 1) == {"c": "v2 > -100"}
-    # ... and mixed-case reference to a dropped column refuses loudly
-    old_case2 = entry(["gone", "tag"], {}, {"c": "GONE > 0"})
-    with pytest.raises(ValueError, match="'gone'"):
-        t._rebind_constraints(old_case2, cur_dropped, 1)
-
-    # (c) backtick-quoted identifier rewrites, backticks preserved
-    old_bt = entry(["val", "tag"], {}, {"c": "`val` > 0"})
-    assert t._rebind_constraints(old_bt, ren, 1) == {"c": "`v2` > 0"}
-
-
-def test_sql_segments_tokenizer_unit():
-    """The r11 tokenizer behind _expr_references/_expr_rewrite_refs:
-    segments must reassemble to the input EXACTLY for any string
-    (hypothesis sweep over a quote-heavy alphabet — a lost or
-    duplicated character would corrupt constraint text), and the
-    span classification must handle the escape edge cases: doubled
-    quotes, backslash escapes, trailing backslash, unterminated
-    literals (conservatively swallowed to end-of-string: never
-    misread as code)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from lcmap_firebird_spark.lakehouse import (
-        _expr_references,
-        _expr_rewrite_refs,
-        _sql_segments,
-        _strip_sql_comments,
-    )
-
-    @given(st.text(alphabet="ab'\"`\\ ()_,x-/*\n", max_size=40))
-    @settings(max_examples=300, deadline=None)
-    def roundtrip(s):
-        segs = _sql_segments(s)
-        assert "".join(t for _, t in segs) == s
-        for kind, t in segs:
-            assert kind in ("code", "str", "ident", "comment")
-            if kind == "str":
-                assert t[0] in ("'", '"')
-            if kind == "ident":
-                assert t[0] == "`"
-            if kind == "comment":
-                assert t.startswith("--") or t.startswith("/*")
-            if kind == "code":
-                # a comment opener must never survive inside code
-                assert "--" not in t and "/*" not in t
-        # storage normalization: output is comment-free and stable
-        stripped = _strip_sql_comments(s)
-        assert all(k != "comment" for k, _ in _sql_segments(stripped))
-        assert _strip_sql_comments(stripped) == stripped
-
-    roundtrip()
-
-    # escape edges
-    assert _sql_segments("a = 'it''s'") == [
-        ("code", "a = "), ("str", "'it''s'")
-    ]
-    assert _sql_segments(r"a = 'x\'y'") == [
-        ("code", "a = "), ("str", r"'x\'y'")
-    ]
-    assert _sql_segments("`a``b` > 0") == [
-        ("ident", "`a``b`"), ("code", " > 0")
-    ]
-    # unterminated literal swallows to EOS (never misread as code)
-    assert _sql_segments("a = 'oops") == [("code", "a = "), ("str", "'oops")]
-    # trailing backslash inside a literal must not read past the end
-    assert _sql_segments("a = 'x\\")[-1][0] == "str"
-
-    # reference semantics on the edges
-    assert _expr_references("`a``b` > 0", "a`b")
-    assert not _expr_references("c = 'a' || \"b\"", "a")
-    assert _expr_references("A > 0 AND c = 'a'", "a")
-    assert _expr_rewrite_refs("`a``b` > 0 AND t != 'a`b'", {"a`b": "q"}) == (
-        "`q` > 0 AND t != 'a`b'"
-    )
-    # swap-rename stays simultaneous under mixed case
-    assert _expr_rewrite_refs("VAL > Other", {"val": "other", "other": "val"}) == (
-        "other > val"
-    )
-
-    # r12: SQL comments are their own segment kind — neither a
-    # reference nor a rewrite target (Spark's lexer strips them, so
-    # stored constraint text may legally carry them)
-    assert _sql_segments("val > 0 -- val note") == [
-        ("code", "val > 0 "), ("comment", "-- val note")
-    ]
-    assert _sql_segments("a /* val */ > 0\n-- b\n") == [
-        ("code", "a "), ("comment", "/* val */"), ("code", " > 0\n"),
-        ("comment", "-- b\n"),
-    ]
-    # nested bracketed comment, matching Spark's lexer
-    assert _sql_segments("/* a /* b */ c */x")[-1] == ("code", "x")
-    # unterminated block comment swallows to EOS (never read as code)
-    assert _sql_segments("a /* oops")[-1][0] == "comment"
-    # a comment opener inside a string literal stays literal
-    assert _sql_segments("tag != '--'") == [
-        ("code", "tag != "), ("str", "'--'")
-    ]
-    # SQL reads 5--3 as '5' then a comment — so do we
-    assert _sql_segments("5--3") == [("code", "5"), ("comment", "--3")]
-    assert not _expr_references("val > 0 -- tag here", "tag")
-    assert not _expr_references("val /* tag */ > 0", "tag")
-    assert _expr_rewrite_refs(
-        "val > 0 -- val stays prose", {"val": "v2"}
-    ) == "v2 > 0 -- val stays prose"
-
-    # r12 (r11 ADVICE): a bare word followed by '(' is a FUNCTION
-    # CALL, never a column reference — renaming column 'abs' must
-    # not rewrite the abs() call in an unrelated constraint...
-    assert _expr_rewrite_refs(
-        "abs(val) > 0 AND abs > 1 AND abs (x) > 0", {"abs": "mag"}
-    ) == "abs(val) > 0 AND mag > 1 AND abs (x) > 0"
-    # ...while the refusal-only guard keeps the conservative
-    # over-match (false refusal is loud and safe)
-    assert _expr_references("abs(val) > 0", "abs")
-
-
-def test_restore_rebind_preserves_literal_integration(spark, tmp_path):
-    """End-to-end dual of the unit case: constraint
-    'val > 0 AND tag != ''val''' crosses a val->v2 rename via
-    restore. The LITERAL must still say 'val' afterwards — rows
-    tagged 'val' violate, rows tagged 'v2' pass. A buggy rewrite
-    into the literal would invert both outcomes."""
-    from lcmap_firebird_spark.lakehouse import ConstraintViolation
-
-    root = str(tmp_path / "rlit")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, "ok", 1.0)], "id long, tag string, val double"),
-        key_cols=["id"],
-    )
-    t.add_constraint("c", "val > 0 AND tag != 'val'")
-    v_cons = t.latest_version()
-    t.drop_constraint("c")
-    t.rename_column("val", "v2")
-    t.restore(v_cons)
-    assert t._live()[1]["constraints"] == {"c": "v2 > 0 AND tag != 'val'"}
-    t.append(
-        spark.createDataFrame([(2, "v2", 2.0)], "id long, tag string, v2 double")
-    )
-    with pytest.raises(ConstraintViolation):
-        t.append(
-            spark.createDataFrame(
-                [(3, "val", 3.0)], "id long, tag string, v2 double"
-            )
-        )
-    assert t.snapshot().count() == 2
-
-
-def test_check_constraint_refs_literal_and_case(spark, tmp_path):
-    """_check_constraint_refs (rename/drop guard) shares the r11
-    hardening: a name appearing only inside a string literal no
-    longer blocks the rename (false positive), while a MIXED-CASE
-    reference now does (before: 'VAL > -100' escaped the guard and
-    the stale text poisoned later commits). Same for the identity
-    guards at create/add_constraint time."""
-    root = str(tmp_path / "refs")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame(
-            [(1, "ok", 1.0)], "id long, tag string, val double"
-        ),
-        key_cols=["id"],
-    )
-    t.add_constraint("lit_only", "tag != 'val'")
-    t.rename_column("val", "v2")  # allowed: 'val' is only a literal
-    assert "v2" in t.snapshot().columns
-    t.add_constraint("cfloor", "V2 > -100")  # mixed-case reference
-    with pytest.raises(ValueError, match="cfloor"):
-        t.rename_column("v2", "v3")
-    with pytest.raises(ValueError, match="cfloor"):
-        t.drop_column("v2")
-
-    # identity guards: literal mention allowed, mixed-case refused
-    root2 = str(tmp_path / "refs_ident")
-    t2 = LakeTable.create(
-        spark,
-        root2,
-        spark.createDataFrame([(1, "x")], "id long, note string"),
-        key_cols=["id"],
-        identity="rid",
-        constraints={"lit": "note != 'rid'"},  # literal: fine
-    )
-    with pytest.raises(ValueError, match="identity"):
-        t2.add_constraint("bad", "RID > 0")
-
-
-def test_restore_strips_vacuumed_bloom_pointer(spark, tmp_path):
-    """r11 find (bloom sidecar x vacuum x restore matrix, the r10
-    restore-bug class): a file can stay vacuum-protected through a
-    PRE-bloom version while no protected version references its
-    SIDECAR — the sidecar is legitimately swept. A later restore to
-    the bloom-indexed version then resurrected the rec verbatim,
-    pointer included: lookup() on a key in that file died with
-    FileNotFoundError, and build_bloom_index could not repair (it
-    skipped recs that already carry a pointer). Now: restore strips
-    pointers whose sidecar is gone (blooms are rebuildable indexes,
-    not data), lookup() degrades a missing sidecar to a scan, and
-    build_bloom_index re-indexes stripped recs."""
-    root = str(tmp_path / "bloomres")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string"),
-        key_cols=["id"],
-    )
-    v1 = t.latest_version()
-    t.build_bloom_index()
-    v2 = t.latest_version()
-    t.delete_mor("id = 1")
-    t.compact()          # the indexed files leave live
-    t.restore(v1)        # back WITHOUT its pointer (v1's rec)
-    t.delete_mor("id >= 1")
-    t.compact()          # everything leaves live again
-    removed = t.vacuum(keep_last=2, retention_seconds=0)
-    assert any(p.endswith(".bloom") for p in removed), removed
-    t.restore(v2)  # pre-fix: resurrected the dangling pointer
-    live, _ = t._live()
-    for rec in live:
-        bl = rec.get("bloom")
-        if bl:
-            assert os.path.exists(os.path.join(root, bl["path"])), (
-                "restore resurrected a pointer to a swept sidecar"
-            )
-    # the lookup that crashed pre-fix
-    assert [r["id"] for r in t.lookup(1).collect()] == [1]
-    # and the stripped rec is re-indexable again
-    t.build_bloom_index()
-    live, _ = t._live()
-    rows_recs = [r for r in live if r.get("rows")]
-    assert rows_recs and all(r.get("bloom") for r in rows_recs)
-    assert all(
-        os.path.exists(os.path.join(root, r["bloom"]["path"]))
-        for r in rows_recs
-    )
-    assert [r["id"] for r in t.lookup(1).collect()] == [1]
-
-
-def test_lookup_degrades_missing_sidecar_to_scan(spark, tmp_path):
-    """lookup() with a pointer whose sidecar vanished (vacuum racing
-    the restore-time strip; source-table vacuum under a shallow
-    clone) must scan the file, not fail the query — an INDEX that
-    cannot be read degrades, same as Delta's bloom indexes."""
-    root = str(tmp_path / "bloomgone")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string"),
-        key_cols=["id"],
-    )
-    t.build_bloom_index()
-    live, _ = t._live()
-    for rec in live:
-        if rec.get("bloom"):
-            os.remove(os.path.join(root, rec["bloom"]["path"]))
-    assert sorted(r["id"] for r in t.lookup(1).collect()) == [1]
-    assert sorted(r["id"] for r in t.lookup(2).collect()) == [2]
-
-
-def test_lookup_degrades_truncated_sidecar_to_scan(spark, tmp_path):
-    """r12 (r11 ADVICE): a TRUNCATED sidecar is as unreadable as a
-    missing one — the old code caught only FileNotFoundError, so a
-    short bitset raised IndexError mid-probe, violating the
-    'an index that cannot be read degrades to a scan, never fails
-    the query' contract the missing-sidecar branch honors."""
-    root = str(tmp_path / "bloomshort")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame(
-            [(i, f"n{i}") for i in range(64)], "id long, name string"
-        ),
-        key_cols=["id"],
-    )
-    t.build_bloom_index()
-    live, _ = t._live()
-    n_trunc = 0
-    for rec in live:
-        if rec.get("bloom"):
-            with open(os.path.join(root, rec["bloom"]["path"]), "wb") as f:
-                f.write(b"\x00")  # 8 bits << m: every probe would IndexError
-            n_trunc += 1
-    assert n_trunc > 0
-    assert sorted(r["id"] for r in t.lookup(1).collect()) == [1]
-    assert sorted(r["id"] for r in t.lookup(63).collect()) == [63]
-
-
-def test_constraint_comments_normalized_at_storage(spark, tmp_path):
-    """r12 (r11 VERDICT watch item #2): SQL comments in expression
-    text are ACCEPTED at every storage boundary (Spark's parser takes
-    them) but normalized away before storage — stored text is later
-    re-embedded in composed SQL (`NOT coalesce((expr), true)`) where
-    a `--` line comment would swallow the wrapper's tail and flip the
-    check's meaning. So: (a) a commented constraint validates and
-    ENFORCES, (b) the stored text is comment-free and crosses a
-    rename-restore rebind correctly, (c) a column mentioned only in a
-    comment never blocks its rename, (d) create-time constraints and
-    generated expressions get the same normalization, (e) delete()
-    takes a commented predicate without swallowing its keep-side
-    wrapper."""
-    from lcmap_firebird_spark.lakehouse import ConstraintViolation
-
-    root = str(tmp_path / "ccomm")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame(
-            [(1, "ok", 1.0)], "id long, tag string, val double"
-        ),
-        key_cols=["id"],
-    )
-    t.add_constraint("c", "val > 0 -- val must stay positive")
-    assert t._live()[1]["constraints"] == {"c": "val > 0"}
-    with pytest.raises(ConstraintViolation):
-        t.append(
-            spark.createDataFrame(
-                [(2, "bad", -1.0)], "id long, tag string, val double"
-            )
-        )
-    v_cons = t.latest_version()
-    t.drop_constraint("c")
-    t.rename_column("val", "v2")
-    t.restore(v_cons)
-    assert t._live()[1]["constraints"] == {"c": "v2 > 0"}
-    # comment-only mention must never block a rename
-    t.drop_constraint("c")
-    t.add_constraint("c2", "v2 > 0 /* tag is prose */")
-    t.rename_column("tag", "label")
-    assert "label" in t.snapshot().columns
-
-    # create-time normalization: constraints AND generated columns
-    root2 = str(tmp_path / "ccomm2")
-    t2 = LakeTable.create(
-        spark,
-        root2,
-        spark.createDataFrame([(1, 4.0)], "id long, val double"),
-        key_cols=["id"],
-        constraints={"pos": "val > 0 -- floor"},
-        generated={"dbl": "val * 2 /* derived */"},
-    )
-    head2 = t2._live()[1]
-    assert head2["constraints"] == {"pos": "val > 0"}
-    assert head2["generated"] == {"dbl": "val * 2"}
-    assert t2.snapshot().collect()[0]["dbl"] == 8.0
-    # enforcement still bites post-normalization (the composed
-    # wrapper parses)
-    with pytest.raises(ConstraintViolation):
-        t2.append(spark.createDataFrame([(2, -1.0)], "id long, val double"))
-
-    # a trailing comment in a delete predicate is fine
-    t2.append(spark.createDataFrame([(3, 9.0)], "id long, val double"))
-    t2.delete_mor("val > 5 -- drop the big one")
-    assert sorted(r["id"] for r in t2.snapshot().collect()) == [1]
-
-
 def test_append_conforms_to_table_schema(spark, table):
     # unknown column: rejected up front, not committed as a file
     # readers would silently null-fill away
@@ -2165,51 +1394,6 @@ def test_append_conforms_to_table_schema(spark, table):
     got = table.snapshot().filter("id = 701").collect()
     assert got[0]["val"] == 2.5
     assert dict(table.snapshot().dtypes)["val"] == "double"
-
-
-def test_bloom_index_commit_does_not_reemit_stream(spark, tmp_path):
-    """build_bloom_index re-adds every live record to attach sidecar
-    pointers (zero new rows) — the plain streaming source must not
-    replay the table because of it."""
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    try:
-        spark.dataSource.register(LakeDataSource)
-    except Exception:
-        pass
-    root = str(tmp_path / "btbl")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame(
-            [(i, float(i)) for i in range(50)], "k long, v double"
-        ),
-        key_cols=["k"],
-    )
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    def drain():
-        q = (
-            spark.readStream.format("lake")
-            .option("path", root)
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return (
-            spark.read.schema("k long, v double").parquet(out).count()
-        )
-
-    assert drain() == 50
-    t.build_bloom_index()
-    t.append(spark.createDataFrame([(100, 1.0)], "k long, v double"))
-    # resumed stream delivers ONLY the appended row, not a replay
-    assert drain() == 51
 
 
 def test_table_changes_with_duplicate_keys_multiset_diff(spark, tmp_path):
@@ -2368,12 +1552,11 @@ def test_incremental_cluster(spark, tmp_path):
     paths, total = t.pruned_paths({"id": (1000, 1009)})
     assert 0 < len(paths) < total
     assert t.scan({"id": (1000, 1009)}).count() == 10
-    # append_clustered stamps its records too -> still no-op after
-    t.append_clustered(
-        spark.createDataFrame([(2000, 2.0)], "id long, val double"),
-        ["id"],
-    )
-    assert t.cluster(["id"], incremental=True) == t.latest_version()
+    # one incremental pass stamps a fresh append -> no-op again after
+    t.append(spark.createDataFrame([(2000, 2.0)], "id long, val double"))
+    v2 = t.cluster(["id"], incremental=True)
+    assert v2 > v
+    assert t.cluster(["id"], incremental=True) == v2
     # MOR deletes on an unstamped append materialize incrementally
     t.append(spark.createDataFrame([(3000, 3.0), (3001, 3.0)],
                                    "id long, val double"))
@@ -2443,3 +1626,56 @@ def test_clone_inherits_cdf_and_streams_changes(spark, tmp_path):
     assert snap == [(3, "v3"), (4, "v4"), (5, "v5"), (6, "v6"), (99, "new")]
     # mutating the clone never wrote a change file into the source
     assert t.read_cdf(1).filter(F.col("id") == 99).count() == 0
+
+
+def test_stats_cols_prune_from_birth(spark, tmp_path):
+    """A declared stats column lands in every commit's per-file
+    stats: file pruning on it works without any retroactive
+    cluster() pass."""
+    base = spark.createDataFrame(
+        [(i, float(i), i // 10) for i in range(100)],
+        "id long, val double, bucket int",
+    ).repartition(4, "id")
+    t = LakeTable.create(
+        spark, str(tmp_path / "sc"), base, key_cols=["id"],
+        stats_cols=["bucket"],
+    )
+    # files were written partitioned by id, so bucket ranges per file
+    # are real; every commit records bucket stats
+    live = [r for r in t._live()[0] if r.get("kind") != "dv"]
+    assert all("bucket" in (r.get("stats") or {}) for r in live)
+    paths, total = t.pruned_paths({"bucket": (0, 0)})
+    assert 0 < len(paths) <= total
+    got = t.scan({"bucket": (2, 2)})
+    assert got.count() == 10
+    assert _rows(got.select("id")) == [(i,) for i in range(20, 30)]
+
+
+def test_stats_cols_survive_checkpoint_and_writer(spark, tmp_path):
+    """Table-level stats columns flow through checkpoints, into the
+    per-file stats of a later append, and through a clone."""
+    base = spark.createDataFrame(
+        [(i, float(i % 7)) for i in range(50)], "id long, score double"
+    )
+    t = LakeTable.create(
+        spark,
+        str(tmp_path / "st"),
+        base,
+        key_cols=["id"],
+        stats_cols=["score"],
+    )
+    t.checkpoint_log()
+    t.append(spark.createDataFrame([(100, 99.0)], "id long, score double"))
+    live = [r for r in t._live()[0] if r.get("kind") != "dv"]
+    assert all("score" in (r.get("stats") or {}) for r in live)
+    paths, total = t.pruned_paths({"score": (99.0, 99.0)})
+    assert len(paths) < total
+    assert t.scan({"score": (99.0, 99.0)}).count() == 1
+    # a clone's own appends record the stats column too
+    c = t.clone(str(tmp_path / "st_clone"))
+    c.append(spark.createDataFrame([(200, 70.0)], "id long, score double"))
+    own = [r for r in c._live()[0] if not os.path.isabs(r["path"])]
+    assert own and all("score" in (r.get("stats") or {}) for r in own)
+    paths, total = c.pruned_paths({"score": (70.0, 70.0)})
+    assert len(paths) < total
+    assert c.scan({"score": (70.0, 70.0)}).count() == 1

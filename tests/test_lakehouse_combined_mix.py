@@ -4,7 +4,7 @@ identity columns, and shallow clones interleaved with every rewrite
 class (append/merge/delete then compact/delete/apply_changes/compact
 at two sizes/cluster/restore) in ONE random mix — feature
 interactions are where the r5-r7 bugs clustered (CDF column rebirth,
-bloom-vs-mapping, vacuum-vs-clone).
+vacuum-vs-clone).
 
 Model notes:
 - the extra column is tracked per row as (generation, value): a
@@ -230,21 +230,19 @@ def _seeds():
 
 
 def _display(model, live_gen):
-    """Expected (id, name, val, idb, extra) rows under the live extra
-    generation (None = no extra column). `idb` is the GENERATED
-    column id % 5 — a pure function of the key, so the model derives
-    it instead of tracking it."""
+    """Expected (id, name, val, extra) rows under the live extra
+    generation (None = no extra column)."""
     out = []
     for k, (name, val, gen, ev) in sorted(model.items()):
         if live_gen is None:
-            out.append((k, name, val, k % 5))
+            out.append((k, name, val))
         else:
-            out.append((k, name, val, k % 5, ev if gen == live_gen else None))
+            out.append((k, name, val, ev if gen == live_gen else None))
     return out
 
 
 def _got(t, cols, extra_live, version=None):
-    sel = ["id", cols["name"], cols["val"], "idb"] + (
+    sel = ["id", cols["name"], cols["val"]] + (
         ["extra"] if extra_live else []
     )
     rows = t.snapshot(version=version).select(*sel).collect()
@@ -271,10 +269,7 @@ def test_combined_feature_mix(spark, tmp_path, seed):
         key_cols=["id"],
         identity="rid",
         enable_cdf=True,
-        # generated over the KEY (never renamed in this mix — DDL
-        # guards lock a generated input against rename) + a declared
-        # stats column that the rename op moves
-        generated={"idb": "id % 5"},
+        # a declared stats column that the rename op moves
         stats_cols=["val"],
     )
     cols = {"name": "name", "val": "val"}
@@ -307,8 +302,7 @@ def test_combined_feature_mix(spark, tmp_path, seed):
                 "append", "merge", "delete", "delete_mor",
                 "apply_changes", "compact", "compact_deletes",
                 "cluster", "restore", "rename", "addcol", "dropcol",
-                "clone", "checkpoint", "bloom", "safe_vacuum",
-                "bad_generated", "constraint",
+                "clone", "checkpoint", "safe_vacuum",
             ]
         )
         if op == "append":
@@ -413,89 +407,10 @@ def test_combined_feature_mix(spark, tmp_path, seed):
                 t.add_column("extra", "double")
                 extra_gen = gen_counter
                 gen_counter += 1
-        elif op == "constraint":
-            # CHECK constraint toggling mid-mix (the r5 model test's
-            # op, crossed here with mapping/identity/generated/CDF):
-            # while present, a violating append is rejected atomically
-            from lcmap_firebird_spark.lakehouse import ConstraintViolation
-
-            cons = t._live()[1].get("constraints") or {}
-            if "id_pos" not in cons:
-                # r12: half the time the constraint text carries SQL
-                # comments — the storage boundary must normalize them
-                # away (a stored line comment would swallow the
-                # composed wrapper's tail), and the rest of the mix
-                # (rename crossings, restore rebinds, checkpoints)
-                # must behave identically either way
-                expr = (
-                    "id >= 0 -- engine-side floor\n/* prose */"
-                    if rng.random() < 0.5
-                    else "id >= 0"
-                )
-                t.add_constraint("id_pos", expr)
-                assert (
-                    t._live()[1]["constraints"]["id_pos"] == "id >= 0"
-                ), "comment normalization missing at add_constraint"
-                v0 = t.latest_version()
-                try:
-                    t.append(
-                        spark.createDataFrame(
-                            [(-1, "bad", -1.0)], _wschema(False)
-                        )
-                    )
-                    raise AssertionError(
-                        f"step {step}: violating append landed"
-                    )
-                except ConstraintViolation:
-                    pass
-                assert t.latest_version() == v0
-                # r9b: a violating apply_changes UPSERT is rejected
-                # atomically too — enforcement lives at _commit over
-                # the staged (COW-rewritten) files, so the CDC writer
-                # shares the guarantee with append/merge
-                try:
-                    t.apply_changes(
-                        spark.createDataFrame(
-                            [(-2, "bad", -2.0, "upsert")],
-                            _wschema(False) + ", _op string",
-                        )
-                    )
-                    raise AssertionError(
-                        f"step {step}: violating apply_changes landed"
-                    )
-                except ConstraintViolation:
-                    pass
-                assert t.latest_version() == v0
-            else:
-                t.drop_constraint("id_pos")
-        elif op == "bad_generated":
-            # a writer-provided generated value that contradicts the
-            # expression must be rejected ATOMICALLY at any point in
-            # the history: model unchanged, no version consumed
-            from lcmap_firebird_spark.lakehouse import ConstraintViolation
-
-            v0 = t.latest_version()
-            bad = spark.createDataFrame(
-                [(next_id, "bad", 0.0, (next_id % 5) + 1)],
-                f"id long, {cols['name']} string, {cols['val']} double,"
-                " idb bigint",
-            )
-            try:
-                t.append(bad)
-                raise AssertionError(
-                    f"step {step}: contradicting generated value landed"
-                )
-            except ConstraintViolation:
-                pass
-            assert t.latest_version() == v0
         elif op == "checkpoint":
             # log checkpoint: pure metadata, no row change — crosses
             # checkpointed-log replay with mapping/identity/CDF state
             t.checkpoint_log()
-        elif op == "bloom":
-            # bloom sidecar build: metadata commit; crosses sidecar
-            # liveness with renames/clones/vacuum (r6 guard territory)
-            t.build_bloom_index()
         elif op == "safe_vacuum":
             # conservative sweep (huge retention): must delete NOTHING
             # and disturb nothing — runs the liveness logic mid-mix
@@ -593,14 +508,9 @@ def test_combined_feature_mix(spark, tmp_path, seed):
                 [
                     "append", "merge", "delete", "apply_changes",
                     "compact", "rename", "togglecol", "restore",
-                    "constraint", "checkpoint", "ckpt_restore",
+                    "checkpoint", "ckpt_restore",
                 ]
             )
-            # clone-side CHECK constraint state is read LIVE (like the
-            # source leg) — restore can resurrect or remove it, and
-            # the r10 rebind fix may have rewritten its referenced
-            # column to the clone's current val name
-            ccons_live = c._live()[1].get("constraints") or {}
             if cop == "append":
                 k = ac["next_id"]
                 ac["next_id"] += 1
@@ -653,24 +563,10 @@ def test_combined_feature_mix(spark, tmp_path, seed):
                 # (fresh physical translation on the clone, source
                 # logical names untouched), and the declared stats
                 # column must follow its clone-side rename.
-                # r10 crossing: while the clone's CHECK constraint is
-                # live on val, renaming val must be REFUSED (the DDL
-                # guard) without consuming a version
                 sem = rng.choice(["name", "val"])
                 new = f"c{sem}_{step}"
-                if sem == "val" and "cval_floor" in ccons_live:
-                    try:
-                        c.rename_column(ccols[sem], new)
-                        raise AssertionError(
-                            f"seed {seed} step {step}: rename of the "
-                            "clone's constrained column was allowed"
-                        )
-                    except ValueError:
-                        pass
-                    assert c.latest_version() == cv_before
-                else:
-                    c.rename_column(ccols[sem], new)
-                    ac["cols"][sem] = new
+                c.rename_column(ccols[sem], new)
+                ac["cols"][sem] = new
                 assert (c._live()[1].get("stats_cols") or []) == [
                     ac["cols"]["val"]
                 ], f"seed {seed} step {step}: clone stats_cols lost rename"
@@ -692,65 +588,13 @@ def test_combined_feature_mix(spark, tmp_path, seed):
                 # data dir by absolute path) while keeping the newer
                 # clone schema; the source log must not move
                 target = rng.choice(sorted(ac["history"]))
-                # r10: restore may resurrect the clone's CHECK
-                # constraint from a version where val had a DIFFERENT
-                # logical name — the rebind fix must rewrite it to the
-                # clone's CURRENT val name (physical identity); the
-                # referenced physical column always exists in this mix
-                # (val is never dropped), so restore never refuses
                 c.restore(target)
                 ac["model"] = copy.deepcopy(ac["history"][target][0])
                 cm = ac["model"]
-                rcons = c._live()[1].get("constraints") or {}
-                if "cval_floor" in rcons:
-                    assert rcons["cval_floor"] == (
-                        f"{ac['cols']['val']} > -1000000000.0"
-                    ), (
-                        f"seed {seed} step {step}: restored clone "
-                        f"constraint not rebound: {rcons['cval_floor']!r}"
-                    )
-            elif cop == "constraint":
-                # r10 (r9 VERDICT #5): CHECK constraint add/drop on
-                # the CLONE, interleaved with clone-side evolution —
-                # the one uncrossed pair in the r9 mix log. The
-                # constraint references the clone's CURRENT val name,
-                # a violating append rejects atomically, and the
-                # SOURCE's constraint set never gains it.
-                from lcmap_firebird_spark.lakehouse import (
-                    ConstraintViolation,
-                )
-
-                if "cval_floor" not in ccons_live:
-                    c.add_constraint(
-                        "cval_floor", f"{ccols['val']} > -1000000000.0"
-                    )
-                    cv0 = c.latest_version()
-                    bad_ev = 0.0 if c_has_extra else None
-                    try:
-                        c.append(
-                            spark.createDataFrame(
-                                [_crow(ac["next_id"], "cbad", -2e9, bad_ev)],
-                                _cschema(),
-                            )
-                        )
-                        raise AssertionError(
-                            f"seed {seed} step {step}: violating clone "
-                            "append landed"
-                        )
-                    except ConstraintViolation:
-                        pass
-                    assert c.latest_version() == cv0
-                else:
-                    c.drop_constraint("cval_floor")
-                scons = t._live()[1].get("constraints") or {}
-                assert "cval_floor" not in scons, (
-                    f"seed {seed} step {step}: clone constraint leaked "
-                    "into the source"
-                )
             elif cop == "checkpoint":
                 # r10 (round-11 candidate pulled forward): checkpoint
                 # the CLONE's log mid-mix — checkpointed replay must
-                # carry the clone's own mapping/constraints/identity
+                # carry the clone's own mapping/identity
                 # state, restores to pre-checkpoint versions (clone
                 # restore op) fall back to full replay, and the
                 # checkpoint file lives in the CLONE's _txn, never the
@@ -766,8 +610,8 @@ def test_combined_feature_mix(spark, tmp_path, seed):
                 # least-crossed combination in the mix log (the
                 # independent checkpoint/restore ops only rarely land
                 # in this order by chance). Checkpoint the clone's
-                # head, advance the log with a metadata-only commit
-                # (bloom_index — zero row change), then restore to a
+                # head, advance the log with a zero-row commit (a
+                # delete_mor that matches nothing), then restore to a
                 # PRE-checkpoint version: _live(target) must ignore
                 # the too-new checkpoint (full-replay fallback), the
                 # restore's own head replay runs THROUGH the
@@ -780,7 +624,7 @@ def test_combined_feature_mix(spark, tmp_path, seed):
                     f"seed {seed} step {step}: triple checkpoint "
                     "consumed a version"
                 )
-                c.build_bloom_index()  # metadata commit past the ckpt
+                c.delete_mor("false")  # zero-row commit past the ckpt
                 target = rng.choice(sorted(ac["history"]))
                 c.restore(target)
                 ac["model"] = copy.deepcopy(ac["history"][target][0])

@@ -1,8 +1,7 @@
 """Model-based lakehouse check: a deterministic pseudo-random
 sequence of mixed table operations (append / merge / delete then
 compact / delete / apply_changes / compact (twice, two sizes) / cluster /
-restore / add+drop CHECK constraint, with violating appends rejected
-atomically / metadata-only column RENAME)
+restore / metadata-only column RENAME)
 mirrored against an in-memory dict model — after EVERY step the
 snapshot must equal the model, and at the end every historical
 version must still time-travel to its recorded state (except those
@@ -69,7 +68,7 @@ def test_random_op_sequence_matches_dict_model(spark, tmp_path, seed):
             [
                 "append", "merge", "delete", "delete_mor",
                 "apply_changes", "compact", "compact_deletes",
-                "cluster", "restore", "constraint", "rename",
+                "cluster", "restore", "rename",
             ]
         )
         if op == "append":
@@ -125,25 +124,6 @@ def test_random_op_sequence_matches_dict_model(spark, tmp_path, seed):
             t.compact()
         elif op == "cluster":
             t.cluster()
-        elif op == "constraint":
-            from lcmap_firebird_spark.lakehouse import (
-                ConstraintViolation,
-            )
-
-            cons = t._live()[1].get("constraints") or {}
-            if "id_pos" not in cons:
-                t.add_constraint("id_pos", "id >= 0")
-                # a violating append must be rejected ATOMICALLY:
-                # model unchanged, no version consumed
-                v_before = t.latest_version()
-                try:
-                    t.append(df_of([(-1, "bad", -1.0)]))
-                    raise AssertionError("violating append landed")
-                except ConstraintViolation:
-                    pass
-                assert t.latest_version() == v_before
-            else:
-                t.drop_constraint("id_pos")
         elif op == "rename":
             # metadata-only rename of a random non-key column; data
             # ops before and after must read/write through the moved
