@@ -452,17 +452,16 @@ class LakeTable:
 
     # -- write -------------------------------------------------------------
 
-    def _stage(
-        self, df: DataFrame, suffix: str, keep_empty: bool
-    ) -> list[tuple[str, int]]:
+    def _stage(self, df: DataFrame, suffix: str) -> list[tuple[str, int]]:
         """Write df into a private `.stage-<uuid>` directory, rename
         its part files into data/ as `<uuid><suffix>` and return
         [(root-relative path, footer row count)]. Zero-row parts are
-        dropped unless `keep_empty`. The one staging path for data,
-        change and deletion-vector files: every file is complete
-        before it is visible in data/, and invisible to readers until
-        a commit references it (vacuum's retention window protects it
-        meanwhile)."""
+        dropped: a live file with no rows would carry no key stats
+        and join every pruned read and MERGE candidate list. The one
+        staging path for data, change and deletion-vector files:
+        every file is complete before it is visible in data/, and
+        invisible to readers until a commit references it (vacuum's
+        retention window protects it meanwhile)."""
         import shutil
 
         import pyarrow.parquet as pq
@@ -476,7 +475,7 @@ class LakeTable:
                 if not f.endswith(".parquet"):
                     continue
                 n = pq.ParquetFile(os.path.join(tmp, f)).metadata.num_rows
-                if not n and not keep_empty:
+                if not n:
                     continue
                 name = f"{_DATA}/{uuid.uuid4().hex}{suffix}"
                 os.rename(
@@ -520,7 +519,7 @@ class LakeTable:
         return [
             {"path": name}
             | _file_stats(os.path.join(self.root, name), key_cols)
-            for name, _ in self._stage(df, ".parquet", keep_empty=True)
+            for name, _ in self._stage(df, ".parquet")
         ]
 
     def _commit(
@@ -936,7 +935,7 @@ class LakeTable:
         delete's matches are never empty."""
         if rows is None:
             return []
-        staged = self._stage(rows, ".dv.parquet", keep_empty=False)
+        staged = self._stage(rows, ".dv.parquet")
         covers = sorted(
             self._dv_df([{"path": p} for p, _ in staged])
             .agg(F.collect_set("file").alias("files"))
@@ -1077,7 +1076,7 @@ class LakeTable:
         `_change_type`); returns the entry record or None if the
         batch changed nothing. Files are invisible until the commit
         that references them (same discipline as data staging)."""
-        staged = self._stage(cdf_df, ".cdf.parquet", keep_empty=False)
+        staged = self._stage(cdf_df, ".cdf.parquet")
         if not staged:
             return None
         return {

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..worker import drop_zip_finders
 from .text import tokens
 
 END = "</w>"
@@ -168,6 +169,7 @@ def segment_words(
 
     @pandas_udf("array<string>")
     def _seg(col: pd.Series) -> pd.Series:
+        drop_zip_finders()
         ranks = {p: i for i, p in enumerate(mlist)}
         return col.map(lambda w: _encode_word(w, mlist, ranks))
 

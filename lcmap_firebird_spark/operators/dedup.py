@@ -265,7 +265,9 @@ def minhash_signature(
     k: int = 3,
     sh_precomputed: DataFrame | None = None,
 ) -> DataFrame:
-    """MinHash signatures: one column h0..h{P-1} per permutation.
+    """MinHash signatures: one column h0..h{P-1} per permutation,
+    then `n_sh`, the doc's shingle count (exact: the shingles of a doc
+    are distinct).
 
     Permutation p's hash of shingle s is hash60(p || ':' || s) — a
     salted md5, so signatures are deterministic and engine-portable.
@@ -296,7 +298,7 @@ def minhash_signature(
                 f" % {MINHASH_PRIME}) AS h{p}"
             )
         )
-    return tagged.groupBy("doc_id").agg(*aggs)
+    return tagged.groupBy("doc_id").agg(*aggs, F.count("*").alias("n_sh"))
 
 
 def tune_bands_rows(

@@ -35,7 +35,7 @@ import sys
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import band_keys, jaccard_pairs, minhash_signature, shingle_sets
+from .dedup import band_keys, jaccard_pairs, minhash_signature
 from .text import fingerprint
 
 
@@ -50,18 +50,15 @@ def signature_table(
     signature + shingle count. One explode + one groupBy (single
     shuffle); the output is ~150 bytes/doc regardless of text size —
     the thing that makes persisting it at corpus scale cheap."""
-    # sh feeds TWO consumers (signature agg + size agg): materialize
-    # once or the tokenize+shingle explode runs twice per batch
-    # (PLANS.md rule 15)
-    sh = shingle_sets(df, id_col, text_col, k).localCheckpoint(eager=True)
-    sig = minhash_signature(df, id_col, text_col, num_perm, k, sh_precomputed=sh)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    # the shingle count rides the MinHash groupBy, so the shingle
+    # explode has one consumer and needs no checkpoint
+    sig = minhash_signature(df, id_col, text_col, num_perm, k)
     fp = df.select(
         F.col(id_col).alias("doc_id"), fingerprint(text_col).alias("fp")
     )
     # left joins: docs shorter than k tokens have no shingles — they
     # still belong in the store (fingerprint-only dedup applies)
-    return fp.join(sig, "doc_id", "left").join(sizes, "doc_id", "left")
+    return fp.join(sig, "doc_id", "left")
 
 
 def write_signature_store(

@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..worker import drop_zip_finders
+
 # Probe for a real image codec at import time: when PIL exists the
 # decode/resize kernels run it; otherwise the deterministic stubs
 # exercise the identical plumbing. (This container has no PIL, so the
@@ -129,6 +131,7 @@ def extract_features(media: DataFrame, batch_size: int = 1024) -> DataFrame:
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for big in batches:
           for lo in range(0, len(big), batch_size):
             pdf = big.iloc[lo : lo + batch_size]
@@ -182,6 +185,7 @@ def resize(media: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
         return bytes(payload[:n]).ljust(n, b"\0")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             yield pd.DataFrame(
                 {
@@ -209,6 +213,7 @@ def frame_sample(media: DataFrame, every_n_bytes: int = 64) -> DataFrame:
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             out: dict[str, list] = {"media_id": [], "frame_idx": [], "frame_bytes": []}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -252,6 +257,7 @@ def chunk_audio(
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             rates = (
                 pdf[rate_col]
@@ -316,6 +322,7 @@ def embed_media(media: DataFrame, dim: int = 64) -> DataFrame:
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             vecs = []
             for payload in pdf["payload"]:

@@ -16,6 +16,7 @@ import sys
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import drop_zip_finders
 from .text import tokens
 
 
@@ -411,6 +412,7 @@ def pack_sequences(
     )
 
     def kernel(batches):
+        drop_zip_finders()
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()

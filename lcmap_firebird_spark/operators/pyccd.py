@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import segment_schema
+from ..worker import drop_zip_finders
 from .segmentation import _iso
 
 # band-array column → reference 2-letter prefix (ccdc/pyccd.py:39-81)
@@ -271,12 +272,15 @@ def detect(
     `harmonics=k` fits k annual sin/cos pairs alongside the trend —
     CCDC's actual basis; without it, seasonal land cover triggers
     false breaks (see tests/test_pyccd.py seasonal case).
-    `min_obs` should be ≥ 2+2k+peek for a determined fit."""
+    `min_obs` should be ≥ 2+2k+peek for a determined fit. The kernel
+    calls `drop_zip_finders()` first, so the next task on the worker
+    does not re-read pyspark.zip's directory (PLANS.md rule 34)."""
     schema = segment_schema(True)
     band_cols = list(BAND_MAP)
     min_obs = max(min_obs, 2 + 2 * harmonics + 1)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             out: list[dict] = []
             for rec in pdf.to_dict("records"):

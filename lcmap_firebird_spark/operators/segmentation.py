@@ -38,6 +38,8 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from ..worker import drop_zip_finders
+
 # The applyInPandas kernels below must run on executors that may not
 # have this repo on PYTHONPATH (the round driver launches Spark from
 # its own cwd). Registering the module for pickle-by-value makes
@@ -275,6 +277,10 @@ def ccd_segments(
     ccdc/pyccd.py:99-103 — no pixel yields zero rows).
 
     `t_col` must be integer-like (ordinal days / epoch units).
+
+    The kernel calls `drop_zip_finders()` first, in every group: a
+    worker's per-task harness otherwise re-reads pyspark.zip's
+    directory about 16 times (PLANS.md rule 34).
     """
     key_types = [dict(df.dtypes)[k] for k in keys]
     schema = segment_schema(keys, key_types)
@@ -288,6 +294,7 @@ def ccd_segments(
     df = df.repartition(n_parts, *[F.col(k) for k in keys])
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         pdf = pdf.sort_values(t_col, kind="mergesort")
         ts = pdf[t_col].to_numpy(dtype="float64")
         vs = pdf[value_col].to_numpy(dtype="float64")

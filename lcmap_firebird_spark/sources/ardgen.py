@@ -32,6 +32,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ..worker import drop_zip_finders
+
 
 @dataclass
 class ChipPartition(InputPartition):
@@ -107,6 +109,7 @@ class ArdReader(DataSourceReader):
     def read(self, part: ChipPartition):
         """Deterministic per-chip raster generation (the fetch loop a
         real HTTP source would run here, one chip per task)."""
+        drop_zip_finders()
         import numpy as np
 
         rng = np.random.default_rng((part.cx * 1_000_003 + part.cy) & 0x7FFFFFFF)

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
+from ..worker import drop_zip_finders
+
 import sys as _sys
 
 import pyspark.cloudpickle as _cloudpickle
@@ -67,6 +69,7 @@ def fetch_explode(
     names = [f.name for f in schema.fields]
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             out: list[dict] = []
             for row in pdf.to_dict("records"):

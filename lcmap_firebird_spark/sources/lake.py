@@ -49,6 +49,7 @@ from pyspark.sql.types import StructType
 # in the worker process and dies with ModuleNotFoundError wherever the
 # package is not installed / on sys.path (CLAUDE.md invariant 2).
 from ..lakehouse import LakeTable, _dv_key
+from ..worker import drop_zip_finders
 
 
 @dataclass
@@ -295,6 +296,7 @@ class _LogTail(DataSourceStreamReader):
         return {"version": LakeTable.attach(self._root).latest_version()}
 
     def read(self, partition):
+        drop_zip_finders()
         yield from _read_file_partition(partition)
 
     def commit(self, end: dict) -> None:

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..worker import drop_zip_finders
+
 
 def events_schema() -> StructType:
     """Static schema for the stream source (streams can't infer).
@@ -229,6 +231,7 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     import pandas as pd
 
     def kernel(key, pdf_iter, state):
+        drop_zip_finders()
         (user_id,) = key
         count, total = state.get if state.exists else (0, 0.0)
         for pdf in pdf_iter:

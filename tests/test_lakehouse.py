@@ -1669,7 +1669,7 @@ def test_stats_cols_survive_checkpoint_and_writer(spark, tmp_path):
     live = [r for r in t._live()[0] if r.get("kind") != "dv"]
     assert all("score" in (r.get("stats") or {}) for r in live)
     paths, total = t.pruned_paths({"score": (99.0, 99.0)})
-    assert len(paths) < total
+    assert len(paths) == 1
     assert t.scan({"score": (99.0, 99.0)}).count() == 1
     # a clone's own appends record the stats column too
     c = t.clone(str(tmp_path / "st_clone"))
@@ -1677,5 +1677,27 @@ def test_stats_cols_survive_checkpoint_and_writer(spark, tmp_path):
     own = [r for r in c._live()[0] if not os.path.isabs(r["path"])]
     assert own and all("score" in (r.get("stats") or {}) for r in own)
     paths, total = c.pruned_paths({"score": (70.0, 70.0)})
-    assert len(paths) < total
+    assert len(paths) == 1
     assert c.scan({"score": (70.0, 70.0)}).count() == 1
+
+
+def test_one_row_append_adds_one_live_file(spark, tmp_path):
+    """A write's zero-row parts never become live files: a table
+    created from an empty frame has no data file and reads empty, and
+    a one-row append of a 4-partition frame adds exactly one data
+    file whose key stats bound the row."""
+    schema = "id long, score double"
+    t = LakeTable.create(
+        spark,
+        str(tmp_path / "one"),
+        spark.createDataFrame([], schema),
+        key_cols=["id"],
+    )
+    assert t._live()[0] == []
+    assert t.snapshot().count() == 0
+    one = spark.createDataFrame([(100, 1.0)], schema)
+    t.append(one.repartition(4))
+    live = t._live()[0]
+    assert len(live) == 1
+    assert live[0]["rows"] == 1
+    assert live[0]["stats"]["id"] == [100, 100]
