@@ -111,10 +111,9 @@ def ts_unit(path: str, column: str = "ts", glob: str = "*.parquet") -> str:
         # one file's unit; disagreement falls back to the per-row
         # sniff, which handles the ns/µs mix correctly. Empty part
         # files carry no evidence and are ignored.
-        # PORTABILITY (same seam as streaming/markers.is_committed):
-        # the glob above is LOCAL-FS; on an object store it finds no
-        # files and this function returns "sniff" — still CORRECT
-        # (the per-row CASE handles ns/µs), just without the
+        # PORTABILITY: the glob above is LOCAL-FS; on an object store
+        # it finds no files and this function returns "sniff" — still
+        # CORRECT (the per-row CASE handles ns/µs), just without the
         # footer-level certainty. A Hadoop-FS port would list through
         # the JVM FileSystem API here.
         units = {u for u in (_file_unit(fn) for fn in files) if u != "empty"}

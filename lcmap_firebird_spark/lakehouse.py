@@ -1534,13 +1534,12 @@ class LakeTable:
         (when two or more are, else they are left alone) plus every
         file whose deletion-vector share reaches
         `_DV_REWRITE_FRACTION`, into ~target_rows files. Readers
-        never see a half-compacted table (the non-transactional
-        sibling in operators/maintenance.py needs an atomic
-        directory swap for the same guarantee). The rewrite scans
-        through the DVs, so it materializes `delete_mor`'s deletes;
-        DV rows for rewritten files retire and the rest carry
-        forward. Snapshot content is unchanged; only file boundaries
-        move. No-op (and no commit) when nothing qualifies.
+        never see a half-compacted table: the rewrite is one log
+        entry. The rewrite scans through the DVs, so it materializes
+        `delete_mor`'s deletes; DV rows for rewritten files retire
+        and the rest carry forward. Snapshot content is unchanged;
+        only file boundaries move. No-op (and no commit) when nothing
+        qualifies.
 
         Read-dependent: concurrent commits win, compaction retries
         belong to the caller (it is maintenance — always safe to

@@ -22,10 +22,10 @@ store through N batch merges yields byte-identical pairs to the
 one-shot batch pipeline over the union — incremental is an execution
 strategy, not a different answer.
 
-The store layout bucketizes on doc_id so the MERGE anti-join and the
-membership joins are shuffle-free on the store side once both sides
-are bucketed (`tests/test_bucketing.py` proves the no-Exchange plan
-for this layout).
+A store persisted bucketed on doc_id (`catalog.write_bucketed`) makes
+the MERGE anti-join and the membership joins shuffle-free on the
+store side once both sides are bucketed (`tests/test_bucketing.py`
+proves the no-Exchange plan for this layout).
 """
 
 from __future__ import annotations
@@ -61,18 +61,6 @@ def signature_table(
     return fp.join(sig, "doc_id", "left")
 
 
-def write_signature_store(
-    table: DataFrame, table_name: str = "sig_store", num_buckets: int = 8
-) -> None:
-    """Persist the signature table bucketed by doc_id: MERGE's
-    anti-join and pair-expansion joins then co-locate without a
-    shuffle on the (large) store side (`catalog.write_bucketed`;
-    no-Exchange property proven in tests/test_bucketing.py)."""
-    from ..catalog import write_bucketed
-
-    write_bucketed(table, table_name, ("doc_id",), num_buckets, ("doc_id",))
-
-
 def merge_batch(
     store: DataFrame, batch_sigs: DataFrame
 ) -> DataFrame:
@@ -102,7 +90,6 @@ def incremental_pairs(
     rows: int = 4,
     k: int = 3,
     batch_sigs: DataFrame | None = None,
-    include_fp_exact: bool = False,
 ) -> DataFrame:
     """Near-dup pairs TOUCHING the batch: batch×store ∪ batch×batch.
 
@@ -128,16 +115,13 @@ def incremental_pairs(
     Tested in tests/test_incremental_dedup.py.
 
     `batch_sigs` passes a precomputed (cached) signature table for the
-    batch so callers that also MERGE it into the store — the streaming
-    runner in streaming/dedup_stream.py — compute signatures once.
+    batch so callers that also MERGE it into the store compute
+    signatures once.
 
-    `include_fp_exact=True` additionally emits byte-identical pairs
-    among docs TOO SHORT to shingle (no signature, so no band can
-    ever catch them) via the store's content fingerprint, as
-    (doc_a, doc_b, n_common=0, jaccard=1.0) rows. Off by default:
-    the one-shot PAIR pipeline shares the blind spot (its exact
-    coverage lives in the ladder's exact rung), and the invariant
-    above is pinned against it.
+    Docs too short to shingle carry no signature, so no band can ever
+    catch them; the one-shot pair pipeline shares that blind spot (its
+    exact coverage lives in the ladder's exact rung), and the
+    invariant above is pinned against it.
     """
     if batch_sigs is None:
         # two consumers (store merge + band projection) launch in
@@ -146,10 +130,11 @@ def incremental_pairs(
         batch_sigs = signature_table(batch, num_perm, k).localCheckpoint(
             eager=True
         )
-    merged = merge_batch(store, batch_sigs)
     sig_cols = [f"h{p}" for p in range(num_perm)]
-    merged_sigs = merged.filter(F.col(sig_cols[0]).isNotNull()).select(
-        "doc_id", *sig_cols
+    merged_sigs = (
+        merge_batch(store, batch_sigs)
+        .filter(F.col(sig_cols[0]).isNotNull())
+        .select("doc_id", *sig_cols)
     )
     batch_bands = band_keys(
         batch_sigs.filter(F.col(sig_cols[0]).isNotNull()).select(
@@ -187,35 +172,7 @@ def incremental_pairs(
         .distinct()
     )
     verify_src = df_all.join(cand_ids, "doc_id", "left_semi")
-    pairs = jaccard_pairs(verify_src, threshold, k=k, candidates=touching)
-    if include_fp_exact:
-        short_b = batch_sigs.filter(
-            F.col(sig_cols[0]).isNull()
-        ).select("doc_id", "fp")
-        short_m = merged.filter(F.col(sig_cols[0]).isNull()).select(
-            "doc_id", "fp"
-        )
-        fp_pairs = (
-            short_b.alias("n")
-            .join(
-                short_m.alias("s"),
-                (F.col("n.fp") == F.col("s.fp"))
-                & (F.col("n.doc_id") != F.col("s.doc_id")),
-            )
-            .select(
-                F.least("n.doc_id", "s.doc_id").alias("doc_a"),
-                F.greatest("n.doc_id", "s.doc_id").alias("doc_b"),
-            )
-            .distinct()
-            .select(
-                "doc_a",
-                "doc_b",
-                F.lit(0).cast("long").alias("n_common"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-        pairs = pairs.unionByName(fp_pairs)
-    return pairs
+    return jaccard_pairs(verify_src, threshold, k=k, candidates=touching)
 
 
 # pandas-free module, but keep the foreign-cwd pickling contract

@@ -294,9 +294,9 @@ def write_corpus(
 
     written = df.sparkSession.read.parquet(path)
     m = corpus_manifest(written, domain_col=domain_col)
-    # PORTABILITY (same seam as streaming/markers.is_committed): the
-    # manifest lands via local open(); an object-store deployment
-    # routes this one write through the Hadoop FileSystem API.
+    # PORTABILITY: the manifest lands via local open(); an
+    # object-store deployment routes this one write through the
+    # Hadoop FileSystem API.
     with open(os.path.join(path, "_MANIFEST.json"), "w") as f:
         json.dump(m, f, indent=1, default=str)
     return m

@@ -2,9 +2,8 @@
 exactly-once micro-batch commits.
 
 `foreachBatch` + `lakehouse.LakeTable` gives streams the table-format
-guarantees the versioned-directory sinks (dedup_stream/rollup)
-implement by convention: each micro-batch lands as ONE atomic commit
-whose log entry records the `batch_id`, so
+guarantees: each micro-batch lands as ONE atomic commit whose log
+entry records the `batch_id`, so
 
 - a replayed batch (crash between sink and checkpoint advance, the
   classic foreachBatch at-least-once hazard) is detected by its

@@ -70,47 +70,6 @@ def test_incremental_equals_batch(spark, docs):
     assert got == _pairs_set(oneshot)
 
 
-def test_store_roundtrip_bucketed(spark, docs):
-    sig = I.signature_table(docs.limit(200))
-    I.write_signature_store(sig, table_name="t_sig_store", num_buckets=4)
-    try:
-        back = spark.table("t_sig_store")
-        assert back.count() == sig.count()
-        assert {f.name for f in back.schema.fields} == {
-            f.name for f in sig.schema.fields
-        }
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_sig_store")
-
-
-def test_fp_exact_pairs_for_short_docs(spark):
-    """Docs too short to shingle carry NULL signatures and can never
-    band-match — include_fp_exact pairs byte-identical ones via the
-    store's content fingerprint."""
-    import lcmap_firebird_spark.operators.incremental as I
-
-    base = spark.createDataFrame(
-        [(1, "hi there"), (2, "some much longer document body here ok")],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [(3, "hi there"), (4, "unrelated")],
-        "doc_id long, text string",
-    )
-    store = I.signature_table(base)
-    corpus = base.unionByName(batch)
-    default = I.incremental_pairs(corpus, store, batch, threshold=0.5)
-    assert default.filter("doc_a = 1 AND doc_b = 3").count() == 0
-    withfp = I.incremental_pairs(
-        corpus, store, batch, threshold=0.5, include_fp_exact=True
-    )
-    got = [
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in withfp.filter("doc_a = 1").collect()
-    ]
-    assert got == [(1, 3, 1.0)]
-
-
 @pytest.mark.parametrize(
     "seed",
     fuzz_seeds([11, 47] if slow_enabled() else [11], base=8400),
