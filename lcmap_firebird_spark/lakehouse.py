@@ -62,8 +62,6 @@ from pyspark.sql.types import (
     DoubleType,
     FloatType,
     IntegralType,
-    LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -72,11 +70,6 @@ _TXN = "_txn"
 _DATA = "data"
 _WIDTH = 20
 _DV_SCHEMA = "file string, row_index bigint"
-# operations whose data files hold NEW rows: only they reserve
-# identity ranges at commit
-_ROW_INTRODUCING = frozenset(
-    {"create", "append", "overwrite", "merge", "apply_changes"}
-)
 # `compact` rewrites a data file whose deletion-vector share reaches
 # this fraction whatever its size (Delta's DV-threshold purge)
 _DV_REWRITE_FRACTION = 0.1
@@ -195,33 +188,20 @@ def _stats_intersect(rec: dict, ranges: dict, mapping: dict) -> bool:
     return True
 
 
-def _preflight(
-    df: DataFrame, key_cols: list[str], op_col: str | None = None
-) -> dict:
-    """Validate a keyed writer's source with ONE aggregation and
-    return its key ranges ({col: (min, max)}, or {} for an empty
-    source) for `_affected_files`. Group by key with a per-group row
-    count — plus, for a change batch (`op_col` = the caller's name
-    for its `_op` column), a bad-op count — then fold max(count),
-    the bad total and the key min/max in a 1-row global agg (r12:
+def _preflight(df: DataFrame, key_cols: list[str]) -> dict:
+    """Validate a merge source with ONE aggregation and return its key
+    ranges ({col: (min, max)}, or {} for an empty source) for
+    `_affected_files`. Group by key with a per-group row count, then
+    fold max(count) and the key min/max in a 1-row global agg (r12:
     one source pass instead of three). min/max over distinct keys
     equals min/max over all rows, and max(count) > 1 iff a key
-    repeats. Duplicate keys raise first; then NULL or unknown ops
-    raise (every change key lands in the anti-join, so a bad op
-    would SILENTLY DELETE its matched target row). A merge source
-    (`op_col` None) adds no op term to the plan. Aliases carry a
-    collision-proof __pf_ prefix (r12 ADVICE)."""
-    bad = F.col("_op").isNull() | ~F.col("_op").isin("upsert", "delete")
-    per_key = [F.count(F.lit(1)).alias("__pf_c")]
-    folds = [F.max("__pf_c").alias("__pf_maxc")]
-    if op_col is not None:
-        per_key.append(F.sum(bad.cast("int")).alias("__pf_b"))
-        folds.append(F.sum("__pf_b").alias("__pf_nbad"))
+    repeats, which raises. Aliases carry a collision-proof __pf_
+    prefix (r12 ADVICE)."""
     row = (
         df.groupBy(*key_cols)
-        .agg(*per_key)
+        .agg(F.count(F.lit(1)).alias("__pf_c"))
         .agg(
-            *folds,
+            F.max("__pf_c").alias("__pf_maxc"),
             *[F.min(c).alias(f"__pf_mn_{c}") for c in key_cols],
             *[F.max(c).alias(f"__pf_mx_{c}") for c in key_cols],
         )
@@ -231,40 +211,12 @@ def _preflight(
         raise ValueError(
             "duplicate keys in merge source; pass dedupe_source=True "
             "to keep an arbitrary one"
-            if op_col is None
-            else "duplicate keys in change batch"
-        )
-    if op_col is not None and (row["__pf_nbad"] or 0) > 0:
-        # the error path re-queries for detail; the happy path pays
-        # nothing for it
-        found = [
-            r["_op"]
-            for r in df.filter(bad).select("_op").distinct().limit(5).collect()
-        ]
-        raise ValueError(
-            f"invalid {op_col} values {found!r}: expected 'upsert' or "
-            "'delete'"
         )
     if any(row[f"__pf_mn_{c}"] is None for c in key_cols):
         return {}
     return {
         c: (row[f"__pf_mn_{c}"], row[f"__pf_mx_{c}"]) for c in key_cols
     }
-
-
-def _reserve_identity(ident: dict, add: list[dict]) -> tuple[list[dict], int]:
-    """Reserve a per-file identity range for each data record of
-    `add`, in order: (`add` with `identity_base` stamped on copies
-    of its data records, the advanced watermark). `_commit` applies
-    it; `_fill_identity_in_changes` replays it before the commit."""
-    wm, step = int(ident["watermark"]), int(ident["step"])
-    out = []
-    for r in add:
-        if r.get("kind") is None:
-            r = r | {"identity_base": wm + step}
-            wm += step * int(r.get("rows") or 0)
-        out.append(r)
-    return out, wm
 
 
 class LakeTable:
@@ -280,9 +232,10 @@ class LakeTable:
     @classmethod
     def attach(cls, root: str) -> "LakeTable":
         """Session-less handle for metadata-only use (log replay is
-        pure filesystem) — the streaming source (sources/lake.py)
-        plans without a SparkSession. Anything that builds a DataFrame
-        (snapshot, merge, ...) still needs the real constructor."""
+        pure filesystem) — the CLI's `lake describe/history/vacuum/
+        checkpoint` actions run without a SparkSession. Anything that
+        builds a DataFrame (snapshot, merge, ...) still needs the real
+        constructor."""
         t = cls.__new__(cls)
         t.spark = None
         t.root = root
@@ -366,10 +319,9 @@ class LakeTable:
         n_deleted = sum(
             n for f, n in deleted.items() if f in live_keys
         )
-        out = {
+        return {
             "version": v,
             "key_cols": head["key_cols"],
-            "cdf_enabled": self._cdf_enabled(),
             "num_data_files": len(data),
             "num_dv_files": len(dvs),
             "physical_rows": physical,
@@ -379,9 +331,6 @@ class LakeTable:
                 r["bytes"] for r in data if r.get("bytes") is not None
             ),
         }
-        if head.get("identity"):
-            out["identity"] = head["identity"]
-        return out
 
     def version_at(self, ts: float) -> int:
         """Latest version committed at or before unix-seconds `ts`
@@ -458,7 +407,7 @@ class LakeTable:
         [(root-relative path, footer row count)]. Zero-row parts are
         dropped: a live file with no rows would carry no key stats
         and join every pruned read and MERGE candidate list. The one
-        staging path for data, change and deletion-vector files:
+        staging path for data and deletion-vector files:
         every file is complete before it is visible in data/, and
         invisible to readers until a commit references it (vacuum's
         retention window protects it meanwhile)."""
@@ -568,20 +517,6 @@ class LakeTable:
             }
             if extra:
                 entry.update(extra)
-            # identity watermark: reserve a per-file value range for
-            # every row-introducing data file, INSIDE the retry loop
-            # (a lost O_EXCL race re-reserves from the new head, so
-            # two racing appends never hand out overlapping ranges).
-            # Rewrite commits (compact/cluster/restore) carry the
-            # watermark unchanged — their files hold scanned,
-            # already-materialized values — and delete_mor adds no
-            # data file.
-            ident = head_entry.get("identity")
-            if ident:
-                wm = int(ident["watermark"])
-                if operation in _ROW_INTRODUCING:
-                    entry["add"], wm = _reserve_identity(ident, add)
-                entry["identity"] = ident | {"watermark": wm}
             try:
                 with open(_entry_path(self.root, head + 1), "x") as f:
                     json.dump(entry, f, indent=1)
@@ -600,76 +535,15 @@ class LakeTable:
         df: DataFrame,
         key_cols: list[str],
         extra: dict | None = None,
-        enable_cdf: bool = False,
         stats_cols: list[str] | None = None,
-        identity: str | dict | None = None,
     ) -> "LakeTable":
         """Create a table from df; `key_cols` are the MERGE keys and
-        drive per-file stats pruning. `enable_cdf=True` makes every
-        row-changing commit also record its change rows (Delta's
-        enableChangeDataFeed), read back with `read_cdf`.
+        drive per-file stats pruning.
 
         `stats_cols` lists extra (non-key) columns whose per-file
         min/max land in every commit's stats records from birth —
         `scan()`/MERGE pruning then bites on them without a
-        retroactive cluster() pass.
-
-        `identity` (a column name, or {"col", "start", "step"})
-        declares an IDENTITY column (Delta's GENERATED BY DEFAULT AS
-        IDENTITY): writers that omit the column — or supply NULL —
-        get engine-assigned unique increasing BIGINTs; non-NULL
-        writer values are kept as-is (and, exactly like Delta, their
-        uniqueness against engine-assigned ranges is NOT checked).
-        Assignment is O(metadata): each commit reserves a per-file
-        value range from the table's high watermark INSIDE the
-        optimistic-commit retry loop (losing an O_EXCL race re-reserves
-        from the new head, so concurrent appenders never collide),
-        and values materialize AT SCAN as base + row_index·step —
-        fresh appends write no identity bytes at all; any COW rewrite
-        (merge/compact/cluster) then persists the scanned values
-        physically, which is why ranges survive rewrites. Values are
-        unique and increase with commit order; gaps are normal
-        (aborts, rewrite over-reservation) — Delta's documented
-        semantics. Restrictions (all of which keep the metadata
-        immutable and the ranges trustworthy): declared at create
-        only; it may not be a key column; the column refuses
-        rename/drop. CDF change rows carry the ASSIGNED values, written
-        into every change file at staging: merge/apply_changes never
-        retry, so their reserved ranges are deterministic at staging
-        and the change file records the materialized ids
-        (_fill_identity_in_changes, r8); delete_mor stages scanned
-        pre-images; append inserts derive from add files,
-        which readers materialize. No reader fills identity into a
-        change file."""
-        ident = None
-        if identity is not None:
-            if isinstance(identity, str):
-                identity = {"col": identity}
-            ident = {
-                "col": identity["col"],
-                "start": int(identity.get("start", 1)),
-                "step": int(identity.get("step", 1)),
-            }
-            if ident["step"] == 0:
-                raise ValueError("identity step must be non-zero")
-            if ident["col"] in key_cols:
-                raise ValueError(
-                    f"identity column {ident['col']!r} cannot be a "
-                    "key column: engine-assigned values are virtual "
-                    "until a rewrite persists them, so MERGE key "
-                    "matching (which reads stored bytes) would never "
-                    "see them — matched rows would silently "
-                    "re-insert as duplicates. Key on a natural "
-                    "column and carry the identity alongside."
-                )
-            if ident["col"] not in df.columns:
-                df = df.withColumn(
-                    ident["col"], F.lit(None).cast("bigint")
-                )
-            else:
-                df = df.withColumn(
-                    ident["col"], F.col(ident["col"]).cast("bigint")
-                )
+        retroactive cluster() pass."""
         # exist_ok: a crashed create may have left the empty dirs
         # behind; the O_EXCL entry-0 create below is the real guard
         # against two concurrent creates
@@ -683,13 +557,8 @@ class LakeTable:
             "remove": [],
             "schema": df.schema.json(),
             "key_cols": key_cols,
-            "cdf_enabled": bool(enable_cdf),
             "stats_cols": list(stats_cols or []),
         }
-        if ident:
-            entry0["identity"] = ident | {
-                "watermark": ident["start"] - ident["step"]
-            }
         with open(_entry_path(root, 0), "x") as f:
             json.dump(entry0, f, indent=1)
         t = LakeTable(spark, root)
@@ -720,11 +589,7 @@ class LakeTable:
         return cached
 
     def _conform(
-        self,
-        df: DataFrame,
-        head: dict,
-        keep: tuple[str, ...] = (),
-        strict_original: bool = False,
+        self, df: DataFrame, head: dict, strict_original: bool = False
     ) -> DataFrame:
         """Project df onto the table schema: reject columns the table
         doesn't have (misspellings must not silently land as a file
@@ -733,20 +598,15 @@ class LakeTable:
         the rest — an unconverted type would commit
         a file every subsequent scan chokes on.
 
-        `strict_original=True` (merge/apply_changes) confines the
-        silent null-fill to EVOLUTION-ADDED columns (plus the
-        identity column, whose omission means 'engine-assign'): a
-        source that omits a create-time column raises instead, since
-        on update the null-fill would silently overwrite existing
-        values with NULL (r8 ADVICE). Tracked by physical identity
-        via `_original_physical`, so renames follow the column and a
-        drop+re-add counts as evolution-added.
-
-        `keep` names non-table columns carried through VERBATIM after
-        the schema fields (apply_changes' op column) — they must be
-        present in df."""
+        `strict_original=True` (merge) confines the silent null-fill
+        to EVOLUTION-ADDED columns: a source that omits a create-time
+        column raises instead, since on update the null-fill would
+        silently overwrite existing values with NULL (r8 ADVICE).
+        Tracked by physical identity via `_original_physical`, so
+        renames follow the column and a drop+re-add counts as
+        evolution-added."""
         schema = StructType.fromJson(json.loads(head["schema"]))
-        known = {f.name for f in schema.fields} | set(keep)
+        known = {f.name for f in schema.fields}
         extra_cols = [c for c in df.columns if c not in known]
         if extra_cols:
             raise ValueError(
@@ -755,16 +615,11 @@ class LakeTable:
             )
         orig = self._original_physical() if strict_original else frozenset()
         mapping = _entry_mapping(head)
-        ident_col = (head.get("identity") or {}).get("col")
 
         def _col(f):
             if f.name in df.columns:
                 return F.col(f.name).cast(f.dataType).alias(f.name)
-            if (
-                strict_original
-                and f.name != ident_col
-                and mapping.get(f.name, f.name) in orig
-            ):
+            if strict_original and mapping.get(f.name, f.name) in orig:
                 raise ValueError(
                     f"source omits original-schema column {f.name!r}: "
                     "on update the null-fill would silently overwrite "
@@ -775,15 +630,13 @@ class LakeTable:
                 )
             return F.lit(None).cast(f.dataType).alias(f.name)
 
-        return df.select(
-            *[_col(f) for f in schema.fields], *[F.col(c) for c in keep]
-        )
+        return df.select(*[_col(f) for f in schema.fields])
 
     def append(self, df: DataFrame, extra: dict | None = None) -> int:
         """Atomic multi-file append (order-independent: retries
         transparently if another writer commits first). `extra` keys
-        land in the commit entry (e.g. a streaming batch_id for
-        idempotent replay detection) — atomically with the commit.
+        land in the commit entry atomically with the commit (caller
+        metadata such as a batch id).
         Rows are conformed to the table schema first (cast + null-
         fill of evolution-added columns; unknown columns raise)."""
         add = self._stage_files(self._conform(df, self._live()[1]))
@@ -807,9 +660,9 @@ class LakeTable:
 
         `key_ranges` ({col: (min, max)}, or {} for a known-empty
         source) lets the caller supply precomputed bounds so the
-        min/max aggregation here is skipped — merge/apply_changes
-        fold it into the source pass they already run (r12: one
-        source aggregation instead of two full scans)."""
+        min/max aggregation here is skipped — merge folds it into
+        the source pass it already runs (r12: one source aggregation
+        instead of two full scans)."""
         mapping = mapping or {}
         if key_ranges is None:
             ranges = keys.agg(
@@ -964,16 +817,8 @@ class LakeTable:
         position source for recording NEW deletion vectors.
         `mapping` (the entry's column_mapping) makes the parquet read
         run under PHYSICAL names and the output carry LOGICAL names —
-        the read half of metadata-only rename/drop.
-
-        Identity columns materialize HERE: rows whose stored value is
-        NULL take base + row_index·step from their file's reserved
-        range (a broadcast join on the file-count-sized base map) —
-        fresh appends never write identity bytes, and every COW
-        rewrite persists the values this projection produced."""
+        the read half of metadata-only rename/drop."""
         mapping = mapping or {}
-        ident = self._identity()
-        want_pos = keep_pos or ident is not None
         if not data:
             df = self.spark.createDataFrame([], schema)
             if keep_pos:
@@ -1002,7 +847,7 @@ class LakeTable:
             )
             parts.append(
                 df.select(*to_logical, *pos_cols)
-                if want_pos
+                if keep_pos
                 else df.select(*to_logical)
             )
         if covered:
@@ -1016,186 +861,12 @@ class LakeTable:
                 .select(*to_logical, *pos_cols)
                 .join(dv, ["_file", "_ridx"], "left_anti")
             )
-            parts.append(df if want_pos else df.drop("_file", "_ridx"))
+            parts.append(df if keep_pos else df.drop("_file", "_ridx"))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        if ident is not None:
-            bases = [
-                (_dv_key(r["path"]), int(r["identity_base"]))
-                for r in data
-                if r.get("identity_base") is not None
-            ]
-            if bases:
-                bmap = self.spark.createDataFrame(
-                    bases, "_file string, _ibase bigint"
-                )
-                virt = F.col("_ibase") + F.col("_ridx") * F.lit(
-                    int(ident["step"])
-                )
-                out = out.join(F.broadcast(bmap), "_file", "left").select(
-                    *[
-                        F.coalesce(F.col(c), virt).alias(c)
-                        if c == ident["col"]
-                        else F.col(c)
-                        for c in cols
-                    ],
-                    "_file",
-                    "_ridx",
-                )
-            if not keep_pos:
-                out = out.drop("_file", "_ridx")
         return out
 
-    # -- change data feed --------------------------------------------------
-
-    def _cdf_enabled(self) -> bool:
-        with open(_entry_path(self.root, 0)) as f:
-            return bool(json.load(f).get("cdf_enabled"))
-
-    def _identity(self) -> dict | None:
-        """STATIC identity metadata ({col, start, step}) from entry 0
-        — declared at create, immutable thereafter (the identity
-        column refuses rename/drop), so every read path can self-serve
-        it without threading the head entry through. The moving part
-        (the high watermark) lives in each commit entry and is only
-        ever read by `_commit` against its own head. Cached per
-        handle."""
-        if not hasattr(self, "_ident_cache"):
-            with open(_entry_path(self.root, 0)) as f:
-                ident = json.load(f).get("identity")
-            self._ident_cache = (
-                {k: ident[k] for k in ("col", "start", "step")}
-                if ident
-                else None
-            )
-        return self._ident_cache
-
-    def _stage_cdf(self, cdf_df: DataFrame) -> dict | None:
-        """Stage a change-rows dataset (table columns +
-        `_change_type`); returns the entry record or None if the
-        batch changed nothing. Files are invisible until the commit
-        that references them (same discipline as data staging)."""
-        staged = self._stage(cdf_df, ".cdf.parquet")
-        if not staged:
-            return None
-        return {
-            "paths": [p for p, _ in staged],
-            "rows": sum(n for _, n in staged),
-        }
-
-    def read_cdf(
-        self, from_version: int, to_version: int | None = None
-    ) -> DataFrame:
-        """Per-commit change rows in (from_version, to_version]:
-        table columns + `_change_type` ('insert', 'delete',
-        'update_preimage', 'update_postimage') + `_commit_version`.
-
-        Requires the table to have been created with
-        `enable_cdf=True`. Inserts from append/create commits are
-        DERIVED from their add files (no change file is ever written
-        for pure inserts — Delta's rule, appends stay write-once);
-        merge/delete_mor/apply_changes read the change file
-        their commit staged, verbatim — its identity values were
-        materialized when it was staged (scanned pre-images, or
-        `_fill_identity_in_changes` for post-images and inserts), so
-        no read-time fill runs; restore/overwrite commits fall back to
-        a snapshot diff of their two versions; metadata-only commits
-        contribute nothing. Unlike `table_changes` (a two-snapshot
-        diff), this is exact PER-COMMIT attribution at file-read
-        cost."""
-        if not self._cdf_enabled():
-            raise ValueError(
-                "table was not created with enable_cdf=True; use "
-                "table_changes() for snapshot-diff changes"
-            )
-        to_v = to_version if to_version is not None else self.latest_version()
-        _, head = self._live(to_v)
-        final = StructType.fromJson(json.loads(head["schema"]))
-        # tail read only (PLANS.md rule 25)
-        entries = self._entries(upto=to_v, since=from_version)
-        parts: list[DataFrame] = []
-        for e in entries:
-            v = e["version"]
-            schema = StructType.fromJson(json.loads(e["schema"]))
-            cols = [f.name for f in schema.fields]
-            if e.get("cdf"):
-                # cdf files carry the LOGICAL names in force at their
-                # commit (they are staged from logical frames)
-                cdf_schema = StructType(
-                    schema.fields
-                    + [StructField("_change_type", StringType(), False)]
-                )
-                df = self.spark.read.schema(cdf_schema).parquet(
-                    *[
-                        os.path.join(self.root, p)
-                        for p in e["cdf"]["paths"]
-                    ]
-                )
-            elif e["operation"] in ("append", "create", "clone"):
-                # 'clone' (r9): the clone's v1 references the source
-                # snapshot's files — its CDF feed starts at its
-                # create (history never transfers), and that initial
-                # population derives as inserts exactly like
-                # create's, so replay closure holds from version 0 of
-                # the clone. A clone commit CAN carry DV records (the
-                # source's live deletion vectors transfer) — those
-                # must APPLY to the scan, or MOR-deleted source rows
-                # would appear as clone inserts.
-                dv_recs = [
-                    r for r in e.get("add", []) if r.get("kind") == "dv"
-                ]
-                adds = [
-                    r for r in e.get("add", [])
-                    if r.get("kind") not in ("dv",) and r.get("rows")
-                ]
-                if not adds:
-                    continue
-                # data files carry PHYSICAL names: read through the
-                # central mapped scan (no DVs apply for append/create
-                # — the inserts are the rows as of THAT commit; a
-                # clone's transferred DVs DO apply)
-                df = self._scan_live(
-                    adds, dv_recs, schema, mapping=_entry_mapping(e)
-                ).withColumn("_change_type", F.lit("insert"))
-            elif e["operation"] in ("restore", "overwrite"):
-                # table_changes emits v's logical names already
-                df = self.table_changes(v - 1, v)
-            else:
-                # compact/cluster/add_column/rename_column/
-                # drop_column/no-op commits change no rows
-                continue
-            # project each part into to_v's logical space by physical
-            # identity (renames carry over, additions null-fill,
-            # drops leave the feed)
-            parts.append(
-                self._relabel(
-                    df.select(
-                        *cols,
-                        "_change_type",
-                        F.lit(v).cast("long").alias("_commit_version"),
-                    ),
-                    e,
-                    head,
-                )
-            )
-        if not parts:
-            empty = StructType(
-                final.fields
-                + [
-                    StructField("_change_type", StringType(), False),
-                    StructField("_commit_version", LongType(), False),
-                ]
-            )
-            return self.spark.createDataFrame([], empty)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.select(
-            *[f.name for f in final.fields],
-            "_change_type",
-            "_commit_version",
-        )
 
     def delete_mor(self, predicate: str, extra: dict | None = None) -> int:
         """The table's delete: record the positions of rows where the
@@ -1205,7 +876,7 @@ class LakeTable:
         `_metadata.row_index`. Rows where the predicate is NULL
         survive (SQL DELETE semantics). Readers apply DVs via a
         position anti-join scoped to covered files; copy-on-write
-        rewrites (merge/apply_changes/compact/cluster) read through
+        rewrites (merge/compact/cluster) read through
         the same DV-applied scan, so rewritten files materialize the
         deletes. `compact` reclaims the space: it rewrites every
         file whose deleted share reaches `_DV_REWRITE_FRACTION`.
@@ -1223,29 +894,19 @@ class LakeTable:
             data, dvs, schema, keep_pos=True,
             mapping=_entry_mapping(head_entry),
         )
-        hits = scan.filter(predicate).localCheckpoint(eager=True)
-        matches = hits.select(
-            F.col("_file").alias("file"),
-            F.col("_ridx").alias("row_index"),
+        matches = (
+            scan.filter(predicate)
+            .select(
+                F.col("_file").alias("file"),
+                F.col("_ridx").alias("row_index"),
+            )
+            .localCheckpoint(eager=True)
         )
         if not matches.limit(1).count():
             # nothing newly deleted: keep the existing DV dataset
             return self._commit(
                 "delete_mor", [], [], expected_head=head, extra=extra
             )
-        cdf_extra: dict = {}
-        if self._cdf_enabled():
-            cols = [f.name for f in schema.fields]
-            rec = self._stage_cdf(
-                hits.select(
-                    *cols, F.lit("delete").alias("_change_type")
-                )
-            )
-            if rec:
-                # delete pre-images are SCANNED rows: identity is
-                # already materialized
-                cdf_extra["cdf"] = rec
-        extra = (extra or {}) | cdf_extra or None
         old = self._retire_dvs(dvs, data)
         return self._commit(
             "delete_mor",
@@ -1257,152 +918,6 @@ class LakeTable:
             extra=extra,
         )
 
-    def _fill_identity_in_changes(
-        self,
-        changes: DataFrame,
-        add: list[dict],
-        head_entry: dict,
-        schema: StructType,
-    ) -> DataFrame:
-        """Materialize engine-assigned identity values into CDF rows
-        at WRITE time. merge/apply_changes are never-retried commits
-        (expected_head pins the head, so a lost race raises instead
-        of re-reserving), which makes the per-file identity bases
-        `_commit` will assign fully deterministic HERE — apply the
-        same `_reserve_identity` to the just-staged add records,
-        scan those files (where the identity projection
-        materializes), and fill NULL identity on
-        insert/update_postimage rows by key. The staged change file
-        then carries the same values a snapshot reader sees, so both
-        read_cdf and the STREAMING CDF source read it verbatim (r8)."""
-        ident = head_entry.get("identity")
-        if not ident:
-            return changes
-        icol = ident["col"]
-        key_cols = head_entry["key_cols"]
-        if icol in key_cols:
-            return changes
-        recs = [
-            r for r in _reserve_identity(ident, add)[0]
-            if r.get("kind") is None
-        ]
-        if not recs:
-            return changes
-        fills = (
-            self._scan_live(
-                recs, [], schema, mapping=_entry_mapping(head_entry)
-            )
-            .groupBy(*key_cols)
-            .agg(F.min(icol).alias("__rid_fill__"))
-        )
-        fillable = F.col("_change_type").isin("insert", "update_postimage")
-        return (
-            changes.join(fills, list(key_cols), "left")
-            .withColumn(
-                icol,
-                F.when(
-                    F.col(icol).isNull() & fillable, F.col("__rid_fill__")
-                ).otherwise(F.col(icol)),
-            )
-            .select(
-                *[f.name for f in schema.fields], "_change_type"
-            )
-        )
-
-    def _keyed_rewrite(
-        self,
-        src: DataFrame,
-        head: int,
-        live: list[dict],
-        head_entry: dict,
-        operation: str,
-        extra: dict | None,
-        op_col: str | None = None,
-        preflight: bool = True,
-    ) -> int:
-        """The one keyed copy-on-write rewrite behind merge and
-        apply_changes. `src` is conformed to the pinned head's schema;
-        with `op_col` (the caller's name for it, used in error text)
-        it also carries `_op` ('upsert' or 'delete' per row) — a merge
-        source is the all-upsert case and carries no op column. Every
-        source key lands in the survivor anti-join, so matched target
-        rows are replaced or removed, unmatched upserts insert and
-        unmatched deletes no-op. Only files that can hold a source
-        key are read and rewritten; the scan applies live deletion
-        vectors, so merge-on-read deletes never resurrect. One
-        read-dependent commit named `operation`.
-
-        `preflight=False` (merge's dedupe_source) skips the
-        `_preflight` aggregation: `_affected_files` then computes the
-        key ranges itself."""
-        data, dvs = self._split_live(live)
-        key_cols = head_entry["key_cols"]
-        schema = StructType.fromJson(json.loads(head_entry["schema"]))
-        mapping = _entry_mapping(head_entry)
-        cols = [f.name for f in schema.fields]
-        keys = src.select(*key_cols)
-        ranges = _preflight(src, key_cols, op_col) if preflight else None
-        affected = self._affected_files(
-            data, keys, key_cols, schema, mapping=mapping, key_ranges=ranges
-        )
-        upserts = src
-        if op_col is not None:
-            upserts = src.filter(F.col("_op") != "delete").drop("_op")
-        cdf = self._cdf_enabled()
-        if cdf:
-            # feeds both the rewrite and the change rows
-            upserts = upserts.localCheckpoint(eager=True)
-        rewritten = upserts
-        change_rows: DataFrame | None = None
-        if affected:
-            recs = [r for r in data if r["path"] in set(affected)]
-            scan = self._scan_live(recs, dvs, schema, mapping=mapping)
-            if cdf:
-                scan = scan.localCheckpoint(eager=True)
-                # matched target rows are pre-images labelled by their
-                # op (upsert → update_preimage, delete → delete);
-                # source upserts split into post-images and inserts
-                # by target match
-                if op_col is None:
-                    matched = src.select(*key_cols)
-                    label = F.lit("update_preimage")
-                else:
-                    matched = src.select(*key_cols, "_op")
-                    label = F.when(
-                        F.col("_op") == "delete", "delete"
-                    ).otherwise("update_preimage")
-                pre = scan.join(F.broadcast(matched), key_cols).select(
-                    *cols, label.alias("_change_type")
-                )
-                tkeys = scan.select(*key_cols).distinct()
-                post = upserts.join(tkeys, key_cols, "left_semi").select(
-                    *cols, F.lit("update_postimage").alias("_change_type")
-                )
-                ins = upserts.join(tkeys, key_cols, "left_anti").select(
-                    *cols, F.lit("insert").alias("_change_type")
-                )
-                change_rows = pre.unionByName(post).unionByName(ins)
-            survivors = scan.join(F.broadcast(keys), key_cols, "left_anti")
-            rewritten = survivors.unionByName(upserts)
-        elif cdf:
-            change_rows = upserts.select(
-                *cols, F.lit("insert").alias("_change_type")
-            )
-        add = self._stage_files(rewritten)
-        if change_rows is not None:
-            # staged AFTER the data files so engine-assigned identity
-            # values can be filled in from them
-            rec = self._stage_cdf(
-                self._fill_identity_in_changes(
-                    change_rows, add, head_entry, schema
-                )
-            )
-            if rec:
-                extra = (extra or {}) | {"cdf": rec}
-        return self._commit(
-            operation, add, affected, expected_head=head, extra=extra
-        )
-
     def merge(
         self,
         source: DataFrame,
@@ -1412,9 +927,12 @@ class LakeTable:
         """MERGE (upsert) by the table's key columns: matched target
         rows are replaced by the source row, unmatched source rows
         are inserted. Copy-on-write: only files that can contain a
-        matching key are rewritten; everything else is carried by
-        reference. Raises on duplicate source keys (the match would
-        be ambiguous) unless `dedupe_source`.
+        matching key are read and rewritten; everything else is
+        carried by reference. The scan applies live deletion vectors,
+        so merge-on-read deletes never resurrect. Raises on duplicate
+        source keys (the match would be ambiguous) unless
+        `dedupe_source`, which skips the `_preflight` aggregation
+        (`_affected_files` then computes the key ranges itself).
 
         Read-dependent: raises ConcurrentWriteError if the log
         advances between snapshot and commit."""
@@ -1422,11 +940,10 @@ class LakeTable:
         live, head_entry = self._live(head)
         key_cols = head_entry["key_cols"]
         # the SAME writer contract as append (_conform): absent
-        # evolution-added columns (identity included — NULLs
-        # materialize from the commit's reserved range at scan, the BY
-        # DEFAULT rule) null-fill, and unknown columns raise. Key columns are required EXPLICITLY:
-        # _conform would null-fill an absent key, silently merging by
-        # NULL. strict_original (r9): an absent ORIGINAL column raises
+        # evolution-added columns null-fill, and unknown columns
+        # raise. Key columns are required EXPLICITLY: _conform would
+        # null-fill an absent key, silently merging by NULL.
+        # strict_original (r9): an absent ORIGINAL column raises
         # rather than NULL-overwriting existing values on update.
         missing_keys = [k for k in key_cols if k not in source.columns]
         if missing_keys:
@@ -1436,9 +953,26 @@ class LakeTable:
         source = self._conform(source, head_entry, strict_original=True)
         if dedupe_source:
             source = source.dropDuplicates(key_cols)
-        return self._keyed_rewrite(
-            source, head, live, head_entry, "merge", extra,
-            preflight=not dedupe_source,
+        data, dvs = self._split_live(live)
+        schema = StructType.fromJson(json.loads(head_entry["schema"]))
+        mapping = _entry_mapping(head_entry)
+        keys = source.select(*key_cols)
+        ranges = None if dedupe_source else _preflight(source, key_cols)
+        affected = self._affected_files(
+            data, keys, key_cols, schema, mapping=mapping, key_ranges=ranges
+        )
+        rewritten = source
+        if affected:
+            recs = [r for r in data if r["path"] in set(affected)]
+            scan = self._scan_live(recs, dvs, schema, mapping=mapping)
+            survivors = scan.join(F.broadcast(keys), key_cols, "left_anti")
+            rewritten = survivors.unionByName(source)
+        return self._commit(
+            "merge",
+            self._stage_files(rewritten),
+            affected,
+            expected_head=head,
+            extra=extra,
         )
 
     def vacuum(
@@ -1502,12 +1036,6 @@ class LakeTable:
             for v in sorted(protect):
                 for rec in self._live(v)[0]:
                     referenced.add(rec["path"])
-                # change-data-feed files belong to exactly one commit
-                # and stay readable while that commit is protected
-                with open(_entry_path(self.root, v)) as f:
-                    e = json.load(f)
-                for p in (e.get("cdf") or {}).get("paths", []):
-                    referenced.add(p)
         removed = []
         d = os.path.join(self.root, _DATA)
         for f in os.listdir(d):
@@ -1554,7 +1082,7 @@ class LakeTable:
         `ranges` ({col: (lo, hi)}, logical names, inclusive) scopes
         the pass to files whose stats INTERSECT every range —
         Delta's OPTIMIZE ... WHERE. At scale you compact the key
-        range a stream just trickled small files into, not the whole
+        range a run of small appends just landed in, not the whole
         table; candidate selection stays pure log metadata (the same
         stat-intersection rule as `pruned_paths`), and files without
         stats for a range column are conservatively in scope."""
@@ -1728,156 +1256,6 @@ class LakeTable:
             cond = term if cond is None else (cond & term)
         return df.filter(cond) if cond is not None else df
 
-    @staticmethod
-    def _relabel(
-        df: DataFrame, src_entry: dict, tgt_entry: dict
-    ) -> DataFrame:
-        """Project a frame carrying `src_entry`-version LOGICAL
-        columns into `tgt_entry`-version logical space, matching
-        columns by their stable PHYSICAL identity: renamed columns
-        carry over under the new name, columns added since read NULL,
-        columns dropped since are omitted. Collapses the additive
-        null-fill case and the rename case into one rule."""
-        src_map = _entry_mapping(src_entry)
-        tgt_map = _entry_mapping(tgt_entry)
-        tgt_schema = StructType.fromJson(json.loads(tgt_entry["schema"]))
-        phys_to_src = {src_map.get(c, c): c for c in df.columns}
-        out = []
-        for f in tgt_schema.fields:
-            p = tgt_map.get(f.name, f.name)
-            if p in phys_to_src:
-                out.append(F.col(phys_to_src[p]).alias(f.name))
-            else:
-                out.append(F.lit(None).cast(f.dataType).alias(f.name))
-        passthrough = [
-            c
-            for c in ("_change_type", "_commit_version")
-            if c in df.columns
-        ]
-        return df.select(*out, *passthrough)
-
-    def table_changes(
-        self, from_version: int, to_version: int | None = None
-    ) -> DataFrame:
-        """Change data feed between two versions: the row-level diff
-        a downstream consumer needs to catch up from `from_version`
-        to `to_version` (default: latest). Output = table columns +
-        `_change_type` in {'insert', 'update_preimage',
-        'update_postimage', 'delete'}.
-
-        Computed as a snapshot diff keyed on the table's key columns
-        (full outer join of the two snapshots; rows equal on every
-        column are dropped) — correct for ANY commit mix including
-        COW rewrites and MOR deletion vectors, without per-commit row
-        tracking. Cost is a join of the two snapshots, so this is the
-        catch-up/backfill surface; per-batch streaming consumers
-        should read CDC batches written via the sink's mode='cdc',
-        which are recorded at write time for free.
-
-        Requires `from_version`'s files to still exist (not
-        vacuumed)."""
-        head_v = to_version if to_version is not None else self.latest_version()
-        _, entry_from = self._live(from_version)
-        _, head = self._live(head_v)
-        new = self.snapshot(head_v)
-        # schema evolution between the two versions: project the old
-        # snapshot into head_v's logical space by PHYSICAL identity —
-        # added columns null-fill (a post-evolution value reads as a
-        # NULL→value update), renamed columns line up under the new
-        # name, dropped columns leave the diff entirely
-        old = self._relabel(self.snapshot(from_version), entry_from, head)
-        key_cols = head["key_cols"]
-        cols = new.columns
-        val_cols = [c for c in cols if c not in key_cols]
-
-        # the keyed diff below assumes key uniqueness WITHIN each
-        # snapshot — append can legally commit duplicate keys, and
-        # pairing duplicates would emit phantom update pre/post rows
-        # (and collapse live duplicates in any consumer applying the
-        # feed). Detect duplicates with one aggregate per side and
-        # fall back to an exact MULTISET full-row diff: per-row-value
-        # count deltas become insert/delete rows (update attribution
-        # genuinely needs unique keys, so none is fabricated).
-        tagged = old.select(
-            *key_cols, F.lit(0).alias("_side")
-        ).unionByName(new.select(*key_cols, F.lit(1).alias("_side")))
-        has_dups = bool(
-            tagged.groupBy(*key_cols, "_side")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") > 1)
-            .limit(1)
-            .count()
-        )  # ONE job over both snapshots' key projections
-
-        if has_dups:
-            oc = old.groupBy(*cols).agg(F.count("*").alias("_oc"))
-            nc = new.groupBy(*cols).agg(F.count("*").alias("_nc"))
-            cond = None
-            for c in cols:
-                term = oc[c].eqNullSafe(nc[c])
-                cond = term if cond is None else (cond & term)
-            j = oc.join(nc, cond, "full_outer").select(
-                *[F.coalesce(oc[c], nc[c]).alias(c) for c in cols],
-                (
-                    F.coalesce(nc["_nc"], F.lit(0))
-                    - F.coalesce(oc["_oc"], F.lit(0))
-                ).alias("_d"),
-            )
-            order = key_cols + val_cols
-
-            def _times(df: DataFrame, n: Column, label: str) -> DataFrame:
-                return df.withColumn(
-                    "_r", F.explode(F.sequence(F.lit(1), n))
-                ).select(
-                    *order, F.lit(label).alias("_change_type")
-                )
-
-            return _times(
-                j.filter(F.col("_d") > 0), F.col("_d"), "insert"
-            ).unionByName(
-                _times(
-                    j.filter(F.col("_d") < 0), -F.col("_d"), "delete"
-                )
-            )
-
-        o = old.select(
-            *key_cols,
-            F.struct(*[F.col(c) for c in val_cols]).alias("_o"),
-        )
-        n = new.select(
-            *key_cols,
-            F.struct(*[F.col(c) for c in val_cols]).alias("_n"),
-        )
-        j = o.join(n, key_cols, "full_outer")
-        inserts = j.filter(F.col("_o").isNull()).select(
-            *key_cols,
-            *[F.col("_n")[c].alias(c) for c in val_cols],
-            F.lit("insert").alias("_change_type"),
-        )
-        deletes = j.filter(F.col("_n").isNull()).select(
-            *key_cols,
-            *[F.col("_o")[c].alias(c) for c in val_cols],
-            F.lit("delete").alias("_change_type"),
-        )
-        changed = j.filter(
-            F.col("_o").isNotNull()
-            & F.col("_n").isNotNull()
-            # struct inequality is null-safe member-wise in Spark,
-            # so NULL→value and value→NULL edits register as updates
-            & ~F.col("_o").eqNullSafe(F.col("_n"))
-        )
-        pre = changed.select(
-            *key_cols,
-            *[F.col("_o")[c].alias(c) for c in val_cols],
-            F.lit("update_preimage").alias("_change_type"),
-        )
-        post = changed.select(
-            *key_cols,
-            *[F.col("_n")[c].alias(c) for c in val_cols],
-            F.lit("update_postimage").alias("_change_type"),
-        )
-        return inserts.unionByName(deletes).unionByName(pre).unionByName(post)
-
     def restore(self, version: int) -> int:
         """Roll the table back to `version` AS A NEW COMMIT (history
         is append-only; nothing is deleted, so the restore itself can
@@ -1943,15 +1321,12 @@ class LakeTable:
         whose create commit references the source snapshot's live
         files BY ABSOLUTE PATH — zero data copied, O(metadata) cost.
         The clone gets the source's schema, key columns, stats
-        columns, identity, column mapping and live deletion vectors
-        as of now; from then on the two logs evolve independently
-        (writes to the clone stage into ITS OWN data/ directory; COW
-        rewrites drop the absolute references file by file). CDF
-        HISTORY does not transfer (the clone's feed starts at its
-        create — Delta's rule), but the cdf_enabled PROPERTY inherits
-        like every other table property (r9; Delta clones inherit
-        delta.enableChangeDataFeed too): a clone of a CDF table
-        records change rows for its OWN commits from version 1 on.
+        columns, column mapping and live deletion vectors as of now;
+        from then on the two logs evolve independently (writes to the
+        clone stage into ITS OWN data/ directory; COW rewrites drop
+        the absolute references file by file). History does not
+        transfer: the clone's log starts at its create (Delta's
+        rule).
 
         Caveats (same as Delta): `vacuum()` on the clone never
         touches source files (it only sweeps the clone's own data
@@ -1974,21 +1349,15 @@ class LakeTable:
             "remove": [],
             "schema": head_entry["schema"],
             "key_cols": head_entry["key_cols"],
-            # the property lives in entry 0 only (never in later
-            # commit entries) — inherit from the source's entry 0
-            "cdf_enabled": self._cdf_enabled(),
             "column_mapping": _entry_mapping(head_entry),
             "retired_cols": head_entry.get("retired_cols") or [],
             "stats_cols": head_entry.get("stats_cols") or [],
-            "identity": head_entry.get("identity"),
             "cloned_from": {"root": os.path.abspath(self.root),
                             "version": head},
         }
         with open(_entry_path(dest_root, 0), "x") as f:
             json.dump(entry0, f, indent=1)
-        t = LakeTable(self.spark, dest_root) if self.spark else (
-            LakeTable.attach(dest_root)
-        )
+        t = LakeTable(self.spark, dest_root)
         t._commit("clone", add, [], expected_head=0)
         return t
 
@@ -2040,9 +1409,7 @@ class LakeTable:
         only the logical schema and the entry's column_mapping move.
         No data file is read or written. Time travel keeps old names
         at old versions (every entry carries the mapping in force).
-        Renaming a key column updates key_cols. Streams
-        planned under the old name fail on restart (non-additive
-        change — Delta's posture)."""
+        Renaming a key column updates key_cols."""
         head = self.latest_version()
         _, head_entry = self._live(head)
         schema = StructType.fromJson(json.loads(head_entry["schema"]))
@@ -2051,13 +1418,6 @@ class LakeTable:
             raise ValueError(f"no column {old!r}")
         if new in names:
             raise ValueError(f"column {new!r} already exists")
-        ident = self._identity()
-        if ident and old == ident["col"]:
-            raise ValueError(
-                f"{old!r} is the identity column; identity columns "
-                "cannot be renamed (their metadata is pinned at "
-                "create so every reader can resolve value ranges)"
-            )
         mapping = dict(_entry_mapping(head_entry))
         phys = mapping.pop(old, old)
         if new != phys:
@@ -2093,9 +1453,8 @@ class LakeTable:
         read again, and its physical name is RETIRED so a future
         add_column of the same logical name maps to a fresh physical
         name instead of resurrecting the dead bytes (Delta's
-        column-mapping drop). Key columns and the identity column
-        refuse; time travel still reads the column at old
-        versions."""
+        column-mapping drop). Key columns refuse; time travel still
+        reads the column at old versions."""
         head = self.latest_version()
         _, head_entry = self._live(head)
         schema = StructType.fromJson(json.loads(head_entry["schema"]))
@@ -2109,12 +1468,6 @@ class LakeTable:
             )
         if len(names) == 1:
             raise ValueError("cannot drop the only column")
-        ident = self._identity()
-        if ident and name == ident["col"]:
-            raise ValueError(
-                f"{name!r} is the identity column; identity columns "
-                "cannot be dropped"
-            )
         mapping = dict(_entry_mapping(head_entry))
         phys = mapping.pop(name, name)
         retired = list(head_entry.get("retired_cols") or [])
@@ -2160,7 +1513,6 @@ class LakeTable:
             "column_mapping": _entry_mapping(head_entry),
             "retired_cols": head_entry.get("retired_cols") or [],
             "stats_cols": head_entry.get("stats_cols") or [],
-            "identity": head_entry.get("identity"),
         }
         path = os.path.join(self.root, _TXN, f"_ckpt.{head:0{_WIDTH}d}.json")
         # unique tmp per writer: two concurrent checkpoint_log calls
@@ -2201,7 +1553,6 @@ class LakeTable:
             "column_mapping": ck.get("column_mapping") or {},
             "retired_cols": ck.get("retired_cols") or [],
             "stats_cols": ck.get("stats_cols") or [],
-            "identity": ck.get("identity"),
         }
         for e in tail_entries:
             for rec in e.get("add", []):
@@ -2210,72 +1561,3 @@ class LakeTable:
                 live.pop(p, None)
             schema_entry = e
         return list(live.values()), schema_entry
-
-    def apply_changes(
-        self,
-        changes: DataFrame,
-        op_col: str = "_op",
-        extra: dict | None = None,
-    ) -> int:
-        """CDC apply: one atomic commit for a mixed change batch.
-        `changes` carries the table columns plus `op_col` with
-        'upsert' or 'delete' per row (the change-data-feed shape a
-        CDC source emits). Matched keys are replaced or removed,
-        unmatched upserts insert, unmatched deletes no-op — all under
-        the same copy-on-write file pruning as merge(), in ONE
-        read-dependent commit (a downstream reader sees the whole
-        batch or none of it). Duplicate keys in one batch are
-        ambiguous — rejected."""
-        head = self.latest_version()
-        live, head_entry = self._live(head)
-        key_cols = head_entry["key_cols"]
-        # the SAME writer contract as merge (_conform, strict_original)
-        # with the op column riding through verbatim; key columns are
-        # required explicitly
-        missing_keys = [k for k in key_cols if k not in changes.columns]
-        if missing_keys:
-            raise ValueError(
-                f"change batch lacks key column(s) {missing_keys}"
-            )
-        # op_col must not collide with the schema: _conform(keep=)
-        # would emit two identically-named columns and every later
-        # reference would die with AMBIGUOUS_REFERENCE (r8 ADVICE);
-        # same for a table column named '_op', the pipeline's
-        # internal label the op column is renamed to.
-        field_names = {
-            f.name
-            for f in StructType.fromJson(
-                json.loads(head_entry["schema"])
-            ).fields
-        }
-        if op_col in field_names:
-            raise ValueError(
-                f"op_col {op_col!r} is a table column: the change "
-                "batch's operation column must not collide with the "
-                "schema — pass a differently-named op column"
-            )
-        if "_op" in field_names:
-            raise ValueError(
-                "table has a column named '_op', which apply_changes "
-                "uses internally for the operation label; this table "
-                "cannot take CDC batches through apply_changes"
-            )
-        ops = self._conform(
-            changes, head_entry, keep=(op_col,), strict_original=True
-        )
-        if op_col != "_op":
-            ops = ops.withColumnRenamed(op_col, "_op")
-        return self._keyed_rewrite(
-            ops, head, live, head_entry, "apply_changes", extra,
-            op_col=op_col,
-        )
-
-
-# functions of this module ride inside the worker-shipped streaming
-# source's readers (sources/lake.py) — keep the foreign-cwd pickling
-# contract uniform (CLAUDE.md invariant 2)
-import sys as _sys  # noqa: E402
-
-import pyspark as _pyspark  # noqa: E402
-
-_pyspark.cloudpickle.register_pickle_by_value(_sys.modules[__name__])

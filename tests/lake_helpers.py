@@ -1,6 +1,5 @@
-"""Second readers for lake tables, independent of `LakeTable.snapshot`:
-a DuckDB read straight from the commit log, and a drain of the
-`readStream.format("lake")` change feed."""
+"""A second reader for lake tables, independent of
+`LakeTable.snapshot`: a DuckDB read straight from the commit log."""
 
 from __future__ import annotations
 
@@ -17,13 +16,10 @@ def duckdb_snapshot(table, version=None) -> list[tuple]:
     data file with its `file_row_number`, minus the positions its
     deletion vectors name, projected to the logical schema under the
     column mapping. Columns a file lacks read as NULL (schema
-    evolution); NULL identity values take base + row·step from the
-    file's reserved range."""
+    evolution)."""
     live, head = table._live(version)
     names = [f["name"] for f in json.loads(head["schema"])["fields"]]
     cmap = head.get("column_mapping") or {}
-    ident = table._identity()
-    id_at = names.index(ident["col"]) if ident else None
     data = [r for r in live if r.get("kind") != "dv"]
     rows = []
     with duckdb.connect() as con:
@@ -49,7 +45,6 @@ def duckdb_snapshot(table, version=None) -> list[tuple]:
                 for n in names
             ]
             gone = deleted.get(_dv_key(rec["path"]), set())
-            base = rec.get("identity_base") if ident else None
             for pos, *vals in con.execute(
                 f"SELECT file_row_number, {', '.join(cols)} "
                 "FROM read_parquet(?, file_row_number = true)",
@@ -57,32 +52,5 @@ def duckdb_snapshot(table, version=None) -> list[tuple]:
             ).fetchall():
                 if pos in gone:
                     continue
-                if base is not None and vals[id_at] is None:
-                    vals[id_at] = base + pos * ident["step"]
                 rows.append(tuple(vals))
     return sorted(rows, key=repr)
-
-
-def stream_cdf(spark, root: str, out: str, start=0):
-    """Drain the change-feed stream of `root` from `startingVersion`
-    (exclusive) into parquet at `out` with an availableNow trigger and
-    return what it wrote."""
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    spark.dataSource.register(LakeDataSource)
-    df = (
-        spark.readStream.format("lake")
-        .option("path", root)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", start)
-        .load()
-    )
-    (
-        df.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", out + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(180)
-    )
-    return spark.read.schema(df.schema).parquet(out)

@@ -2,14 +2,12 @@
 metadata-only renames and drops with stable physical names — Delta's
 columnMapping design on the commit log. Verifies: no data file moves,
 time travel keeps per-version names, dropped bytes never resurrect,
-stats pruning tracks the physical identity, CDF and table_changes
-line up across renames, and the streaming source and an independent
-DuckDB read translate.
+stats pruning tracks the physical identity, and an independent
+DuckDB read translates.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -17,7 +15,7 @@ from pyspark.sql import functions as F
 
 from lcmap_firebird_spark.lakehouse import LakeTable
 
-from .lake_helpers import duckdb_snapshot, stream_cdf
+from .lake_helpers import duckdb_snapshot
 
 
 def _rows(df):
@@ -175,62 +173,6 @@ def test_checkpoint_carries_mapping(spark, table):
     assert t2.snapshot().columns == ["id", "name"]
 
 
-def test_table_changes_across_rename(spark, table):
-    v0 = table.latest_version()
-    table.rename_column("val", "value")
-    table.merge(
-        spark.createDataFrame(
-            [(1, "ONE", -1.0)], "id long, name string, value double"
-        )
-    )
-    ch = table.table_changes(v0)
-    assert set(ch.columns) == {"id", "name", "value", "_change_type"}
-    got = {
-        r["_change_type"]: r["value"]
-        for r in ch.filter("id = 1").collect()
-    }
-    assert got == {"update_preimage": 1.0, "update_postimage": -1.0}
-
-
-@pytest.fixture()
-def cdf_table(spark, tmp_path):
-    base = spark.createDataFrame(
-        [(i, float(i)) for i in range(10)], "id long, val double"
-    )
-    return LakeTable.create(
-        spark, str(tmp_path / "cdf"), base, key_cols=["id"],
-        enable_cdf=True,
-    )
-
-
-def test_read_cdf_across_rename(spark, cdf_table, tmp_path):
-    t = cdf_table
-    v_create = t.latest_version()
-    t.merge(spark.createDataFrame([(1, -1.0)], "id long, val double"))
-    t.rename_column("val", "value")
-    t.merge(spark.createDataFrame([(2, -2.0)], "id long, value double"))
-    # (v_create, head]: the two merges + the metadata-only rename;
-    # reading from 0 would also surface the create's derived inserts
-    ch = t.read_cdf(v_create)
-    assert set(ch.columns) == {
-        "id", "value", "_change_type", "_commit_version",
-    }
-    # the PRE-rename merge's change rows surface under the NEW name
-    pre = {
-        r["_change_type"]: r["value"]
-        for r in ch.filter("id = 1").collect()
-    }
-    assert pre == {"update_preimage": 1.0, "update_postimage": -1.0}
-    post = {
-        r["_change_type"]: r["value"]
-        for r in ch.filter("id = 2").collect()
-    }
-    assert post == {"update_preimage": 2.0, "update_postimage": -2.0}
-    # the change-feed stream agrees
-    ds = stream_cdf(spark, t.root, str(tmp_path / "cdf"), start=v_create)
-    assert _rows(ds.select(*ch.columns)) == _rows(ch)
-
-
 def test_datasource_read_write_after_rename(spark, table):
     table.rename_column("val", "value")
     assert table.snapshot().columns == ["id", "name", "value"]
@@ -263,25 +205,6 @@ def test_datasource_read_write_after_rename(spark, table):
     assert "val" in pq.read_schema(
         os.path.join(table.root, newest)
     ).names  # physical name in the staged file
-
-
-def test_stream_fails_fast_on_renamed_plan(spark, table):
-    """A stream planned under a logical name that was renamed away
-    must fail at construction (non-additive change), not silently
-    null-fill."""
-    from pyspark.sql.types import StructType
-
-    from lcmap_firebird_spark.sources.lake import _planned_col_map
-
-    head = table._live()[1]
-    planned = StructType.fromJson(json.loads(head["schema"]))
-    table.rename_column("val", "value")
-    with pytest.raises(ValueError, match="val"):
-        _planned_col_map(table.root, planned)
-    # the CURRENT schema resolves fine (and maps value -> val)
-    head2 = table._live()[1]
-    now = StructType.fromJson(json.loads(head2["schema"]))
-    assert _planned_col_map(table.root, now) == (("value", "val"),)
 
 
 def test_mor_deletes_and_compaction_across_rename(spark, table):

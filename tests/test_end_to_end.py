@@ -2,7 +2,7 @@
 
 documents -> heuristic + learned quality gates -> dedup ladder ->
 exact-substring cut -> token-budget mixture -> transactional lake
-table (writer surface) -> streaming read -> chunk -> pack. Every
+table (writer surface) -> snapshot read -> chunk -> pack. Every
 stage is an operator this repo ships; the assertions check the
 invariants that survive composition (no duplicates, budget bound,
 atomic table state, token conservation through packing).
@@ -69,27 +69,11 @@ def test_full_pipeline_composes(spark, sf_dir, tmp_path):
     assert t.snapshot().count() == n
     assert t.latest_version() == 1  # ONE atomic data commit
 
-    # stream the table out and feed the packing stage
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
+    # the table's one data commit feeds the packing stage
+    snap = t.snapshot()
+    assert snap.count() == n
 
-    spark.dataSource.register(LakeDataSource)
-    stream = (
-        spark.readStream.format("lake").option("path", root).load()
-    )
-    name = "e2e_corpus_stream"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
-    streamed = spark.table(name)
-    assert streamed.count() == n
-
-    chunks = chunk_documents(streamed, chunk_tokens=32, overlap=0)
+    chunks = chunk_documents(snap, chunk_tokens=32, overlap=0)
     packs = pack_sequences(chunks, seq_len=128)
     # token conservation: every chunk token lands in exactly one pack
     total_chunk_tokens = chunks.agg(F.sum("n_tokens")).first()[0]

@@ -9,14 +9,13 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from lcmap_firebird_spark.lakehouse import (
     ConcurrentWriteError,
     LakeTable,
 )
 
-from .lake_helpers import duckdb_snapshot, stream_cdf
+from .lake_helpers import duckdb_snapshot
 
 
 def _rows(df):
@@ -174,41 +173,6 @@ def test_vacuum_removes_only_unreferenced(spark, table):
     # vacuumed old version is gone (documented contract)
     with pytest.raises(Exception):
         table.snapshot(version=1).collect()
-
-
-def test_vacuum_vs_cdf_readers_on_old_offsets(spark, tmp_path):
-    """The r5-verdict interaction probe: an aggressive vacuum sweeps
-    change files of unprotected commits, and a CDF reader (or a
-    resuming CDF stream — same read path) pointed at a swept offset
-    must fail LOUDLY, never return a silently truncated feed. Change
-    files of protected commits stay readable."""
-    base = spark.createDataFrame(
-        [(i, float(i)) for i in range(20)], "id long, val double"
-    )
-    t = LakeTable.create(
-        spark, str(tmp_path / "vc"), base,
-        key_cols=["id"], enable_cdf=True,
-    )
-    t.merge(spark.createDataFrame([(1, 111.0)], "id long, val double"))
-    v_old_merge = t.latest_version()
-    t.merge(spark.createDataFrame([(2, 222.0)], "id long, val double"))
-    v_head = t.latest_version()
-    # pre-vacuum: the full feed reads fine
-    assert t.read_cdf(0).count() > 0
-    removed = t.vacuum(keep_last=1, retention_seconds=0)
-    assert any(p.endswith(".cdf.parquet") for p in removed), (
-        "expected the old merge's change file to be swept"
-    )
-    # offsets inside the protected window still work...
-    assert {
-        r["_change_type"] for r in t.read_cdf(v_head - 1).collect()
-    } >= {"update_preimage", "update_postimage"}
-    # ...and an old offset fails loudly (v_old_merge's change file
-    # and the create commit's add files are both gone)
-    with pytest.raises(Exception, match="(?i)path|exist|found"):
-        t.read_cdf(0).collect()
-    with pytest.raises(Exception, match="(?i)path|exist|found"):
-        t.read_cdf(v_old_merge - 1, v_old_merge).collect()
 
 
 def test_history(spark, table):
@@ -680,353 +644,14 @@ def test_delete_mor_restore_and_vacuum(spark, table):
         assert _os.path.exists(_os.path.join(table.root, p))
 
 
-def test_delete_mor_streaming_source_skips_dv_commits(spark, table, tmp_path):
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    spark.dataSource.register(LakeDataSource)
-    table.delete_mor("id < 90")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    q = (
-        spark.readStream.format("lake")
-        .option("path", table.root)
-        .load()
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    # the stream emits the APPEND history (100 original rows); the
-    # delete_mor commit itself contributes no rows
-    assert got.count() == 100
-
-
-def test_table_changes_across_mixed_commits(spark, table):
-    v0 = table.latest_version()
-    # one of everything: update, insert, two deletes
-    table.merge(
-        spark.createDataFrame(
-            [(5, "FIVE", 55.0), (300, "new", 3.0)],
-            "id long, name string, val double",
-        )
-    )
-    table.delete_mor("id = 7")
-    table.delete_mor("id = 8")
-    cdf = table.table_changes(v0).collect()
-    by_type = {}
-    for r in cdf:
-        by_type.setdefault(r["_change_type"], set()).add(r["id"])
-    assert by_type["insert"] == {300}
-    assert by_type["delete"] == {7, 8}
-    assert by_type["update_preimage"] == {5}
-    assert by_type["update_postimage"] == {5}
-    pre = [r for r in cdf if r["_change_type"] == "update_preimage"][0]
-    post = [r for r in cdf if r["_change_type"] == "update_postimage"][0]
-    assert pre["name"] == "name5" and post["name"] == "FIVE"
-    # no-change window → empty feed
-    assert table.table_changes(table.latest_version()).count() == 0
-    # bounded window: only the merge, not the later deletes
-    mid = table.table_changes(v0, v0 + 1)
-    assert {r["_change_type"] for r in mid.collect()} == {
-        "insert", "update_preimage", "update_postimage",
-    }
-
-
-@pytest.fixture()
-def cdf_table(spark, tmp_path):
-    base = spark.createDataFrame(
-        [(i, f"name{i}", float(i)) for i in range(100)],
-        "id long, name string, val double",
-    ).repartition(4, "id")
-    root = str(tmp_path / "cdftbl")
-    return LakeTable.create(
-        spark, root, base, key_cols=["id"], enable_cdf=True
-    )
-
-
-def test_cdf_per_commit_attribution(spark, cdf_table):
-    t = cdf_table
-    v0 = t.latest_version()
-    t.merge(
-        spark.createDataFrame(
-            [(5, "FIVE", 55.0), (300, "new", 3.0)],
-            "id long, name string, val double",
-        )
-    )
-    v_merge = t.latest_version()
-    t.append(
-        spark.createDataFrame(
-            [(400, "app", 4.0)], "id long, name string, val double"
-        )
-    )
-    v_append = t.latest_version()
-    t.delete_mor("id = 7")
-    v_del = t.latest_version()
-    t.delete_mor("id = 8")
-    v_mor = t.latest_version()
-    cdf = t.read_cdf(v0).collect()
-    by_commit = {}
-    for r in cdf:
-        by_commit.setdefault(r["_commit_version"], []).append(r)
-    # merge commit: pre+post for 5, insert for 300
-    m = {(r["_change_type"], r["id"]) for r in by_commit[v_merge]}
-    assert m == {
-        ("update_preimage", 5),
-        ("update_postimage", 5),
-        ("insert", 300),
-    }
-    pre = [r for r in by_commit[v_merge] if r["_change_type"] == "update_preimage"][0]
-    assert pre["name"] == "name5"  # the pre-image carries OLD values
-    # append commit: derived inserts, no change file written
-    a = {(r["_change_type"], r["id"]) for r in by_commit[v_append]}
-    assert a == {("insert", 400)}
-    import json as _json
-
-    from lcmap_firebird_spark.lakehouse import _entry_path
-
-    with open(_entry_path(t.root, v_append)) as f:
-        assert "cdf" not in _json.load(f)
-    # each delete commit records its own delete rows
-    assert {(r["_change_type"], r["id"]) for r in by_commit[v_del]} == {
-        ("delete", 7)
-    }
-    assert {(r["_change_type"], r["id"]) for r in by_commit[v_mor]} == {
-        ("delete", 8)
-    }
-    # bounded window
-    assert {r["_commit_version"] for r in t.read_cdf(v0, v_merge).collect()} == {
-        v_merge
-    }
-    # empty window
-    assert t.read_cdf(t.latest_version()).count() == 0
-
-
-def test_cdf_apply_changes_and_disabled_table(spark, cdf_table, table):
-    t = cdf_table
-    v0 = t.latest_version()
-    t.apply_changes(
-        spark.createDataFrame(
-            [
-                (5, "V", 5.5, "upsert"),     # matched upsert
-                (500, "I", 1.0, "upsert"),   # insert
-                (7, None, None, "delete"),   # matched delete
-                (999, None, None, "delete"), # unmatched delete: no-op
-            ],
-            "id long, name string, val double, _op string",
-        )
-    )
-    got = {
-        (r["_change_type"], r["id"]) for r in t.read_cdf(v0).collect()
-    }
-    assert got == {
-        ("update_preimage", 5),
-        ("update_postimage", 5),
-        ("insert", 500),
-        ("delete", 7),
-    }
-    # CDF replay reconstructs the table: apply inserts/post-images,
-    # drop deletes/pre-images over the v0 snapshot
-    with pytest.raises(ValueError, match="enable_cdf"):
-        table.read_cdf(0)
-
-
-def test_merge_equals_all_upsert_apply_changes(spark, tmp_path):
-    """merge(src) and apply_changes(src tagged _op='upsert') are one
-    rewrite: on twin CDF + identity tables they leave equal snapshots,
-    equal change feeds (batch and stream) and equal add/remove counts
-    per commit. The source mixes matched keys, new keys and a key a
-    delete_mor removed earlier (it inserts; its old row and the other
-    MOR-deleted row in the rewritten file stay gone)."""
-    schema = "id long, name string, val double"
-    src = spark.createDataFrame(
-        [(3, "THREE", -3.0), (5, "FIVE", -5.0), (7, "SEVEN", -7.0),
-         (100, "new", 1.0), (101, "new", 2.0)],
-        schema,
-    )
-    tables = []
-    for name in ("m", "a"):
-        t = LakeTable.create(
-            spark, str(tmp_path / name),
-            spark.createDataFrame(
-                [(i, f"name{i}", float(i)) for i in range(10)], schema
-            ).repartition(1),
-            key_cols=["id"], enable_cdf=True, identity="rid",
-        )
-        t.append(spark.createDataFrame(
-            [(i, f"name{i}", float(i)) for i in range(10, 20)], schema
-        ).repartition(1))
-        t.delete_mor("id IN (3, 4)")
-        tables.append(t)
-    m, a = tables
-    vm = m.merge(src)
-    va = a.apply_changes(src.withColumn("_op", F.lit("upsert")))
-    assert vm == va
-    assert [e["operation"] for e in m._entries()][-1] == "merge"
-    assert [e["operation"] for e in a._entries()][-1] == "apply_changes"
-
-    snap = _rows(m.snapshot())
-    assert snap == _rows(a.snapshot())
-    by_id = {r[0]: r for r in snap}
-    assert 4 not in by_id and by_id[3][1] == "THREE"
-    assert len(by_id) == 21
-
-    assert _rows(m.read_cdf(0).drop("_commit_version")) == _rows(
-        a.read_cdf(0).drop("_commit_version")
-    )
-    last = {
-        (r["_change_type"], r["id"])
-        for r in m.read_cdf(vm - 1).collect()
-    }
-    assert last == {
-        ("insert", 3), ("insert", 100), ("insert", 101),
-        ("update_preimage", 5), ("update_postimage", 5),
-        ("update_preimage", 7), ("update_postimage", 7),
-    }
-    assert _rows(stream_cdf(spark, m.root, str(tmp_path / "sm"))) == _rows(
-        stream_cdf(spark, a.root, str(tmp_path / "sa"))
-    )
-
-    def counts(t):
-        return [(len(e["add"]), len(e["remove"])) for e in t._entries()]
-
-    assert counts(m) == counts(a)
-
-
-def test_cdf_files_survive_vacuum_and_restore_diff(spark, cdf_table):
-    t = cdf_table
-    v0 = t.latest_version()
-    t.delete_mor("id < 10")
-    t.compact()  # the deleted rows' files leave the live set
-    t.vacuum(keep_last=1)  # default retention protects the window
-    assert {r["id"] for r in t.read_cdf(v0).collect()} == set(range(10))
-    # restore emits a snapshot-diff (the un-delete reappears)
-    t.restore(v0)
-    changes = t.read_cdf(v0)
-    restored = changes.filter("_change_type = 'insert'")
-    assert restored.filter("id < 10").count() == 10
-
-
-def test_cdf_batch_datasource_versioned_read(spark, cdf_table, tmp_path):
-    t = cdf_table
-    v0 = t.latest_version()
-    t.merge(
-        spark.createDataFrame(
-            [(5, "FIVE", 55.0)], "id long, name string, val double"
-        )
-    )
-    df = stream_cdf(spark, t.root, str(tmp_path / "cdf"), start=v0)
-    got = {(r["_change_type"], r["id"]) for r in df.collect()}
-    assert got == {("update_preimage", 5), ("update_postimage", 5)}
-    # equals the API surface
-    api = {
-        (r["_change_type"], r["id"]) for r in t.read_cdf(v0).collect()
-    }
-    assert got == api
-
-
-def test_cdf_streaming_source_tails_changes(spark, cdf_table, tmp_path):
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    spark.dataSource.register(LakeDataSource)
-    t = cdf_table
-    t.merge(
-        spark.createDataFrame(
-            [(5, "FIVE", 55.0), (300, "new", 3.0)],
-            "id long, name string, val double",
-        )
-    )
-    t.delete_mor("id = 8")
-    out = str(tmp_path / "cdfout")
-    ckpt = str(tmp_path / "cdfckpt")
-
-    def run():
-        q = (
-            spark.readStream.format("lake")
-            .option("path", t.root)
-            .option("readChangeFeed", "true")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run()
-    got = spark.read.parquet(out)
-    # create's 100 rows arrive as derived inserts; the merge commit's
-    # pre/post/insert and the MOR delete's change rows follow, each
-    # stamped with its commit version
-    assert got.filter("_change_type = 'insert' AND id < 100").count() == 100
-    m = {
-        (r["_change_type"], r["id"])
-        for r in got.filter("id IN (5, 300, 8)").collect()
-    }
-    assert ("update_preimage", 5) in m
-    assert ("update_postimage", 5) in m
-    assert ("insert", 300) in m
-    assert ("delete", 8) in m
-    n_before = got.count()
-    # exactly-once: tail only the NEW commit on resume
-    t.append(
-        spark.createDataFrame(
-            [(700, "tail", 7.0)], "id long, name string, val double"
-        )
-    )
-    run()
-    got2 = spark.read.parquet(out)
-    assert got2.count() == n_before + 1
-    new = got2.filter("id = 700").first()
-    assert new["_change_type"] == "insert"
-    assert new["_commit_version"] == t.latest_version()
-
-
-def test_apply_changes_mixed_batch_atomic(spark, table):
-    changes = spark.createDataFrame(
-        [
-            (5, "FIVE", 55.0, "upsert"),     # update existing
-            (300, "new", 3.0, "upsert"),     # insert
-            (7, None, None, "delete"),       # delete existing
-            (999, None, None, "delete"),     # delete absent: no-op
-        ],
-        "id long, name string, val double, _op string",
-    )
-    v0 = table.latest_version()
-    v = table.apply_changes(changes)
-    assert v == v0 + 1  # ONE commit for the whole batch
-    snap = table.snapshot()
-    assert snap.count() == 100  # 100 - 1 deleted + 1 inserted
-    assert snap.filter("id = 5").first().val == 55.0
-    assert snap.filter("id = 7").count() == 0
-    assert snap.filter("id = 300").first().name == "new"
-    # duplicate keys in one batch rejected
-    bad = spark.createDataFrame(
-        [(1, "a", 0.0, "upsert"), (1, None, None, "delete")],
-        "id long, name string, val double, _op string",
-    )
-    with pytest.raises(ValueError):
-        table.apply_changes(bad)
-
-
 def test_fused_preflight_edges(spark, table):
-    """r12 optimization regression: merge/apply_changes fold their
-    dup-guard, op-validity guard, and the stats-prune key ranges into
-    ONE source aggregation. Pin the edges the fusion must preserve:
-    (a) dup refusal takes precedence over bad-op refusal when a batch
-    has both; (b) an empty merge source commits cleanly and rewrites
-    nothing; (c) a source whose key column is entirely NULL behaves
-    like today's 'nothing can match' path (rows append, no rewrite)."""
-    both_bad = spark.createDataFrame(
-        [(1, "a", 0.0, "bogus"), (1, "b", 0.0, "bogus")],
-        "id long, name string, val double, _op string",
-    )
-    with pytest.raises(ValueError, match="duplicate keys"):
-        table.apply_changes(both_bad)
-
+    """r12 optimization regression: merge folds its dup-guard and
+    the stats-prune key ranges into ONE source aggregation. Pin the
+    edges the fusion must preserve (duplicate-key refusal is
+    test_merge_duplicate_source_keys_raise): (a) an empty merge source
+    commits cleanly and rewrites nothing; (b) a source whose key
+    column is entirely NULL behaves like today's 'nothing can match'
+    path (rows append, no rewrite)."""
     v0 = table.latest_version()
     empty = spark.createDataFrame(
         [], "id long, name string, val double"
@@ -1046,23 +671,6 @@ def test_fused_preflight_edges(spark, table):
         entry2 = json.load(f)
     assert entry2["remove"] == []  # NULL keys match nothing
     assert table.snapshot().filter("id is null").count() == 1
-
-
-def test_apply_changes_rejects_bad_op_values(spark, table):
-    # regression (round-4 ADVICE): every change key lands in the
-    # anti-join but only _op != 'delete' rows re-insert, so a NULL or
-    # misspelled _op silently DELETED its matched target row. Now it
-    # must error before any commit, leaving the table untouched.
-    v0 = table.latest_version()
-    for bad_op in ("delte", None, "DELETE"):
-        changes = spark.createDataFrame(
-            [(5, "x", 1.0, bad_op)],
-            "id long, name string, val double, _op string",
-        )
-        with pytest.raises(ValueError, match="invalid _op"):
-            table.apply_changes(changes)
-    assert table.latest_version() == v0
-    assert table.snapshot().filter("id = 5").count() == 1
 
 
 def test_append_retry_carries_concurrent_schema_evolution(spark, table):
@@ -1296,37 +904,6 @@ def test_delete_null_predicate_rows_survive(spark, tmp_path):
     assert _rows(t.snapshot()) == [(1, None), (3, 2.0)]
 
 
-def test_cdf_and_table_changes_span_schema_evolution(spark, tmp_path):
-    root = str(tmp_path / "etbl")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, "a")], "id long, name string"),
-        key_cols=["id"],
-        enable_cdf=True,
-    )
-    t.append(spark.createDataFrame([(2, "b")], "id long, name string"))
-    v_pre = t.latest_version()
-    t.add_column("x", "int")
-    t.append(
-        spark.createDataFrame([(3, "c", 7)], "id long, name string, x int")
-    )
-    # read_cdf across the evolution: old-schema parts null-fill up
-    # to the final schema instead of crashing the union
-    cdf = t.read_cdf(0)
-    assert cdf.columns == ["id", "name", "x", "_change_type", "_commit_version"]
-    got = sorted(
-        (r["id"], r["x"], r["_change_type"]) for r in cdf.collect()
-    )
-    assert got == [(1, None, "insert"), (2, None, "insert"), (3, 7, "insert")]
-    # table_changes across the evolution: the old snapshot is
-    # null-filled, so the post-evolution insert registers cleanly
-    tc = t.table_changes(v_pre)
-    assert sorted((r["id"], r["x"], r["_change_type"]) for r in tc.collect()) == [
-        (3, 7, "insert")
-    ]
-
-
 def test_cluster_on_string_keys_lexicographic(spark, tmp_path):
     """Multi-column clustering on non-numeric keys falls back to
     lexicographic range clustering instead of crashing on str-str
@@ -1356,7 +933,7 @@ def test_describe_detail_metadata_only(spark, table):
     d0 = table.describe_detail()
     assert d0["physical_rows"] == d0["live_rows"] == 100
     assert d0["num_dv_files"] == 0 and d0["deleted_rows"] == 0
-    assert d0["key_cols"] == ["id"] and d0["cdf_enabled"] is False
+    assert d0["key_cols"] == ["id"]
     assert d0["bytes"] > 0 and d0["num_data_files"] >= 1
     table.delete_mor("id < 30")
     d1 = table.describe_detail()
@@ -1396,31 +973,6 @@ def test_append_conforms_to_table_schema(spark, table):
     assert dict(table.snapshot().dtypes)["val"] == "double"
 
 
-def test_table_changes_with_duplicate_keys_multiset_diff(spark, tmp_path):
-    root = str(tmp_path / "duptbl")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, "a")], "k long, v string"),
-        key_cols=["k"],
-    )
-    v1 = t.latest_version()
-    # duplicate key lands legally via append
-    t.append(spark.createDataFrame([(1, "b"), (2, "c")], "k long, v string"))
-    tc = t.table_changes(v1)
-    got = sorted((r["k"], r["v"], r["_change_type"]) for r in tc.collect())
-    # exact multiset diff: two inserts, no phantom update pair for
-    # k=1 and no spurious delete of the original row
-    assert got == [(1, "b", "insert"), (2, "c", "insert")]
-    # removing one of the two k=1 rows shows as exactly one delete
-    v2 = t.latest_version()
-    t.delete_mor("v = 'b'")
-    tc2 = t.table_changes(v2)
-    assert sorted(
-        (r["k"], r["v"], r["_change_type"]) for r in tc2.collect()
-    ) == [(1, "b", "delete")]
-
-
 def test_restore_detects_concurrent_vacuum_sweep(spark, table, monkeypatch):
     """A vacuum racing a restore can sweep the resurrected files
     between restore's precheck and its commit: the post-commit
@@ -1454,61 +1006,6 @@ def test_restore_detects_concurrent_vacuum_sweep(spark, table, monkeypatch):
     # the head is the compensating commit: pre-restore state, readable
     assert _rows(table.snapshot()) == pre
     assert table.history()[-1]["operation"] == "restore"
-
-
-def test_cdf_stream_startingversion_resumes_past_restore(spark, tmp_path):
-    from lcmap_firebird_spark.sources.lake import LakeDataSource
-
-    try:
-        spark.dataSource.register(LakeDataSource)
-    except Exception:
-        pass
-    root = str(tmp_path / "cdfres")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, 1.0)], "k long, v double"),
-        key_cols=["k"],
-        enable_cdf=True,
-    )
-    t.append(spark.createDataFrame([(2, 2.0)], "k long, v double"))
-    v_pre = t.latest_version()
-    t.restore(v_pre - 1)  # non-streamable commit
-    t.append(spark.createDataFrame([(3, 3.0)], "k long, v double"))
-
-    def drain(ckpt, out, start=None):
-        r = (
-            spark.readStream.format("lake")
-            .option("path", root)
-            .option("readChangeFeed", "true")
-        )
-        if start is not None:
-            r = r.option("startingVersion", start)
-        q = (
-            r.load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.schema(
-            "k long, v double, _change_type string, _commit_version long"
-        ).parquet(out)
-
-    # from history start the range spans the restore: fail fast
-    with pytest.raises(Exception, match="restore"):
-        drain(str(tmp_path / "c0"), str(tmp_path / "o0"))
-    # startingVersion just past the restore resumes the feed
-    out = drain(
-        str(tmp_path / "c1"), str(tmp_path / "o1"), start=v_pre + 1
-    )
-    rows = sorted(
-        (r["k"], r["_change_type"], r["_commit_version"])
-        for r in out.collect()
-    )
-    assert rows == [(3, "insert", v_pre + 2)]
 
 
 def test_incremental_cluster(spark, tmp_path):
@@ -1585,49 +1082,6 @@ def test_history_operation_metrics(spark, table):
     assert table.history()[-1]["rows_added"] == 0
 
 
-def test_clone_inherits_cdf_and_streams_changes(spark, tmp_path):
-    """r9 (r8 VERDICT #2): a clone of a CDF table inherits the
-    cdf_enabled PROPERTY (Delta's property inheritance; history still
-    never transfers — the clone's feed starts at ITS create). The
-    clone-commit's referenced files derive as inserts on every feed
-    with the transferred deletion vectors APPLIED, so a MOR-deleted
-    source row never appears as a clone insert: batch read_cdf and
-    the STREAMING CDF source agree, and per-window replay closure
-    holds from version 0."""
-    from pyspark.sql import functions as F
-
-    src_root = str(tmp_path / "cdfsrc")
-    t = LakeTable.create(
-        spark,
-        src_root,
-        spark.createDataFrame(
-            [(i, f"v{i}") for i in range(1, 7)], "id long, val string"
-        ),
-        key_cols=["id"],
-        enable_cdf=True,
-    )
-    t.delete_mor("id <= 2")  # DVs transfer to the clone by reference
-    c = t.clone(str(tmp_path / "cdfclone"))
-    assert c._cdf_enabled()
-    c.append(spark.createDataFrame([(99, "new")], "id long, val string"))
-
-    def _inserts(df):
-        return sorted(
-            (r["id"], r["val"], r["_commit_version"])
-            for r in df.filter(F.col("_change_type") == "insert").collect()
-        )
-
-    want = [(3, "v3", 1), (4, "v4", 1), (5, "v5", 1), (6, "v6", 1), (99, "new", 2)]
-    assert _inserts(c.read_cdf(0)) == want
-    assert _inserts(stream_cdf(spark, c.root, str(tmp_path / "cdf"))) == want
-
-    # replay closure from the clone's empty v0 through both commits
-    snap = sorted((r["id"], r["val"]) for r in c.snapshot().collect())
-    assert snap == [(3, "v3"), (4, "v4"), (5, "v5"), (6, "v6"), (99, "new")]
-    # mutating the clone never wrote a change file into the source
-    assert t.read_cdf(1).filter(F.col("id") == 99).count() == 0
-
-
 def test_stats_cols_prune_from_birth(spark, tmp_path):
     """A declared stats column lands in every commit's per-file
     stats: file pruning on it works without any retroactive
@@ -1701,3 +1155,40 @@ def test_one_row_append_adds_one_live_file(spark, tmp_path):
     assert len(live) == 1
     assert live[0]["rows"] == 1
     assert live[0]["stats"]["id"] == [100, 100]
+
+
+def test_signature_store_on_lakehouse_merge(spark, tmp_path):
+    """Cross-module integration: the incremental-dedup signature
+    store persisted as a lakehouse table. N transactional merges of
+    per-batch signatures reproduce the one-shot signature table
+    exactly (merge semantics == operators/incremental.merge_batch:
+    re-ingested doc_ids refresh their state), with every batch an
+    atomic, time-travelable commit."""
+    from lcmap_firebird_spark.operators.incremental import signature_table
+
+    docs = [
+        (i, f"doc number {i} body " + " ".join(f"w{i}x{j}" for j in range(8)))
+        for i in range(30)
+    ]
+    batches = [docs[:10], docs[10:20], docs[15:30]]  # overlap re-ingests
+    root = str(tmp_path / "sigstore")
+    t = None
+    for b in batches:
+        bdf = spark.createDataFrame(b, "doc_id long, text string")
+        sigs = signature_table(bdf)
+        if t is None:
+            t = LakeTable.create(spark, root, sigs, key_cols=["doc_id"])
+        else:
+            t.merge(sigs)
+    all_df = spark.createDataFrame(docs, "doc_id long, text string")
+    one_shot = signature_table(all_df)
+    cols = sorted(one_shot.columns)
+    want = sorted(
+        tuple(r[c] for c in cols) for r in one_shot.collect()
+    )
+    got = sorted(
+        tuple(r[c] for c in cols) for r in t.snapshot().collect()
+    )
+    assert got == want
+    # the store's history is per-batch time travel
+    assert t.snapshot(version=1).count() == 10

@@ -1,10 +1,9 @@
 """Combined lakehouse feature-mix fuzz (r7 VERDICT next-round #5):
-column mapping (rename + drop + re-add of the SAME logical name),
-identity columns, and shallow clones interleaved with every rewrite
-class (append/merge/delete then compact/delete/apply_changes/compact
-at two sizes/cluster/restore) in ONE random mix — feature
-interactions are where the r5-r7 bugs clustered (CDF column rebirth,
-vacuum-vs-clone).
+column mapping (rename + drop + re-add of the SAME logical name)
+and shallow clones interleaved with every rewrite class
+(append/merge/delete then compact/delete/compact at two
+sizes/cluster/restore) in ONE random mix — feature interactions are
+where the r5-r7 bugs clustered (column rebirth, vacuum-vs-clone).
 
 Model notes:
 - the extra column is tracked per row as (generation, value): a
@@ -14,9 +13,7 @@ Model notes:
 - restore keeps the NEWER schema (documented in lakehouse.restore)
   but re-references the target version's files, so the model rolls
   data back while the column state stays put.
-- identity values are asserted non-NULL and unique at every step
-  (their exact values depend on commit internals, deliberately
-  unmodeled); clone appends must not disturb the source.
+- clone appends must not disturb the source.
 
 Default run pins two seeds; set SPARK_GRAFT_FUZZ_SEEDS=n to sweep n
 random seeds (the r8 closeout ran 12)."""
@@ -26,7 +23,6 @@ from __future__ import annotations
 import copy
 import os
 import random
-from collections import Counter
 
 import pytest
 
@@ -37,62 +33,15 @@ from .helpers import skip_unless_slow
 skip_unless_slow("combined-feature fuzz mix (~260 s)")
 
 
-def _replay(base: Counter, change_rows) -> Counter:
-    out = Counter(base)
-    for row, kind in change_rows:
-        if kind in ("delete", "update_preimage"):
-            out[row] -= 1
-            if out[row] <= 0:
-                del out[row]
-        elif kind in ("insert", "update_postimage"):
-            out[row] += 1
-        else:
-            raise AssertionError(f"unexpected _change_type {kind!r}")
-    return out
-
-
-def _closure_check(t, v_prev, v_cur, use_cdf, ctx):
-    """snapshot(v_prev) ⊎ changes(v_prev, v_cur) == snapshot(v_cur)
-    as multisets — across renames, add/drop (physical-identity
-    relabel), identity values, and every rewrite class. Checked for
-    BOTH feeds: table_changes (snapshot diff) and, when the table
-    records CDF, read_cdf (per-commit change rows). Rows compare in
-    v_cur's logical space, identity column INCLUDED."""
-    cols = t.snapshot(version=v_cur).columns
-    _, e_prev = t._live(v_prev)
-    _, e_cur = t._live(v_cur)
-    base = Counter(
-        tuple(r)
-        for r in t._relabel(t.snapshot(version=v_prev), e_prev, e_cur)
-        .select(*cols)
-        .collect()
-    )
-    want = Counter(
-        tuple(r) for r in t.snapshot(version=v_cur).select(*cols).collect()
-    )
-    feeds = [("table_changes", t.table_changes(v_prev, v_cur))]
-    if use_cdf:
-        feeds.append(("read_cdf", t.read_cdf(v_prev, v_cur)))
-    for feed_name, ch in feeds:
-        rows = [
-            (tuple(r)[:-1], r["_change_type"])
-            for r in ch.select(*cols, "_change_type").collect()
-        ]
-        got = _replay(base, rows)
-        assert got == want, (
-            f"{ctx}: {feed_name} replay {v_prev}->{v_cur} diverged"
-        )
-
-
-def test_apply_changes_writer_contract(spark, tmp_path):
-    """Point regression for the r8 combined-mix finding: apply_changes
-    follows the SAME writer contract as append/merge (_conform) —
-    a change batch omitting an evolution-added column null-fills it
-    (pre-evolution CDC sources stay valid after add_column), and a
-    misspelled column raises instead of silently dropping its data
-    (the old hand-rolled projection crashed on the former and
-    ignored the latter)."""
-    root = str(tmp_path / "cdc")
+def test_merge_writer_contract(spark, tmp_path):
+    """Point regression for the r8 combined-mix finding: merge follows
+    the SAME writer contract as append (_conform) — a source omitting
+    an evolution-added column null-fills it (pre-evolution writers
+    stay valid after add_column), a misspelled column raises instead
+    of silently dropping its data, and an absent key column is
+    refused instead of null-filled into the match (the old
+    hand-rolled projection crashed on the first)."""
+    root = str(tmp_path / "wc")
     t = LakeTable.create(
         spark,
         root,
@@ -100,40 +49,21 @@ def test_apply_changes_writer_contract(spark, tmp_path):
         key_cols=["id"],
     )
     t.add_column("extra", "double")
-    # pre-evolution CDC shape: no `extra` column
-    t.apply_changes(
-        spark.createDataFrame(
-            [(1, "a2", "upsert"), (2, None, "delete")],
-            "id long, name string, _op string",
-        )
-    )
-    rows = sorted(tuple(r) for r in t.snapshot().collect())
-    assert rows == [(1, "a2", None)]
-    # misspelled column: loud, not silent data loss
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="nme"):
-        t.apply_changes(
-            spark.createDataFrame(
-                [(3, "x", "upsert")], "id long, nme string, _op string"
-            )
-        )
-    # merge shares the contract (its hand-rolled projection crashed
-    # on the same omission — found by the CDF-crossed mix, r8)
+    # pre-evolution shape: no `extra` column (its hand-rolled
+    # projection crashed on this omission — found by the mix, r8)
     t.merge(spark.createDataFrame([(1, "a3"), (5, "e")], "id long, name string"))
     rows = sorted(tuple(r) for r in t.snapshot().collect())
-    assert rows == [(1, "a3", None), (5, "e", None)]
+    assert rows == [(1, "a3", None), (2, "b", None), (5, "e", None)]
+    # misspelled column: loud, not silent data loss
+    with pytest.raises(ValueError, match="nme"):
+        t.merge(spark.createDataFrame([(3, "x")], "id long, nme string"))
     # an absent KEY column is refused, never null-filled into a merge
-    with _pytest.raises(ValueError, match="key column"):
+    with pytest.raises(ValueError, match="key column"):
         t.merge(spark.createDataFrame([("x",)], "name string"))
-    with _pytest.raises(ValueError, match="key column"):
-        t.apply_changes(
-            spark.createDataFrame([("x", "upsert")], "name string, _op string")
-        )
 
 
 def test_strict_original_conform(spark, tmp_path):
-    """r8 ADVICE: merge/apply_changes confine the silent null-fill to
+    """r8 ADVICE: merge confines the silent null-fill to
     EVOLUTION-ADDED columns. A source omitting a create-time column
     raises (the fill would NULL-overwrite existing values on update);
     the evolution-added fill keeps working; tracking is by PHYSICAL
@@ -148,15 +78,9 @@ def test_strict_original_conform(spark, tmp_path):
         ),
         key_cols=["id"],
     )
-    # omit ORIGINAL column `val` -> loud, both writers
+    # omit ORIGINAL column `val` -> loud
     with pytest.raises(ValueError, match="original-schema"):
         t.merge(spark.createDataFrame([(1, "a2")], "id long, name string"))
-    with pytest.raises(ValueError, match="original-schema"):
-        t.apply_changes(
-            spark.createDataFrame(
-                [(1, "a2", "upsert")], "id long, name string, _op string"
-            )
-        )
     # evolution-added columns still null-fill silently
     t.add_column("extra", "double")
     t.merge(
@@ -186,42 +110,6 @@ def test_strict_original_conform(spark, tmp_path):
     assert t.snapshot().filter("id = 9").count() == 1
 
 
-def test_apply_changes_op_col_collision_rejected(spark, tmp_path):
-    """r8 ADVICE: op_col equal to a table column used to reach
-    _conform(keep=) and emit two identically-named columns (every
-    later reference died with AMBIGUOUS_REFERENCE) — now rejected up
-    front; so is a table whose schema claims the internal '_op'
-    label."""
-    root = str(tmp_path / "opcol")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(1, "up")], "id long, op string"),
-        key_cols=["id"],
-    )
-    with pytest.raises(ValueError, match="op_col"):
-        t.apply_changes(
-            spark.createDataFrame(
-                [(1, "up", "upsert")], "id long, op string, opx string"
-            ),
-            op_col="op",
-        )
-    root2 = str(tmp_path / "opcol2")
-    t2 = LakeTable.create(
-        spark,
-        root2,
-        spark.createDataFrame([(1, "x")], "id long, _op string"),
-        key_cols=["id"],
-    )
-    with pytest.raises(ValueError, match="_op"):
-        t2.apply_changes(
-            spark.createDataFrame(
-                [(1, "x", "upsert")], "id long, _op string, myop string"
-            ),
-            op_col="myop",
-        )
-
-
 def _seeds():
     n = int(os.environ.get("SPARK_GRAFT_FUZZ_SEEDS", "0"))
     if n:
@@ -249,10 +137,6 @@ def _got(t, cols, extra_live, version=None):
     return sorted(tuple(r) for r in rows)
 
 
-def _rids(t):
-    return [r["rid"] for r in t.snapshot().select("rid").collect()]
-
-
 @pytest.mark.parametrize("seed", _seeds())
 def test_combined_feature_mix(spark, tmp_path, seed):
     rng = random.Random(seed)
@@ -267,8 +151,6 @@ def test_combined_feature_mix(spark, tmp_path, seed):
             "id long, name string, val double",
         ),
         key_cols=["id"],
-        identity="rid",
-        enable_cdf=True,
         # a declared stats column that the rename op moves
         stats_cols=["val"],
     )
@@ -279,10 +161,9 @@ def test_combined_feature_mix(spark, tmp_path, seed):
     # per-version record: (model snapshot, cols, extra_gen)
     history = {t.latest_version(): (copy.deepcopy(model), dict(cols), extra_gen)}
     clone_n = 0
-    # r9: the first clone becomes a persistent CDF leg mutated every
-    # step alongside the source (schema/cols frozen at clone time —
-    # data ops only), with independent replay closure on BOTH tables
-    # and cross-contamination checks after every mutation
+    # r9: the first clone becomes a persistent leg mutated every
+    # step alongside the source, with cross-contamination checks
+    # after every mutation
     active_clone: dict | None = None
 
     def _wschema(with_extra):
@@ -294,15 +175,13 @@ def test_combined_feature_mix(spark, tmp_path, seed):
     # checkpoint replays) without touching the seeded op sequence of
     # the default run's prefix
     n_steps = int(os.environ.get("SPARK_GRAFT_FUZZ_STEPS", "20"))
-    last = n_steps - 1
     for step in range(n_steps):
-        v_before = t.latest_version()
         op = rng.choice(
             [
                 "append", "merge", "delete", "delete_mor",
-                "apply_changes", "compact", "compact_deletes",
-                "cluster", "restore", "rename", "addcol", "dropcol",
-                "clone", "checkpoint", "safe_vacuum",
+                "compact", "compact_deletes", "cluster", "restore",
+                "rename", "addcol", "dropcol", "clone", "checkpoint",
+                "safe_vacuum",
             ]
         )
         if op == "append":
@@ -353,25 +232,6 @@ def test_combined_feature_mix(spark, tmp_path, seed):
             model = {
                 k: v for k, v in model.items() if not (lo <= k < lo + 200)
             }
-        elif op == "apply_changes":
-            dels = []
-            if model:
-                victim = rng.choice(sorted(model))
-                dels = [(victim, None, None, "delete")]
-                model.pop(victim)
-            ups = [(next_id, f"c{step}", 9.0, "upsert")]
-            model[next_id] = (
-                f"c{step}",
-                9.0,
-                extra_gen if extra_gen is not None else -1,
-                None,
-            )
-            next_id += 1
-            t.apply_changes(
-                spark.createDataFrame(
-                    ups + dels, _wschema(False) + ", _op string"
-                )
-            )
         elif op == "compact":
             t.compact(target_rows=1_000)
         elif op == "compact_deletes":
@@ -409,7 +269,7 @@ def test_combined_feature_mix(spark, tmp_path, seed):
                 gen_counter += 1
         elif op == "checkpoint":
             # log checkpoint: pure metadata, no row change — crosses
-            # checkpointed-log replay with mapping/identity/CDF state
+            # checkpointed-log replay with mapping state
             t.checkpoint_log()
         elif op == "safe_vacuum":
             # conservative sweep (huge retention): must delete NOTHING
@@ -425,17 +285,8 @@ def test_combined_feature_mix(spark, tmp_path, seed):
             ), f"step {step}: clone != model"
             if active_clone is None:
                 # r9 (r8 VERDICT #2): the FIRST clone becomes a
-                # persistent CDF-ENABLED leg — cdf_enabled inherits
-                # from the source (Delta property inheritance), its
-                # feed starts at ITS create, and from here on BOTH
-                # tables keep mutating with independent per-step
-                # replay closure. Certify the initial-population
-                # closure (clone v1 adds derive as inserts) up front.
-                assert c._cdf_enabled(), "clone did not inherit cdf"
-                _closure_check(
-                    c, 0, c.latest_version(), use_cdf=True,
-                    ctx=f"seed {seed} step {step} (clone v1)",
-                )
+                # persistent leg — from here on BOTH tables keep
+                # mutating independently.
                 active_clone = {
                     "t": c,
                     "model": copy.deepcopy(model),
@@ -465,17 +316,10 @@ def test_combined_feature_mix(spark, tmp_path, seed):
                         [(90_000 + step, "cl", -1.0)], _wschema(False)
                     )
                 )
-                crids = [
-                    r["rid"] for r in c.snapshot().select("rid").collect()
-                ]
-                assert None not in crids and len(set(crids)) == len(crids)
 
         got = _got(t, cols, extra_gen is not None)
         want = _display(model, extra_gen)
         assert got == want, f"seed {seed} step {step} ({op}): snapshot != model"
-        rids = _rids(t)
-        assert None not in rids, f"step {step}: NULL identity value"
-        assert len(set(rids)) == len(rids), f"step {step}: identity collision"
         v_after = t.latest_version()
 
         if active_clone is not None and active_clone["t"].root != t.root:
@@ -506,9 +350,9 @@ def test_combined_feature_mix(spark, tmp_path, seed):
             cv_before = c.latest_version()
             cop = rng.choice(
                 [
-                    "append", "merge", "delete", "apply_changes",
-                    "compact", "rename", "togglecol", "restore",
-                    "checkpoint", "ckpt_restore",
+                    "append", "merge", "delete", "compact", "rename",
+                    "togglecol", "restore", "checkpoint",
+                    "ckpt_restore",
                 ]
             )
             if cop == "append":
@@ -537,24 +381,6 @@ def test_combined_feature_mix(spark, tmp_path, seed):
                 c.compact(target_rows=1_000)
                 for k in [k for k in cm if k % cut == 1]:
                     cm.pop(k)
-            elif cop == "apply_changes":
-                dels = []
-                if cm:
-                    victim = rng.choice(sorted(cm))
-                    dels = [
-                        _crow(victim, None, None, None) + ("delete",)
-                    ]
-                    cm.pop(victim)
-                k = ac["next_id"]
-                ac["next_id"] += 1
-                ev = 8.5 if c_has_extra else None
-                ups = [_crow(k, f"cc{step}", 8.0, ev) + ("upsert",)]
-                cm[k] = (f"cc{step}", 8.0, cgen if cgen is not None else -1, ev)
-                c.apply_changes(
-                    spark.createDataFrame(
-                        ups + dels, _cschema(", _op string")
-                    )
-                )
             elif cop == "compact":
                 c.compact(target_rows=1_000)
             elif cop == "rename":
@@ -594,7 +420,7 @@ def test_combined_feature_mix(spark, tmp_path, seed):
             elif cop == "checkpoint":
                 # r10 (round-11 candidate pulled forward): checkpoint
                 # the CLONE's log mid-mix — checkpointed replay must
-                # carry the clone's own mapping/identity
+                # carry the clone's own mapping
                 # state, restores to pre-checkpoint versions (clone
                 # restore op) fall back to full replay, and the
                 # checkpoint file lives in the CLONE's _txn, never the
@@ -647,21 +473,11 @@ def test_combined_feature_mix(spark, tmp_path, seed):
             # before asserting
             ccols, cgen = ac["cols"], ac["extra_gen"]
             c_has_extra = cgen is not None
-            # clone == its own model, identity hygiene holds
+            # clone == its own model
             assert _got(c, ccols, c_has_extra) == _display(cm, cgen), (
                 f"seed {seed} step {step} (clone {cop}): clone != model"
             )
-            crids = _rids(c)
-            assert None not in crids and len(set(crids)) == len(crids), (
-                f"seed {seed} step {step}: clone identity broke"
-            )
-            # per-step replay closure on the CLONE's own CDF feed
             cv_after = c.latest_version()
-            if cv_after > cv_before and (rng.random() < 0.5 or step == last):
-                _closure_check(
-                    c, cv_before, cv_after, use_cdf=True,
-                    ctx=f"seed {seed} step {step} (clone {cop})",
-                )
             # cross-contamination: mutating the clone moved NOTHING
             # on the source (histories are independent logs)
             assert t.latest_version() == v_after, (
@@ -675,14 +491,6 @@ def test_combined_feature_mix(spark, tmp_path, seed):
                 copy.deepcopy(cm),
                 dict(ccols),
                 cgen,
-            )
-        if v_after > v_before and (rng.random() < 0.4 or step == last):
-            # CDF replay closure across THIS step's commit(s): crosses
-            # the recorded change feed with identity values, renames,
-            # add/drop generations, and whatever rewrite just ran
-            _closure_check(
-                t, v_before, v_after, use_cdf=True,
-                ctx=f"seed {seed} step {step} ({op})",
             )
         history[v_after] = (
             copy.deepcopy(model),

@@ -1,7 +1,7 @@
 """Model-based lakehouse check: a deterministic pseudo-random
 sequence of mixed table operations (append / merge / delete then
-compact / delete / apply_changes / compact (twice, two sizes) / cluster /
-restore / metadata-only column RENAME)
+compact / delete / compact (twice, two sizes) / cluster / restore /
+metadata-only column RENAME)
 mirrored against an in-memory dict model — after EVERY step the
 snapshot must equal the model, and at the end every historical
 version must still time-travel to its recorded state (except those
@@ -67,8 +67,8 @@ def test_random_op_sequence_matches_dict_model(spark, tmp_path, seed):
         op = rng.choice(
             [
                 "append", "merge", "delete", "delete_mor",
-                "apply_changes", "compact", "compact_deletes",
-                "cluster", "restore", "rename",
+                "compact", "compact_deletes", "cluster", "restore",
+                "rename",
             ]
         )
         if op == "append":
@@ -97,27 +97,6 @@ def test_random_op_sequence_matches_dict_model(spark, tmp_path, seed):
             model = {
                 k: v for k, v in model.items() if not (lo <= k < lo + 300)
             }
-        elif op == "apply_changes":
-            # pick the delete victim BEFORE inserting the fresh
-            # upsert key into the model: a victim chosen after could
-            # collide with the new id, producing an upsert+delete of
-            # the same key in one batch — which the engine correctly
-            # REJECTS as ambiguous ('duplicate keys in change
-            # batch'; pinned in test_lakehouse.py), found by the
-            # r7 30-seed fuzz (seeds 2024/9999)
-            dels = []
-            if model:
-                victim = rng.choice(sorted(model))
-                dels = [(victim, None, None, "delete")]
-                model.pop(victim)
-            ups = [(next_id, f"c{step}", 9.0, "upsert")]
-            model[next_id] = (f"c{step}", 9.0)
-            next_id += 1
-            t.apply_changes(
-                spark.createDataFrame(
-                    ups + dels, _schema() + ", _op string"
-                )
-            )
         elif op == "compact":
             t.compact(target_rows=1_000)
         elif op == "compact_deletes":

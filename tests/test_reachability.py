@@ -38,8 +38,6 @@ TEST_ONLY = {
     "operators.web",
     "sources.ardgen",
     "sources.formats",
-    "sources.lake",
-    "streaming.lake_sink",
 }
 
 

@@ -200,7 +200,6 @@ def test_every_worker_entry_point_drops_zip_finders():
         "operators/bpe.py",
         "operators/pipeline.py",
         "sources/external.py",
-        "sources/lake.py",
         "sources/ardgen.py",
         "streaming/events.py",
     } <= shipping

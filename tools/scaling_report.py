@@ -171,32 +171,6 @@ def _probe_lake_cluster(spark, sf):
     return t.snapshot()
 
 
-def _probe_lake_cdf(spark, sf):
-    """Change-data-feed lifecycle: cdf-enabled create, a merge that
-    revises a segment, then the exact per-commit change feed."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from lcmap_firebird_spark.catalog import read_table
-    from lcmap_firebird_spark.lakehouse import LakeTable
-    from pyspark.sql import functions as F
-
-    cust = read_table(spark, "customer", sf).select(
-        "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
-    )
-    root = tempfile.mkdtemp(prefix="scal_cdf_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    t = LakeTable.create(
-        spark, root, cust, key_cols=["c_custkey"], enable_cdf=True
-    )
-    updates = cust.filter(F.col("c_mktsegment") == "BUILDING").withColumn(
-        "c_acctbal", F.lit(0.0)
-    )
-    t.merge(updates)
-    return t.read_cdf(1)
-
-
 EXTRA_PROBES = [
     ("pagerank_events_graph", _probe_pagerank),
     ("bm25_topk_3q", _probe_bm25),
@@ -206,7 +180,6 @@ EXTRA_PROBES = [
     ("bpe_train60_encode", _probe_bpe),
     ("dsir_select_100", _probe_dsir),
     ("lake_mor_cluster_snapshot", _probe_lake_cluster),
-    ("lake_cdf_merge_feed", _probe_lake_cdf),
 ]
 
 
