@@ -169,19 +169,15 @@ def _stats_intersect(rec: dict, ranges: dict, mapping: dict) -> bool:
     """True when the add record's per-file stats can intersect every
     [lo, hi] range (logical column names; stats are stored under
     physical names). Missing stats are conservatively in scope, as
-    are open bounds (lo/hi None — a one-sided range) and
-    incomparable literal/stat type pairs. The ONE pruning predicate
-    shared by pruned_paths/scan, MERGE candidate selection and
-    range-scoped compaction — a stats-handling fix lands everywhere
-    or nowhere."""
+    are incomparable literal/stat type pairs. MERGE's candidate
+    selection (`_affected_files`) is its one caller; its ranges are
+    a non-empty source's key min/max, so both bounds are set."""
     for c, (lo, hi) in ranges.items():
         st = (rec.get("stats") or {}).get(mapping.get(c, c))
         if st is None:
             continue
         try:
-            if (hi is not None and st[0] > hi) or (
-                lo is not None and st[1] < lo
-            ):
+            if st[0] > hi or st[1] < lo:
                 return False
         except TypeError:
             continue  # incomparable literal/stat types: keep
@@ -406,11 +402,11 @@ class LakeTable:
         its part files into data/ as `<uuid><suffix>` and return
         [(root-relative path, footer row count)]. Zero-row parts are
         dropped: a live file with no rows would carry no key stats
-        and join every pruned read and MERGE candidate list. The one
-        staging path for data and deletion-vector files:
-        every file is complete before it is visible in data/, and
-        invisible to readers until a commit references it (vacuum's
-        retention window protects it meanwhile)."""
+        and join every MERGE candidate list. The one staging path
+        for data and deletion-vector files: every file is complete
+        before it is visible in data/, and invisible to readers until
+        a commit references it (vacuum's retention window protects it
+        meanwhile)."""
         import shutil
 
         import pyarrow.parquet as pq
@@ -437,14 +433,11 @@ class LakeTable:
             shutil.rmtree(tmp, ignore_errors=True)
         return staged
 
-    def _stage_files(
-        self, df: DataFrame, stat_cols: list[str] | None = None
-    ) -> list[dict]:
+    def _stage_files(self, df: DataFrame) -> list[dict]:
         """Write df's rows as immutable files in data/, return add
-        records with footer stats (over the table's key columns, plus
-        any `stat_cols` — e.g. cluster() records stats for its
-        clustering columns so scan() can prune on them). Files are
-        invisible until a commit references them.
+        records with footer stats over the table's key columns (what
+        MERGE prunes on). Files are invisible until a commit
+        references them.
 
         Data files and stats records always use PHYSICAL column names
         (identical to logical until a rename/drop happens) — renames
@@ -453,11 +446,7 @@ class LakeTable:
         # checkpoint-aware head lookup: O(tail), not O(history)
         head = self._live()[1]
         mapping = _entry_mapping(head)
-        key_cols = list(head["key_cols"])
-        for c in list(head.get("stats_cols") or []) + list(stat_cols or []):
-            if c not in key_cols:
-                key_cols.append(c)
-        key_cols = [mapping.get(c, c) for c in key_cols]
+        key_cols = [mapping.get(c, c) for c in head["key_cols"]]
         if mapping:
             df = df.select(
                 *[
@@ -513,7 +502,6 @@ class LakeTable:
                 "key_cols": head_entry["key_cols"],
                 "column_mapping": _entry_mapping(head_entry),
                 "retired_cols": head_entry.get("retired_cols") or [],
-                "stats_cols": head_entry.get("stats_cols") or [],
             }
             if extra:
                 entry.update(extra)
@@ -535,15 +523,9 @@ class LakeTable:
         df: DataFrame,
         key_cols: list[str],
         extra: dict | None = None,
-        stats_cols: list[str] | None = None,
     ) -> "LakeTable":
         """Create a table from df; `key_cols` are the MERGE keys and
-        drive per-file stats pruning.
-
-        `stats_cols` lists extra (non-key) columns whose per-file
-        min/max land in every commit's stats records from birth —
-        `scan()`/MERGE pruning then bites on them without a
-        retroactive cluster() pass."""
+        drive per-file stats pruning."""
         # exist_ok: a crashed create may have left the empty dirs
         # behind; the O_EXCL entry-0 create below is the real guard
         # against two concurrent creates
@@ -557,7 +539,6 @@ class LakeTable:
             "remove": [],
             "schema": df.schema.json(),
             "key_cols": key_cols,
-            "stats_cols": list(stats_cols or []),
         }
         with open(_entry_path(root, 0), "x") as f:
             json.dump(entry0, f, indent=1)
@@ -1021,8 +1002,7 @@ class LakeTable:
                 return []  # empty/aborted-create log: nothing to do
             if vs[-1] == head_seen:
                 break  # log held still since `referenced` was built
-            head_seen = vs[-1] if vs else None
-            protect = set(vs[-keep_last:]) if keep_last else set()
+            head_seen = vs[-1]
             # newest entry at-or-beyond retention age: it and
             # everything after were the head at some point inside
             # the window
@@ -1031,11 +1011,13 @@ class LakeTable:
                 age = now - os.path.getmtime(_entry_path(self.root, v))
                 if age >= retention_seconds:
                     cutoff_idx = i
-            protect.update(vs[cutoff_idx:])
-            referenced: set[str] = set()
-            for v in sorted(protect):
-                for rec in self._live(v)[0]:
-                    referenced.add(rec["path"])
+            # both protected sets are suffixes of vs, so the files they
+            # reference are those live at the suffix's first version
+            # plus every later add: one replay, each entry read once
+            first = vs[max(min(len(vs) - keep_last, cutoff_idx), 0)]
+            referenced = {rec["path"] for rec in self._live(first)[0]}
+            for e in self._entries(since=first):
+                referenced.update(rec["path"] for rec in e.get("add", []))
         removed = []
         d = os.path.join(self.root, _DATA)
         for f in os.listdir(d):
@@ -1052,11 +1034,7 @@ class LakeTable:
             removed.append(rel)
         return removed
 
-    def compact(
-        self,
-        target_rows: int = 1_000_000,
-        ranges: dict | None = None,
-    ) -> int:
+    def compact(self, target_rows: int = 1_000_000) -> int:
         """Transactional compaction, the table's one reclaim step:
         rewrite, as ONE commit, the files smaller than target_rows
         (when two or more are, else they are left alone) plus every
@@ -1077,15 +1055,7 @@ class LakeTable:
         deletion-vector positions is what the rewrite will actually
         emit, so a physically-large but mostly-deleted file correctly
         qualifies as small and the output file count is computed from
-        rows that exist, not rows that once did.
-
-        `ranges` ({col: (lo, hi)}, logical names, inclusive) scopes
-        the pass to files whose stats INTERSECT every range —
-        Delta's OPTIMIZE ... WHERE. At scale you compact the key
-        range a run of small appends just landed in, not the whole
-        table; candidate selection stays pure log metadata (the same
-        stat-intersection rule as `pruned_paths`), and files without
-        stats for a range column are conservatively in scope."""
+        rows that exist, not rows that once did."""
         head = self.latest_version()
         live, head_entry = self._live(head)
         data, dvs = self._split_live(live)
@@ -1098,15 +1068,11 @@ class LakeTable:
         def _live_rows(rec: dict) -> int:
             return max(rec.get("rows", 0) - _dead(rec), 0)
 
-        scope = [
-            r for r in data
-            if not ranges or _stats_intersect(r, ranges, mapping)
-        ]
-        small = {r["path"] for r in scope if _live_rows(r) < target_rows}
+        small = {r["path"] for r in data if _live_rows(r) < target_rows}
         if len(small) < 2:
             small = set()  # one small file alone is not worth a rewrite
         rewrite = [
-            r for r in scope
+            r for r in data
             if r["path"] in small
             or (r.get("rows") and _dead(r) / r["rows"] >= _DV_REWRITE_FRACTION)
         ]
@@ -1130,7 +1096,7 @@ class LakeTable:
             expected_head=head,
         )
 
-    # -- clustering + pruned reads -----------------------------------------
+    # -- clustering --------------------------------------------------------
 
     def _clustered(self, df: DataFrame, cluster_by: list[str], bits: int = 12):
         """Range-partition + sort by the normalized z-order of
@@ -1156,44 +1122,20 @@ class LakeTable:
         out = zordered(df, cluster_by, n, bits)
         return df if out is None else out  # None: nothing to order
 
-    def cluster(
-        self,
-        cluster_by: list[str] | None = None,
-        incremental: bool = False,
-    ) -> int:
-        """OPTIMIZE ... ZORDER BY for an existing table: rewrite
-        live data files with rows clustered on `cluster_by`
-        (default: the table's key columns) in ONE commit, so per-file
-        stats tighten and `scan()` pruning bites on historically
-        appended data. Merge-on-read deletes
-        on rewritten files are materialized; DV rows for untouched
-        files carry forward (`_retire_dvs`). Stats are recorded
-        for the clustering columns as well as the key columns, so
-        clustering on a non-key column makes it prunable. Every
-        output record is stamped `clustered_by`. No-op (no commit)
-        on an empty table.
-
-        `incremental=True` rewrites ONLY files not already stamped as
-        clustered on the same columns (Delta's incremental OPTIMIZE
-        posture): appends landed since the last pass re-cluster at a
-        cost proportional to THEIR size, while the previously
-        clustered bulk — typically the overwhelming majority at
-        scale — is untouched. The new files form their own tight
-        z-run alongside the old ones (per-file stats stay the pruning
-        unit, so two disjoint clustered generations prune exactly as
-        well as one); a periodic full pass re-merges generations.
-        No-op (no commit) when every live file is already stamped.
+    def cluster(self, cluster_by: list[str] | None = None) -> int:
+        """OPTIMIZE ... ZORDER BY for an existing table: rewrite every
+        live data file with rows clustered on `cluster_by` (default:
+        the table's key columns) in ONE commit. Clustering on the
+        keys tightens the per-file key stats, so MERGE reads and
+        rewrites fewer candidate files on historically appended data.
+        Merge-on-read deletes are materialized and every DV record
+        retires. No-op (no commit) on an empty table.
 
         Read-dependent: raises ConcurrentWriteError if the log
         advances mid-rewrite; maintenance is always safe to re-run."""
         head = self.latest_version()
         live, head_entry = self._live(head)
-        live_data, dvs = self._split_live(live)
-        cluster_by = cluster_by or head_entry["key_cols"]
-        data = live_data
-        if incremental:
-            stamp = sorted(cluster_by)
-            data = [r for r in data if r.get("clustered_by") != stamp]
+        data, dvs = self._split_live(live)
         if not data:
             return head
         schema = StructType.fromJson(json.loads(head_entry["schema"]))
@@ -1201,60 +1143,14 @@ class LakeTable:
             data, dvs, schema, mapping=_entry_mapping(head_entry)
         )
         add = self._stage_files(
-            self._clustered(scan, cluster_by), stat_cols=cluster_by
-        )
-        for r in add:
-            r["clustered_by"] = sorted(cluster_by)
-        remove = [r["path"] for r in data]
-        gone = set(remove)
-        add += self._stage_dvs(
-            self._retire_dvs(
-                dvs, [r for r in live_data if r["path"] not in gone]
-            )
+            self._clustered(scan, cluster_by or head_entry["key_cols"])
         )
         return self._commit(
             "cluster",
             add,
-            remove + [r["path"] for r in dvs],
+            [r["path"] for r in data + dvs],
             expected_head=head,
         )
-
-    def pruned_paths(
-        self, ranges: dict, version: int | None = None
-    ) -> tuple[list[str], int]:
-        """(live paths whose stats intersect every [lo, hi] range,
-        total live count). Pure log metadata — no file I/O. `ranges`
-        is keyed by LOGICAL column names; stats are stored physical."""
-        live, head = self._live(version)
-        mapping = _entry_mapping(head)
-        live, _dvs = self._split_live(live)
-        keep = [
-            rec["path"]
-            for rec in live
-            if _stats_intersect(rec, ranges, mapping)
-        ]
-        return keep, len(live)
-
-    def scan(self, ranges: dict, version: int | None = None) -> DataFrame:
-        """snapshot() restricted to `ranges` ({col: (lo, hi)},
-        inclusive), with FILE-level pruning from the commit log's
-        stats before Spark ever lists or opens a footer — the log is
-        the table's coarse index, exactly Delta/Iceberg's data-
-        skipping read path. Row-level filtering still applies (file
-        stats only bound, they don't partition)."""
-        paths, _ = self.pruned_paths(ranges, version)
-        live, head = self._live(version)
-        data, dvs = self._split_live(live)
-        schema = StructType.fromJson(json.loads(head["schema"]))
-        recs = [r for r in data if r["path"] in set(paths)]
-        df = self._scan_live(
-            recs, dvs, schema, mapping=_entry_mapping(head)
-        )
-        cond = None
-        for c, (lo, hi) in ranges.items():
-            term = (F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))
-            cond = term if cond is None else (cond & term)
-        return df.filter(cond) if cond is not None else df
 
     def restore(self, version: int) -> int:
         """Roll the table back to `version` AS A NEW COMMIT (history
@@ -1320,8 +1216,8 @@ class LakeTable:
         """SHALLOW CLONE (Delta's CLONE): a new, independent table
         whose create commit references the source snapshot's live
         files BY ABSOLUTE PATH — zero data copied, O(metadata) cost.
-        The clone gets the source's schema, key columns, stats
-        columns, column mapping and live deletion vectors as of now;
+        The clone gets the source's schema, key columns, column
+        mapping and live deletion vectors as of now;
         from then on the two logs evolve independently (writes to the
         clone stage into ITS OWN data/ directory; COW rewrites drop
         the absolute references file by file). History does not
@@ -1351,7 +1247,6 @@ class LakeTable:
             "key_cols": head_entry["key_cols"],
             "column_mapping": _entry_mapping(head_entry),
             "retired_cols": head_entry.get("retired_cols") or [],
-            "stats_cols": head_entry.get("stats_cols") or [],
             "cloned_from": {"root": os.path.abspath(self.root),
                             "version": head},
         }
@@ -1439,10 +1334,6 @@ class LakeTable:
                 "schema": new_schema.json(),
                 "key_cols": key_cols,
                 "column_mapping": mapping,
-                "stats_cols": [
-                    new if c == old else c
-                    for c in head_entry.get("stats_cols") or []
-                ],
                 "renamed_column": [old, new],
             },
         )
@@ -1482,11 +1373,6 @@ class LakeTable:
                 "schema": new_schema.json(),
                 "column_mapping": mapping,
                 "retired_cols": retired,
-                "stats_cols": [
-                    c
-                    for c in head_entry.get("stats_cols") or []
-                    if c != name
-                ],
                 "dropped_column": name,
             },
         )
@@ -1512,7 +1398,6 @@ class LakeTable:
             "key_cols": head_entry["key_cols"],
             "column_mapping": _entry_mapping(head_entry),
             "retired_cols": head_entry.get("retired_cols") or [],
-            "stats_cols": head_entry.get("stats_cols") or [],
         }
         path = os.path.join(self.root, _TXN, f"_ckpt.{head:0{_WIDTH}d}.json")
         # unique tmp per writer: two concurrent checkpoint_log calls
@@ -1552,7 +1437,6 @@ class LakeTable:
             "key_cols": ck["key_cols"],
             "column_mapping": ck.get("column_mapping") or {},
             "retired_cols": ck.get("retired_cols") or [],
-            "stats_cols": ck.get("stats_cols") or [],
         }
         for e in tail_entries:
             for rec in e.get("add", []):

@@ -58,6 +58,17 @@ def test_lake_cli_lifecycle(spark, roots, capsys):
     assert d["num_dv_files"] == 0 and d["deleted_rows"] == 0
     assert d["live_rows"] == 40
 
+    # cluster moves file boundaries, never rows: on the keys by
+    # default, on any column with --by
+    before = sorted(map(tuple, LakeTable(spark, root).snapshot().collect()))
+    for by in ([], ["--by", "val"]):
+        rc, out = run("cluster", "--root", root, *by)
+        assert rc == 0
+        t = LakeTable(spark, root)
+        assert json.loads(out)["version"] == t.latest_version()
+        assert t.history()[-1]["operation"] == "cluster"
+        assert sorted(map(tuple, t.snapshot().collect())) == before
+
     rc, out = run("rename-column", "--root", root, "--column",
                   "val:value")
     assert rc == 0

@@ -150,17 +150,6 @@ def test_ddl_validation(spark, table):
         table.drop_column("nope")
 
 
-def test_scan_pruning_and_lookup_after_rename(spark, table):
-    # re-cluster so per-file stats are tight, then rename the key
-    table.cluster(["id"])
-    table.rename_column("id", "pk")
-    paths, total = table.pruned_paths({"pk": (0, 10)})
-    assert 0 < len(paths) < total
-    got = table.scan({"pk": (0, 10)})
-    assert got.columns == ["pk", "name", "val"]
-    assert got.count() == 11
-
-
 def test_checkpoint_carries_mapping(spark, table):
     table.rename_column("val", "value")
     table.checkpoint_log()
@@ -181,11 +170,6 @@ def test_datasource_read_write_after_rename(spark, table):
     rows = duckdb_snapshot(table)
     assert len(rows) == 100 and all(r[2] is not None for r in rows)
     assert rows == sorted(_rows(table.snapshot()), key=repr)
-    # scan pruning: stats are physical, ranges are logical
-    table.cluster(["id"])
-    paths, total = table.pruned_paths({"id": (0, 5)})
-    assert len(paths) < total
-    assert table.scan({"id": (0, 5)}).count() == 6
     # append stages PHYSICAL names so every reader sees the rows
     table.append(
         spark.createDataFrame(

@@ -208,46 +208,6 @@ def test_compact_one_commit_same_rows(spark, table):
     assert table.compact(target_rows=1_000_000) == v
 
 
-def test_compact_scoped_by_ranges(spark, tmp_path):
-    """OPTIMIZE ... WHERE: a range-scoped pass rewrites only files
-    whose key stats intersect the ranges; out-of-scope fragments
-    keep their paths."""
-    root = str(tmp_path / "sc")
-    t = LakeTable.create(
-        spark,
-        root,
-        spark.createDataFrame([(0, 0.0)], "id long, val double"),
-        ["id"],
-    )
-    # two disjoint key regions, each fragmented into 2 files
-    for lo in (100, 900):
-        for j in range(2):
-            t.append(
-                spark.createDataFrame(
-                    [(lo + j * 10 + i, 1.0) for i in range(3)],
-                    "id long, val double",
-                )
-            )
-    before = {r["path"]: r for r in t._live()[0]}
-    high_paths = {
-        p
-        for p, r in before.items()
-        if ((r.get("stats") or {}).get("id") or [0, 0])[0] >= 900
-    }
-    rows_before = sorted(
-        tuple(r) for r in t.snapshot().collect()
-    )
-    v = t.compact(target_rows=1_000_000, ranges={"id": (0, 500)})
-    assert v == t.latest_version()
-    after = {r["path"] for r in t._live()[0]}
-    # the high-range fragments are untouched, low-range ones merged
-    assert high_paths <= after
-    assert len(after) < len(before)
-    assert sorted(tuple(r) for r in t.snapshot().collect()) == rows_before
-    # a scoped pass over an already-compacted range is a no-op
-    assert t.compact(target_rows=1_000_000, ranges={"id": (0, 500)}) == v
-
-
 def test_clustered_append_and_pruned_scan(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, float(i)) for i in range(10_000)], "id long, val double"
@@ -265,15 +225,18 @@ def test_clustered_append_and_pruned_scan(spark, tmp_path):
     ranges = sorted(r["stats"]["id"] for r in live if r["rows"])
     for (a_lo, a_hi), (b_lo, b_hi) in zip(ranges, ranges[1:]):
         assert a_hi < b_lo
-    # the log prunes most files for a narrow range...
-    paths, total = t.pruned_paths({"id": (100, 120)})
-    # a narrow range hits at most one data file per straddled
-    # boundary
-    assert len(paths) < total and len(paths) <= 2
-    # ...and the scan is exactly the filtered snapshot
-    got = _rows(t.scan({"id": (100, 120)}))
-    want = _rows(t.snapshot().filter("id between 100 and 120"))
-    assert got == want and len(got) == 21
+    # so a MERGE over a narrow key range rewrites at most one data
+    # file per straddled boundary (the scrambled append would have
+    # put those keys in every file)
+    before = dict(_rows(t.snapshot()))
+    t.merge(
+        spark.createDataFrame(
+            [(i, -1.0) for i in range(100, 121)], "id long, val double"
+        )
+    )
+    assert t.history()[-1]["removed"] <= 2 < len(live)
+    want = before | {i: -1.0 for i in range(100, 121)}
+    assert _rows(t.snapshot()) == sorted(want.items())
 
 
 def test_restore_rolls_back_as_new_commit(spark, table):
@@ -417,6 +380,69 @@ def test_vacuum_retention_protects_inflight_staged_files(spark, table):
     # the paused writer can still complete its commit
     table._commit("append", add, [], expected_head=None)
     assert table.snapshot().filter("id = 7777").count() == 1
+
+
+def _synthetic_log(root, n):
+    """An n-commit log written by hand (no Spark): entry 0 creates,
+    then each commit adds data/f<v>.parquet and removes its
+    predecessor's file, as a chain of one-file rewrites would."""
+    os.makedirs(os.path.join(root, "_txn"))
+    os.makedirs(os.path.join(root, "data"))
+    for v in range(n):
+        add = [] if v == 0 else [{"path": f"data/f{v}.parquet", "rows": 1}]
+        remove = [f"data/f{v - 1}.parquet"] if v > 1 else []
+        entry = {
+            "version": v,
+            "operation": "create" if v == 0 else "merge",
+            "add": add,
+            "remove": remove,
+            "schema": '{"type": "struct", "fields": []}',
+            "key_cols": ["id"],
+        }
+        with open(os.path.join(root, "_txn", f"{v:020d}.json"), "w") as f:
+            json.dump(entry, f)
+        if add:
+            open(os.path.join(root, add[0]["path"]), "w").close()
+
+
+def test_vacuum_reads_each_log_entry_once(tmp_path, monkeypatch):
+    """vacuum builds its reference set from ONE log replay: a
+    50-commit log whose every version is inside the retention window
+    opens each entry file once, not once per protected version."""
+    from lcmap_firebird_spark import lakehouse
+
+    root = str(tmp_path / "log")
+    _synthetic_log(root, 50)
+    opened = []
+
+    def counting_open(path, *a, **kw):
+        if f"{os.sep}_txn{os.sep}0" in str(path):
+            opened.append(path)
+        return open(path, *a, **kw)
+
+    monkeypatch.setattr(lakehouse, "open", counting_open, raising=False)
+    assert LakeTable.attach(root).vacuum() == []  # everything protected
+    assert len(opened) <= 50
+
+
+def test_vacuum_protects_the_retention_suffix(tmp_path):
+    """Entries older than the window protect nothing beyond the
+    newest of them: with v0..v39 ten days old, the files live at v39
+    or added after it survive and f1..f38 are swept."""
+    root = str(tmp_path / "log")
+    _synthetic_log(root, 50)
+    old = os.path.getmtime(root) - 10 * 24 * 3600
+    for v in range(40):
+        os.utime(os.path.join(root, "_txn", f"{v:020d}.json"), (old, old))
+    for f in os.listdir(os.path.join(root, "data")):
+        os.utime(os.path.join(root, "data", f), (old, old))
+    removed = LakeTable.attach(root).vacuum(keep_last=1)
+    assert sorted(removed) == sorted(
+        f"data/f{v}.parquet" for v in range(1, 39)
+    )
+    assert sorted(os.listdir(os.path.join(root, "data"))) == sorted(
+        f"f{v}.parquet" for v in range(39, 50)
+    )
 
 
 def test_concurrent_appends_with_vacuum_no_lost_data(spark, table):
@@ -617,10 +643,6 @@ def test_delete_mor_datasource_and_lookup_and_scan(spark, table):
     assert len(ds) == 80
     assert not [r for r in ds if r[0] % 5 == 0]
     assert ds == sorted(map(tuple, table.snapshot().collect()), key=repr)
-    # stats-pruned scan applies the DV too
-    got = table.scan({"id": (0, 20)})
-    assert got.filter("id % 5 = 0").count() == 0
-    assert got.count() == 21 - 5
 
 
 def test_delete_mor_restore_and_vacuum(spark, table):
@@ -850,11 +872,16 @@ def test_cluster_rewrites_live_set(spark, tmp_path):
     ranges = sorted(r["stats"]["id"] for r in data if r["rows"])
     for (_, a_hi), (b_lo, _) in zip(ranges, ranges[1:]):
         assert a_hi < b_lo
-    # ... so a narrow range now prunes to a couple of files
-    paths, total = t.pruned_paths({"id": (200, 220)})
-    assert len(paths) <= 2 < total
-    got = _rows(t.scan({"id": (200, 220)}))
-    assert got == _rows(t.snapshot().filter("id between 200 and 220"))
+    # ... so a MERGE over a narrow key range now rewrites at most
+    # a couple of files
+    t.merge(
+        spark.createDataFrame(
+            [(i, -1.0) for i in range(200, 221)], "id long, val double"
+        )
+    )
+    assert t.history()[-1]["removed"] <= 2 < len(data)
+    want = dict(before) | {i: -1.0 for i in range(200, 221)}
+    assert _rows(t.snapshot()) == sorted(want.items())
 
 
 def test_cluster_on_non_key_column_records_stats(spark, tmp_path):
@@ -868,18 +895,15 @@ def test_cluster_on_non_key_column_records_stats(spark, tmp_path):
         ).repartition(6),
         key_cols=["id"],
     )
-    t.cluster(cluster_by=["val"])
+    before = _rows(t.snapshot())
+    v = t.cluster(cluster_by=["val"])
+    assert v == t.latest_version()
+    assert t.history()[-1]["operation"] == "cluster"
+    assert _rows(t.snapshot()) == before
+    # the rewritten files record the MERGE key's stats, and only those
     data, _ = t._split_live(t._live()[0])
-    ranges = sorted(
-        r["stats"]["val"] for r in data if r["rows"] and r["stats"].get("val")
-    )
-    assert ranges, "cluster() must record stats for its cluster column"
-    for (_, a_hi), (b_lo, _) in zip(ranges, ranges[1:]):
-        assert a_hi <= b_lo
-    paths, total = t.pruned_paths({"val": (10.0, 20.0)})
-    assert len(paths) < total
-    got = _rows(t.scan({"val": (10.0, 20.0)}))
-    assert got == _rows(t.snapshot().filter("val between 10.0 and 20.0"))
+    assert data and all(set(r["stats"]) == {"id"} for r in data)
+    assert all(r["stats"]["id"] is not None for r in data)
 
 
 def test_delete_null_predicate_rows_survive(spark, tmp_path):
@@ -1008,62 +1032,6 @@ def test_restore_detects_concurrent_vacuum_sweep(spark, table, monkeypatch):
     assert table.history()[-1]["operation"] == "restore"
 
 
-def test_incremental_cluster(spark, tmp_path):
-    """cluster(incremental=True) rewrites only files not already
-    stamped clustered on the same columns: the clustered bulk keeps
-    its paths, new appends re-cluster at their own cost, a second
-    incremental pass is a no-op commit-wise, and pruning still
-    bites across both clustered generations."""
-    from pyspark.sql import functions as F
-
-    base = spark.createDataFrame(
-        [(i, float(i)) for i in range(400)], "id long, val double"
-    ).repartition(4)
-    t = LakeTable.create(spark, str(tmp_path / "ic"), base, key_cols=["id"])
-    t.cluster(["id"])  # full pass stamps everything
-    clustered_paths = {
-        r["path"]
-        for r in t._live()[0]
-        if r.get("clustered_by") == ["id"]
-    }
-    assert clustered_paths
-    t.append(
-        spark.createDataFrame(
-            [(1000 + i, 1.0) for i in range(100)], "id long, val double"
-        ).repartition(3)
-    )
-    v = t.cluster(["id"], incremental=True)
-    live = t._live()[0]
-    # the original clustered generation was NOT rewritten
-    assert clustered_paths <= {r["path"] for r in live}
-    # every live data file is now stamped
-    assert all(
-        r.get("clustered_by") == ["id"]
-        for r in live
-        if r.get("kind") != "dv"
-    )
-    assert t.snapshot().count() == 500
-    # already-clustered table: incremental pass is a no-op (no commit)
-    assert t.cluster(["id"], incremental=True) == v
-    # pruning works across both generations
-    paths, total = t.pruned_paths({"id": (1000, 1009)})
-    assert 0 < len(paths) < total
-    assert t.scan({"id": (1000, 1009)}).count() == 10
-    # one incremental pass stamps a fresh append -> no-op again after
-    t.append(spark.createDataFrame([(2000, 2.0)], "id long, val double"))
-    v2 = t.cluster(["id"], incremental=True)
-    assert v2 > v
-    assert t.cluster(["id"], incremental=True) == v2
-    # MOR deletes on an unstamped append materialize incrementally
-    t.append(spark.createDataFrame([(3000, 3.0), (3001, 3.0)],
-                                   "id long, val double"))
-    t.delete_mor("id = 3000")
-    t.cluster(["id"], incremental=True)
-    snap = t.snapshot()
-    assert snap.filter("id = 3000").count() == 0
-    assert snap.count() == 502
-
-
 def test_history_operation_metrics(spark, table):
     """history() carries row/byte totals per commit from the add
     records' footer stats (Delta's operationMetrics posture)."""
@@ -1080,59 +1048,6 @@ def test_history_operation_metrics(spark, table):
     # metadata-only commits add zero rows
     table.add_column("extra", "string")
     assert table.history()[-1]["rows_added"] == 0
-
-
-def test_stats_cols_prune_from_birth(spark, tmp_path):
-    """A declared stats column lands in every commit's per-file
-    stats: file pruning on it works without any retroactive
-    cluster() pass."""
-    base = spark.createDataFrame(
-        [(i, float(i), i // 10) for i in range(100)],
-        "id long, val double, bucket int",
-    ).repartition(4, "id")
-    t = LakeTable.create(
-        spark, str(tmp_path / "sc"), base, key_cols=["id"],
-        stats_cols=["bucket"],
-    )
-    # files were written partitioned by id, so bucket ranges per file
-    # are real; every commit records bucket stats
-    live = [r for r in t._live()[0] if r.get("kind") != "dv"]
-    assert all("bucket" in (r.get("stats") or {}) for r in live)
-    paths, total = t.pruned_paths({"bucket": (0, 0)})
-    assert 0 < len(paths) <= total
-    got = t.scan({"bucket": (2, 2)})
-    assert got.count() == 10
-    assert _rows(got.select("id")) == [(i,) for i in range(20, 30)]
-
-
-def test_stats_cols_survive_checkpoint_and_writer(spark, tmp_path):
-    """Table-level stats columns flow through checkpoints, into the
-    per-file stats of a later append, and through a clone."""
-    base = spark.createDataFrame(
-        [(i, float(i % 7)) for i in range(50)], "id long, score double"
-    )
-    t = LakeTable.create(
-        spark,
-        str(tmp_path / "st"),
-        base,
-        key_cols=["id"],
-        stats_cols=["score"],
-    )
-    t.checkpoint_log()
-    t.append(spark.createDataFrame([(100, 99.0)], "id long, score double"))
-    live = [r for r in t._live()[0] if r.get("kind") != "dv"]
-    assert all("score" in (r.get("stats") or {}) for r in live)
-    paths, total = t.pruned_paths({"score": (99.0, 99.0)})
-    assert len(paths) == 1
-    assert t.scan({"score": (99.0, 99.0)}).count() == 1
-    # a clone's own appends record the stats column too
-    c = t.clone(str(tmp_path / "st_clone"))
-    c.append(spark.createDataFrame([(200, 70.0)], "id long, score double"))
-    own = [r for r in c._live()[0] if not os.path.isabs(r["path"])]
-    assert own and all("score" in (r.get("stats") or {}) for r in own)
-    paths, total = c.pruned_paths({"score": (70.0, 70.0)})
-    assert len(paths) == 1
-    assert c.scan({"score": (70.0, 70.0)}).count() == 1
 
 
 def test_one_row_append_adds_one_live_file(spark, tmp_path):
