@@ -433,18 +433,18 @@ class LakeTable:
             shutil.rmtree(tmp, ignore_errors=True)
         return staged
 
-    def _stage_files(self, df: DataFrame) -> list[dict]:
+    def _stage_files(self, df: DataFrame, head: dict) -> list[dict]:
         """Write df's rows as immutable files in data/, return add
         records with footer stats over the table's key columns (what
         MERGE prunes on). Files are invisible until a commit
-        references them.
+        references them. `head` is the log entry the caller has
+        already replayed to (its key columns and column mapping), so
+        staging reads no log.
 
         Data files and stats records always use PHYSICAL column names
         (identical to logical until a rename/drop happens) — renames
         never need to touch committed bytes because committed bytes
         never carry a logical name."""
-        # checkpoint-aware head lookup: O(tail), not O(history)
-        head = self._live()[1]
         mapping = _entry_mapping(head)
         key_cols = [mapping.get(c, c) for c in head["key_cols"]]
         if mapping:
@@ -543,7 +543,7 @@ class LakeTable:
         with open(_entry_path(root, 0), "x") as f:
             json.dump(entry0, f, indent=1)
         t = LakeTable(spark, root)
-        add = t._stage_files(df)
+        add = t._stage_files(df, entry0)
         t._commit("create", add, [], expected_head=0, extra=extra)
         return t
 
@@ -620,7 +620,8 @@ class LakeTable:
         metadata such as a batch id).
         Rows are conformed to the table schema first (cast + null-
         fill of evolution-added columns; unknown columns raise)."""
-        add = self._stage_files(self._conform(df, self._live()[1]))
+        head = self._live()[1]
+        add = self._stage_files(self._conform(df, head), head)
         return self._commit("append", add, [], expected_head=None, extra=extra)
 
     def _affected_files(
@@ -950,7 +951,7 @@ class LakeTable:
             rewritten = survivors.unionByName(source)
         return self._commit(
             "merge",
-            self._stage_files(rewritten),
+            self._stage_files(rewritten, head_entry),
             affected,
             expected_head=head,
             extra=extra,
@@ -1084,7 +1085,8 @@ class LakeTable:
         # DV-applied scan: the rewrite MATERIALIZES merge-on-read deletes
         add = self._stage_files(
             self._scan_live(rewrite, dvs, schema, mapping=mapping)
-            .repartition(n_out)
+            .repartition(n_out),
+            head_entry,
         )
         add += self._stage_dvs(
             self._retire_dvs(dvs, [r for r in data if r["path"] not in gone])
@@ -1143,7 +1145,8 @@ class LakeTable:
             data, dvs, schema, mapping=_entry_mapping(head_entry)
         )
         add = self._stage_files(
-            self._clustered(scan, cluster_by or head_entry["key_cols"])
+            self._clustered(scan, cluster_by or head_entry["key_cols"]),
+            head_entry,
         )
         return self._commit(
             "cluster",

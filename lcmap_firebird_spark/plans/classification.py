@@ -79,20 +79,30 @@ def train(
     seed: int = 42,
     feature_cols: list[str] | None = None,
 ) -> PipelineModel | None:
-    """Training composition (ccdc/randomforest.py:42-87)."""
-    aux2 = filter_not_in(aux, F.element_at("trends", 1), [0, 9]).persist()
+    """Training composition (ccdc/randomforest.py:42-87).
+
+    MLlib seeds each tree's bagging per input partition, so the
+    forest follows the training frame's partitioning. The feature
+    frame is therefore hash-partitioned and sorted by pixel and start
+    day, then checkpointed once: the forest no longer depends on how
+    many files the segment table was written as, and the guard and
+    every fit pass read the same materialized rows. (AQE still
+    coalesces that shuffle by byte size, so on inputs large enough
+    to span several partitions their boundaries can move.)"""
+    aux2 = filter_not_in(aux, F.element_at("trends", 1), [0, 9])
     ids = distinct_keys(aux2, ["cx", "cy"])
     ccd = selective_read(segments, ids, ["cx", "cy"]).filter(
         (F.col("sday") >= msday) & (F.col("eday") <= meday)
     )
-    fdf = features(aux2, ccd, feature_cols).persist()
-    try:
-        if fdf.count() == 0:  # guard (randomforest.py:73-79)
-            return None
-        return pipeline(num_trees, seed).fit(fdf)
-    finally:
-        fdf.unpersist()
-        aux2.unpersist()
+    fdf = (
+        features(aux2, ccd, feature_cols)
+        .repartition(*PIXEL_KEYS)
+        .sortWithinPartitions(*PIXEL_KEYS, "sday")
+        .localCheckpoint(eager=True)
+    )
+    if fdf.count() == 0:  # guard (randomforest.py:73-79)
+        return None
+    return pipeline(num_trees, seed).fit(fdf)
 
 
 def export_model(model: PipelineModel) -> dict:

@@ -10,6 +10,21 @@ reference's manual INPUT_PARTITIONS/PRODUCT_PARTITIONS knobs
 All values are read at call time, not import time (the reference
 flags its own import-time evaluation as a footgun,
 ccdc/__init__.py:11-12).
+
+Two defaults cut the fixed cost every pass pays whatever its data
+(PLANS.md rule 35):
+- `spark.sql.codegen.cache.maxEntries` is 2048, not Spark's 100. One
+  CCD or ingest pass generates more than 100 distinct classes, and the
+  50 registry queries 862, so at 100 the cache evicts each class before
+  the next pass needs it again and Janino recompiles it: 90-109
+  compiles per measured ccdc_tile pass and 60-81 per corpus_ingest
+  pass, against 0 and 4 at 2048. A cached class keeps its loaded
+  bytecode in the driver JVM.
+- `spark.python.sql.dataFrameDebugging.enabled` is false. PySpark 4
+  wraps every Column/DataFrame API call to capture its Python call
+  site for error messages; each capture walks the stack, makes extra
+  py4j round trips and retries a failing `import IPython`. A
+  corpus_ingest pass made 509 of them.
 """
 
 from __future__ import annotations
@@ -54,6 +69,11 @@ def config(overrides: dict | None = None) -> dict:
         "spark.sql.autoBroadcastJoinThreshold": "64m",
         "spark.driver.memory": os.environ.get("FIREBIRD_DRIVER_MEMORY", "8g"),
         "spark.ui.enabled": "false",
+        # fixed cost per pass (module docstring): Spark's 100-entry
+        # generated-class cache thrashes, and call-site capture costs
+        # py4j round trips on every Column/DataFrame call
+        "spark.sql.codegen.cache.maxEntries": "2048",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if overrides:
         conf.update(overrides)

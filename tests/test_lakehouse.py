@@ -374,7 +374,7 @@ def test_vacuum_retention_protects_inflight_staged_files(spark, table):
     df = spark.createDataFrame(
         [(7777, "inflight", 1.0)], "id long, name string, val double"
     )
-    add = table._stage_files(df)  # writer paused mid-commit
+    add = table._stage_files(df, table._live()[1])  # writer paused mid-commit
     removed = table.vacuum(keep_last=1, retention_seconds=3600)
     assert not any(rec["path"] in removed for rec in add)
     # the paused writer can still complete its commit
@@ -405,14 +405,10 @@ def _synthetic_log(root, n):
             open(os.path.join(root, add[0]["path"]), "w").close()
 
 
-def test_vacuum_reads_each_log_entry_once(tmp_path, monkeypatch):
-    """vacuum builds its reference set from ONE log replay: a
-    50-commit log whose every version is inside the retention window
-    opens each entry file once, not once per protected version."""
+def _count_entry_opens(monkeypatch) -> list:
+    """The log-entry files `lakehouse` opens from here on."""
     from lcmap_firebird_spark import lakehouse
 
-    root = str(tmp_path / "log")
-    _synthetic_log(root, 50)
     opened = []
 
     def counting_open(path, *a, **kw):
@@ -421,8 +417,39 @@ def test_vacuum_reads_each_log_entry_once(tmp_path, monkeypatch):
         return open(path, *a, **kw)
 
     monkeypatch.setattr(lakehouse, "open", counting_open, raising=False)
+    return opened
+
+
+def test_vacuum_reads_each_log_entry_once(tmp_path, monkeypatch):
+    """vacuum builds its reference set from ONE log replay: a
+    50-commit log whose every version is inside the retention window
+    opens each entry file once, not once per protected version."""
+    root = str(tmp_path / "log")
+    _synthetic_log(root, 50)
+    opened = _count_entry_opens(monkeypatch)
     assert LakeTable.attach(root).vacuum() == []  # everything protected
     assert len(opened) <= 50
+
+
+def test_append_reads_each_log_entry_once(spark, table, monkeypatch):
+    """append stages its files against the head entry its own replay
+    found: on a 40-entry log with no checkpoint one append opens each
+    entry file once plus the commit's head re-read, not a second full
+    replay."""
+    txn = os.path.join(table.root, "_txn")
+    with open(os.path.join(txn, f"{1:020d}.json")) as f:
+        entry = json.load(f)
+    for v in range(2, 40):  # empty appends: the log grows, the data not
+        with open(os.path.join(txn, f"{v:020d}.json"), "w") as f:
+            json.dump(entry | {"version": v, "add": [], "remove": []}, f)
+    assert table.latest_version() == 39
+    extra = spark.createDataFrame(
+        [(100, "name100", 0.0)], "id long, name string, val double"
+    )
+    opened = _count_entry_opens(monkeypatch)
+    assert table.append(extra) == 40
+    assert len(opened) <= 44
+    assert table.snapshot().count() == 101
 
 
 def test_vacuum_protects_the_retention_suffix(tmp_path):

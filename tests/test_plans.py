@@ -6,6 +6,7 @@ adapted from live-Cassandra round-trips to tmp parquet)."""
 from __future__ import annotations
 
 import math
+import os
 
 import numpy as np
 import pytest
@@ -219,3 +220,48 @@ def test_classification_empty_guard(aux, observations):
     # window excludes all segments → guard returns None (A1 semantics)
     model = CL.train(aux, segments, msday=99_000, meday=99_001, num_trees=5)
     assert model is None
+
+
+def test_forest_is_independent_of_segment_file_layout(spark, tmp_path):
+    """MLlib seeds each tree's bagging per input partition. `train`
+    hash-partitions and sorts its feature frame before the fit, so the
+    same segment rows written as 1 file or as 8 export the same
+    forest."""
+    rng = np.random.default_rng(7)
+    aux_rows, seg_rows = [], []
+    for cx in (0, 3000):
+        for px in range(8):
+            for py in range(8):
+                label = int(rng.integers(1, 4))
+                aux_rows.append((
+                    cx, 0, px, py, [100], [float(rng.normal(250, 20))],
+                    [label], [int(rng.integers(0, 4))], [0.5],
+                    [float(rng.normal(3, 1))], [0],
+                ))
+                for s in range(3):
+                    seg_rows.append((
+                        cx, 0, px, py, 100 + 300 * s, 390 + 300 * s,
+                        float(rng.normal(label * 100, 30)),
+                        float(rng.gamma(2.0)), [float(rng.normal(0, 1))],
+                    ))
+    aux = spark.createDataFrame(
+        aux_rows,
+        ["cx", "cy", "px", "py", "dates", "dem", "trends", "aspect",
+         "posidex", "slope", "mpw"],
+    )
+    segments = spark.createDataFrame(
+        seg_rows,
+        "cx long, cy long, px long, py long, sday long, eday long, "
+        "intercept double, rmse double, coef array<double>",
+    )
+    arts = []
+    for n in (1, 8):
+        path = str(tmp_path / f"segments{n}")
+        segments.repartition(n).write.parquet(path)
+        assert sum(f.endswith(".parquet") for f in os.listdir(path)) == n
+        model = CL.train(
+            aux, spark.read.parquet(path), msday=0, meday=10_000,
+            num_trees=5, seed=42,
+        )
+        arts.append(CL.export_model(model))
+    assert arts[0] == arts[1]
