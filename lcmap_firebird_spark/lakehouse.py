@@ -884,7 +884,7 @@ class LakeTable:
             )
             .localCheckpoint(eager=True)
         )
-        if not matches.limit(1).count():
+        if matches.isEmpty():
             # nothing newly deleted: keep the existing DV dataset
             return self._commit(
                 "delete_mor", [], [], expected_head=head, extra=extra

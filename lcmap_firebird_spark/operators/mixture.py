@@ -150,8 +150,8 @@ def token_budget_sample(
     # rule 15) — checkpoint once
     bucketed = bucketed.localCheckpoint(eager=True)
     # alias the threshold key: a df that itself carries a column
-    # named 'domain' (web curation output) would otherwise make the
-    # join condition AMBIGUOUS_REFERENCE
+    # named 'domain' would otherwise make the join condition
+    # AMBIGUOUS_REFERENCE
     thr = bucket_thresholds(bucketed, budgets, domain_col).select(
         F.col("domain").alias("_tdomain"), "_thr"
     )

@@ -1,2 +1,2 @@
-"""Source operators — work-list builders and file-format readers
-(SURVEY §2.1)."""
+"""Source operators — work-list builders, the external fetch and the
+synthetic ARD source (SURVEY §2.1)."""

@@ -16,6 +16,7 @@ from lcmap_firebird_spark.lakehouse import (
 )
 
 from .lake_helpers import duckdb_snapshot
+from .test_session import _compiles
 
 
 def _rows(df):
@@ -546,6 +547,17 @@ def test_delete_mor_accumulates_one_live_dv_dataset(spark, table):
     table.delete_mor("id < 5")
     assert sum(r["rows"] for r in _dv_recs(table)) == 10
     assert table.latest_version() == v + 1  # noop commit still logs
+
+
+def test_delete_mor_emptiness_probe_compiles_once(spark, table):
+    """Repeating a delete that matches nothing finds every generated
+    class of its plan cached, so its emptiness probe compiles nothing
+    per call (a `limit(n).count()` probe recompiles its limit stage
+    every time)."""
+    table.delete_mor("id < 0")
+    before = _compiles(spark)
+    table.delete_mor("id < 0")
+    assert _compiles(spark) - before == 0
 
 
 def test_delete_mor_then_merge_does_not_resurrect(spark, table, oracle):

@@ -275,9 +275,8 @@ def test_chunking_overlap_no_redundant_tails_and_null_text(spark):
 
 
 def test_token_budget_sample_with_domain_column(spark):
-    """A frame already carrying a 'domain' column (web curation
-    output) used to crash the threshold join with
-    AMBIGUOUS_REFERENCE."""
+    """A frame already carrying a 'domain' column used to crash the
+    threshold join with AMBIGUOUS_REFERENCE."""
     from lcmap_firebird_spark.operators.mixture import token_budget_sample
 
     df = spark.createDataFrame(
@@ -289,19 +288,6 @@ def test_token_budget_sample_with_domain_column(spark):
     )
     assert 0 < out.count() <= 20
     assert out.columns == df.columns
-
-
-def test_encode_docs_keeps_empty_docs(spark):
-    from lcmap_firebird_spark.operators.bpe import encode_docs, train_bpe
-
-    docs = spark.createDataFrame(
-        [(1, "low lower lowest"), (2, ""), (3, None)],
-        "doc_id long, text string",
-    )
-    merges = train_bpe(docs.filter("doc_id = 1"), num_merges=5)
-    out = {r["doc_id"]: r["n_bpe"] for r in encode_docs(docs, merges).collect()}
-    assert set(out) == {1, 2, 3}
-    assert out[2] == 0 and out[3] == 0 and out[1] > 0
 
 
 def test_manifest_checksum_sees_multiplicity(spark):

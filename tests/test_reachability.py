@@ -33,12 +33,7 @@ ROOT_MODULES = ("cli", "queries")
 
 # reached only from tests today; each family leaves this list when it
 # gains a caller or is deleted
-TEST_ONLY = {
-    "operators.bpe",
-    "operators.web",
-    "sources.ardgen",
-    "sources.formats",
-}
+TEST_ONLY = {"sources.ardgen"}
 
 
 def _package_modules(pkg: pathlib.Path) -> dict[str, pathlib.Path]:

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from lcmap_firebird_spark import grid, schemas
 from lcmap_firebird_spark.functions import dates
-from lcmap_firebird_spark.sources import formats, ids
+from lcmap_firebird_spark.sources import ids
 
 
 # --- schema goldens (reference: assert simpleString equality) -----------
@@ -159,23 +159,19 @@ def test_acquired_interval():
     assert b >= a
 
 
-# --- format sources ([absent] S row) -------------------------------------
+# --- file formats through spark.read ([absent] S row) -------------------
 
 
 @pytest.mark.parametrize("fmt", ["csv", "json", "orc", "parquet"])
 def test_format_roundtrips(spark, tmp_path, fmt):
     df = spark.range(10).withColumn("name", F.concat(F.lit("r"), F.col("id")))
     path = str(tmp_path / fmt)
-    formats.write_format(df, path, fmt, header=True) if fmt == "csv" else (
-        formats.write_format(df, path, fmt)
-    )
-    reader = {
-        "csv": lambda: formats.read_csv(spark, path, schema=df.schema),
-        "json": lambda: formats.read_json(spark, path, schema=df.schema),
-        "orc": lambda: formats.read_orc(spark, path),
-        "parquet": lambda: formats.read_parquet(spark, path),
-    }[fmt]
-    back = reader()
+    df.write.option("header", True).format(fmt).save(path)
+    # CSV and JSON carry no schema: declare it rather than infer it
+    reader = spark.read.option("header", True)
+    if fmt in ("csv", "json"):
+        reader = reader.schema(df.schema)
+    back = reader.format(fmt).load(path)
     assert sorted((r.id, r.name) for r in back.collect()) == [
         (i, f"r{i}") for i in range(10)
     ]

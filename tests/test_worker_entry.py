@@ -197,7 +197,6 @@ def test_every_worker_entry_point_drops_zip_finders():
         "operators/segmentation.py",
         "operators/pyccd.py",
         "operators/multimodal.py",
-        "operators/bpe.py",
         "operators/pipeline.py",
         "sources/external.py",
         "sources/ardgen.py",

@@ -94,29 +94,6 @@ def _probe_perplexity(spark, sf):
     return score_perplexity(docs, uni, bi, v)
 
 
-def _probe_web_curation(spark, sf):
-    from lcmap_firebird_spark.catalog import read_table
-    from lcmap_firebird_spark.operators.web import (
-        blocklist_gate,
-        domain_cap,
-    )
-    from pyspark.sql import functions as F
-
-    docs = read_table(spark, "documents", sf).withColumn(
-        "url",
-        F.concat(
-            F.lit("https://"),
-            F.col("source"),
-            F.lit(".example.com/"),
-            F.col("doc_id"),
-        ),
-    )
-    bl = spark.createDataFrame(
-        [("blocked.example.com",)], ["domain"]
-    )
-    return domain_cap(blocklist_gate(docs, bl), max_docs=1000)
-
-
 def _probe_semdedup(spark, sf):
     from lcmap_firebird_spark.catalog import read_table
     from lcmap_firebird_spark.operators.semdedup import semdedup
@@ -125,15 +102,6 @@ def _probe_semdedup(spark, sf):
     return semdedup(
         read_table(spark, "embeddings", sf), eps=0.6, num_cells=None
     )
-
-
-def _probe_bpe(spark, sf):
-    from lcmap_firebird_spark.catalog import read_table
-    from lcmap_firebird_spark.operators.bpe import encode_docs, train_bpe
-
-    docs = read_table(spark, "documents", sf)
-    merges = train_bpe(docs, num_merges=60, max_words=20_000)
-    return encode_docs(docs, merges).drop("bpe_tokens")
 
 
 def _probe_dsir(spark, sf):
@@ -175,9 +143,7 @@ EXTRA_PROBES = [
     ("pagerank_events_graph", _probe_pagerank),
     ("bm25_topk_3q", _probe_bm25),
     ("perplexity_train_score", _probe_perplexity),
-    ("web_blocklist_domain_cap", _probe_web_curation),
     ("semdedup_derived_cells", _probe_semdedup),
-    ("bpe_train60_encode", _probe_bpe),
     ("dsir_select_100", _probe_dsir),
     ("lake_mor_cluster_snapshot", _probe_lake_cluster),
 ]
