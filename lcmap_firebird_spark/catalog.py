@@ -220,8 +220,12 @@ def write_partitioned(
     wide-row locality of resources/schema.cql:54,142: one chip's
     pixels colocate under one partition directory.
 
-    Scale note: callers should ensure ~100 MB-1 GB per partition file
-    at target SF; `maxRecordsPerFile` bounds stragglers.
+    File count: each task writes one file per partition value it
+    holds, so a table gets one file per (task, chip) pair. The CCD
+    detectors (`plans.changedetection.detect`, `operators.pyccd.detect`)
+    hash their input by chip, which keeps each chip in one task and
+    makes that one file per chip per table with no shuffle added here
+    (PLANS.md rule 36). `maxRecordsPerFile` bounds stragglers.
     """
     writer = df.write.mode(mode)
     if partition_cols:

@@ -10,8 +10,9 @@ pixel's 8-band time series (:151-168), `rdd()` flatMaps it
 
 Spark-native form: the input is already dense-wide (one row per
 pixel, arrays aligned to `dates` — ccdc/timeseries.py:33-45), so
-detection is a pure MAP: `mapInPandas`, one pixel row in → N segment
-rows out, ZERO shuffles. The reference's flatMap shape, kept — but
+detection is a MAP: `mapInPandas`, one pixel row in → N segment rows
+out, after one hash shuffle by chip (cx, cy) that keeps each chip's
+pixels in one task. The reference's flatMap shape, kept — but
 visible to Catalyst and Arrow-batched.
 
 Model fidelity (round 2): per-band fits are LASSO over the harmonic
@@ -54,6 +55,7 @@ from pyspark.sql import functions as F
 
 from ..schemas import segment_schema
 from ..worker import drop_zip_finders
+from .relational import by_chip
 from .segmentation import _iso
 
 # band-array column → reference 2-letter prefix (ccdc/pyccd.py:39-81)
@@ -262,7 +264,8 @@ def detect(
     peek: int = 3,
     harmonics: int = 0,
 ) -> DataFrame:
-    """Dense-wide ARD → 40-field segments (mapInPandas, no shuffle).
+    """Dense-wide ARD → 40-field segments (one shuffle by chip, then
+    mapInPandas; building the plan starts no job).
 
     Every pixel emits ≥1 row: detected segments plus a trailing open
     segment, or the sentinel when fewer than `min_obs` clear
@@ -370,14 +373,10 @@ def detect(
         )
         return rows
 
-    # CPU-bound pandas stage: a compact source (one parquet split)
-    # would otherwise run every pixel's lasso fits on a single core —
-    # pin parallelism like segmentation.ccd_segments does (PLANS.md:
-    # AQE's byte heuristic mis-sizes CPU-bound pandas stages)
-    n_parts = ard.sparkSession.sparkContext.defaultParallelism
-    if ard.rdd.getNumPartitions() < n_parts:
-        ard = ard.repartition(n_parts)
-    return ard.mapInPandas(kernel, schema)
+    # one chip per task (one sink file per chip per table), and a
+    # compact source (one parquet split) still spreads its lasso fits
+    # over the cores
+    return by_chip(ard).mapInPandas(kernel, schema)
 
 
 def chip_table(segments: DataFrame) -> DataFrame:

@@ -65,6 +65,18 @@ def selective_read(
     return table.join(F.broadcast(ids), on=list(keys), how=how)
 
 
+def by_chip(df: DataFrame) -> DataFrame:
+    """Hash-partition by chip (cx, cy) into `defaultParallelism`
+    partitions: the CCD plans' unit of work (PLANS.md rule 36). A
+    chip's rows land in one task, so a `partitionBy(cx, cy)` sink
+    writes one file per chip. The count is pinned, not probed with
+    `df.rdd` (which would run any broadcast or shuffle stage below
+    while the plan is built), and a pinned repartition is one AQE
+    does not coalesce onto one core for a CPU-bound kernel."""
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n_parts, "cx", "cy")
+
+
 def equi_join(
     left: DataFrame, right: DataFrame, keys: Sequence[str], how: str = "inner"
 ) -> DataFrame:

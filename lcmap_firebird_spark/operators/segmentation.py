@@ -15,6 +15,10 @@ Scale contract (SURVEY §7.5): group by *pixel*, never by chip — a
 group is ≤ a few hundred observations, so Arrow batches stay small
 and skew is impossible. The CCD kernel is CPU-bound Python; Arrow
 batching amortizes transfer, and the stage scales with executors.
+The groups are pixels, but the CCD plan *partitions* by chip
+(`plans.changedetection.detect` calls `_group_segments` after a
+hash on cx, cy), so each chip's segments land in one task and sink
+as one file per chip (PLANS.md rule 36).
 """
 
 from __future__ import annotations
@@ -282,9 +286,6 @@ def ccd_segments(
     worker's per-task harness otherwise re-reads pyspark.zip's
     directory about 16 times (PLANS.md rule 34).
     """
-    key_types = [dict(df.dtypes)[k] for k in keys]
-    schema = segment_schema(keys, key_types)
-
     # The kernel is CPU-bound but its input is tiny, so AQE would
     # coalesce the pre-apply shuffle down to one partition and run
     # every group serially. An explicit keyed repartition pins the
@@ -292,6 +293,23 @@ def ccd_segments(
     # no second shuffle is added).
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     df = df.repartition(n_parts, *[F.col(k) for k in keys])
+    return _group_segments(df, keys, t_col, value_col, min_obs, chi)
+
+
+def _group_segments(
+    df: DataFrame,
+    keys: Sequence[str],
+    t_col: str,
+    value_col: str,
+    min_obs: int,
+    chi: float,
+) -> DataFrame:
+    """`ccd_segments`' grouping step without its repartition: the
+    caller has already partitioned `df` on a subset of `keys` (the
+    CCD plan partitions by chip, so each chip's segments land in one
+    task) and that partitioning satisfies the groupBy distribution."""
+    key_types = [dict(df.dtypes)[k] for k in keys]
+    schema = segment_schema(keys, key_types)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         drop_zip_finders()

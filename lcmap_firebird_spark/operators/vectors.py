@@ -44,9 +44,14 @@ def densify(
     compat: bool = True,
 ) -> DataFrame:
     """columns → one VectorUDT column (U1; ccdc/udfs.py:7-21 via
-    ccdc/features.py:53-63), JVM-side."""
+    ccdc/features.py:53-63), JVM-side. The column's ML attribute
+    metadata records the vector size, so MLlib stages that need it
+    (`VectorIndexer.fit`) read it from the schema instead of running
+    a `head()` job over the input."""
     arr = F.array(*[_scalarize(df, c, compat) for c in feature_cols])
-    return df.withColumn(output_col, array_to_vector(arr))
+    meta = {"ml_attr": {"num_attrs": len(feature_cols)}}
+    vec = array_to_vector(arr).alias(output_col, metadata=meta)
+    return df.withColumn(output_col, vec)
 
 
 def dedensify(

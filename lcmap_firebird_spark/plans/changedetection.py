@@ -8,10 +8,12 @@ DataFrame plan: selective read (J1) → per-pixel applyInPandas
 segmentation (U3) → cached once → three schema-conforming projections
 (P1) → partitioned parquet sinks (S7/S8).
 
-Scale: the only wide ops are the pixel-key shuffle into
-applyInPandas groups and the partitioned write; both are keyed by
-(cx, cy, ...) so chip locality (the reference's Cassandra partition
-key, resources/schema.cql:54) is preserved end to end.
+Scale: the chip is the unit of work (PLANS.md rule 36). The one
+shuffle before the sinks hash-partitions the observations by chip
+(cx, cy), which also satisfies the pixel-key applyInPandas grouping,
+so each chip's segments sit in one task and the partitioned write
+makes one file per chip per table — the locality of the reference's
+Cassandra partition key (resources/schema.cql:54,142).
 """
 
 from __future__ import annotations
@@ -20,8 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import write_partitioned
-from ..operators.relational import selective_read
-from ..operators.segmentation import ccd_segments
+from ..operators.relational import by_chip, selective_read
+from ..operators.segmentation import _group_segments
 
 PIXEL_KEYS = ("cx", "cy", "px", "py")
 
@@ -36,11 +38,17 @@ def detect(
 ) -> DataFrame:
     """Segment every requested pixel's time series (ccdc/core.py:53-66
     analog). `observations` is long/tall: (cx, cy, px, py, t, value).
+
+    The input is hash-partitioned by chip (`by_chip`); the pixel
+    groups then form inside their chip's task with no second shuffle.
+    Building the plan starts no job.
     """
     obs = observations
     if ids is not None:
         obs = selective_read(obs, ids, ["cx", "cy"])  # J1 broadcast restrict
-    return ccd_segments(obs, PIXEL_KEYS, t_col, value_col, min_obs, chi)
+    return _group_segments(
+        by_chip(obs), PIXEL_KEYS, t_col, value_col, min_obs, chi
+    )
 
 
 def chip_table(segments: DataFrame) -> DataFrame:

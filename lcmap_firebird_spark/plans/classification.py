@@ -2,9 +2,7 @@
 
 Mirrors the reference's composition exactly (SURVEY §2.10 M1-M6):
   aux → filter trends[0] NOT IN (0,9)      (P6, randomforest.py:64)
-      → distinct chip ids                  (J4, randomforest.py:67)
-      → selective read of segments + day-window filter
-                                           (J1+P7, randomforest.py:69)
+      → segments day-window filter         (P7, randomforest.py:69)
       → features: 4-key join + label + densify + project
                                            (J2/P5/U1/P2, features.py:66-82)
       → empty guard                        (A1, randomforest.py:73-79)
@@ -19,6 +17,12 @@ Differences from the reference, on purpose:
   reference's string-vs-int comparison is a latent bug (SURVEY §7.5).
 - RF is seeded for reproducible goldens (numTrees default stays 500,
   randomforest.py:38; tests pass a smaller forest).
+- the reference's chip restriction (J4→J1: distinct aux chips, then
+  a selective read of segments, randomforest.py:67-69) is not a
+  separate step: the 4-key inner join to the filtered aux already
+  keeps only those chips' segments, so the result is the same, and
+  the join still prunes the cx/cy-partitioned segment table by
+  dynamic partition pruning.
 """
 
 from __future__ import annotations
@@ -29,7 +33,7 @@ from pyspark.ml.feature import StringIndexer, VectorIndexer
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.relational import distinct_keys, filter_not_in, selective_read
+from ..operators.relational import filter_not_in
 from ..operators.vectors import densify
 
 PIXEL_KEYS = ["cx", "cy", "px", "py"]
@@ -90,17 +94,14 @@ def train(
     coalesces that shuffle by byte size, so on inputs large enough
     to span several partitions their boundaries can move.)"""
     aux2 = filter_not_in(aux, F.element_at("trends", 1), [0, 9])
-    ids = distinct_keys(aux2, ["cx", "cy"])
-    ccd = selective_read(segments, ids, ["cx", "cy"]).filter(
-        (F.col("sday") >= msday) & (F.col("eday") <= meday)
-    )
+    ccd = segments.filter((F.col("sday") >= msday) & (F.col("eday") <= meday))
     fdf = (
         features(aux2, ccd, feature_cols)
         .repartition(*PIXEL_KEYS)
         .sortWithinPartitions(*PIXEL_KEYS, "sday")
         .localCheckpoint(eager=True)
     )
-    if fdf.count() == 0:  # guard (randomforest.py:73-79)
+    if fdf.isEmpty():  # guard (randomforest.py:73-79)
         return None
     return pipeline(num_trees, seed).fit(fdf)
 
