@@ -239,30 +239,6 @@ def write_partitioned(
     writer.option("maxRecordsPerFile", 5_000_000).parquet(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: tuple[str, ...],
-    num_buckets: int = 32,
-    sort_cols: tuple[str, ...] | None = None,
-) -> None:
-    """Bucketed (and optionally sorted) catalog table.
-
-    Bucketing is the 100 TB co-location tool the reference gets from
-    Cassandra's partition key: two tables bucketed on the same join
-    key with the same bucket count join WITHOUT a shuffle (both
-    sides' Exchange nodes disappear), and sorted buckets skip the
-    sort of a sort-merge join. Use for standing fact⋈fact joins
-    (lineitem ⋈ orders) where broadcast is impossible.
-    """
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        num_buckets, *bucket_cols
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
-
-
 def read_partitioned(
     spark: SparkSession,
     path: str,

@@ -35,11 +35,6 @@ def dsum(col: str | Column, scale: int = 2) -> Column:
     return F.sum(dec(col, scale)).cast("double")
 
 
-def davg(col: str | Column, scale: int = 2) -> Column:
-    """Exact-sum / count as double (deterministic across engines)."""
-    return F.sum(dec(col, scale)).cast("double") / F.count(F.lit(1))
-
-
 def sql_d2d(expr: str) -> str:
     """DuckDB decimal→double via VARCHAR round-trip.
 
@@ -56,10 +51,3 @@ def sql_dsum(expr: str, scale: int = 2, precision: int = 18) -> str:
     """DuckDB oracle twin of dsum()."""
     return sql_d2d(f"SUM(CAST({expr} AS DECIMAL({precision},{scale})))")
 
-
-def sql_davg(expr: str, scale: int = 2, precision: int = 18) -> str:
-    """DuckDB oracle twin of davg()."""
-    return (
-        f"{sql_d2d(f'SUM(CAST({expr} AS DECIMAL({precision},{scale})))')}"
-        f" / COUNT(*)"
-    )

@@ -1102,10 +1102,9 @@ class LakeTable:
 
     def _clustered(self, df: DataFrame, cluster_by: list[str], bits: int = 12):
         """Range-partition + sort by the normalized z-order of
-        `cluster_by` (operators/zorder.zordered, the recipe of
-        write_zordered) so each staged file covers a tight key
-        hyper-rectangle, feeding the commit's per-file stats instead
-        of bare parquet footers."""
+        `cluster_by` (operators/zorder.zordered) so each staged file
+        covers a tight key hyper-rectangle, feeding the commit's
+        per-file stats instead of bare parquet footers."""
         from .operators.zorder import zordered
 
         n = df.sparkSession.sparkContext.defaultParallelism

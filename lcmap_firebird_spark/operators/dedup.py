@@ -301,56 +301,6 @@ def minhash_signature(
     return tagged.groupBy("doc_id").agg(*aggs, F.count("*").alias("n_sh"))
 
 
-def tune_bands_rows(
-    threshold: float,
-    num_perm: int = 16,
-    false_negative_weight: float = 1.0,
-) -> tuple[int, int]:
-    """Pick (bands, rows) with bands·rows == num_perm for a target
-    Jaccard threshold — the classic LSH S-curve optimization (Mining
-    of Massive Datasets §3.4; public theory, no reference analog).
-
-    A pair with Jaccard s becomes a candidate with probability
-    p(s) = 1 − (1 − s^rows)^bands. The tuner minimizes the integral
-    mismatch against the ideal step at `threshold`:
-
-        cost = w·∫₀^t (p_ideal − p)⁻ region  →  ∫₀^t p(s) ds (false
-        positives below t) + false_negative_weight · ∫_t^1 (1 − p(s)) ds
-        (false negatives above t),
-
-    evaluated in closed-enough form by fine Riemann sum (the search
-    space is the ≤ num_perm divisor pairs — driver-side, O(1)).
-    `false_negative_weight > 1` biases toward recall (dedup pipelines
-    usually prefer verifying extra candidates over missing dups —
-    the exact-Jaccard verification step removes false positives
-    anyway, so FNs are the irreversible error).
-
-    Pure function of its arguments — safe to call when composing
-    pipelines; the registry queries keep their pinned (4, 4) so the
-    certified plans never depend on a tuner."""
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    pairs = [
-        (b, num_perm // b)
-        for b in range(1, num_perm + 1)
-        if num_perm % b == 0
-    ]
-    steps = 1000
-
-    def cost(b: int, r: int) -> float:
-        fp = fn = 0.0
-        for i in range(steps):
-            s = (i + 0.5) / steps
-            p = 1.0 - (1.0 - s**r) ** b
-            if s < threshold:
-                fp += p
-            else:
-                fn += (1.0 - p) * false_negative_weight
-        return (fp + fn) / steps
-
-    return min(pairs, key=lambda br: cost(*br))
-
-
 def band_keys(signatures: DataFrame, bands: int = 4, rows: int = 4) -> DataFrame:
     """(doc_id, band_id, band_key) rows from h0..h{bands·rows-1}
     signature columns — the LSH banding projection. Pure column work:
@@ -765,8 +715,7 @@ def dedup_clusters(
 ) -> DataFrame:
     """Connected components over near-dup pairs → one cluster id per
     document: the production dedup output ("keep one per cluster")
-    built on top of any pair source (minhash_dedup, simhash_pairs,
-    embedding_neardup_pairs).
+    built on top of any pair source (minhash_dedup, simhash_pairs).
 
     Algorithm: min-label propagation with pointer jumping — each
     round takes the min label over the neighborhood, then follows one

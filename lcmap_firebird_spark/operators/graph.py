@@ -333,36 +333,3 @@ def pagerank_quantized(
         spark.conf.set(_AQE, prev_aqe)
     return ranks
 
-
-def rank_quality_gate(
-    docs: DataFrame,
-    edges: DataFrame,
-    min_percentile: float = 0.1,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Drop the lowest-ranked fraction of documents by link-graph
-    PageRank (the Common-Crawl-style centrality gate). Documents
-    absent from the graph keep their rows (no link evidence is not
-    negative evidence).
-
-    The cutoff is `approx_percentile` (Greenwald-Khanna sketch,
-    accuracy 10000): bounded memory per aggregation buffer at any
-    vertex count, rank error ≤ n/10000 — i.e. the gate may keep or
-    drop up to 0.01 % of nodes nearest the boundary, which a
-    percentile-based quality gate tolerates by construction. The old
-    exact `percentile` materialized EVERY rank in one buffer — a
-    billion-node OOM."""
-    pr = pagerank(edges)
-    cutoff = pr.agg(
-        F.expr(
-            f"approx_percentile(rank, {float(min_percentile)}, 10000)"
-        )
-    ).first()[0]
-    keep = pr.filter(F.col("rank") >= cutoff).select(
-        F.col("node").alias(id_col)
-    )
-    linked = docs.join(pr.select(F.col("node").alias(id_col)), id_col, "left_semi")
-    unlinked = docs.join(
-        pr.select(F.col("node").alias(id_col)), id_col, "left_anti"
-    )
-    return linked.join(keep, id_col, "left_semi").unionByName(unlinked)

@@ -7,8 +7,8 @@ computed once per document, written to a partitioned table, and each
 incoming batch
 
   1. computes signatures for the NEW documents only,
-  2. MERGEs them into the store (anti-join upsert — same semantics as
-     `operators/relational.upsert`, applied to a table on disk), and
+  2. MERGEs them into the store (anti-join upsert: batch rows win on
+     key collision), and
   3. finds near-dup pairs touching the batch by band-bucket equi-join
      of the batch's bands against the store's bands — cost scales
      with |batch| · bucket-occupancy, never with the corpus.
@@ -21,11 +21,6 @@ Invariant (tested in tests/test_incremental_dedup.py): running the
 store through N batch merges yields byte-identical pairs to the
 one-shot batch pipeline over the union — incremental is an execution
 strategy, not a different answer.
-
-A store persisted bucketed on doc_id (`catalog.write_bucketed`) makes
-the MERGE anti-join and the membership joins shuffle-free on the
-store side once both sides are bucketed (`tests/test_bucketing.py`
-proves the no-Exchange plan for this layout).
 """
 
 from __future__ import annotations
@@ -66,8 +61,7 @@ def merge_batch(
 ) -> DataFrame:
     """Upsert batch signatures into the store: batch rows win on
     doc_id collision (re-ingested documents refresh their state).
-    Anti-join + union — the MERGE core of `relational.upsert`, here
-    over signature state instead of fact rows.
+    Anti-join + union, over signature state instead of fact rows.
 
     REFRESH CAVEAT: replacing a doc's signature updates all FUTURE
     pairing, but pairs already accumulated for the doc's OLD content

@@ -76,19 +76,6 @@ def _bucketed(
     ).withColumn("_tok", token_count(text_col))
 
 
-def domain_token_counts(
-    df: DataFrame, domain_col: str = "source", text_col: str = "text"
-) -> DataFrame:
-    """(domain, n_docs, n_tokens) — the mixture's bookkeeping frame."""
-    return (
-        df.groupBy(F.col(domain_col).alias("domain"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(token_count(text_col)).alias("n_tokens"),
-        )
-    )
-
-
 def bucket_thresholds(
     bucketed: DataFrame, budgets: dict[str, int], domain_col: str
 ) -> DataFrame:
@@ -126,39 +113,6 @@ def bucket_thresholds(
         (F.max("_bkt") + F.lit(1)).alias("_thr"),
         F.max("_cum").alias("achieved_tokens"),
     )
-
-
-def token_budget_sample(
-    df: DataFrame,
-    budgets: dict[str, int],
-    domain_col: str = "source",
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    salt: str = "mix",
-) -> DataFrame:
-    """Downsampling only: keep, per domain, the docs in the leading
-    hash buckets whose cumulative tokens fit the domain's budget
-    (approached from below at bucket resolution). Domains missing
-    from `budgets` are dropped; a domain whose budget exceeds its
-    tokens is kept whole (use `compose_mixture` for upsampling)."""
-    if not budgets:
-        raise ValueError("budgets must name at least one domain")
-    bucketed = _bucketed(df, domain_col, key_col, text_col, salt)
-    # two consumers (the threshold aggregate's broadcast build side +
-    # the probe-side filter) would each re-run the tokenize+md5 scan
-    # on the un-materialized frame (the dsir.py pathology, PLANS.md
-    # rule 15) — checkpoint once
-    bucketed = bucketed.localCheckpoint(eager=True)
-    # alias the threshold key: a df that itself carries a column
-    # named 'domain' would otherwise make the join condition
-    # AMBIGUOUS_REFERENCE
-    thr = bucket_thresholds(bucketed, budgets, domain_col).select(
-        F.col("domain").alias("_tdomain"), "_thr"
-    )
-    out = bucketed.join(
-        F.broadcast(thr), bucketed[domain_col] == thr["_tdomain"]
-    ).filter(F.col("_bkt") < F.col("_thr"))
-    return out.select(*df.columns)
 
 
 def compose_mixture(
@@ -205,7 +159,7 @@ def compose_mixture(
     counts = {
         r["domain"]: int(r["n_tokens"] or 0)
         # derive from the checkpointed frame's _tok — NOT a fresh
-        # domain_token_counts(df) pass over the raw corpus; `or 0`
+        # token-count pass over the raw corpus; `or 0`
         # because an all-NULL-text domain sums to NULL (ANSI) and
         # int(None) crashed the driver
         for r in bucketed.groupBy(F.col(domain_col).alias("domain"))

@@ -237,51 +237,3 @@ def perplexity_gate(
         | (F.col("perplexity") <= max_perplexity)
     ).drop("perplexity")
 
-
-def perplexity_bins(
-    df: DataFrame,
-    unigrams: DataFrame,
-    bigrams: DataFrame,
-    vocab: int,
-    group_col: str = "lang",
-    bins: tuple[float, float] = (1.0 / 3.0, 2.0 / 3.0),
-    **kwargs,
-) -> DataFrame:
-    """CCNet's head/middle/tail split (Wenzek et al. 2020): score
-    every doc with the reference LM, then bin by PER-GROUP perplexity
-    percentiles (per language in the paper — absolute perplexities
-    aren't comparable across languages, so the cutoffs must be
-    relative). Output = input columns + `perplexity` + `ppl_bin` in
-    {'head','middle','tail','unscored'} (head = lowest perplexity =
-    closest to the reference domain; unscored = too short to have a
-    bigram, which no evidence should ever penalize).
-
-    Scale shape: the cutoff frame is one approx_percentile aggregate
-    per group (bounded sketch memory — the rank_quality_gate
-    argument) and broadcasts; the corpus is scored once and joined
-    once."""
-    scored = score_perplexity(df, unigrams, bigrams, vocab, **kwargs)
-    lo, hi = float(bins[0]), float(bins[1])
-    cuts = (
-        scored.filter(F.col("perplexity").isNotNull())
-        .groupBy(group_col)
-        .agg(
-            F.expr(
-                f"approx_percentile(perplexity, array({lo}, {hi}), 10000)"
-            ).alias("_cuts")
-        )
-    )
-    joined = scored.join(F.broadcast(cuts), group_col, "left")
-    bin_col = (
-        F.when(F.col("perplexity").isNull(), "unscored")
-        .when(
-            F.col("perplexity") <= F.element_at("_cuts", 1), "head"
-        )
-        .when(
-            F.col("perplexity") <= F.element_at("_cuts", 2), "middle"
-        )
-        .otherwise("tail")
-    )
-    return joined.select(
-        *df.columns, "perplexity", bin_col.alias("ppl_bin")
-    )

@@ -397,12 +397,17 @@ def chip_table(segments: DataFrame) -> DataFrame:
 
 
 def pixel_table(segments: DataFrame) -> DataFrame:
-    """Pixel projection (ccdc/pixel.py:24-35: cx, cy, px, py, mask)."""
+    """Pixel projection (ccdc/pixel.py:24-35: cx, cy, px, py, mask).
+    The one shuffle hashes by chip, which also satisfies the pixel-key
+    aggregate, so a chip's pixels stay in one sink file whatever
+    number of reducers AQE keeps."""
     from ..schemas import pixel_schema
     from .relational import conform
 
-    return conform(segments, pixel_schema()).dropDuplicates(
-        ["cx", "cy", "px", "py"]
+    return (
+        conform(segments, pixel_schema())
+        .repartition("cx", "cy")
+        .dropDuplicates(["cx", "cy", "px", "py"])
     )
 
 

@@ -77,15 +77,6 @@ def by_chip(df: DataFrame) -> DataFrame:
     return df.repartition(n_parts, "cx", "cy")
 
 
-def equi_join(
-    left: DataFrame, right: DataFrame, keys: Sequence[str], how: str = "inner"
-) -> DataFrame:
-    """Composite-key equi join (J2/J3; ccdc/features.py:6-17,
-    ccdc/segment.py:103-116). Catalyst picks broadcast vs sort-merge;
-    AQE re-plans at runtime on actual sizes."""
-    return left.join(right, on=list(keys), how=how)
-
-
 def distinct_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Distinct key projection used to drive selective reads
     (J4; ccdc/randomforest.py:67 `select(cx, cy).distinct()`)."""
@@ -103,23 +94,6 @@ def filter_not_in(df: DataFrame, col, values: Sequence) -> DataFrame:
     ccdc/randomforest.py:64 `'trends[0] NOT IN (0, 9)'`)."""
     c = F.col(col) if isinstance(col, str) else col
     return df.filter(~c.isin(*values))
-
-
-def upsert(
-    target: DataFrame, updates: DataFrame, keys: Sequence[str]
-) -> DataFrame:
-    """MERGE/upsert semantics as a pure DataFrame plan: update rows
-    present in `updates` (matched keys take the update's values),
-    insert unmatched updates, keep untouched target rows.
-
-    Implemented as target-anti-join ∪ updates — one shuffle on the
-    key (or zero if both sides are bucketed on it). This is the
-    engine-agnostic core of what Delta/Iceberg MERGE INTO compiles
-    to; pair with `catalog.write_partitioned` overwrite for the
-    table-level operation.
-    """
-    untouched = target.join(updates.select(*keys), list(keys), "left_anti")
-    return untouched.unionByName(updates)
 
 
 def head(df: DataFrame, n: int) -> DataFrame:

@@ -79,15 +79,6 @@ def doc_frequency(post: DataFrame, salt: int | None = None) -> DataFrame:
     )
 
 
-def doc_lengths(
-    corpus: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    return corpus.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(tokens(text_col)).alias("dl"),
-    )
-
-
 def bm25_quantized(
     df: DataFrame,
     query_terms: tuple[str, ...],

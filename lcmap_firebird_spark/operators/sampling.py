@@ -1,16 +1,13 @@
 """Sampling operators for training-data pipelines.
 
-Two tiers:
-- `hash_sample` — deterministic content-hash sampling: a row is in
-  the p% split iff hash(key) mod M < p·M. Reproducible across runs,
-  engines, and cluster sizes (no RNG state, no partition-layout
-  dependence) — the only sane way to carve train/val/test splits at
-  100 TB, because membership is a pure function of the key: late
-  data lands in the same split, and joins between split artifacts
-  stay consistent.
-- `stratified_sample` — per-stratum Bernoulli via sampleBy(seed):
-  statistically clean fractions per class, but partition-layout
-  dependent → use for exploratory work, not reproducible splits.
+Deterministic content-hash sampling: a row's bucket is hash(key) mod
+M, so split membership is reproducible across runs, engines, and
+cluster sizes (no RNG state, no partition-layout dependence) — the
+only sane way to carve train/val/test splits at 100 TB, because
+membership is a pure function of the key: late data lands in the same
+split, and joins between split artifacts stay consistent.
+`train_val_test` carves weighted splits and `stratified_hash_sample`
+keeps per-stratum fractions on the same buckets.
 """
 
 from __future__ import annotations
@@ -55,19 +52,12 @@ def split_bucket(key: Column | str, salt: str = "") -> Column:
     `salt` decorrelates independent splits over the same key.
 
     NULL keys coalesce to a sentinel before hashing, so they share
-    ONE deterministic bucket instead of propagating NULL — which
-    made hash_sample silently DROP null-key rows (NULL < t filters
-    false) while train_val_test routed them all to 'test' via its
+    ONE deterministic bucket instead of propagating NULL — a NULL
+    bucket would silently DROP null-key rows from a `bucket < t`
+    filter but route them all to 'test' through train_val_test's
     otherwise() branch: two split surfaces disagreeing on the same
     keys. (Oracle twins hash non-null doc_id, so parity holds.)"""
     return hash60(salted_key(key, salt)) % SAMPLE_MOD
-
-
-def hash_sample(
-    df: DataFrame, key: str, fraction: float, salt: str = ""
-) -> DataFrame:
-    """Keep ~fraction of rows, membership a pure function of key."""
-    return df.filter(split_bucket(key, salt) < bucket_threshold(fraction))
 
 
 def train_val_test(
@@ -87,14 +77,6 @@ def train_val_test(
     return df.withColumn("split", assignment)
 
 
-def stratified_sample(
-    df: DataFrame, strata_col: str, fractions: dict, seed: int = 42
-) -> DataFrame:
-    """Per-stratum Bernoulli sampling (Spark sampleBy). Seeded but
-    partition-layout dependent — NOT for reproducible splits."""
-    return df.sampleBy(strata_col, fractions, seed)
-
-
 def stratified_hash_sample(
     df: DataFrame,
     strata_col: str,
@@ -102,8 +84,8 @@ def stratified_hash_sample(
     fractions: dict,
     salt: str = "strata",
 ) -> DataFrame:
-    """Deterministic twin of `stratified_sample`: per-stratum
-    fractions, but membership is a pure function of (key, salt) —
+    """Deterministic stratified sampling: per-stratum fractions, with
+    membership a pure function of (key, salt) —
     row r is kept iff split_bucket(key) < fraction[stratum]·MOD.
 
     Same statistical intent as seeded sampleBy (independent ~p_s

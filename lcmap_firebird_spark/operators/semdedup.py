@@ -8,8 +8,8 @@ analog (its pipeline is per-pixel change detection); the public
 recipe is:
 
 1. k-means cluster the embeddings (the coarse quantizer bounds every
-   later step — reuse `similarity.train_ivf_centroids`/`ivf_assign`,
-   so clustering is one broadcast-assignment pass);
+   later step — reuse `similarity.ivf_assign`, so clustering is one
+   broadcast-assignment pass);
 2. within each cluster, points closer than `eps` in cosine are
    duplicates (pairs via a cell equi-join — the quadratic is bounded
    by cell occupancy, never the corpus);
@@ -49,7 +49,6 @@ def semdedup(
     embeddings: DataFrame,
     eps: float = 0.05,
     num_cells: int | None = None,
-    centroids: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -58,14 +57,11 @@ def semdedup(
     from centroid — always kept); a row is dropped iff some
     earlier-ranked row in its cluster has cosine ≥ 1 − eps with it.
 
-    Pass `centroids` from `similarity.train_ivf_centroids` for
-    KMeans cells (the paper's setting); the default deterministic
-    seeds keep tests/oracles portable. `num_cells=None` derives the
-    cell count from the corpus size (bounded occupancy at any
-    scale)."""
-    assign = ivf_assign(
-        embeddings, num_cells, id_col, vec_col, centroids
-    )
+    The cells come from deterministic seeds (`ivf_assign`) in place
+    of the paper's KMeans centroids, which keeps tests/oracles
+    portable. `num_cells=None` derives the cell count from the corpus
+    size (bounded occupancy at any scale)."""
+    assign = ivf_assign(embeddings, num_cells, id_col, vec_col)
     e = (
         embeddings.select(
             F.col(id_col).alias("vec_id"),
@@ -117,17 +113,14 @@ def semdedup_gate(
     embeddings: DataFrame,
     eps: float = 0.05,
     num_cells: int | None = None,
-    centroids: DataFrame | None = None,
     doc_id_col: str = "doc_id",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Filter `docs` to SemDeDup keepers (embeddings keyed by the
     same ids). Docs without an embedding pass the gate — no geometry
-    is not negative evidence (mirrors rank_quality_gate's posture)."""
-    labels = semdedup(
-        embeddings, eps, num_cells, centroids, id_col, vec_col
-    )
+    is not negative evidence)."""
+    labels = semdedup(embeddings, eps, num_cells, id_col, vec_col)
     dropped = labels.filter(~F.col("is_keeper")).select(
         F.col("vec_id").alias(doc_id_col)
     )

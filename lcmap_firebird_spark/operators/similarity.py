@@ -43,32 +43,12 @@ def dot_q(a: Column, b: Column) -> Column:
     )
 
 
-def cosine_q(a: Column, b: Column) -> Column:
-    """Deterministic cosine: int dot / (sqrt(int)·sqrt(int)).
-
-    Norms are sqrt'd separately — their BIGINT product could overflow
-    at 64 dims × 1e4 scale; two doubles multiply deterministically.
-    """
-    denom = F.sqrt(dot_q(a, a).cast("double")) * F.sqrt(
-        dot_q(b, b).cast("double")
-    )
-    # zero-norm guard: an all-zero (or quantized-to-zero) vector has
-    # no direction — define its cosine as 0.0 instead of letting
-    # Spark 4's default ANSI mode kill the whole job with
-    # DIVIDE_BY_ZERO (the oracle SQL carries the same CASE)
-    return F.when(denom == 0.0, F.lit(0.0)).otherwise(
-        dot_q(a, b).cast("double") / denom
-    )
-
-
 def norm_q(a: Column) -> Column:
     """sqrt of the exact integer self-dot — precompute this per VECTOR
-    before any pairwise join: `cosine_q` inside a pair join re-derives
-    both norms for every candidate pair (3× the zip_with work and, at
-    k candidates/vector, k× redundant), while
-    `dot/(norm_a·norm_b)` with precomputed norms does one array pass
-    per pair. Bit-identical result: same exact-int self-dot, same
-    double sqrt/multiply/divide order."""
+    before any pairwise join: a cosine that re-derives both norms for
+    every candidate pair does 3× the zip_with work (and, at k
+    candidates/vector, k× redundant), while `dot/(norm_a·norm_b)` with
+    precomputed norms does one array pass per pair."""
     return F.sqrt(dot_q(a, a).cast("double"))
 
 
@@ -81,54 +61,6 @@ def cosine_pre(dot: Column, norm_a: Column, norm_b: Column) -> Column:
     denom = norm_a * norm_b
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(
         dot.cast("double") / denom
-    )
-
-
-def normalize(col: str | Column = "embedding") -> Column:
-    """L2-normalize an array<float> column — pure codegen (one
-    aggregate for the norm, one transform to scale); rows with zero
-    norm pass through unchanged. After normalization, cosine ==
-    dot product, so downstream ANN can skip the per-pair norm
-    divides entirely."""
-    c = F.col(col) if isinstance(col, str) else col
-    nrm = F.sqrt(
-        F.aggregate(
-            c, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-    return F.when(nrm == 0.0, c.cast("array<double>")).otherwise(
-        F.transform(c, lambda x: x.cast("double") / nrm)
-    )
-
-
-def pca_project(
-    embeddings: DataFrame,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Project embeddings to `k` principal components — the
-    dimensionality-reduction leg ahead of IVF/LSH when the raw dim
-    makes per-pair arithmetic the bottleneck (classic IVF-PCA ANN).
-
-    MLlib PCA fits the k-basis over the corpus (distributed
-    covariance + local eigendecomposition — the same train-small /
-    broadcast-apply shape as train_ivf_centroids); the projection is
-    then one map-side matrix multiply per row, no shuffle. Output:
-    (vec_id, embedding array<double>[k]) — plug straight back into
-    lsh_buckets / ivf_assign / knn_* (they quantize whatever dim
-    they're given).
-    """
-    from pyspark.ml.feature import PCA
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    feat = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    model = PCA(k=k, inputCol="features", outputCol="proj").fit(feat)
-    return model.transform(feat).select(
-        "vec_id", vector_to_array("proj").alias(vec_col)
     )
 
 
@@ -280,55 +212,17 @@ def derive_num_cells(
     return max(lo, min(hi, math.ceil(n / target_cell)))
 
 
-def train_ivf_centroids(
-    embeddings: DataFrame,
-    num_cells: int = 8,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 20,
-) -> DataFrame:
-    """MLlib KMeans coarse quantizer → (seed_id, seed_vec) centroid
-    frame for `ivf_assign(centroids=...)`.
-
-    Training is the offline leg of standing IVF: distributed
-    Lloyd-iteration fit over the corpus (seeded, so re-trains are
-    reproducible given the same data/partitioning), then the
-    `num_cells × dim` centers — a few KB — come back to the driver
-    and are re-emitted as the broadcastable centroid frame, already
-    quantized so assignment arithmetic stays exact-integer. Same
-    pipeline machinery as plans/classification.py (M1-M3): ml.Vector
-    in, model params out.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = embeddings.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=num_cells, seed=seed, maxIter=max_iter).fit(feat)
-    rows = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    cdf = embeddings.sparkSession.createDataFrame(
-        rows, "seed_id bigint, center array<double>"
-    )
-    return cdf.select("seed_id", quantize("center").alias("seed_vec"))
-
-
 def ivf_assign(
     embeddings: DataFrame,
     num_cells: int | None = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF coarse quantizer: assign each vector to its nearest seed
     centroid (exact quantized L2, ties → smallest seed id).
 
-    Default seeds are the `num_cells` lowest-id vectors — a
-    deterministic stand-in that keeps the oracle portable; pass
-    `centroids` (from `train_ivf_centroids`, schema seed_id/seed_vec)
-    for KMeans-trained cells with the identical assignment plan. The
+    The seeds are the `num_cells` lowest-id vectors — a deterministic
+    stand-in for trained centroids that keeps the oracle portable. The
     seed set is broadcast, so assignment is one map-side pass over
     the corpus — the IVF property that makes standing ANN cheap at
     100 TB: search joins on `cell` and scans N/num_cells vectors.
@@ -336,27 +230,9 @@ def ivf_assign(
     `num_cells=None` derives the cell count from the corpus size so
     expected occupancy stays ~64 at any scale (`derive_num_cells`).
     """
-    return _ivf_ranked(embeddings, num_cells, id_col, vec_col, centroids).filter(
+    return _ivf_ranked(embeddings, num_cells, id_col, vec_col).filter(
         F.col("rn") == 1
     ).select("vec_id", F.col("seed_id").alias("cell"), "dist")
-
-
-def ivf_probe_cells(
-    embeddings: DataFrame,
-    num_cells: int | None = 8,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """The `nprobe` nearest cells per vector — the IVF recall lever:
-    searching the union of several near cells recovers neighbors that
-    fell just across a cell boundary (classic IVF nprobe). Same
-    ranked broadcast-assignment plan as `ivf_assign`, keeping rows
-    with rank ≤ nprobe instead of only the winner."""
-    return _ivf_ranked(embeddings, num_cells, id_col, vec_col, centroids).filter(
-        F.col("rn") <= nprobe
-    ).select("vec_id", F.col("seed_id").alias("cell"), F.col("rn").alias("probe_rank"))
 
 
 def _ivf_ranked(
@@ -364,29 +240,25 @@ def _ivf_ranked(
     num_cells: int | None,
     id_col: str,
     vec_col: str,
-    centroids: DataFrame | None,
 ) -> DataFrame:
     """Shared core: every (vector, seed) distance, rank-windowed per
     vector (exact quantized L2, ties → smallest seed id)."""
     from .dedup import spread
 
-    if centroids is not None:
-        seeds = centroids.select("seed_id", "seed_vec")
-    else:
-        if num_cells is None:
-            num_cells = derive_num_cells(embeddings.count())
-        # the num_cells LOWEST ids — a TakeOrdered, not a filter on
-        # `id < num_cells`, which assumes dense 0-based ids and
-        # silently returns an EMPTY seed set (and thus zero output
-        # rows downstream) for sparse/offset/hash-derived ids
-        seeds = (
-            embeddings.select(
-                F.col(id_col).alias("seed_id"),
-                quantize(vec_col).alias("seed_vec"),
-            )
-            .orderBy("seed_id")
-            .limit(num_cells)
+    if num_cells is None:
+        num_cells = derive_num_cells(embeddings.count())
+    # the num_cells LOWEST ids — a TakeOrdered, not a filter on
+    # `id < num_cells`, which assumes dense 0-based ids and silently
+    # returns an EMPTY seed set (and thus zero output rows downstream)
+    # for sparse/offset/hash-derived ids
+    seeds = (
+        embeddings.select(
+            F.col(id_col).alias("seed_id"),
+            quantize(vec_col).alias("seed_vec"),
         )
+        .orderBy("seed_id")
+        .limit(num_cells)
+    )
     corpus = spread(embeddings, id_col).select(
         F.col(id_col).alias("vec_id"), quantize(vec_col).alias("qv")
     )
@@ -407,24 +279,22 @@ def knn_ivf(
     num_cells: int | None = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
     nprobe: int = 1,
 ) -> DataFrame:
     """ANN: top-k within the query's `nprobe` nearest IVF cells.
     Same bucketed-join shape as knn_lsh, with a learned-ish coarse
     quantizer instead of random hyperplanes. `num_cells=None` sizes
-    cells from the corpus count; `centroids` plugs in KMeans-trained
-    cells (`train_ivf_centroids`); `nprobe>1` unions candidates from
+    cells from the corpus count; `nprobe>1` unions candidates from
     several near cells for recall (a (q,n) pair can't duplicate:
     membership is unique per n, probed cells distinct per q)."""
     # One corpus×seeds ranking pass serves BOTH the cell assignment
-    # (rn == 1) and the nprobe probe set (rn <= nprobe) — calling
-    # ivf_assign + ivf_probe_cells separately would score every
-    # (vector, seed) pair twice. Eager localCheckpoint (not cache):
-    # the two sides of the per-cell self-join sit in concurrently
-    # launched stages, and a lazy cache lets both recompute the
-    # ranking pipeline instead of one waiting for the other.
-    ranked = _ivf_ranked(embeddings, num_cells, id_col, vec_col, centroids)
+    # (rn == 1) and the nprobe probe set (rn <= nprobe), so every
+    # (vector, seed) pair is scored once. Eager localCheckpoint (not
+    # cache): the two sides of the per-cell self-join sit in
+    # concurrently launched stages, and a lazy cache lets both
+    # recompute the ranking pipeline instead of one waiting for the
+    # other.
+    ranked = _ivf_ranked(embeddings, num_cells, id_col, vec_col)
     ranked = ranked.filter(F.col("rn") <= max(1, nprobe)).select(
         "vec_id", F.col("seed_id").alias("cell"), "rn"
     )
@@ -532,59 +402,6 @@ def _bucket_pairs(
         )
         pairs = p if pairs is None else pairs.unionByName(p)
     return pairs.distinct() if num_tables > 1 else pairs
-
-
-def embedding_neardup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.4,
-    num_planes: int | None = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_tables: int = 1,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs, LSH-blocked.
-
-    The dedup-ladder rung for embedded content: candidates =
-    same-LSH-bucket pairs (equi-join, no all-pairs product),
-    verification = exact quantized cosine ≥ threshold. Same
-    candidates-before-quadratics ordering as MinHash dedup.
-    `num_planes=None` sizes buckets from the corpus count;
-    `num_tables>1` unions independent plane sets for recall.
-    """
-    cand = _bucket_pairs(
-        embeddings, num_planes, dim, id_col, vec_col, num_tables, symmetric=False
-    )
-    # both the a_id and b_id attach joins read this frame
-    e = embeddings.select(
-        F.col(id_col).alias("vec_id"), quantize(vec_col).alias("qv")
-    ).withColumn("nrm", norm_q(F.col("qv"))).localCheckpoint(eager=True)
-    return (
-        cand.join(
-            e.select(
-                F.col("vec_id").alias("a_id"),
-                F.col("qv").alias("qa"),
-                F.col("nrm").alias("na"),
-            ),
-            "a_id",
-        )
-        .join(
-            e.select(
-                F.col("vec_id").alias("b_id"),
-                F.col("qv").alias("qb"),
-                F.col("nrm").alias("nb"),
-            ),
-            "b_id",
-        )
-        .select(
-            F.col("a_id").alias("vec_a"),
-            F.col("b_id").alias("vec_b"),
-            cosine_pre(
-                dot_q(F.col("qa"), F.col("qb")), F.col("na"), F.col("nb")
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
 
 
 def knn_lsh(

@@ -2,15 +2,9 @@
 row).
 
 AQE's skew-join splitting handles sort-merge skew automatically, but
-two cases still need explicit salting at 100 TB:
-- aggregation skew (one hot group overwhelms a reducer), and
-- joins AQE can't split (e.g. broadcast fallback disabled,
-  or pre-AQE engines).
-
-`salted_join` replicates the small side `salt` times and hash-salts
-the big side deterministically, so each hot key fans over `salt`
-reducers; `salted_count` does two-level aggregation (partial per
-salt, then merge).
+aggregation skew (one hot group overwhelms a reducer) still needs
+explicit salting at 100 TB: `salted_agg_count` does two-level
+aggregation (partial per salt, then merge).
 """
 
 from __future__ import annotations
@@ -29,42 +23,6 @@ def _salt_col(df: DataFrame, keys: Sequence[str], salt: int):
     # a hot key's distinct rows spread across all `salt` buckets even
     # when the key occupies few input partitions
     return F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt))
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    keys: Sequence[str],
-    salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where `big` has skewed keys: big rows get a
-    deterministic salt in [0, salt); `small` is exploded across all
-    salts. Each hot key's rows now land on `salt` reducers instead
-    of one. Result is identical to a plain join — for the BIG-side-
-    preserving join types only: an unmatched SMALL row exists `salt`
-    times after the explode, so right/full outer would duplicate it
-    salt-fold (r8 review); those types are rejected rather than
-    silently wrong."""
-    # Spark-valid spellings only: 'semi'/'anti' are aliases Spark
-    # accepts for the left variants (r8 ADVICE — they were wrongly
-    # rejected); 'cross' is NOT accepted because df.join(on=keys,
-    # how='cross') is itself invalid in Spark (cross takes no keys).
-    if how.replace("outer", "").strip("_") not in (
-        "inner", "left", "semi", "leftsemi", "left_semi",
-        "anti", "leftanti", "left_anti",
-    ):
-        raise ValueError(
-            f"salted_join cannot preserve {how!r} semantics: the "
-            "replicated small side would duplicate unmatched rows "
-            f"{salt}x under right/full outer joins"
-        )
-    big_s = big.withColumn("_salt", _salt_col(big, keys, salt))
-    small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    ).withColumn("_salt", F.col("_salt").cast("bigint"))
-    out = big_s.join(small_s, [*keys, "_salt"], how)
-    return out.drop("_salt")
 
 
 def salted_agg_count(

@@ -232,33 +232,6 @@ def top_fraction_of(grams: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def repeated_ngram_fraction(col: str | Column = "text", n: int = 2) -> Column:
-    """Gopher-style repetition signal: fraction of n-grams that are
-    repeats of an earlier one (1 − distinct/total). Exact-integer
-    inputs, one double division — engine-portable."""
-    return repeated_fraction_of(ngram_list(col, n))
-
-
-def top_ngram_fraction(col: str | Column = "text", n: int = 2) -> Column:
-    """Fraction of n-grams claimed by the single most frequent one
-    (Gopher's top-n-gram dominance filter)."""
-    return top_fraction_of(ngram_list(col, n))
-
-
-def dup_line_fraction(col: str | Column = "text") -> Column:
-    """Fraction of non-blank lines that duplicate an earlier line —
-    the Gopher boilerplate filter (nav bars, cookie banners repeat
-    verbatim). Docs without newlines score 0.0."""
-    c = F.col(col) if isinstance(col, str) else col
-    lines = F.filter(F.split(c, r"\n"), lambda x: F.length(F.trim(x)) > 0)
-    return F.when(
-        F.size(lines) > 1,
-        F.lit(1.0)
-        - F.size(F.array_distinct(lines)).cast("double")
-        / F.size(lines).cast("double"),
-    ).otherwise(F.lit(0.0))
-
-
 # GPT-2-style pretokenizer shape: optional leading space + letter
 # run | digit run | punctuation run (ASCII subset — portable across
 # Java regex and RE2)

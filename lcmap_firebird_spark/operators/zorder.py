@@ -99,25 +99,3 @@ def zordered(
         .drop("_z")
     )
 
-
-def write_zordered(
-    df: DataFrame,
-    cols: Sequence[str],
-    path: str,
-    bits: int = 12,
-    num_files: int | None = None,
-) -> None:
-    """Write `df` as parquet clustered by the z-order of `cols`
-    (`zordered`), so each output file/row-group covers a tight
-    hyper-rectangle of the key space and min/max stats prune
-    multi-dimensional range scans."""
-    if num_files is not None and num_files < 1:
-        # same trap class as chip_ids(num_partitions=0) (r8 glue
-        # review): an explicit 0 silently becoming default
-        # parallelism hides the caller's bug
-        raise ValueError(f"num_files must be >= 1, got {num_files}")
-    n = num_files or df.sparkSession.sparkContext.defaultParallelism
-    out = zordered(df, cols, n, bits)
-    # empty frame or all-NULL cluster column: nothing to order — write
-    # as-is instead of raising TypeError on None arithmetic
-    (df if out is None else out).write.mode("overwrite").parquet(path)

@@ -60,8 +60,10 @@ def chip_table(segments: DataFrame) -> DataFrame:
 
 
 def pixel_table(segments: DataFrame) -> DataFrame:
-    """Pixel-level projection (ccdc/pixel.py:24-35 analog)."""
-    return segments.groupBy(*PIXEL_KEYS).agg(
+    """Pixel-level projection (ccdc/pixel.py:24-35 analog). Hashed by
+    chip, like `pyccd.pixel_table`, so a chip's pixels stay in one
+    sink file."""
+    return segments.repartition("cx", "cy").groupBy(*PIXEL_KEYS).agg(
         F.count("*").alias("n_segments"),
         F.max("chprob").alias("max_chprob"),
     )

@@ -294,10 +294,8 @@ def x5_upsert(spark: SparkSession, sf: str) -> DataFrame:
     files, ONE atomic read-dependent commit — and the result is the
     post-merge snapshot read back through the commit log. 'Update'
     every BUILDING customer's balance to 0, 'insert' two synthetic
-    customers; output the merged table. Same output contract and
-    oracle as the plan-level `relational.upsert` (which remains the
-    ephemeral, no-table-on-disk variant); this registry row now
-    certifies the ACID MERGE implementation itself."""
+    customers; output the merged table. This registry row certifies
+    the ACID MERGE implementation itself."""
     import tempfile
 
     from ..lakehouse import LakeTable
@@ -352,7 +350,7 @@ def sql2_correlated_subquery(spark: SparkSession, sf: str) -> DataFrame:
 
 def z1_zorder(spark: SparkSession, sf: str) -> DataFrame:
     """Z-order (Morton) clustering key over (l_partkey, l_suppkey):
-    the multi-dimensional sort key `operators/zorder.write_zordered`
+    the multi-dimensional sort key `LakeTable.cluster`
     clusters files by, exposed as a query so the interleave math is
     oracle-checked; zbucket (top bits) is the coarse cluster id a
     reader prunes on."""

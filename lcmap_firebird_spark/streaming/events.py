@@ -3,11 +3,11 @@
 The reference is batch-only (closed 'acquired' intervals,
 ccdc/core.py:41-50); this module adds the Structured Streaming
 equivalents a continuous-ingest deployment needs: watermarked
-tumbling/sliding windows, session windows, and stateful dedup — all
+tumbling windows, session windows, and stateful dedup — all
 built-ins, no custom state handling.
 
 Scale notes:
-- watermark delay bounds state size: tumbling/sliding state evicts
+- watermark delay bounds state size: tumbling-window state evicts
   once `ts < watermark`, session state once a session closes.
 - `availableNow` triggers give deterministic batch-equivalent
   results over static files — which is what the oracle checks: the
@@ -28,8 +28,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-from ..worker import drop_zip_finders
 
 
 def events_schema() -> StructType:
@@ -109,22 +107,6 @@ def tumbling_counts(
             "n",
             "sum_value",
         )
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    width: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked sliding-window aggregation (each event lands in
-    width/slide windows)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(F.unix_micros(F.col("w.start")).alias("win_start_us"), "n")
     )
 
 
@@ -214,86 +196,6 @@ def purchases_after_signup(
         "s_event_id",
         F.col("p_user").alias("user_id"),
         "p_value",
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-user
-    running (count, sum) carried across micro-batches — the escape
-    hatch for stateful semantics the built-in windows can't express
-    (SURVEY §2.11). State is one tiny tuple per key; at scale the
-    state store shards by the group key like any keyed state.
-
-    Emits the updated running totals for every user seen in each
-    micro-batch (update semantics — the memory sink accumulates one
-    row per (user, batch); take the max-n row per user for finals).
-    """
-    import pandas as pd
-
-    def kernel(key, pdf_iter, state):
-        drop_zip_finders()
-        (user_id,) = key
-        count, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdf_iter:
-            count += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((count, total))
-        yield pd.DataFrame(
-            {"user_id": [user_id], "n": [count], "total": [total]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        kernel,
-        outputStructType="user_id long, n long, total double",
-        stateStructType="n long, total double",
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The same per-user running totals on Spark 4's
-    transformWithStateInPandas — the successor API to
-    applyInPandasWithState, with typed state handles (ValueState
-    here; List/Map state and timers available) backed by the RocksDB
-    state store at scale.
-
-    NOTE: this API requires a working `google.protobuf` install
-    (the Python worker speaks protobuf to the JVM state server);
-    environments without it should use `running_user_totals`
-    (applyInPandasWithState), which is wire-protocol-free."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n BIGINT, total DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                self._state.get() if self._state.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n": [n], "total": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        TotalsProcessor(),
-        outputStructType="user_id long, n long, total double",
-        outputMode="Update",
-        timeMode="None",
     )
 
 
@@ -396,13 +298,3 @@ def run_available_now(
     shutil.rmtree(os.path.join(streaming_conf(), name), ignore_errors=True)
     return out
 
-
-# shipped to Python workers (pandas-UDF kernel in running_user_totals,
-# StatefulProcessor in running_user_totals_tws) — CLAUDE.md rule 2;
-# today both are function-local (cloudpickle falls back to by-value),
-# but a hoist to module level must not start failing foreign-cwd runs
-import sys  # noqa: E402
-
-import pyspark  # noqa: E402
-
-pyspark.cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -10,7 +10,9 @@ file per chip per table. This file pins:
   the plan is built);
 - on a 2-chip fixture, every chip, pixel and segment sink of both
   paths holds exactly one data file per chip directory, with the
-  rows the in-memory tables hold;
+  rows the in-memory tables hold; the pixel sink does so also when
+  AQE keeps every reducer partition, because its one shuffle hashes
+  by chip;
 - `classification.train`'s features join keeps dynamic partition
   pruning on the cx/cy-partitioned segment table without a separate
   chip restriction;
@@ -140,6 +142,17 @@ def _rows(df) -> list[str]:
     return sorted(repr(tuple(r[c] for c in cols)) for r in df.collect())
 
 
+def _shuffles_above_cache(df) -> list[str]:
+    """Shuffle exchanges between the sink and its persisted input
+    (the cached plan prints below the InMemoryRelation line)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    top = plan.split("InMemoryRelation")[0]
+    return [
+        ln.strip() for ln in top.splitlines()
+        if "Exchange" in ln and "BroadcastExchange" not in ln
+    ]
+
+
 @pytest.mark.parametrize("path", ["long", "ard"])
 def test_sinks_write_one_file_per_chip(spark, tile, tmp_path, path):
     if path == "long":
@@ -164,6 +177,25 @@ def test_sinks_write_one_file_per_chip(spark, tile, tmp_path, path):
             assert _rows(back) == _rows(fn(seg)), name
         pix = {(r.cx, r.cy, r.px, r.py) for r in seg.collect()}
         assert pix == {(*c, *p) for c in CHIPS for p in PIXELS}
+        # a chip's pixels stay in one file when AQE keeps every
+        # reducer partition, because the pixel aggregate's one shuffle
+        # hashes by chip
+        pixel_table = fns[1]
+        conf = "spark.sql.adaptive.coalescePartitions.enabled"
+        prev = spark.conf.get(conf)
+        spark.conf.set(conf, "false")
+        try:
+            out = str(tmp_path / "pixel_uncoalesced")
+            write_partitioned(pixel_table(seg), out, mode="overwrite")
+        finally:
+            spark.conf.set(conf, prev)
+        for d in ("cx=0", "cx=3000"):
+            leaf = os.path.join(out, d, "cy=0")
+            assert len(_data_files(leaf)) == 1, (d, _data_files(leaf))
+        shuffles = _shuffles_above_cache(pixel_table(seg))
+        assert len(shuffles) == 1, shuffles
+        assert "hashpartitioning(cx#" in shuffles[0], shuffles
+        assert "px#" not in shuffles[0], shuffles
     finally:
         seg.unpersist()
 

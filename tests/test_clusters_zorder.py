@@ -4,10 +4,9 @@ multi-column clustering."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from lcmap_firebird_spark.operators import dedup as D
-from lcmap_firebird_spark.operators.zorder import sql_zvalue, write_zordered, zvalue
+from lcmap_firebird_spark.operators.zorder import sql_zvalue, zvalue
 
 
 # --- dedup_clusters ---------------------------------------------------------
@@ -80,35 +79,3 @@ def test_zvalue_rejects_overflow():
     with pytest.raises(ValueError):
         zvalue(["a", "b", "c", "d"], bits=16)  # 64 bits > signed range
 
-
-def test_write_zordered_tightens_rowgroup_stats(spark, tmp_path):
-    """Clustering evidence: after z-ordering on (l_partkey, l_suppkey),
-    each output file covers a much tighter range of BOTH columns than
-    an unsorted write — the min/max stats a reader prunes on."""
-    import pyarrow.parquet as pq
-
-    li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    plain, zed = str(tmp_path / "plain"), str(tmp_path / "zed")
-    li.repartition(8).write.mode("overwrite").parquet(plain)
-    write_zordered(li, ["l_partkey", "l_suppkey"], zed, num_files=8)
-
-    def avg_span(path, col):
-        import glob
-
-        spans = []
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            for rg in range(md.num_row_groups):
-                for ci in range(md.num_columns):
-                    c = md.row_group(rg).column(ci)
-                    if c.path_in_schema == col and c.statistics is not None:
-                        spans.append(c.statistics.max - c.statistics.min)
-        return sum(spans) / len(spans)
-
-    for col in ("l_partkey", "l_suppkey"):
-        assert avg_span(zed, col) < 0.7 * avg_span(plain, col), col
-
-    # round-trip: clustering must not change the data
-    assert spark.read.parquet(zed).count() == li.count()

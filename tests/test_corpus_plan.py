@@ -36,7 +36,7 @@ def test_gates_hold(docs, prepared):
     bad = prepared.filter(
         (T.token_count("text") < 5)
         | ~T.language_id("text").isin(*LANGS)
-        | (T.repeated_ngram_fraction("text", 2) > 0.5)
+        | (T.repeated_fraction_of(T.ngram_list("text", 2)) > 0.5)
     )
     assert bad.count() == 0
 

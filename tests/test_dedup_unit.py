@@ -103,18 +103,19 @@ def test_lsh_buckets_colocate_identical_vectors(spark):
     assert out[1] == out[2]
 
 
-def test_ivf_kmeans_centroids(spark, sf_dir):
-    """KMeans-trained IVF: every vector lands on its exact-nearest
-    trained centroid, and knn_ivf runs the same plan shape over the
-    learned cells (rows-only evidence: MLlib fit has no SQL twin)."""
+def test_ivf_assign_matches_bruteforce_argmin(spark, sf_dir):
+    """Every vector lands on its exact-nearest seed (the num_cells
+    lowest ids), and knn_ivf runs over the same cells."""
     from lcmap_firebird_spark.catalog import read_table
     from lcmap_firebird_spark.operators import similarity as S
     from pyspark.sql import functions as F
 
     emb = read_table(spark, "embeddings", sf_dir).limit(200).cache()
-    cents = S.train_ivf_centroids(emb, num_cells=4, seed=7).cache()
-    assert cents.count() == 4
-    assigned = S.ivf_assign(emb, centroids=cents)
+    cents = emb.orderBy("vec_id").limit(4).select(
+        F.col("vec_id").alias("seed_id"),
+        S.quantize("embedding").alias("seed_vec"),
+    )
+    assigned = S.ivf_assign(emb, 4)
     assert assigned.count() == emb.count()
     # brute-force check: assigned cell == argmin quantized L2 (ties -> min id)
     qv = emb.select(F.col("vec_id"), S.quantize("embedding").alias("v"))
@@ -136,7 +137,7 @@ def test_ivf_kmeans_centroids(spark, sf_dir):
         .count()
     )
     assert diff == 0
-    knn = S.knn_ivf(emb, top_k=1, centroids=cents)
+    knn = S.knn_ivf(emb, top_k=1, num_cells=4)
     assert knn.filter(F.col("rank") == 1).count() > 0
 
 
@@ -166,69 +167,10 @@ def test_ivf_nprobe_recall(spark, sf_dir):
     r1, r2 = recall(1), recall(2)
     assert r2 >= r1
     # probing 2 cells must widen the candidate universe on this corpus
-    p1 = S.ivf_probe_cells(emb, 8, nprobe=1).count()
-    p2 = S.ivf_probe_cells(emb, 8, nprobe=2).count()
+    ranked = S._ivf_ranked(emb, 8, "vec_id", "embedding")
+    p1 = ranked.filter(F.col("rn") <= 1).count()
+    p2 = ranked.filter(F.col("rn") <= 2).count()
     assert p2 > p1
-
-
-def test_normalize_embeddings(spark, sf_dir):
-    from lcmap_firebird_spark.catalog import read_table
-    from lcmap_firebird_spark.operators.similarity import normalize
-
-    import pyspark.sql.functions as F
-
-    emb = read_table(spark, "embeddings", sf_dir).limit(100)
-    out = emb.select(
-        F.aggregate(
-            normalize("embedding"), F.lit(0.0), lambda a, x: a + x * x
-        ).alias("sq")
-    ).collect()
-    assert all(abs(r.sq - 1.0) < 1e-9 for r in out)
-    # zero vector passes through
-    z = spark.createDataFrame([(1, [0.0, 0.0])], "vec_id long, embedding array<double>")
-    assert z.select(normalize("embedding").alias("e")).first().e == [0.0, 0.0]
-
-
-def test_pca_project_feeds_ann(spark, sf_dir):
-    """PCA output has dim k and plugs into the existing k-NN plans;
-    top-1 neighbors on a 16-dim projection agree with full-dim for
-    most queries (sanity, not a recall guarantee)."""
-    from lcmap_firebird_spark.catalog import read_table
-    from lcmap_firebird_spark.operators.similarity import (
-        knn_bruteforce,
-        pca_project,
-    )
-
-    import pyspark.sql.functions as F
-
-    emb = read_table(spark, "embeddings", sf_dir).limit(200)
-    proj = pca_project(emb, k=16)
-    first = proj.first()
-    assert len(first.embedding) == 16
-    assert proj.count() == 200
-
-    q_full = emb.filter(F.col("vec_id") < 5)
-    q_proj = proj.filter(F.col("vec_id") < 5)
-    top_full = {
-        r.q_id: r.n_id
-        for r in knn_bruteforce(emb, q_full, top_k=1).collect()
-    }
-    top_proj = {
-        r.q_id: r.n_id
-        for r in knn_bruteforce(proj, q_proj, top_k=1).collect()
-    }
-    # the synthetic embeddings are near-uniform random, so top-1
-    # agreement after 64→16 projection is weak by construction — the
-    # contract here is shape + pluggability + determinism, with at
-    # least some structure surviving
-    assert len(top_proj) == len(top_full) == 5
-    agree = sum(top_full[q] == top_proj.get(q) for q in top_full)
-    assert agree >= 1
-    top_proj2 = {
-        r.q_id: r.n_id
-        for r in knn_bruteforce(proj, q_proj, top_k=1).collect()
-    }
-    assert top_proj2 == top_proj  # deterministic within the session
 
 
 def test_minhash_clusters_equals_expanded_pipeline(spark, sf_dir):
@@ -315,63 +257,6 @@ def test_lsh_candidates_hot_bucket_cap(spark):
     )._jdf.queryExecution().optimizedPlan().toString()
     assert "broadcast" in hinted_plan.lower()
     assert "broadcast" not in unhinted_plan.lower()
-
-
-def test_tune_bands_rows_s_curve_properties():
-    """The tuner must honor the LSH theory: bands·rows == num_perm,
-    higher thresholds get more rows per band (sharper AND), recall
-    bias shifts toward more bands, and the chosen curve really does
-    separate the two sides of the threshold."""
-    from lcmap_firebird_spark.operators.dedup import tune_bands_rows
-
-    import pytest as _pytest
-
-    for t in (0.2, 0.5, 0.8):
-        b, r = tune_bands_rows(t, num_perm=16)
-        assert b * r == 16 and b >= 1 and r >= 1
-    # monotonicity: a stricter threshold never picks FEWER rows
-    rows_at = [tune_bands_rows(t, 16)[1] for t in (0.2, 0.5, 0.8)]
-    assert rows_at == sorted(rows_at)
-    # recall bias: weighting FNs harder never increases rows
-    b1, r1 = tune_bands_rows(0.5, 16, false_negative_weight=1.0)
-    b5, r5 = tune_bands_rows(0.5, 16, false_negative_weight=5.0)
-    assert r5 <= r1
-    # the selected curve separates the threshold: candidate
-    # probability is low well below t and high well above it
-    b, r = tune_bands_rows(0.5, 16)
-    p = lambda s: 1 - (1 - s**r) ** b  # noqa: E731
-    assert p(0.2) < 0.35 < 0.65 < p(0.8)
-    with _pytest.raises(ValueError):
-        tune_bands_rows(0.0)
-    with _pytest.raises(ValueError):
-        tune_bands_rows(1.0)
-
-
-def test_tune_bands_rows_composes_with_pipeline(spark):
-    """End-to-end: tuner-chosen (b, r) drive minhash_dedup and the
-    pair output still verifies against exact Jaccard (the threshold
-    filter downstream guarantees precision regardless of tuning)."""
-    from lcmap_firebird_spark.operators.dedup import (
-        minhash_dedup,
-        tune_bands_rows,
-    )
-
-    b, r = tune_bands_rows(0.5, num_perm=16)
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta"),
-            (2, "alpha beta gamma delta epsilon eta"),  # near-dup of 1
-            (3, "one two three four five six"),
-            (4, "alpha beta gamma delta epsilon zeta"),  # exact dup of 1
-        ],
-        "doc_id long, text string",
-    )
-    pairs = minhash_dedup(docs, threshold=0.5, num_perm=16, bands=b, rows=r)
-    got = {(p["doc_a"], p["doc_b"]) for p in pairs.collect()}
-    assert (1, 4) in got          # exact dup always survives
-    assert all(a != 3 and bb != 3 for a, bb in got)  # 3 pairs with no one
-    for p in pairs.collect():
-        assert p["jaccard"] >= 0.5  # verification bound holds
 
 
 def test_dedup_clusters_converges_on_long_chains(spark):

@@ -2,10 +2,9 @@
 
 documents -> heuristic + learned quality gates -> dedup ladder ->
 exact-substring cut -> token-budget mixture -> transactional lake
-table (writer surface) -> snapshot read -> chunk -> pack. Every
-stage is an operator this repo ships; the assertions check the
-invariants that survive composition (no duplicates, budget bound,
-atomic table state, token conservation through packing).
+table (writer surface) -> snapshot read. Every stage is an operator
+this repo ships; the assertions check the invariants that survive
+composition (no duplicates, budget bound, atomic table state).
 """
 
 from __future__ import annotations
@@ -18,10 +17,6 @@ from lcmap_firebird_spark.lakehouse import LakeTable
 from lcmap_firebird_spark.operators import text as T
 from lcmap_firebird_spark.operators.classifier import train_log_odds
 from lcmap_firebird_spark.operators.dedup import minhash_dedup
-from lcmap_firebird_spark.operators.pipeline import (
-    chunk_documents,
-    pack_sequences,
-)
 from lcmap_firebird_spark.operators.substring import duplicate_spans
 from lcmap_firebird_spark.plans import corpus as C
 
@@ -68,16 +63,4 @@ def test_full_pipeline_composes(spark, sf_dir, tmp_path):
     )
     assert t.snapshot().count() == n
     assert t.latest_version() == 1  # ONE atomic data commit
-
-    # the table's one data commit feeds the packing stage
-    snap = t.snapshot()
-    assert snap.count() == n
-
-    chunks = chunk_documents(snap, chunk_tokens=32, overlap=0)
-    packs = pack_sequences(chunks, seq_len=128)
-    # token conservation: every chunk token lands in exactly one pack
-    total_chunk_tokens = chunks.agg(F.sum("n_tokens")).first()[0]
-    total_pack_tokens = packs.agg(F.sum("n_tokens")).first()[0]
-    assert total_pack_tokens == total_chunk_tokens
-    assert packs.filter(F.col("n_tokens") > 128).count() == 0
     prepared.unpersist()

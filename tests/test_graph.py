@@ -1,12 +1,12 @@
 """PageRank (operators/graph.py) vs an independent pure-Python power
-iteration, plus structural sanity and the centrality gate."""
+iteration, plus structural sanity."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from lcmap_firebird_spark.operators.graph import pagerank, rank_quality_gate
+from lcmap_firebird_spark.operators.graph import pagerank
 
 from .helpers import slow_enabled
 
@@ -75,22 +75,6 @@ def test_structure_sane(spark, edges_df):
     again = {r["node"]: r["rank"] for r in pagerank(doubled).collect()}
     for v in got:
         assert again[v] == pytest.approx(got[v], abs=1e-12)
-
-
-def test_rank_quality_gate_drops_bottom_keeps_unlinked(spark, edges_df):
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in [1, 2, 3, 4, 99]],
-        "doc_id long, text string",
-    )
-    out = rank_quality_gate(docs, edges_df, min_percentile=0.3)
-    kept = {r.doc_id for r in out.collect()}
-    # unlinked doc survives; the worst-ranked linked docs are cut
-    assert 99 in kept
-    assert 3 in kept
-    got = {r["node"]: r["rank"] for r in pagerank(edges_df).collect()}
-    dropped = {1, 2, 3, 4} - kept
-    for d in dropped:
-        assert got[d] <= sorted(got.values())[2]
 
 
 # asymmetric undirected graph: a path 1-2-3-4 plus a pendant 5-2 —

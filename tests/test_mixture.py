@@ -1,6 +1,5 @@
 """Token-budget mixture composition (operators/mixture.py):
-deterministic domain-weighted selection, bucket-resolution budget
-adherence, monotone membership, and epoch-exact upsampling."""
+deterministic domain-weighted selection and epoch-exact upsampling."""
 
 from __future__ import annotations
 
@@ -8,8 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from lcmap_firebird_spark.operators import mixture as MIX
-
-from .helpers import slow_enabled
 from lcmap_firebird_spark.operators.text import token_count
 
 
@@ -34,49 +31,6 @@ def _tokens_by_domain(df):
         F.sum(token_count("text")).alias("t")
     ).collect()
     return {r["source"]: r["t"] for r in out}
-
-
-def test_domain_token_counts(spark, corpus):
-    got = {
-        r["domain"]: (r["n_docs"], r["n_tokens"])
-        for r in MIX.domain_token_counts(corpus).collect()
-    }
-    assert got == {"web": (400, 8000), "code": (100, 4000), "books": (10, 1000)}
-
-
-def test_budget_sample_under_budget_and_deterministic(spark, corpus):
-    budgets = {"web": 3000, "code": 1000}
-    a = MIX.token_budget_sample(corpus, budgets)
-    b = MIX.token_budget_sample(corpus, budgets)
-    ra = sorted(r.doc_id for r in a.collect())
-    assert ra == sorted(r.doc_id for r in b.collect())
-    toks = _tokens_by_domain(a)
-    # books had no budget -> dropped entirely
-    assert set(toks) == {"web", "code"}
-    # achieved <= budget, and within one doc's tokens of it (each
-    # bucket holds ~1 doc at this size, so resolution ~ 1 doc)
-    assert toks["web"] <= 3000
-    assert toks["code"] <= 1000
-    assert toks["web"] >= 3000 - 20 * 8
-    assert toks["code"] >= 1000 - 40 * 8
-
-
-def test_budget_sample_whole_domain_when_budget_exceeds(spark, corpus):
-    out = MIX.token_budget_sample(corpus, {"books": 10_000})
-    assert out.count() == 10
-    assert _tokens_by_domain(out) == {"books": 1000}
-
-
-def test_membership_monotone_in_budget(spark, corpus):
-    small = {
-        r.doc_id
-        for r in MIX.token_budget_sample(corpus, {"web": 2000}).collect()
-    }
-    big = {
-        r.doc_id
-        for r in MIX.token_budget_sample(corpus, {"web": 5000}).collect()
-    }
-    assert small <= big
 
 
 def test_compose_mixture_weights_and_epochs(spark, corpus):
@@ -149,47 +103,3 @@ def test_zero_token_domain_never_explodes(spark):
     assert per_doc.get(1, 0) <= 1
     assert len(rows) <= 3
 
-
-# --- property: budget adherence + monotonicity on random corpora -----------
-
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
-
-_corpus_strategy = st.lists(
-    st.tuples(
-        st.sampled_from(["a", "b", "c"]),        # domain
-        st.integers(min_value=0, max_value=30),  # token count
-    ),
-    min_size=1,
-    max_size=40,
-)
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@pytest.mark.skipif(
-    not slow_enabled(), reason="hypothesis sweep — SPARK_GRAFT_SLOW=1"
-)
-@given(corpus=_corpus_strategy, budget=st.integers(1, 500))
-def test_budget_sample_properties(spark, corpus, budget):
-    rows = [
-        (i, dom, " ".join(f"x{i}y{j}" for j in range(n)))
-        for i, (dom, n) in enumerate(corpus)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    domains = {dom for dom, _ in corpus}
-    budgets = {d: budget for d in domains}
-    out = MIX.token_budget_sample(df, budgets).collect()
-    # 1) achieved tokens never exceed the budget, per domain
-    per_dom = {}
-    for r in out:
-        per_dom[r.source] = per_dom.get(r.source, 0) + len(r.text.split())
-    assert all(v <= budget for v in per_dom.values())
-    # 2) monotone: doubling the budget only adds documents
-    out2 = MIX.token_budget_sample(
-        df, {d: budget * 2 for d in domains}
-    ).collect()
-    assert {r.doc_id for r in out} <= {r.doc_id for r in out2}

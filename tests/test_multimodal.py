@@ -16,7 +16,9 @@ def media(spark):
 
 
 def test_media_table_schema(media):
-    assert media.schema.simpleString() == M.media_schema().simpleString()
+    assert media.schema.simpleString() == (
+        "struct<media_id:bigint,payload:binary,media_type:string,n_bytes:bigint>"
+    )
     rows = {r.media_id: r for r in media.collect()}
     assert rows[2].n_bytes == 100
     assert bytes(rows[1].payload) == b"short"
@@ -32,14 +34,6 @@ def test_extract_features_deterministic(media):
     assert by_id[1][3] is not None and by_id[1][4] is not None  # stub dims
 
 
-def test_resize_pads_and_truncates(media):
-    out = {r.media_id: r for r in M.resize(media, 8, 8).collect()}
-    assert all(len(bytes(r.payload)) == 64 for r in out.values())
-    assert bytes(out[1].payload).startswith(b"short\0")  # padded
-    assert bytes(out[2].payload) == b"x" * 64  # truncated
-    assert out[1].width == 8 and out[1].height == 8
-
-
 def test_frame_sample_explodes(media):
     frames = M.frame_sample(media, every_n_bytes=50).collect()
     by_id: dict[int, list] = {}
@@ -48,67 +42,3 @@ def test_frame_sample_explodes(media):
     assert len(by_id[1]) == 1  # 5 bytes → 1 frame
     assert len(by_id[2]) == 2  # 100 bytes → 2×50
     assert [r.frame_idx for r in sorted(by_id[2], key=lambda r: r.frame_idx)] == [0, 1]
-
-
-def test_embed_media_composes_with_neardup(spark):
-    """Multimodal near-dup end to end: byte-histogram embeddings from
-    the media table feed the SAME embedding near-dup plan the
-    embeddings table uses."""
-    import random
-
-    from lcmap_firebird_spark.operators.multimodal import embed_media
-    from lcmap_firebird_spark.operators.similarity import (
-        embedding_neardup_pairs,
-    )
-
-    rng = random.Random(42)
-    base = rng.randbytes(2048)
-    tweaked = bytearray(base)
-    tweaked[100] ^= 0xFF  # one byte differs
-    rows = [
-        (1, bytearray(base)),
-        (2, tweaked),
-        (3, bytearray(rng.randbytes(2048))),
-    ]
-    media = spark.createDataFrame(
-        rows, "media_id long, payload binary"
-    )
-    emb = embed_media(media)
-    vecs = {r.vec_id: r.embedding for r in emb.collect()}
-    assert all(len(v) == 64 for v in vecs.values())
-    pairs = embedding_neardup_pairs(emb, threshold=0.99).collect()
-    found = {(r.vec_a, r.vec_b) for r in pairs}
-    assert (1, 2) in found
-    assert not any(3 in p for p in found)
-
-
-def test_chunk_audio_pcm_windows_reconstruct(spark):
-    from lcmap_firebird_spark.operators.multimodal import chunk_audio
-
-    # 16-bit PCM at 1 kHz: 2 bytes/ms — byte math is easy to verify
-    payload = bytes(range(256)) * 2  # 512 bytes = 256 ms
-    media = spark.createDataFrame(
-        [(1, payload)], "media_id long, payload binary"
-    )
-    out = chunk_audio(
-        media, window_ms=100, hop_ms=100, sample_rate=1000, sample_width=2
-    ).collect()
-    assert [r.chunk_idx for r in out] == [0, 1, 2]
-    assert [r.t_start_ms for r in out] == [0, 100, 200]
-    assert [len(r.chunk_bytes) for r in out] == [200, 200, 112]
-    # non-overlapping windows reconstruct the payload exactly
-    assert b"".join(bytes(r.chunk_bytes) for r in out) == payload
-    # overlap: hop < window duplicates the overlapped region
-    ov = chunk_audio(
-        media, window_ms=100, hop_ms=50, sample_rate=1000, sample_width=2
-    ).collect()
-    assert len(ov) > len(out)
-    assert bytes(ov[1].chunk_bytes)[:100] == bytes(ov[0].chunk_bytes)[100:]
-    # per-row rate column wins over the constant
-    media2 = spark.createDataFrame(
-        [(1, payload, 2000)], "media_id long, payload binary, sr int"
-    )
-    fast = chunk_audio(
-        media2, window_ms=100, hop_ms=100, sample_width=2, rate_col="sr"
-    ).collect()
-    assert [len(r.chunk_bytes) for r in fast][0] == 400  # 2 kHz => 4 B/ms

@@ -91,50 +91,6 @@ def test_gate_keeps_reference_like_and_shorts(spark, model):
     assert kept == {10, 12}
 
 
-def test_bins_per_group_percentiles(spark, model):
-    uni, bi, v = model
-    # two 'languages'; within each, docs ordered from reference-like
-    # to gibberish — bins must be assigned per group, not globally
-    docs = spark.createDataFrame(
-        [
-            (1, "en", "the cat sat on the mat"),
-            (2, "en", "the dog sat on the rug"),
-            (3, "en", "a cat and a dog sat together"),
-            (4, "en", "rug mat zzz qqq xxx vvv"),
-            (5, "en", "zz qq ww ee rr tt yy uu"),
-            (6, "en", "the cat sat on the rug"),
-            # distinct perplexities (ties would make bins ambiguous)
-            # that are all far worse than every en reference-like doc
-            (7, "xx", "the cat zz qq ww ee rr tt"),
-            (8, "xx", "the zz qq ww ee rr tt yy"),
-            (9, "xx", "gg hh jj kk ll pp"),
-            (10, "en", "hi"),  # unscored
-        ],
-        "doc_id long, lang string, text string",
-    )
-    out = P.perplexity_bins(docs, uni, bi, v, group_col="lang")
-    rows = {r.doc_id: r for r in out.collect()}
-    assert set(rows) == set(range(1, 11))
-    assert rows[10].ppl_bin == "unscored"
-    # per-group: every group has at least one head; the worst doc in
-    # each group is never 'head'
-    for grp, ids in (("en", [1, 2, 3, 4, 5, 6]), ("xx", [7, 8, 9])):
-        bins = {i: rows[i].ppl_bin for i in ids}
-        assert "head" in bins.values()
-        worst = max(ids, key=lambda i: rows[i].perplexity)
-        assert bins[worst] == "tail"
-    # even though xx's perplexities are globally terrible, xx still
-    # gets heads — the CCNet per-language point
-    assert any(rows[i].ppl_bin == "head" for i in (7, 8, 9))
-    # monotone: within a group, head ppl <= middle ppl <= tail ppl
-    order = {"head": 0, "middle": 1, "tail": 2}
-    for ids in ([1, 2, 3, 4, 5, 6], [7, 8, 9]):
-        pairs = sorted(
-            (rows[i].perplexity, order[rows[i].ppl_bin]) for i in ids
-        )
-        assert [b for _, b in pairs] == sorted(b for _, b in pairs)
-
-
 def test_jvm_only_plan(spark, model):
     uni, bi, v = model
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")

@@ -175,20 +175,6 @@ def test_spread_never_probes_shuffle_bearing_plans(spark, sf_dir):
         assert _is_narrow_scan(df)
 
 
-def test_chunking_is_shuffle_free(spark, sf_dir):
-    """chunk_documents is scan → project → explode: embarrassingly
-    parallel, no Exchange anywhere in the plan."""
-    from lcmap_firebird_spark.catalog import read_table
-    from lcmap_firebird_spark.operators.pipeline import chunk_documents
-
-    docs = read_table(spark, "documents", sf_dir)
-    plan = (
-        chunk_documents(docs, 64, 8)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 def test_contamination_broadcasts_benchmark_side(spark, sf_dir):
     """The benchmark side must broadcast; the corpus side's only
     exchange is the aggregation on (doc_id, bench_id) — never a

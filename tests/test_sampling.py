@@ -1,24 +1,14 @@
-"""Deterministic hash-sampling invariants: stability across runs,
-split disjointness/exhaustiveness, salt decorrelation."""
+"""Deterministic hash-sampling invariants: split
+disjointness/exhaustiveness, salt decorrelation, stratified rates."""
 
 from __future__ import annotations
 
 from lcmap_firebird_spark.catalog import read_table
 from lcmap_firebird_spark.operators.sampling import (
-    hash_sample,
+    bucket_threshold,
+    split_bucket,
     train_val_test,
 )
-
-
-def test_hash_sample_is_stable_and_subsets_nest(spark, sf_dir):
-    docs = read_table(spark, "documents", sf_dir)
-    s10_a = {r.doc_id for r in hash_sample(docs, "doc_id", 0.10).select("doc_id").collect()}
-    s10_b = {r.doc_id for r in hash_sample(docs, "doc_id", 0.10).select("doc_id").collect()}
-    s20 = {r.doc_id for r in hash_sample(docs, "doc_id", 0.20).select("doc_id").collect()}
-    assert s10_a == s10_b  # pure function of key
-    assert s10_a <= s20  # larger fraction nests the smaller
-    n = docs.count()
-    assert 0.05 * n < len(s10_a) < 0.15 * n
 
 
 def test_split_disjoint_exhaustive_deterministic(spark, sf_dir):
@@ -34,8 +24,9 @@ def test_split_disjoint_exhaustive_deterministic(spark, sf_dir):
 
 def test_salt_decorrelates_splits(spark, sf_dir):
     docs = read_table(spark, "documents", sf_dir)
-    s1 = {r.doc_id for r in hash_sample(docs, "doc_id", 0.5, salt="a").select("doc_id").collect()}
-    s2 = {r.doc_id for r in hash_sample(docs, "doc_id", 0.5, salt="b").select("doc_id").collect()}
+    half = bucket_threshold(0.5)
+    s1 = {r.doc_id for r in docs.filter(split_bucket("doc_id", "a") < half).select("doc_id").collect()}
+    s2 = {r.doc_id for r in docs.filter(split_bucket("doc_id", "b") < half).select("doc_id").collect()}
     assert s1 != s2
     n = docs.count()
     overlap = len(s1 & s2) / n
@@ -66,25 +57,17 @@ def test_stratified_hash_sample_deterministic_and_proportional(spark, sf_dir):
 
 
 def test_null_keys_split_consistently(spark):
-    """NULL keys hash to one deterministic bucket: hash_sample no
-    longer silently drops them and train_val_test no longer dumps
+    """NULL keys hash to one deterministic bucket: a bucket filter
+    never silently drops them and train_val_test no longer dumps
     them all into 'test' by default — both surfaces agree."""
-    from lcmap_firebird_spark.operators.sampling import (
-        hash_sample,
-        train_val_test,
-    )
-
     df = spark.createDataFrame(
         [(1,), (2,), (None,), (None,)], "doc_id long"
     )
-    kept = hash_sample(df, "doc_id", 1.0)
-    assert kept.count() == 4  # keep-everything keeps NULL keys too
+    buckets = df.select(split_bucket("doc_id").alias("b")).collect()
+    assert all(r.b is not None for r in buckets)
     split = {
         (r["doc_id"], r["split"])
         for r in train_val_test(df, "doc_id").collect()
     }
     null_splits = {s for k, s in split if k is None}
     assert len(null_splits) == 1  # both NULL rows land together
-    # and membership in hash_sample matches the split thresholds:
-    # fraction 0 keeps nothing, NULLs included
-    assert hash_sample(df, "doc_id", 0.0).count() == 0

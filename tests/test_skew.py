@@ -1,4 +1,4 @@
-"""Salted join/agg: identical results to plain ops on skewed data,
+"""Salted aggregation: identical results to plain ops on skewed data,
 with the salt actually spreading the hot key."""
 
 from __future__ import annotations
@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from lcmap_firebird_spark.operators.skew import salted_agg_count, salted_join
+from lcmap_firebird_spark.operators.skew import salted_agg_count
 
 
 @pytest.fixture(scope="module")
@@ -17,23 +17,6 @@ def skewed(spark):
         [(k, 0) for k in range(2, 6)], ["k", "v"]
     )
     return hot.unionByName(cold)
-
-
-def test_salted_join_equals_plain_join(spark, skewed):
-    dim = spark.createDataFrame(
-        [(k, f"name{k}") for k in range(1, 6)], ["k", "name"]
-    )
-    plain = skewed.join(dim, ["k"]).groupBy("k", "name").count()
-    salted = salted_join(skewed, dim, ["k"], salt=4).groupBy("k", "name").count()
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_join_left_outer(spark, skewed):
-    dim = spark.createDataFrame([(1, "one")], ["k", "name"])
-    out = salted_join(skewed, dim, ["k"], salt=4, how="left")
-    assert out.count() == skewed.count()
-    nulls = out.filter(F.col("name").isNull()).select("k").distinct().collect()
-    assert {r.k for r in nulls} == {2, 3, 4, 5}
 
 
 def test_salted_agg_count_matches(spark, skewed):
@@ -106,39 +89,3 @@ def test_bm25_topk_salted_row_identical(spark, hot_term_corpus):
     )
     assert len(plain) > 0
 
-
-def test_salted_join_rejects_small_side_preserving_types(spark, skewed):
-    """right/full outer would duplicate an unmatched small row salt
-    times (it exists once per salt after the explode) — rejected
-    loudly rather than silently wrong (r8 review)."""
-    import pytest
-
-    dim = spark.createDataFrame([(1, "one"), (99, "unmatched")], ["k", "name"])
-    for how in ("right", "right_outer", "full", "full_outer", "outer"):
-        with pytest.raises(ValueError, match="salted_join"):
-            salted_join(skewed, dim, ["k"], salt=4, how=how)
-    # big-side-preserving types still pass through
-    assert salted_join(skewed, dim, ["k"], salt=4, how="left_anti").count() >= 0
-
-
-def test_salted_join_accepts_semi_anti_aliases_rejects_cross(spark, skewed):
-    """'semi'/'anti' are Spark-valid aliases for the left variants and
-    big-side-preserving — they must pass (r8 ADVICE: the whitelist
-    wrongly rejected them). 'cross' is rejected: Spark itself refuses
-    df.join(on=keys, how='cross'), so allowing it only deferred the
-    error to a confusing Spark exception."""
-    import pytest
-
-    dim = spark.createDataFrame([(1, "one"), (99, "unmatched")], ["k", "name"])
-    plain_semi = skewed.join(dim, ["k"], "semi")
-    salted_semi = salted_join(skewed, dim, ["k"], salt=4, how="semi")
-    assert sorted(map(tuple, plain_semi.collect())) == sorted(
-        map(tuple, salted_semi.collect())
-    )
-    plain_anti = skewed.join(dim, ["k"], "anti")
-    salted_anti = salted_join(skewed, dim, ["k"], salt=4, how="anti")
-    assert sorted(map(tuple, plain_anti.collect())) == sorted(
-        map(tuple, salted_anti.collect())
-    )
-    with pytest.raises(ValueError, match="salted_join"):
-        salted_join(skewed, dim, ["k"], salt=4, how="cross")

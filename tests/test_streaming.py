@@ -56,16 +56,6 @@ def test_late_data_dropped_after_state_eviction(spark, tmp_path):
     assert not any(et == "late" for _, et in by_win)
 
 
-def test_sliding_windows_multiple_assignment(spark, sf_dir):
-    stream = ST.stream_events(spark, sf_dir)
-    out = ST.run_available_now(
-        ST.sliding_counts(stream, "1 hour", "30 minutes"), spark, mode="complete"
-    )
-    total_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    # every event lands in exactly width/slide = 2 windows
-    assert out.agg(F.sum("n")).first()[0] == 2 * total_events
-
-
 def test_stream_dedup_is_exactly_distinct(spark, sf_dir):
     stream = ST.stream_events(spark, sf_dir)
     out = ST.run_available_now(

@@ -1,12 +1,11 @@
-"""Gopher-style repetition signals: duplicate-line fraction, repeated
-n-gram fraction, top-n-gram dominance. Values are checked against
+"""Gopher-style repetition signals: repeated n-gram fraction and
+top-n-gram dominance. Values are checked against
 hand-computed fractions; determinism comes from exact-integer inputs
 and single double divisions (same recipe the t3 oracle mirrors)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from lcmap_firebird_spark.operators import text as T
 
@@ -14,7 +13,6 @@ from lcmap_firebird_spark.operators import text as T
 @pytest.fixture(scope="module")
 def docs(spark):
     rows = [
-        # 4 non-blank lines, 2 distinct -> dup_line 0.5
         (1, "nav bar\nnav bar\ncontent here\nnav bar"),
         # "a b" x3 + "b a" x2 in "a b a b a b": grams [ab, ba, ab, ba, ab]
         (2, "a b a b a b"),
@@ -35,15 +33,8 @@ def _collect(spark, rows, expr):
     }
 
 
-def test_dup_line_fraction(spark, docs):
-    got = _collect(spark, docs, T.dup_line_fraction("text"))
-    assert got[1] == 0.5
-    assert got[2] == 0.0  # no newlines -> single line -> 0
-    assert got[5] == 0.0
-
-
 def test_repeated_ngram_fraction(spark, docs):
-    got = _collect(spark, docs, T.repeated_ngram_fraction("text", 2))
+    got = _collect(spark, docs, T.repeated_fraction_of(T.ngram_list("text", 2)))
     # doc 2: 5 grams, 2 distinct -> 1 - 2/5 = 0.6
     assert got[2] == 0.6
     assert got[3] == 0.0
@@ -51,7 +42,7 @@ def test_repeated_ngram_fraction(spark, docs):
 
 
 def test_top_ngram_fraction(spark, docs):
-    got = _collect(spark, docs, T.top_ngram_fraction("text", 2))
+    got = _collect(spark, docs, T.top_fraction_of(T.ngram_list("text", 2)))
     # doc 2: "a b" appears 3 of 5 grams
     assert got[2] == 0.6
     # doc 3: every gram unique -> top gram claims 1/3

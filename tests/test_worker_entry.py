@@ -197,10 +197,8 @@ def test_every_worker_entry_point_drops_zip_finders():
         "operators/segmentation.py",
         "operators/pyccd.py",
         "operators/multimodal.py",
-        "operators/pipeline.py",
         "sources/external.py",
         "sources/ardgen.py",
-        "streaming/events.py",
     } <= shipping
 
 
