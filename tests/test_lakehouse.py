@@ -1146,3 +1146,131 @@ def test_signature_store_on_lakehouse_merge(spark, tmp_path):
     assert got == want
     # the store's history is per-batch time travel
     assert t.snapshot(version=1).count() == 10
+
+
+def _codecs(table, recs) -> dict[str, set[str]]:
+    """{record path: the codecs of its Parquet column chunks}, read
+    from the footers."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for r in recs:
+        md = pq.ParquetFile(os.path.join(table.root, r["path"])).metadata
+        out[r["path"]] = {
+            md.row_group(i).column(j).compression
+            for i in range(md.num_row_groups)
+            for j in range(md.num_columns)
+        }
+    return out
+
+
+def test_every_lake_write_path_writes_zstd(spark, table):
+    """create, merge, delete_mor, compact and cluster all stage their
+    data and deletion-vector files as zstd, whatever the session's
+    Parquet codec."""
+    key = "spark.sql.parquet.compression.codec"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "snappy")
+    try:
+
+        def check(step) -> set[str]:
+            got = _codecs(table, table._live()[0])
+            assert got, step
+            bad = {p: c for p, c in got.items() if c != {"ZSTD"}}
+            assert not bad, (step, bad)
+            return set(got)
+
+        check("create")
+        table.merge(
+            spark.createDataFrame(
+                [(5, "FIVE", -5.0), (200, "new", 1.0)],
+                "id long, name string, val double",
+            )
+        )
+        check("merge")
+        table.delete_mor("id % 10 = 3")
+        assert any(p.endswith(".dv.parquet") for p in check("delete_mor"))
+        table.compact(target_rows=1_000_000)
+        check("compact")
+        table.cluster()
+        check("cluster")
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_snappy_files_of_older_tables_still_read_and_compact(
+    spark, tmp_path
+):
+    """A table whose committed file is snappy (staged before the lake
+    wrote zstd) gives the same rows as an all-zstd twin through
+    snapshot, delete_mor, merge and compact, and compact's output is
+    zstd."""
+    import pyarrow.parquet as pq
+
+    base = spark.createDataFrame(
+        [(i, f"name{i}", float(i)) for i in range(100)],
+        "id long, name string, val double",
+    ).repartition(4, "id")
+    old = LakeTable.create(spark, str(tmp_path / "old"), base, key_cols=["id"])
+    new = LakeTable.create(spark, str(tmp_path / "new"), base, key_cols=["id"])
+    for t in (old, new):
+        t.delete_mor("id % 10 = 3")
+    # rewrite one DV-covered file in place: same rows, same order, so
+    # the committed DV positions still name the same rows
+    covered = {c for r in _dv_recs(old) for c in r["covers"]}
+    rec = next(r for r in _data_recs(old) if r["path"] in covered)
+    path = os.path.join(old.root, rec["path"])
+    pq.write_table(pq.read_table(path), path, compression="snappy")
+    assert _codecs(old, [rec])[rec["path"]] == {"SNAPPY"}
+    ids = sorted(
+        i for i in pq.read_table(path, columns=["id"])["id"].to_pylist()
+        if i % 10 != 3
+    )
+
+    def same():
+        got = _rows(old.snapshot())
+        assert got == _rows(new.snapshot())
+        return got
+
+    assert len(same()) == 90
+    for t in (old, new):
+        t.delete_mor(f"id = {ids[0]}")
+    assert len(same()) == 89
+    src = spark.createDataFrame(
+        [(ids[1], "merged", -1.0), (ids[2], "merged", -2.0), (500, "new", 5.0)],
+        "id long, name string, val double",
+    )
+    for t in (old, new):
+        t.merge(src)
+    assert len(same()) == 90
+    assert rec["path"] not in {r["path"] for r in _data_recs(old)}
+    for t in (old, new):
+        t.compact(target_rows=1_000_000)
+    same()
+    live = _codecs(old, old._live()[0])
+    assert live and all(c == {"ZSTD"} for c in live.values())
+
+
+def test_lake_has_one_dataframe_writer():
+    """Every DataFrameWriter use in lakehouse.py sits in
+    `LakeTable._stage`, so no write path can skip the lake's codec."""
+    import ast
+    import inspect
+
+    from lcmap_firebird_spark import lakehouse
+
+    tree = ast.parse(inspect.getsource(lakehouse))
+    uses = []
+
+    def walk(node, where):
+        if isinstance(node, (ast.ClassDef, ast.FunctionDef)):
+            where = (*where, node.name)
+        if isinstance(node, ast.Attribute) and node.attr in (
+            "write", "writeTo", "writeStream"
+        ):
+            uses.append((where, node.lineno))
+        for child in ast.iter_child_nodes(node):
+            walk(child, where)
+
+    walk(tree, ())
+    assert uses and all(w == ("LakeTable", "_stage") for w, _ in uses), uses
